@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vettore_spark.functions import kernels as K
-from vettore_spark.plans.checkpoint import durable_cut
+from vettore_spark.plans.checkpoint import durable_cut, resident_cut, single_jvm
 
 EMBEDDING_SCHEMA = T.StructType(
     [
@@ -44,6 +44,32 @@ EMBEDDING_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+
+# put_many's staging schema: a list batch is read with it, and a DataFrame
+# batch gets each absent column as a typed null of it
+_INGEST_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType(), True),
+        T.StructField("value", T.StringType(), True),
+        T.StructField("vector", T.ArrayType(T.DoubleType()), True),
+        T.StructField("vectors", T.ArrayType(T.ArrayType(T.DoubleType())), True),
+        T.StructField("binary_vector", T.ArrayType(T.LongType()), True),
+        T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
+    ]
+)
+
+
+def _empty_rows(spark: SparkSession) -> DataFrame:
+    """Zero-row EMBEDDING_SCHEMA frame as a JVM local relation, which the
+    optimizer prunes from every union. (`createDataFrame([], schema)` is a
+    scan over empty Python slices: one task per slice on every action.)"""
+    jspark = spark._jsparkSession
+    jdf = jspark.createDataFrame(
+        spark._jvm.java.util.ArrayList(),
+        jspark.parseDataType(EMBEDDING_SCHEMA.json()),
+    )
+    return DataFrame(jdf, spark)
+
 
 # load_snapshot may override only these keys (collection.ex:1159-1174);
 # structural keys (dimensions, metric, normalize, compressed) are rejected.
@@ -90,7 +116,7 @@ class Collection:
     def __init__(self, spark: SparkSession, config: CollectionConfig, df: DataFrame | None = None):
         self.spark = spark
         self.config = config
-        self._df = df if df is not None else spark.createDataFrame([], EMBEDDING_SCHEMA)
+        self._df = df if df is not None else _empty_rows(spark)
         self._closed = False
         # driver-side emptiness hint: lets put_many skip the duplicate-id
         # join against a known-empty store without running an isEmpty job.
@@ -121,8 +147,12 @@ class Collection:
         return cls(spark, CollectionConfig(name=name, dimensions=dimensions, **opts))
 
     def close(self) -> None:
-        """Idempotent close; post-close ops raise (collection.ex:366-374)."""
+        """Idempotent close; post-close ops raise (collection.ex:366-374).
+        Releases the batches put_many persisted (resident_cut on a cluster
+        without a checkpoint dir)."""
         self._closed = True
+        for batch in self.__dict__.pop("_persisted_batches", ()):
+            batch.unpersist()
 
     def attach_store(self, store_or_path) -> "Collection":
         """Route the CANONICAL rows through a parquet-backed store
@@ -271,19 +301,38 @@ class Collection:
     # -- ingest (S2) --------------------------------------------------------
 
     def put_many(self, rows: Iterable[dict] | DataFrame) -> "Collection":
-        """Validated batch insert (collection.ex:167-191, 920-961).
+        """Validated batch insert (collection.ex:167-191, 920-961); the
+        committed batch is materialized at its first read, and later
+        searches read the stored rows.
 
         Pipeline: resolve id<->value fallback, validate+normalize `vectors`,
         derive the primary vector as the normalized mean when absent,
         validate+normalize `vector`, pack binary sign bits, reject duplicate
-        ids (intra-batch and vs existing) — then one atomic union."""
+        ids (intra-batch and vs existing) — then one atomic union.
+
+        A DataFrame batch needs `id` (or `value`) and `vector` (or
+        `vectors`); each other EMBEDDING_SCHEMA column it lacks is a null.
+
+        Resident rows (the reference's resident store, store/ets.ex:62-68):
+        the batch's lineage is cut lazily (plans.checkpoint.resident_cut),
+        so put_many runs no extra job, and the first action that reads the
+        batch stores it; later searches never re-run this staging plan.
+        The cut is a reliable checkpoint when the session has a checkpoint
+        dir, a local checkpoint on a local master, and a persist on a
+        cluster without one."""
         self._check_open()
         cfg = self.config
         dims = cfg.dimensions
 
         batch_rows: list[dict] | None = None
         if isinstance(rows, DataFrame):
-            incoming = rows
+            incoming = rows.withColumns(
+                {
+                    f.name: F.lit(None).cast(f.dataType)
+                    for f in _INGEST_SCHEMA
+                    if f.name not in rows.columns
+                }
+            )
         else:
             rows = list(rows)
             batch_rows = rows
@@ -299,21 +348,13 @@ class Collection:
                         r.get("metadata"),
                     )
                 )
-            schema = T.StructType(
-                [
-                    T.StructField("id", T.StringType(), True),
-                    T.StructField("value", T.StringType(), True),
-                    T.StructField("vector", T.ArrayType(T.DoubleType()), True),
-                    T.StructField("vectors", T.ArrayType(T.ArrayType(T.DoubleType())), True),
-                    T.StructField("binary_vector", T.ArrayType(T.LongType()), True),
-                    T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
-                ]
-            )
-            incoming = self.spark.createDataFrame(data, schema)
+            incoming = self.spark.createDataFrame(data, _INGEST_SCHEMA)
 
-        # id <-> value fallback (collection.ex:1069-1075)
+        # id <-> value fallback (collection.ex:1069-1075). A row with
+        # neither gets id '' — rejected below as an empty id — so the
+        # column is NOT NULL, as EMBEDDING_SCHEMA declares.
         staged = incoming.withColumn(
-            "id", F.coalesce(F.col("id"), F.col("value"))
+            "id", F.coalesce(F.col("id"), F.col("value"), F.lit(""))
         ).withColumn("value", F.coalesce(F.col("value"), F.col("id")))
 
         # validate multi-vectors: each inner vector must match dims
@@ -463,15 +504,14 @@ class Collection:
             self._maybe_nonempty = True
             self._invalidate_derived()
             return self._patch_resident_hnsw(hnsw_resident, out, batch_rows)
+        # materialize the batch at its first read (docstring). The union
+        # keeps EMBEDDING_SCHEMA: it ORs nullability with the collection
+        # frame's, which descends from the empty EMBEDDING_SCHEMA frame.
+        out = resident_cut(out)
+        if out.is_cached:
+            self.__dict__.setdefault("_persisted_batches", []).append(out)
         self._df = self._df.unionByName(out)
         _bump_count()
-        # cut union lineage every few batches: without this, K ingest
-        # batches build a K-deep union tree and every later action (the
-        # duplicate-id semi-join above, every search) pays Catalyst
-        # re-analysis over the whole tree — the slow creep of a long-lived
-        # collection. localCheckpoint materializes the current rows into
-        # executor storage (the reference's resident-store model,
-        # store/ets.ex:27-47) and restarts the lineage from there.
         self._cut_lineage_maybe()
         self._maybe_nonempty = True
         self._invalidate_derived()
@@ -483,27 +523,24 @@ class Collection:
         increments the depth counter, and at 8 the lineage is cut — K
         mutations must never build a K-deep plan that every later action
         re-analyzes (the long-lived-collection creep, for deletes as much
-        as for ingest batches)."""
+        as for ingest batches).
+
+        The cut is lazy like put_many's per-batch cut, so the current rows
+        are materialized at their first read: a reliable checkpoint when
+        the session has a checkpoint dir, a local checkpoint on a local
+        master. A cluster without a checkpoint dir keeps the union tree
+        (over its persisted batches) and accepts the plan growth: a local
+        checkpoint there would turn one lost executor into permanent loss
+        of the CANONICAL rows, which, unlike derived indexes, are not
+        rebuildable; route such a collection through attach_store for a
+        bounded plan."""
         depth = self.__dict__.get("_union_depth", 0) + 1
-        if depth >= 8:
-            sc = self.spark.sparkContext
-            if sc.getCheckpointDir() is not None:
-                # reliable checkpoint: canonical rows survive executor loss
-                self._df = self._df.checkpoint(eager=False)
-                depth = 0
-            elif sc.master == "local" or sc.master.startswith("local["):
-                # single-JVM ONLY ('local' / 'local[n]' — NOT
-                # 'local-cluster[...]', whose executors are separate JVMs
-                # that can die independently): executor loss == driver
-                # loss, local blocks are as durable as the process
-                self._df = self._df.localCheckpoint(eager=False)
-                depth = 0
-            # else: cluster without a checkpoint dir — route the
-            # collection through attach_store (parquet canonical table)
-            # for bounded plans; without one, localCheckpoint would turn
-            # one lost executor into permanent data loss for the
-            # CANONICAL rows (unlike derived indexes, they are not
-            # rebuildable), so keep the union tree and accept plan growth
+        sc = self.spark.sparkContext
+        if depth >= 8 and (
+            sc.getCheckpointDir() is not None or single_jvm(sc.master)
+        ):
+            self._df = resident_cut(self._df)
+            depth = 0
         self.__dict__["_union_depth"] = depth
 
     def _patch_resident_hnsw(
@@ -1183,6 +1220,7 @@ class Collection:
         predicates — no over-fetch needed."""
         from vettore_spark.operators import ann as ANN
         from vettore_spark.operators.mllib_lsh import kmeans_centroids
+        from vettore_spark.operators.search import single_query_frame
 
         self._check_open()
         # the IVF probe/score path is a COSINE kernel end to end
@@ -1210,11 +1248,9 @@ class Collection:
         cents, assigned = hit
         if where is not None:
             assigned = assigned.filter(where)
-        queries_df = self.spark.createDataFrame(
-            [("q0", q)], ["query_id", "query_vector"]
-        )
         out = ANN.ivf_topk(
-            self._df, queries_df, centroids=cents, n_probe=n_probe, k=limit,
+            self._df, single_query_frame(self.spark, q), centroids=cents,
+            n_probe=n_probe, k=limit,
             id_col="id", vector_col="vector", assigned=assigned,
         )
         return out.select("id", "score", "distance", "rank")

@@ -33,6 +33,18 @@ def _query_lit(query: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in query])
 
 
+def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataFrame:
+    """One-row (query_id string, query_vector array<double>) frame built in
+    the JVM: a literal projection over a one-row inline table, which the
+    optimizer folds into a local relation. A collect of it runs no job and
+    a broadcast of it one task, where `createDataFrame([...])` ships a
+    Python list and scans it in one task per default-parallelism slice."""
+    return spark.sql("VALUES (0)").select(
+        F.lit(query_id).alias("query_id"),
+        _query_lit(query).alias("query_vector"),
+    )
+
+
 def _ordered_topk(scored: DataFrame, k: int, *, id_col: str) -> DataFrame:
     """Deterministic (rank, id) order + LIMIT k -> TakeOrderedAndProject.
 

@@ -14,9 +14,9 @@ cut is taken decides what an executor loss costs on a real cluster:
   there is no lineage left to recompute from.
 
 This ladder is the policy ``Collection.put_many`` applies to the canonical
-row store (collection.py); ``durable_cut`` shares it with every other
-lineage-cut site so an iterative job does not silently downgrade
-durability on a cluster.
+row store (collection.py, through ``resident_cut``); ``durable_cut`` shares
+it with every other lineage-cut site so an iterative job does not silently
+downgrade durability on a cluster.
 
 Two cluster-cost details the naive ``df.checkpoint()`` call gets wrong:
 
@@ -68,6 +68,32 @@ def _checkpoint_file_of(cut: DataFrame) -> tuple[str, ...]:
     return ()
 
 
+def single_jvm(master: str) -> bool:
+    """True for 'local' / 'local[n]' masters, where executor loss is driver
+    loss and local blocks are as durable as the process. NOT for
+    'local-cluster[...]', whose executors are separate JVMs that can die
+    independently."""
+    return master == "local" or master.startswith("local[")
+
+
+def resident_cut(df: DataFrame) -> DataFrame:
+    """Lazy cut materializing canonical rows at their first read: checkpoint
+    with a checkpoint dir, else localCheckpoint on a local master, else
+    persist.
+
+    Later actions read the stored blocks instead of re-running `df`'s plan.
+    A cluster without a checkpoint dir gets ``persist()``: cached blocks
+    lost with an executor are recomputed from the lineage, where a lost
+    local checkpoint would lose the rows for good. Never eager: the cut
+    costs the caller no job."""
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is not None:
+        return df.checkpoint(eager=False)
+    if single_jvm(sc.master):
+        return df.localCheckpoint(eager=False)
+    return df.persist()
+
+
 def durable_cut(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Truncate `df`'s lineage with the most durable mechanism available.
 
@@ -100,10 +126,9 @@ def durable_cut(df: DataFrame, *, eager: bool = False) -> DataFrame:
         # so there is no window to persist/unpersist around; the write
         # recomputes once — acceptable for cuts that may never be used
         return df.checkpoint(eager=False)
-    if sc.master == "local" or sc.master.startswith("local["):
-        # single-JVM only — 'local-cluster[...]' runs separate executor
-        # JVMs whose loss orphans localCheckpoint blocks, so it falls
-        # through to the warned fallback below like any other cluster
+    if single_jvm(sc.master):
+        # 'local-cluster[...]' falls through to the warned fallback below
+        # like any other cluster: its executor JVMs can die on their own
         return df.localCheckpoint(eager=eager)
     if not _warned:
         warnings.warn(

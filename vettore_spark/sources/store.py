@@ -329,12 +329,9 @@ class PqIndex:
         if self._books is None:  # empty collection at build time: exact scan
             return coll
         from vettore_spark.operators import pq as PQ
+        from vettore_spark.operators.search import single_query_frame
 
-        spark = coll.sparkSession
-        queries = spark.createDataFrame(
-            [("q", [float(x) for x in query])],
-            "query_id string, query_vector array<double>",
-        )
+        queries = single_query_frame(coll.sparkSession, query, "q")
         cand = PQ.pq_adc_topk(
             self._codes, queries, self._books, k=n * self.factor, id_col="id"
         )
