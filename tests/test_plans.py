@@ -212,18 +212,24 @@ def test_pq_search_broadcasts_candidates(spark, coll):
     rows = sorted(coll.collect(), key=lambda r: r["id"])
     mat = np.array([r["vector"] for r in rows])
     books = PQ.pq_train_kmeans(mat, m=2, n_codes=8, iters=2)
-    queries = spark.createDataFrame(
-        [("q0", rows[0]["vector"])], "query_id string, query_vector array<double>"
-    )
-    out = PQ.pq_search(
-        coll, queries, books, candidates=20, k=5, metric="l2",
-        id_col="id", vector_col="vector",
-    )
-    plan = PC.executed_plan(out)
-    assert not PC.has_cartesian(out)
-    # candidate list and query table are broadcast against the collection
-    assert PC.broadcast_join_count(out) >= 2
-    assert "WindowGroupLimit" in plan or "TakeOrdered" in plan
+    for n_queries in (1, 2):
+        queries = spark.createDataFrame(
+            [(f"q{i}", rows[i]["vector"]) for i in range(n_queries)],
+            "query_id string, query_vector array<double>",
+        )
+        out = PQ.pq_search(
+            coll, queries, books, candidates=20, k=5, metric="l2",
+            id_col="id", vector_col="vector",
+        )
+        plan = PC.executed_plan(out)
+        assert not PC.has_cartesian(out)
+        # candidate list and query table are broadcast against the
+        # collection. One query's candidates carry its id as a literal,
+        # so the optimizer plans the query-table join as a broadcast
+        # nested-loop join over the one matching query row.
+        n_bnlj = plan.count("BroadcastNestedLoopJoin") if n_queries == 1 else 0
+        assert PC.broadcast_join_count(out) + n_bnlj >= 2
+        assert "WindowGroupLimit" in plan or "TakeOrdered" in plan
 
 
 def test_filtered_topk_prunes_before_scoring(spark):

@@ -1116,7 +1116,10 @@ class Collection:
         `where` is POST-filtered on the candidate set (the code table is
         shared across predicates), with the ADC stage over-fetching 4x
         when a predicate is present — like hnsw_search(where=), results
-        may number fewer than `limit` under a selective predicate."""
+        may number fewer than `limit` under a selective predicate.
+
+        The ADC stage of one query is a JVM top-k over the resident code
+        table (operators.pq.pq_adc_topk): a request runs no Python worker."""
         from vettore_spark.sources.store import PqIndex
 
         if self.config.metric not in ("l2", "euclidean", "cosine"):
@@ -1217,7 +1220,10 @@ class Collection:
         `where` composes on the inverted file BEFORE within-cell scoring
         (the filtered-probe mode, same structure as the gate query
         ivf_filtered_topk): exact filtering with the index shared across
-        predicates — no over-fetch needed."""
+        predicates — no over-fetch needed.
+
+        Probe selection and within-cell scoring both run the JVM cosine
+        kernel: a request runs no Python worker."""
         from vettore_spark.operators import ann as ANN
         from vettore_spark.operators.mllib_lsh import kmeans_centroids
         from vettore_spark.operators.search import single_query_frame

@@ -81,7 +81,7 @@ class Vettore:
         collection — only the <=1 matching row ever reaches the driver."""
         c = self._coll(coll)
         q = np.asarray(c._prepare_query(vector), dtype=np.float32)
-        lit_q = F.array(*[F.lit(float(x)).cast("float") for x in q])
+        lit_q = K.double_array_lit(q).cast("array<float>")
         rows = (
             c.df.filter(F.col("vector").isNotNull())
             .filter(F.col("vector").cast("array<float>") == lit_q)

@@ -22,6 +22,8 @@ recovery on overflow (distances.rs:59-98), so f64 is a strict superset.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -66,6 +68,23 @@ def _col(c: Column | str) -> Column:
 def _dbl(c: Column | str) -> Column:
     """Promote array<float> to array<double> so every op runs in f64."""
     return _col(c).cast("array<double>")
+
+
+def double_array_lit(values) -> Column:
+    """array<double> literal of `values`, built with ONE JVM parse call.
+
+    `F.array(*[F.lit(x) ...])` costs about four py4j round trips per
+    element (a 32-dim query ~130); the SQL text `array(0.1D, ...)` is one.
+    Exact: Python's shortest `repr` round-trips every finite double
+    (subnormals and -0.0 included) through the JVM's parser. NaN/±inf
+    have no SQL literal spelling, so a vector holding one falls back to
+    per-element `F.lit`."""
+    vals = [float(x) for x in values]
+    if not vals:
+        return F.expr("CAST(array() AS array<double>)")
+    if not all(math.isfinite(v) for v in vals):
+        return F.array(*[F.lit(v) for v in vals])
+    return F.expr("array(" + ", ".join(repr(v) + "D" for v in vals) + ")")
 
 
 # ---------------------------------------------------------------------------

@@ -891,7 +891,7 @@ def ivf_topk(
     )
     return (
         scored
-        .withColumn("_rn", F.row_number().over(Window.partitionBy(query_id_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())))
+        .withColumn("_rn", F.row_number().over(Window.partitionBy(query_id_col).orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())))
         .filter(F.col("_rn") <= k)
         .withColumnRenamed("_rn", "rank")
     )
@@ -913,10 +913,12 @@ def _ivf_probe_scored(
 ) -> DataFrame:
     """Shared IVF probe stage: per-query n_probe nearest cells (JVM-side
     over the literal codebook), broadcast probe join against the persisted
-    inverted file, Arrow-vectorized exact cosine within probed cells.
+    inverted file, exact cosine within probed cells by the JVM kernel.
     Returns (query_id, id, score, distance) unranked — ivf_topk windows it,
-    ivf_range threshold-filters it."""
+    ivf_range threshold-filters it. A non-finite stored vector scores NULL
+    (kernels.cosine), never a value."""
     from vettore_spark.functions import kernels as K
+    from vettore_spark.operators.search import _staged_raw
 
     spark = coll.sparkSession
     if assigned is None:
@@ -948,20 +950,21 @@ def _ivf_probe_scored(
             "an Arrow-batched kernel (the pq.py pattern) for codebooks "
             "this size"
         )
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in row]).alias("cv"),
-            )
-            for cid, row in zip(cids, cmat)
-        ]
-    )
+    # the codebook is two literals (ids, row-major flat matrix), each one
+    # parse call; cell i's centroid is a slice of the flat matrix
+    dims = int(cmat.shape[-1])
+    cid_lit = K.double_array_lit(cids).cast("array<bigint>")
+    flat_lit = K.double_array_lit(cmat.ravel())
     scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            (1.0 - K.cosine(F.col(query_vec_col), c["cv"])).alias("d"),
-            c["cid"].alias("cid"),
+        cid_lit,
+        lambda cid, i: F.struct(
+            (
+                1.0
+                - K.cosine(
+                    F.col(query_vec_col), F.slice(flat_lit, i * dims + 1, dims)
+                )
+            ).alias("d"),
+            cid.alias("cid"),
         ),
     )
     # struct sort orders by (distance, cid) — ascending cid breaks ties,
@@ -976,29 +979,20 @@ def _ivf_probe_scored(
     )
     joined = assigned.join(F.broadcast(probes), on="_cell")
 
-    # Within-cell scoring is the volume stage (rows_in_probed_cells x dims):
-    # Arrow-vectorized NumPy cosine instead of the interpreted aggregate()
-    # fold — higher-order functions are CodegenFallback, so at 10^5+ rows the
-    # batched kernel is the reference's batched-NIF analog (SURVEY P4).
-    @F.pandas_udf("double")
-    def cos_pd(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma, mb = _matrix(a), _matrix(b)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        denom = na * nb
-        sims = np.einsum("ij,ij->i", ma, mb)
-        out = np.where(denom == 0.0, 0.0, sims / np.where(denom == 0.0, 1.0, denom))
-        return pd.Series(np.clip(out, -1.0, 1.0))
-
-    raw = cos_pd(
-        F.col(vector_col).cast("array<double>"),
-        F.col(query_vec_col).cast("array<double>"),
+    # Within-cell scoring runs in the JVM, the same kernel flat search
+    # scores every row with, staged once per row: score and distance read
+    # the materialized value instead of re-inlining the fold. A Python
+    # stage here would cost the request a worker round per task wave.
+    staged = _staged_raw(
+        joined,
+        K.cosine(F.col(vector_col), F.col(query_vec_col)),
+        [F.col(query_id_col), F.col(id_col)],
     )
-    return joined.select(
+    return staged.select(
         query_id_col,
         id_col,
-        raw.alias("score"),
-        (1.0 - raw).alias("distance"),
+        F.col("_raw").alias("score"),
+        (1.0 - F.col("_raw")).alias("distance"),
     )
 
 

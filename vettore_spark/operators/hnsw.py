@@ -681,6 +681,8 @@ def search_graph_shards(
     `build_graph_shards`, possibly patched by `delete_from_graph_shards`):
     answer every query against each shard, merge with a global per-query
     (rank, id) top-k window. `ef_search` overrides the build-time beam.
+    The scan runs in at most `defaultParallelism` tasks (one wave): each
+    task searches every shard its partition holds.
 
     `id_type` declares the emitted id column's Spark type and should match
     the collection's native id type (Collection passes its own schema
@@ -727,7 +729,10 @@ def search_graph_shards(
                     {"query_id": out_q, id_col: out_i, "_raw": out_r}
                 )
 
-    local = shards.mapInPandas(run, out_schema)
+    # at most one task per slot: a shard table wider than the cluster would
+    # otherwise pay a second Python task wave (coalesce never widens it)
+    slots = shards.sparkSession.sparkContext.defaultParallelism
+    local = shards.coalesce(slots).mapInPandas(run, out_schema)
     rank, score, dist = score_columns(m, F.col("_raw"), score_mode)
     scored = local.select(
         "query_id",

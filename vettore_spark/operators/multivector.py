@@ -43,7 +43,7 @@ def maxsim_score(
     dv = F.col(doc_vectors) if isinstance(doc_vectors, str) else doc_vectors
     total = F.lit(0.0)
     for q in query_vectors:
-        qlit = F.array(*[F.lit(float(x)) for x in q])
+        qlit = K.double_array_lit(q)
         # Stage the per-pair kernel fold in its OWN transform so the
         # K13 value mapper's multiple references to `raw`
         # (_finite_or_null reads it 3x, distance metrics a 4th time)

@@ -14,10 +14,11 @@ Spark shape (100 TB):
   subspace against the broadcast codebook); the code table is the
   persisted index (plans/cache.py residency model) at ~m bytes/row.
 - ADC search never touches full vectors: per query a [m x n_codes] LUT of
-  squared sub-distances is built driver-side-free inside each task, and
-  each row's distance is m table lookups — the scan is bandwidth-bound on
-  the code table, not the vectors. Local per-partition top-k bounds the
-  shuffle at O(queries x k x partitions).
+  squared sub-distances, and each row's distance is m table lookups — the
+  scan is bandwidth-bound on the code table, not the vectors. A query
+  batch builds its LUTs inside each Arrow task, and a local per-partition
+  top-k bounds the shuffle at O(queries x k x partitions); a single query
+  ships its LUT as a literal and runs as one JVM top-k.
 - Exact rerank of the top candidates re-joins the full vectors by id
   (broadcast hash join on the small candidate set), the same two-stage
   shape as `quantized_search` (reference collection.ex:263-295).
@@ -190,6 +191,73 @@ def pq_encode(
     return coll.select(id_col, codes_of(F.col(vector_col)).alias("codes"))
 
 
+def _adc_luts(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """ADC lookup tables, lut[j, s, c] = ||q_j_sub_s - books[s, c]||^2.
+
+    Built per (query-chunk, subspace) so the transient diff tensor is
+    chunk x n_codes x dsub (~67 MB at the 4096 chunk) instead of the
+    nq x m x n_codes x dsub monolith (~8.6 GB at the broadcast cap — an
+    executor OOM, not a scale path). Identical elementwise arithmetic and
+    summation axis, so the LUT is bit-equal."""
+    m, n_codes, dsub = codebooks.shape
+    nq = len(qmat)
+    lut = np.empty((nq, m, n_codes), dtype=np.float64)
+    for q0 in range(0, nq, 4096):
+        q1 = min(q0 + 4096, nq)
+        for s in range(m):
+            diff = (
+                qmat[q0:q1, s * dsub : (s + 1) * dsub].reshape(-1, 1, dsub)
+                - codebooks[s][None, :, :]
+            )
+            lut[q0:q1, s, :] = (diff * diff).sum(axis=2)
+    return lut
+
+
+def _adc_topk_one(
+    codes_df: DataFrame,
+    qid,
+    lut: np.ndarray,
+    qid_type: T.DataType,
+    *,
+    k: int,
+    id_col: str,
+    codes_col: str,
+    query_id_col: str,
+    round_digits: int | None,
+) -> DataFrame:
+    """One query's ADC top-k as a JVM expression: the m x n_codes LUT is a
+    flat array literal, each row sums its m lookups, and (rounded
+    distance, id) ORDER BY + LIMIT plans as TakeOrderedAndProject — no
+    Python worker and no shuffle on the request path. The rank window over
+    the k survivors reads one partition."""
+    from vettore_spark.functions import kernels as K
+
+    n_codes = lut.shape[1]
+    flat = K.double_array_lit(lut.ravel())
+    d2 = F.transform(
+        F.col(codes_col),
+        lambda c, s: F.element_at(flat, s * n_codes + c + 1),
+    )
+    dist = F.aggregate(
+        d2, F.lit(0.0), lambda acc, x: acc + x, lambda acc: F.sqrt(acc)
+    )
+    scored = codes_df.select(
+        F.lit(qid).cast(qid_type).alias(query_id_col),
+        F.col(id_col),
+        dist.alias("distance"),
+    )
+    key = (
+        F.round(F.col("distance"), round_digits)
+        if round_digits is not None
+        else F.col("distance")
+    )
+    top = scored.orderBy(key.asc(), F.col(id_col).asc()).limit(k)
+    return _rank_merge(
+        top, k=k, query_id_col=query_id_col, id_col=id_col,
+        round_digits=round_digits,
+    )
+
+
 def pq_adc_topk(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -217,7 +285,12 @@ def pq_adc_topk(
     pruning on the locally-rounded key could cut a row the global
     rounded ranking would keep — the margin makes the local stage
     rounding-agnostic and the global `_rank_merge` the single authority
-    on order."""
+    on order.
+
+    A query set of exactly one query is scored by a JVM expression
+    instead (`_adc_topk_one`: same LUT, same rounded (distance, id)
+    order); larger sets run the vectorized Arrow loop, one LUT per query
+    per task."""
     spark = codes_df.sparkSession
     qrows = _collect_queries(
         queries, query_id_col, query_vec_col, max_broadcast_queries
@@ -236,29 +309,21 @@ def pq_adc_topk(
         return spark.createDataFrame([], out_schema).withColumn(
             "rank", F.lit(1).cast("int")
         )
+    if len(qids) == 1:
+        return _adc_topk_one(
+            codes_df, qids[0], _adc_luts(qmat, codebooks)[0],
+            out_schema[query_id_col].dataType, k=k, id_col=id_col,
+            codes_col=codes_col, query_id_col=query_id_col,
+            round_digits=round_digits,
+        )
     # margin for the local prune: one unit in the rounded digit covers the
     # worst half-to-even vs HALF_UP disagreement on any pair of keys
     margin = 10.0 ** -round_digits if round_digits is not None else 0.0
 
     def compute(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m, n_codes, dsub = codebooks.shape
         nq = len(qids)
-        # LUT per query: lut[j, s, c] = ||q_j_sub_s - books[s, c]||^2.
-        # Built per (query-chunk, subspace) so the transient diff tensor is
-        # chunk x n_codes x dsub (~67 MB at the 4096 chunk) instead of the
-        # nq x m x n_codes x dsub monolith (~8.6 GB at the broadcast cap —
-        # an executor OOM, not a scale path). Identical elementwise
-        # arithmetic and summation axis, so the LUT is bit-equal.
-        lut = np.empty((nq, m, n_codes), dtype=np.float64)
-        for q0 in range(0, nq, 4096):
-            q1 = min(q0 + 4096, nq)
-            for s in range(m):
-                diff = (
-                    qmat[q0:q1, s * dsub : (s + 1) * dsub].reshape(-1, 1, dsub)
-                    - codebooks[s][None, :, :]
-                )
-                lut[q0:q1, s, :] = (diff * diff).sum(axis=2)
-        subs = np.arange(m)
+        lut = _adc_luts(qmat, codebooks)
+        subs = np.arange(codebooks.shape[0])
         for pdf in it:
             if len(pdf) == 0:
                 continue

@@ -29,10 +29,6 @@ from pyspark.sql import functions as F
 from vettore_spark.functions import kernels as K
 
 
-def _query_lit(query: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query])
-
-
 def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataFrame:
     """One-row (query_id string, query_vector array<double>) frame built in
     the JVM: a literal projection over a one-row inline table, which the
@@ -41,7 +37,7 @@ def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataF
     Python list and scans it in one task per default-parallelism slice."""
     return spark.sql("VALUES (0)").select(
         F.lit(query_id).alias("query_id"),
-        _query_lit(query).alias("query_vector"),
+        K.double_array_lit(query).alias("query_vector"),
     )
 
 
@@ -104,7 +100,7 @@ def flat_topk(
     true-cosine kernel on raw vectors.
     """
     metric = K.canonical_metric(metric)
-    raw = K.raw_metric(metric, F.col(vector_col), _query_lit(query), pre_normalized=pre_normalized)
+    raw = K.raw_metric(metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized)
     cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
     staged = _staged_raw(coll, raw, cols)
     rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
@@ -149,7 +145,7 @@ def flat_range(
         raise ValueError("give exactly one of max_distance / min_score")
     metric = K.canonical_metric(metric)
     raw = K.raw_metric(
-        metric, F.col(vector_col), _query_lit(query), pre_normalized=pre_normalized
+        metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized
     )
     cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
     staged = _staged_raw(coll, raw, cols)
@@ -185,7 +181,7 @@ def prefix_topk(
     (search.rs:56-58). Returns (id, _rank) candidates ordered by (rank, id)."""
     metric = K.canonical_metric(metric)
     pv = F.slice(F.col(vector_col), 1, dims)
-    pq = F.slice(_query_lit(query), 1, dims)
+    pq = F.slice(K.double_array_lit(query), 1, dims)
     raw = K.raw_metric(metric, pv, pq, pre_normalized=False)
     scored = coll.select(F.col(id_col), K.rank_value(metric, raw).alias("_rank"))
     return _ordered_topk(scored, k, id_col=id_col)

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vettore_spark.functions import kernels as K
+
 # 60-bit hash domain: 15 lowercase-hex chars of md5. Fits a signed 64-bit
 # integer exactly in both engines (conv(...,16,10) on Spark,
 # ('0x'||h)::BIGINT on DuckDB), and 2^60 draws are collision-safe far past
@@ -337,9 +339,7 @@ def histogram_quantiles(
     cum = hist.withColumn("_cum", F.sum("_c").over(win)).withColumn(
         "_n", F.sum("_c").over(full)
     )
-    qcol = F.explode(
-        F.array(*[F.lit(float(q)) for q in sorted(quantiles)])
-    ).alias("q")
+    qcol = F.explode(K.double_array_lit(sorted(quantiles))).alias("q")
     probed = cum.select(*gb, "_b", "_c", "_cum", "_n", qcol)
     t = F.col("q") * F.col("_n").cast("double")
     # the target bucket: first bucket whose cumulative reaches t

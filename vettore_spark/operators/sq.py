@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vettore_spark.functions import kernels as K
 from vettore_spark.operators.search import exact_rerank
 
 
@@ -74,8 +75,8 @@ def sq_encode(
     truncated vector would silently encode its missing dimensions as
     code 0 — an accidentally competitive (often winning) candidate."""
     scales = sq_params(mins, maxs)
-    mins_lit = F.array(*[F.lit(float(m)) for m in mins])
-    scales_lit = F.array(*[F.lit(float(s)) for s in scales])
+    mins_lit = K.double_array_lit(mins)
+    scales_lit = K.double_array_lit(scales)
     encoded = F.zip_with(
         F.zip_with(vec.cast("array<double>"), mins_lit, lambda x, m: x - m),
         scales_lit,
@@ -145,8 +146,8 @@ def sq_topk(
             F.monotonically_increasing_id().alias("_pin"),
         ),
     )
-    qc_lit = F.array(*[F.lit(v) for v in qc])
-    sc_lit = F.array(*[F.lit(float(s)) for s in scales])
+    qc_lit = K.double_array_lit(qc)
+    sc_lit = K.double_array_lit(scales)
     diff = F.zip_with(F.col("_codes"), qc_lit, lambda a, b: a - b)
     terms = F.zip_with(diff, sc_lit, lambda d, s: (d * s) * (d * s))
     d2 = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)

@@ -6905,7 +6905,7 @@ def q_jl_prefilter_topk(
         .select("vec_id")
     )
     qv = _qvec(spark, sf_dir)
-    qv_lit = F.array(*[F.lit(float(x)) for x in qv])
+    qv_lit = K.double_array_lit(qv)
     exact = F.sqrt(
         F.aggregate(
             F.zip_with(
@@ -7686,7 +7686,7 @@ def q_pca_prefilter_topk(
         .limit(candidates)
         .select("vec_id")
     )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qv])
+    qv_lit = K.double_array_lit(qv)
     exact = F.sqrt(
         F.aggregate(
             F.zip_with(
