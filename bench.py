@@ -5,6 +5,15 @@ HEADLINE set (stable round-over-round comparisons); the remaining
 registry queries are timed under the identical protocol and reported in
 the same "queries" map with their sum in "full_registry_rest_sec".
 
+`python bench.py QUERY [QUERY ...]` times only the named queries under the
+same protocol and prints one record of just their per-query blocks. A
+session-conf A/B is two such runs from two checkouts that differ only in
+`vettore_spark/session.py::ENGINE_SESSION_DEFAULTS`.
+
+`session(app)` is the one measurement session (SPARK_GRAFT_CPUS defaults
+to this host's core count) and `sample(fn, spark, sf_dir)` the one timing
+protocol; the scripts under tools/ open their sessions through it.
+
 Mirrors the reference's bench shape (bench/search_modes_bench.exs): exact
 flat search is the baseline; every approximate mode runs over the same data.
 Timing methodology also mirrors the reference (Benchee `warmup: 2` at
@@ -199,6 +208,67 @@ def _probe_first(slowest: dict, timings: dict, n_slowest: int) -> dict:
     return out
 
 
+def session(app: str) -> SparkSession:
+    """The measurement session: local[$SPARK_GRAFT_CPUS] (default: this
+    host's core count) with as many shuffle partitions, AQE on, UI off.
+
+    Engine-level SQL confs (SHJ preference, hugeMethodLimit) are owned by
+    the LIBRARY (vettore_spark.session — measurements documented there),
+    so every session that runs the engine plans the same way; this only
+    sets deployment-side values (master, memory, shuffle partitions)."""
+    from vettore_spark import with_engine_defaults
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    spark = (
+        with_engine_defaults(SparkSession.builder.master(f"local[{cpus}]"))
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.driver.memory", "16g")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    # events.ts is parquet TIMESTAMP(NANOS), which Spark rejects unless
+    # read as long nanos
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark
+
+
+def _timed_count(fn, spark, sf_dir: str) -> float:
+    t0 = time.time()
+    fn(spark, sf_dir).count()
+    return time.time() - t0
+
+
+def sample(fn, spark, sf_dir: str) -> list[float]:
+    """Timed `.count()` samples of one query: one untimed warmup
+    (Benchee-style), then 3 timed runs. The box is shared with other
+    workloads, so a single sample can be 3-4x off; the median is the
+    robust statistic. When the 3 samples themselves spread past 2x (GC
+    pause, a concurrent job), take 2 more — the median of 5 discards both
+    tails."""
+    fn(spark, sf_dir).count()
+    samples = [_timed_count(fn, spark, sf_dir) for _ in range(3)]
+    if max(samples) > 2.0 * max(min(samples), 1e-9):
+        samples += [_timed_count(fn, spark, sf_dir) for _ in range(2)]
+    return samples
+
+
+def _median(s: list[float]) -> float:
+    return sorted(s)[len(s) // 2]
+
+
+def _mm(s: list[float]) -> list[float]:
+    """[min, median, max] of one query's samples."""
+    return [round(min(s), 3), round(_median(s), 3), round(max(s), 3)]
+
+
+def _sf_value(sf_dir: str) -> float | str:
+    sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
 def compact_bench_line(
     compact: dict,
     *,
@@ -291,8 +361,13 @@ def compact_bench_line(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
+    from vettore_spark import queries as Q
+
+    qs = Q.queries()
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
     # host load BEFORE Spark starts: this box is shared, and r8/r9 burned
     # real effort forensically proving a +4.7 s "regression" was a
     # contended run (~±5 s envelope, SCALE.md r9). Stamping the load makes
@@ -303,31 +378,9 @@ def main() -> None:
     except OSError:  # platform without getloadavg
         load_start = []
 
-    # engine-level SQL confs (SHJ preference, hugeMethodLimit) are owned
-    # by the LIBRARY (vettore_spark.session — measurements and scale
-    # justification documented there), so every session that runs the
-    # engine plans the same way; the bench only sets deployment-side
-    # values (master, memory, shuffle partitions).
-    from vettore_spark import with_engine_defaults
-
-    spark = (
-        with_engine_defaults(SparkSession.builder.master(f"local[{cpus}]"))
-        .appName("vettore-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from vettore_spark import queries as Q
-
-    qs = Q.queries()
+    spark = session("vettore-spark-bench")
     # untimed warmup: JVM/codegen/Python-worker spin-up and parquet footer
-    # reads land here, not in the first timed query. events.ts is parquet
-    # TIMESTAMP(NANOS), which Spark rejects unless read as long nanos.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # reads land here, not in the first timed query.
     try:
         qs["flat_topk_cosine"](spark, sf_dir).count()
         for t in ("documents", "lineitem", "events"):
@@ -341,30 +394,29 @@ def main() -> None:
     rest = [n for n in qs if n not in HEADLINE]
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
-    for name in HEADLINE + rest:
-        fn = qs[name]
+    for name in names or HEADLINE + rest:
         try:
-            fn(spark, sf_dir).count()  # per-scenario untimed warmup (Benchee-style)
-            # median of 3 timed runs: the box is shared with other workloads
-            # (driver-side verification jobs), so a single sample can be 3-4x
-            # off; the median is the Benchee-style robust statistic. When the
-            # 3 samples themselves spread past 2x (GC pause, a concurrent
-            # job), take 2 more — the median of 5 discards both tails.
-            samples = []
-            for _ in range(3):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                samples.append(time.time() - t0)
-            if max(samples) > 2.0 * max(min(samples), 1e-9):
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf_dir).count()
-                    samples.append(time.time() - t0)
-            timings[name] = round(sorted(samples)[len(samples) // 2], 3)
-            all_samples[name] = samples
+            all_samples[name] = sample(qs[name], spark, sf_dir)
+            timings[name] = round(_median(all_samples[name]), 3)
         except Exception as e:  # noqa: BLE001
             print(f"bench {name} failed: {e}", file=sys.stderr)
             timings[name] = -1.0
+    if names:
+        # subset run: only the named queries' blocks; the committed
+        # full-run record (bench_full.json) is left as it is
+        print(json.dumps({
+            "metric": "named_queries_total",
+            "value": round(sum(t for t in timings.values() if t > 0), 3),
+            "unit": "sec",
+            "queries": timings,
+            "spread": {n: _mm(s) for n, s in all_samples.items()},
+            "n_failed": sum(1 for t in timings.values() if t < 0),
+            "streaming_replay_sec": dict(sorted(Q.STREAMING_REPLAY_SECONDS.items())),
+            "streaming_progress": dict(sorted(Q.STREAMING_REPLAY_PROGRESS.items())),
+            "sf": _sf_value(sf_dir),
+        }))
+        spark.stop()
+        return
     total = round(
         sum(t for n, t in timings.items() if t > 0 and n in set(HEADLINE)), 3
     )
@@ -379,9 +431,6 @@ def main() -> None:
     # contention" when comparing rounds.
     def _ratio(s: list[float]) -> float:
         return max(s) / max(min(s), 1e-9)
-
-    def _mm(s: list[float]) -> list[float]:
-        return [round(min(s), 3), round(sorted(s)[len(s) // 2], 3), round(max(s), 3)]
 
     # the three historically-noisy queries are ALWAYS in the spread block
     # (round-4 verdict: their round-over-round movement needs min/median/
@@ -770,15 +819,12 @@ def main() -> None:
             assert c.count() == n_rows
             put_samples.append(time.time() - t0)
 
-        def _med(s: list[float]) -> float:
-            return sorted(s)[len(s) // 2]
-
         ingest = {
             "rows": n_rows,
-            "put_many_sec": round(_med(put_samples), 3),
-            "put_many_rps": round(n_rows / _med(put_samples), 1),
-            "raw_write_rps": round(n_rows / _med(raw_samples), 1),
-            "put_raw_ratio": round(_med(put_samples) / _med(raw_samples), 2),
+            "put_many_sec": round(_median(put_samples), 3),
+            "put_many_rps": round(n_rows / _median(put_samples), 1),
+            "raw_write_rps": round(n_rows / _median(raw_samples), 1),
+            "put_raw_ratio": round(_median(put_samples) / _median(raw_samples), 2),
             "put_many_spread": _mm(put_samples),
             "raw_write_spread": _mm(raw_samples),
         }
@@ -814,7 +860,7 @@ def main() -> None:
     # repo record); the FINAL line is a compact summary — total, overlap,
     # ingest, and only the 20 slowest queries — sized to survive the
     # capture window.
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    sf_val = _sf_value(sf_dir)
     try:
         load_end = [round(x, 2) for x in os.getloadavg()]
     except OSError:
@@ -877,6 +923,9 @@ def main() -> None:
         # memoized memory-sink table (replay lands in warmup); this map is
         # the first-build wall time recorded inside _run_streaming_gate.
         "streaming_replay_sec": dict(sorted(Q.STREAMING_REPLAY_SECONDS.items())),
+        # per-micro-batch attribution of each gate's first replay (batchId,
+        # input rows, the engine's durationMs phases); full record only
+        "streaming_progress": dict(sorted(Q.STREAMING_REPLAY_PROGRESS.items())),
         "spread": spread,
         "overlap_at_10_vs_exact": overlap,
         "mutual_pair_recall": mutual_recall,

@@ -54,3 +54,32 @@ def test_selfcheck_md_reports_no_failures():
     m = re.search(r"(\d+) pass, (\d+) fail", text)
     assert m is not None, "SELFCHECK.md has no summary line"
     assert int(m.group(2)) == 0, "committed SELFCHECK.md records failures"
+
+
+def test_readme_tool_list_matches_tools_dir():
+    """Every script under tools/ is listed in README's tool list, and the
+    list names no script that is gone."""
+    on_disk = {
+        f for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py")
+    }
+    readme = open(os.path.join(REPO, "README.md")).read()
+    listed = set(re.findall(r"^- `tools/(\w+\.py)`", readme, re.M))
+    assert listed == on_disk
+
+
+def test_session_builders_only_in_bench_session_and_selfcheck():
+    """Measurement sessions come from `bench.session`; `tools/selfcheck.py`
+    keeps its own builder because it replicates the oracle gate's
+    conf-less session. No other script under tools/ builds one."""
+    src = open(os.path.join(REPO, "bench.py")).read()
+    body = src.split("\ndef session(", 1)[1].split("\ndef ", 1)[0]
+    assert src.count("SparkSession.builder") == 1
+    assert body.count("SparkSession.builder") == 1
+    tools_dir = os.path.join(REPO, "tools")
+    builders = {
+        f
+        for f in os.listdir(tools_dir)
+        if f.endswith(".py")
+        and "SparkSession.builder" in open(os.path.join(tools_dir, f)).read()
+    }
+    assert builders == {"selfcheck.py"}

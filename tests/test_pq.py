@@ -127,6 +127,31 @@ def test_pq_search_full_candidates_equals_exact(spark, emb, mat):
     ]
 
 
+
+def test_pq_search_ranks_non_finite_row_last(spark):
+    """A row whose vector holds NaN gets a NULL rank key; the rerank window
+    must order it after every real neighbour, not first."""
+    rng = np.random.default_rng(3)
+    m = rng.standard_normal((20, 8))
+    bad = m[0].copy()
+    bad[0] = np.nan
+    coll = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate([*m, bad])],
+        "vec_id long, embedding array<double>",
+    )
+    q = rng.standard_normal(8)
+    queries = spark.createDataFrame(
+        [(0, [float(x) for x in q])], "query_id long, query_vector array<double>"
+    )
+    books = PQ.pq_train_kmeans(m, m=2, n_codes=4, iters=2)
+    got = PQ.pq_search(
+        coll, queries, books, candidates=100, k=3, metric="l2",
+        id_col="vec_id", vector_col="embedding",
+    ).collect()
+    want = np.argsort(((m - q) ** 2).sum(axis=1), kind="stable")[:3]
+    assert [r["vec_id"] for r in sorted(got, key=lambda r: r["rank"])] == list(want)
+    assert all(r["distance"] is not None for r in got)
+
 def test_ivfpq_encode_matches_numpy(spark, emb, mat):
     ids, m = mat
     coarse, books = PQ.ivfpq_train(m, n_cells=8, m=4, n_codes=16, iters=3)

@@ -13,7 +13,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from bench import session
 
 PICK = {
     "flat_topk_cosine": "single-query exact top-k: TakeOrderedAndProject, no global sort, column-pruned scan",
@@ -48,15 +48,7 @@ by tests/test_plans*.py). Regenerate with `python tools/plansdump.py`.
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = session("vettore-spark-plansdump")
 
     from vettore_spark import queries as Q
 

@@ -15,8 +15,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 K = 10
@@ -24,16 +25,7 @@ K = 10
 
 def main() -> int:
     n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 20
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("vettore-spark-recallbench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("vettore-spark-recallbench")
 
     from pyspark.sql import types as T
 

@@ -18,8 +18,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OFFSET = 10_000_000
@@ -37,16 +38,7 @@ def replicated(df, k: int, id_col: str):
 
 def main() -> int:
     only = set(sys.argv[1:])
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("vettore-spark-scalebench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("vettore-spark-scalebench")
 
     from vettore_spark.operators import dedup as D
     from vettore_spark.operators import pipeline as PL

@@ -29,8 +29,9 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import session
 
 H = 3600
 
@@ -494,14 +495,7 @@ def histogram_state_recovery_run(spark, base):
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("vettore-streambench")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("vettore-streambench")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     base = tempfile.mkdtemp(prefix="vettore_streambench_")
     try:

@@ -1160,9 +1160,10 @@ class Collection:
         maintained incrementally — `put` inserts into one shard's graph,
         `delete` patches the owning shard (entry replacement) — matching
         the reference's insert/delete-time index maintenance
-        (hnsw.rs:152-245, :263-289). Bulk put_many still invalidates for a
-        rebuild (bulk graph construction beats n incremental inserts).
-        Returns (id, score, distance) like `search`.
+        (hnsw.rs:152-245, :263-289). Bulk put_many patches the resident
+        shards too (`_patch_resident_hnsw`): each batch row is inserted into
+        its routed shard's graph, no rebuild. Returns (id, score, distance)
+        like `search`.
 
         `where` is POST-filtered with over-fetch (the graph is traversed
         for limit*oversample, then the predicate-passing top `limit` kept)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.plans.cache import cached_persist as _cached_persist
 from vettore_spark.plans.checkpoint import durable_cut, release_cut
+from vettore_spark.plans.spread import pin
 
 
 def tokens(text: Column | str) -> Column:
@@ -256,7 +257,7 @@ def _shingle_base(
         return s.select(
             F.col(id_col),
             shingle_hash_array(tokens(text_col), n).alias("_sh"),
-            F.monotonically_increasing_id().alias("_pin"),
+            pin(s),
         ).filter(F.size("_sh") > 0)
 
     return _cached_persist(src, ("shingle", id_col, text_col, n), build)
@@ -795,7 +796,7 @@ def simhash_pairs(
         staged = s.select(
             F.col(id_col),
             th.alias("_th"),
-            F.monotonically_increasing_id().alias("_pin"),
+            pin(s),
         )
         masks = _bit_masks()
         n = F.size(F.col("_th"))

@@ -36,21 +36,13 @@ from pyspark.sql import functions as F
 
 from vettore_spark.operators.dedup import shingle_hash_array, tokens
 from vettore_spark.plans.cache import cached_persist
+from vettore_spark.plans.spread import pin
 
 # RE2-safe patterns (no lookaround/backrefs) so the Java regex engine and
 # any RE2-based oracle (DuckDB) agree on every match.
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_PATTERN = r"\+?[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
 IPV4_PATTERN = r"([0-9]{1,3}\.){3}[0-9]{1,3}"
-
-
-def _pin(df: DataFrame) -> Column:
-    """Non-deterministic pin column that blocks CollapseProject/pushdown
-    from re-inlining an expensive array projection into its consumers.
-    Streaming plans reject non-deterministic expressions, so streams get a
-    literal instead — per-micro-batch recompute is bounded by the batch
-    size, and plan validity wins."""
-    return F.lit(0) if df.isStreaming else F.monotonically_increasing_id()
 
 
 def _word_ngrams(toks: Column, n: int) -> Column:
@@ -90,7 +82,7 @@ def chunk_documents(
     base = df.select(
         F.col(id_col),
         toks.alias("_t"),
-        _pin(df).alias("_pin"),
+        pin(df),
     ).filter(F.size("_t") >= 1)
     n_chunks = (F.floor((F.size("_t") - 1) / stride) + 1).cast("long")
     exploded = base.select(
@@ -202,7 +194,7 @@ def repetition_stats(
     base = df.select(
         F.col(id_col),
         tokens(text_col).alias("_t"),
-        _pin(df).alias("_pin"),
+        pin(df),
     )
     grams = _word_ngrams(F.col("_t"), n)
     total = F.size(grams).cast("double")

@@ -604,7 +604,7 @@ def pq_search(
             dist.alias("distance"),
             F.row_number().over(
                 Window.partitionBy(query_id_col).orderBy(
-                    rank.asc(), F.col(id_col).asc()
+                    rank.asc_nulls_last(), F.col(id_col).asc()
                 )
             ).alias("rank"),
         )

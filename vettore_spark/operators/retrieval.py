@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vettore_spark.operators.dedup import tokens
-from vettore_spark.plans.spread import spread_narrow
+from vettore_spark.plans.spread import pin, spread_narrow
 
 
 def _term_tf(toks: Column, term: str) -> Column:
@@ -79,7 +79,7 @@ def bm25_scores(
             F.col(id_col),
             F.size(toks).cast("long").alias("_dl"),
             *[_term_tf(toks, t).alias(f"_tf{i}") for i, t in enumerate(terms)],
-            F.monotonically_increasing_id().alias("_pin"),
+            pin(s),
         ).drop("_pin"),
     )
     stats = base.agg(

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vettore_spark.functions import kernels as K
+from vettore_spark.plans.spread import pin
 
 
 def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataFrame:
@@ -77,7 +78,7 @@ def _staged_raw(df: DataFrame, raw: Column, keep: list[Column]) -> DataFrame:
     return df.select(
         *keep,
         raw.alias("_raw"),
-        F.monotonically_increasing_id().alias("_pin"),
+        pin(df),
     )
 
 

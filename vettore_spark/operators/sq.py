@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.functions import kernels as K
 from vettore_spark.operators.search import exact_rerank
+from vettore_spark.plans.spread import pin
 
 
 def sq_train(
@@ -143,7 +144,7 @@ def sq_topk(
         lambda s: s.select(
             F.col(id_col),
             sq_encode(F.col(vector_col), mins, maxs).alias("_codes"),
-            F.monotonically_increasing_id().alias("_pin"),
+            pin(s),
         ),
     )
     qc_lit = K.double_array_lit(qc)

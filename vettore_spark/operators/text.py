@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.operators.dedup import tokens
 from vettore_spark.plans.cache import cached_persist
+from vettore_spark.plans.spread import pin
 
 # A BPE-ish pre-tokenization pattern: alphabetic runs, single digits,
 # or single non-alphanumeric glyphs (GPT-2-style digit splitting).
@@ -399,7 +400,7 @@ def charlm_trigram_scores(
             .select(
                 F.col(id_col),
                 F.lower(F.col(text_col)).alias("_lc"),
-                F.monotonically_increasing_id().alias("_pin"),
+                pin(s),
             )
             .select(F.col(id_col), F.explode(tris).alias("tri"))
         )

@@ -13,12 +13,13 @@ Two caveats carried from hard-won bugs (see also dedup._shingle_base):
   usually fewer bytes than shuffling shingle/gram arrays;
 - when the expensive work is a Project (not a Generate), ColumnPruning can
   push it BELOW the new exchange, un-parallelizing it again; callers guard
-  with a non-deterministic pin column in the same projection.
+  with a non-deterministic pin column (`pin`) in the same projection.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def spread_narrow(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -30,3 +31,15 @@ def spread_narrow(df: DataFrame, cols: list[str]) -> DataFrame:
     if src.rdd.getNumPartitions() < target:
         src = src.repartition(target)
     return src
+
+
+def pin(df: DataFrame) -> Column:
+    """Non-deterministic `_pin` column for a projection over `df`: it blocks
+    CollapseProject/pushdown from re-inlining an expensive projection into
+    its consumers or below an exchange. No consumer reads its values.
+    Streaming plans reject non-deterministic expressions, so streams get a
+    literal instead — per-micro-batch recompute is bounded by the batch
+    size, and plan validity wins."""
+    return (
+        F.lit(0) if df.isStreaming else F.monotonically_increasing_id()
+    ).alias("_pin")

@@ -3314,8 +3314,9 @@ STREAMING_REPLAY_SECONDS: dict[str, float] = {}
 # #3: the replay-warmup total tripled with no code change and the record
 # had nothing to attribute it to): batchId, input rows, and the engine's
 # own durationMs breakdown (addBatch = plan execution, the rest is
-# state-store commit / offset bookkeeping). Diagnostic only — consumed
-# by tools/replay_profile.py, never by the driver line.
+# state-store commit / offset bookkeeping). Diagnostic only — bench.py
+# writes it to bench_full.json's `streaming_progress` key, never to the
+# compact stdout line.
 STREAMING_REPLAY_PROGRESS: dict[str, list[dict]] = {}
 
 
@@ -3345,10 +3346,10 @@ def _run_streaming_gate(
     batch, a fixed cost that dwarfed the few-hundred-row batches of the
     multi-batch gates (r14 profile, quiet host: moment_stats 12.3 s at
     32 partitions -> 6.4 s at 8; steady-state addBatch 3 s -> 0.5 s —
-    tools/replay_profile.py has the per-batch attribution). The gates'
-    results are partition-count-invariant (order-free state merges; the
-    r13 hostile 128-partition sweep), so this is a cost knob, not a
-    semantics knob; real deployments size it to their state volume.
+    bench_full.json's `streaming_progress` has the per-batch attribution).
+    The gates' results are partition-count-invariant (order-free state
+    merges; the r13 hostile 128-partition sweep), so this is a cost knob,
+    not a semantics knob; real deployments size it to their state volume.
     Structured Streaming clones the session at start(), so the conf is
     restored immediately after — batch queries planned later in the
     same session are untouched."""

@@ -11,7 +11,7 @@ optimization).
   sort-merge (optimization guide §3.1/§9): SHJ skips both sort passes.
   Scale-safe at any data size — Spark only builds the per-partition hash
   map when the build side fits its threshold. Measured (r14,
-  tools/confexp.py, A/B with an order-reversed re-check): 16-query subset
+  OPTIMIZATION_r14.md, A/B with an order-reversed re-check): 16-query subset
   10.09 s -> 9.20 s and 9.44 s -> 8.78 s at sf0.1; plan-verified flips are
   tpch_q17_bloom / tpch_q17_smallqty (1 SMJ -> 1 SHJ) and
   textrank_distributed's iteration joins (4 SMJ -> 4 SHJ).
@@ -33,7 +33,7 @@ optimization).
   tasks locally, big tables keep full parallelism on a cluster. Spark
   ships it off only because consumers that relied on the frozen cached
   partitioning may see an added exchange — a cost AQE itself weighs at
-  runtime. Measured (r15, tools/confexp.py, fresh session per variant,
+  runtime. Measured (r15, OPTIMIZATION_r15.md, fresh session per variant,
   A/B with an order-reversed re-check): 16-query subset 19.14 s ->
   14.17 s and (order reversed) 16.83 s -> 14.50 s at sf0.1; largest
   stable per-query wins dsir_weights 0.95 -> 0.30, minhash_lsh_pairs
