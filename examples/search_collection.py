@@ -67,7 +67,7 @@ def main() -> int:
         c.snapshot(path, include_indexes=True)
         c2 = Collection.load_snapshot(spark, path)
         print(f"restored:           {c2.count()} vectors, "
-              f"warm index: {bool(c2.__dict__.get('_hnsw_shards'))}")
+              f"warm index: {any(k[0] == 'hnsw' for k in c2._indexes)}")
         print(f"restored hnsw:      {ids(c2.hnsw_search(q, limit=5))}")
     spark.stop()
     return 0

@@ -61,3 +61,9 @@ def strip_cached_plans(plan: str) -> str:
             continue
         out.append(line)
     return "\n".join(out)
+
+
+def resident(coll, kind: str) -> dict:
+    """A Collection's resident indexes of one kind ('hnsw', 'ivf', 'pq' or
+    'sq'), keyed by their params — read through its one registry."""
+    return {key[1:]: ix for key, ix in coll._indexes.items() if key[0] == kind}

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from vettore_spark.operators import ann as ANN
 from vettore_spark.operators import search as S
 from vettore_spark.functions import kernels as K
+from tests.conftest import resident
 
 
 @pytest.fixture(scope="module")
@@ -201,16 +202,16 @@ def test_collection_ivf_search_with_delete_patch(spark):
     c = Collection.create(spark, "ivff", 6, metric="cosine").put_many(rows)
     got = c.ivf_search(rows[5]["vector"], limit=3, n_cells=3, n_probe=3).collect()
     assert got[0]["id"] == "v5"  # n_probe covers all cells -> exact self-match
-    assert c.__dict__.get("_ivf_state")
+    assert resident(c, "ivf")
 
     c.delete("v5")
-    assert c.__dict__.get("_ivf_state"), "delete must patch, not drop"
+    assert resident(c, "ivf"), "delete must patch, not drop"
     got2 = c.ivf_search(rows[5]["vector"], limit=3, n_cells=3, n_probe=3).collect()
     assert all(r["id"] != "v5" for r in got2)
 
     nv = [float(x) for x in rng.normal(size=6)]
     c.put({"id": "fresh", "vector": nv})
-    assert c.__dict__.get("_ivf_state"), "put must patch the IVF state, not drop it"
+    assert resident(c, "ivf"), "put must patch the IVF state, not drop it"
     got3 = c.ivf_search(nv, limit=2, n_cells=3, n_probe=3).collect()
     assert got3[0]["id"] == "fresh"
 
@@ -235,7 +236,7 @@ def test_snapshot_persists_ivf_index(spark, tmp_path):
     path = str(tmp_path / "snapivf")
     c.snapshot(path, include_indexes=True)
     c2 = Collection.load_snapshot(spark, path)
-    assert c2.__dict__.get("_ivf_state"), "IVF state not restored"
+    assert resident(c2, "ivf"), "IVF state not restored"
     got = [(r["id"], r["score"]) for r in
            c2.ivf_search(q, limit=5, n_cells=4).collect()]
     assert got == want

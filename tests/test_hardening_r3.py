@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.operators import dedup as D
 from vettore_spark.operators import selection as SEL
+from tests.conftest import resident
 
 
 def _analyzed(df) -> str:
@@ -149,7 +150,7 @@ def test_snapshot_detects_tampered_index(spark, tmp_path):
         warnings.simplefilter("always")
         c2 = Collection.load_snapshot(spark, path)
     assert any("integrity" in str(w.message) for w in caught)
-    assert not c2.__dict__.get("_hnsw_shards"), "tampered index was installed"
+    assert not resident(c2, "hnsw"), "tampered index was installed"
     got = [r["id"] for r in c2.hnsw_search(q, limit=5, num_partitions=2).collect()]
     assert got == want  # rebuilt from canonical rows, same answer
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.operators import dedup as D
 from vettore_spark.plans.checkpoint import durable_cut, release_cut
+from tests.conftest import resident
 
 
 def _executed(df) -> str:
@@ -208,15 +209,17 @@ def test_hnsw_shard_patch_routes_through_durable_cut(spark, monkeypatch):
     not a raw localCheckpoint (a lost executor would orphan the resident
     shards with no lineage to recompute)."""
     from vettore_spark import collection as C
+    from vettore_spark.sources import store as ST
 
     calls = []
-    real = C.durable_cut
+    real = ST.durable_cut
 
     def spy(df, **kw):
         calls.append(kw)
         return real(df, **kw)
 
-    monkeypatch.setattr(C, "durable_cut", spy)
+    # the resident indexes (sources.store) apply the patches
+    monkeypatch.setattr(ST, "durable_cut", spy)
     rng = np.random.default_rng(11)
     rows = [
         {"id": f"v{i}", "vector": [float(x) for x in rng.normal(size=6)]}
@@ -224,7 +227,7 @@ def test_hnsw_shard_patch_routes_through_durable_cut(spark, monkeypatch):
     ]
     c = C.Collection.create(spark, "hn_r4", 6, metric="l2").put_many(rows)
     c.hnsw_search(rows[0]["vector"], limit=3, ef_search=10_000).collect()
-    assert c.__dict__.get("_hnsw_shards")
+    assert resident(c, "hnsw")
 
     calls.clear()
     c.put({"id": "fresh", "vector": [float(x) for x in rng.normal(size=6)]})
@@ -235,37 +238,56 @@ def test_hnsw_shard_patch_routes_through_durable_cut(spark, monkeypatch):
     assert calls, "delete shard patch bypassed durable_cut"
 
 
-def test_snapshot_detects_content_tampered_index(spark, tmp_path):
-    """Row-count-preserving tampering (edited blobs, rewired graph) must
-    fail the manifest's CONTENT fingerprint and skip the index — the r4
-    upgrade over the count-only check."""
-    import warnings
+# kind -> (search over the resident index, index table to tamper, a
+# row-count-preserving edit of it)
+_TAMPER = {
+    "hnsw": (
+        lambda c, q: c.hnsw_search(q, limit=5, num_partitions=2),
+        "index_hnsw/k0",
+        # corrupted graph blob
+        lambda t: t.withColumn("shard", F.concat("shard", F.lit(b"\x00"))),
+    ),
+    "ivf": (
+        lambda c, q: c.ivf_search(q, limit=5, n_cells=4, n_probe=2),
+        "index_ivf/k0/assigned",
+        # every row moved to another cell
+        lambda t: t.withColumn("_cell", (F.col("_cell") + 1) % 4),
+    ),
+    "pq": (
+        lambda c, q: c.pq_search(q, limit=5, m=2, n_codes=8, candidates=10),
+        "index_pq/k0",
+        # every code sequence reversed
+        lambda t: t.withColumn("codes", F.reverse("codes")),
+    ),
+}
 
-    from pyspark.sql import functions as SF
+
+@pytest.mark.parametrize("kind", sorted(_TAMPER))
+def test_snapshot_detects_content_tampered_index(spark, tmp_path, kind):
+    """Row-count-preserving tampering (edited blobs, rewired graph, moved
+    cells, rewritten codes) must fail the manifest's CONTENT fingerprint
+    and skip the index — the r4 upgrade over the count-only check — and
+    the search rebuilds to the same answer."""
+    import warnings
 
     from vettore_spark import Collection
 
-    c = Collection.create(spark, "tamper_r4", 4, metric="cosine")
+    search, table, edit = _TAMPER[kind]
+    c = Collection.create(spark, f"tamper_r4_{kind}", 4, metric="cosine")
     c.put_many(
         [{"id": f"v{i}", "vector": [1.0, float(i % 3), float(i), 0.5]}
          for i in range(30)]
     )
     q = [1.0, 1.0, 5.0, 0.5]
-    want = [r["id"] for r in c.hnsw_search(q, limit=5, num_partitions=2).collect()]
+    want = [r["id"] for r in search(c, q).collect()]
     path = str(tmp_path / "snap")
     c.snapshot(path, include_indexes=True)
 
-    idx_dir = os.path.join(path, "index_hnsw", "k0")
-    shards = spark.read.parquet(idx_dir)
-    n = shards.count()
-    # same row count, corrupted blob content
-    tampered = spark.createDataFrame(
-        shards.select(
-            "shard_id",
-            SF.concat(SF.col("shard"), SF.lit(b"\x00")).alias("shard"),
-        ).collect(),
-        shards.schema,
-    )
+    idx_dir = os.path.join(path, table)
+    stored = spark.read.parquet(idx_dir)
+    n = stored.count()
+    # same row count, edited content
+    tampered = spark.createDataFrame(edit(stored).collect(), stored.schema)
     assert tampered.count() == n
     tampered.write.mode("overwrite").parquet(idx_dir)
 
@@ -273,8 +295,8 @@ def test_snapshot_detects_content_tampered_index(spark, tmp_path):
         warnings.simplefilter("always")
         c2 = Collection.load_snapshot(spark, path)
     assert any("integrity" in str(w.message) for w in caught)
-    assert not c2.__dict__.get("_hnsw_shards"), "tampered index was installed"
-    got = [r["id"] for r in c2.hnsw_search(q, limit=5, num_partitions=2).collect()]
+    assert not resident(c2, kind), "tampered index was installed"
+    got = [r["id"] for r in search(c2, q).collect()]
     assert got == want
 
 
@@ -340,17 +362,17 @@ def test_collection_ivf_incremental_put(spark):
     c = Collection.create(spark, "ivf_r4", 6, metric="cosine").put_many(rows)
     got = c.ivf_search(rows[3]["vector"], limit=3, n_cells=4, n_probe=4).collect()
     assert got[0]["id"] == "v3"
-    state0 = c.__dict__.get("_ivf_state")
+    state0 = resident(c, "ivf")
     assert state0
-    cents0 = {k: cents for k, (cents, _a) in state0.items()}
+    cents0 = {k: ivf.centroids for k, ivf in state0.items()}
 
     nv = [float(x) for x in rng.normal(size=6)]
     c.put({"id": "fresh", "vector": nv})
-    state1 = c.__dict__.get("_ivf_state")
+    state1 = resident(c, "ivf")
     assert state1, "resident IVF state must be patched, not dropped"
     # codebook object unchanged (no re-train), assignment table patched
-    for k, (cents, _a) in state1.items():
-        assert cents is cents0[k]
+    for k, ivf in state1.items():
+        assert ivf.centroids is cents0[k]
     got2 = c.ivf_search(nv, limit=2, n_cells=4, n_probe=4).collect()
     assert got2[0]["id"] == "fresh"
 
@@ -403,13 +425,13 @@ def test_collection_pq_incremental_put_delete(spark):
     c = Collection.create(spark, "pq_r4", 8, metric="l2").put_many(rows)
     got = c.pq_search(rows[4]["vector"], limit=3, m=2, n_codes=8, candidates=50).collect()
     assert got[0]["id"] == "v04"
-    idx0 = c.__dict__.get("_pq_indexes")
+    idx0 = resident(c, "pq")
     assert idx0
     books0 = {k: idx._books for k, idx in idx0.items()}
 
     nv = [float(x) for x in rng.normal(size=8)]
     c.put({"id": "fresh", "vector": nv})
-    idx1 = c.__dict__.get("_pq_indexes")
+    idx1 = resident(c, "pq")
     assert idx1, "put must patch the resident PQ index, not drop it"
     for k, idx in idx1.items():
         assert idx._books is books0[k], "codebooks must not re-train on put"
@@ -417,7 +439,7 @@ def test_collection_pq_incremental_put_delete(spark):
     assert got2[0]["id"] == "fresh"
 
     c.delete("fresh")
-    assert c.__dict__.get("_pq_indexes"), "delete must tombstone, not drop"
+    assert resident(c, "pq"), "delete must tombstone, not drop"
     got3 = c.pq_search(nv, limit=5, m=2, n_codes=8, candidates=50).collect()
     assert all(r["id"] != "fresh" for r in got3)
 
@@ -437,17 +459,18 @@ def test_collection_sq_params_survive_put_delete(spark):
     c = Collection.create(spark, "sq_r4", 6, metric="l2").put_many(rows)
     got = c.sq_search(rows[7]["vector"], limit=3, candidates=40).collect()
     assert got[0]["id"] == "v07"
-    params0 = c.__dict__.get("_sq_params")
-    assert params0 is not None
+    params0 = resident(c, "sq")
+    assert params0
 
     nv = [float(x) for x in rng.normal(size=6)]
     c.put({"id": "fresh", "vector": nv})
-    assert c.__dict__.get("_sq_params") is params0, "bounds must stay resident"
+    # entries compare by identity
+    assert resident(c, "sq") == params0, "bounds must stay resident"
     got2 = c.sq_search(nv, limit=2, candidates=41).collect()
     assert got2[0]["id"] == "fresh"
 
     c.delete("fresh")
-    assert c.__dict__.get("_sq_params") is params0
+    assert resident(c, "sq") == params0
     got3 = c.sq_search(nv, limit=5, candidates=40).collect()
     assert all(r["id"] != "fresh" for r in got3)
 
@@ -466,14 +489,14 @@ def test_snapshot_persists_pq_index(spark, tmp_path):
     c = Collection.create(spark, "pq_snap", 8, metric="l2").put_many(rows)
     q = rows[9]["vector"]
     want = [r["id"] for r in c.pq_search(q, limit=3, m=2, n_codes=8, candidates=50).collect()]
-    assert c.__dict__.get("_pq_indexes")
+    assert resident(c, "pq")
     path = str(tmp_path / "snap")
     c.snapshot(path, include_indexes=True)
 
     c2 = Collection.load_snapshot(spark, path)
-    cache = c2.__dict__.get("_pq_indexes")
+    cache = resident(c2, "pq")
     assert cache, "PQ index not restored"
     for k, idx in cache.items():
-        assert np.array_equal(idx._books, c.__dict__["_pq_indexes"][k]._books)
+        assert np.array_equal(idx._books, resident(c, "pq")[k]._books)
     got = [r["id"] for r in c2.pq_search(q, limit=3, m=2, n_codes=8, candidates=50).collect()]
     assert got == want

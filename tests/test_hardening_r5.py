@@ -12,6 +12,7 @@ from vettore_spark.operators import sketch as S
 from vettore_spark.operators.dedup import embedding_neardup_banded
 from vettore_spark.operators.graph import pagerank
 from tests.test_graph import STAR_EDGES, _py_pagerank
+from tests.conftest import resident
 
 
 def _vec(seed: int, dims: int = 8) -> list[float]:
@@ -28,31 +29,31 @@ def coll(spark):
 def test_put_many_rejected_batch_keeps_resident_hnsw(coll):
     """A rejected batch leaves the collection unchanged, so the resident
     HNSW shard table must survive — not be dropped for a full rebuild on
-    the next search (the shards were popped before validation)."""
+    the next search."""
     coll.hnsw_search(_vec(1), limit=3).collect()  # build residency
-    assert "_hnsw_shards" in coll.__dict__
-    before = coll.__dict__["_hnsw_shards"]
+    before = resident(coll, "hnsw")
+    assert before
+    # entries compare by identity
     with pytest.raises(ValueError, match="duplicate id"):
         coll.put_many([{"id": "5", "vector": _vec(99)}])  # clashes
-    assert coll.__dict__.get("_hnsw_shards") is before
+    assert resident(coll, "hnsw") == before
     with pytest.raises(ValueError, match="invalid vector"):
         coll.put_many([{"id": "new", "vector": [1.0]}])  # wrong dims
-    assert coll.__dict__.get("_hnsw_shards") is before
+    assert resident(coll, "hnsw") == before
     assert coll.count() == 40
 
 
 def test_put_rejected_row_keeps_resident_indexes(coll):
-    """put() pops every resident index before delegating to put_many; a
-    validation failure must re-stash all of them."""
+    """A row put() rejects must leave every resident index as it was."""
     coll.hnsw_search(_vec(1), limit=3).collect()
     coll.ivf_search(_vec(1), limit=3, n_cells=4, n_probe=2).collect()
-    popped = [k for k in ("_hnsw_shards", "_ivf_state") if k in coll.__dict__]
-    assert popped == ["_hnsw_shards", "_ivf_state"]
-    before = {k: coll.__dict__[k] for k in popped}
+    before = {kind: resident(coll, kind) for kind in ("hnsw", "ivf")}
+    assert all(before.values())
     with pytest.raises(ValueError, match="duplicate id"):
         coll.put({"id": "5", "vector": _vec(99)})
-    for k, v in before.items():
-        assert coll.__dict__.get(k) is v, k
+    for kind, entries in before.items():
+        # entries compare by identity
+        assert resident(coll, kind) == entries, kind
     assert coll.count() == 40
 
 

@@ -21,6 +21,7 @@ import numpy as np
 import pytest
 
 from vettore_spark.collection import Collection
+from tests.conftest import resident
 
 
 def _vec(seed: int, dims: int = 8) -> list[float]:
@@ -36,16 +37,17 @@ def test_refused_tombstone_batch_keeps_resident_hnsw(spark, tmp_path):
     c.put_many([{"id": f"d{i}", "vector": _vec(i)} for i in range(30)])
     # materialize the resident index
     c.hnsw_search(_vec(2), limit=3).collect()
-    shards_before = c.__dict__.get("_hnsw_shards")
-    assert shards_before is not None, "search must leave a resident index"
+    shards_before = resident(c, "hnsw")
+    assert shards_before, "search must leave a resident index"
 
     c.delete("d7")
-    shards_after_delete = c.__dict__.get("_hnsw_shards")
+    shards_after_delete = resident(c, "hnsw")
 
     with pytest.raises(ValueError, match="tombstoned"):
         c.put_many([{"id": "d7", "vector": _vec(99)}])
 
-    assert c.__dict__.get("_hnsw_shards") is shards_after_delete, (
+    # entries compare by identity
+    assert resident(c, "hnsw") == shards_after_delete, (
         "a refused batch must leave the resident HNSW shard table exactly "
         "as it was — not popped"
     )

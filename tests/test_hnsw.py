@@ -12,6 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from tests.conftest import resident
 
 from vettore_spark.operators.hnsw import (
     HnswGraph,
@@ -279,25 +280,25 @@ def test_collection_hnsw_incremental_put_delete(spark):
     c = Collection.create(spark, "hn", 6, metric="l2").put_many(rows)
     got = c.hnsw_search(rows[4]["vector"], limit=3, ef_search=10_000).collect()
     assert got[0]["id"] == "v4"
-    assert c.__dict__.get("_hnsw_shards")
+    assert resident(c, "hnsw")
 
     # incremental insert: resident table survives (patched, not dropped)
     nv = [float(x) for x in rng.normal(size=6)]
     c.put({"id": "fresh", "vector": nv})
-    assert c.__dict__.get("_hnsw_shards"), "resident table must be patched, not dropped"
+    assert resident(c, "hnsw"), "resident table must be patched, not dropped"
     got2 = c.hnsw_search(nv, limit=2, ef_search=10_000).collect()
     assert got2[0]["id"] == "fresh"
 
     # incremental delete: patched table stops returning the id
     c.delete("fresh")
-    assert c.__dict__.get("_hnsw_shards")
+    assert resident(c, "hnsw")
     got3 = c.hnsw_search(nv, limit=5, ef_search=10_000).collect()
     assert all(r["id"] != "fresh" for r in got3)
 
     # bulk put_many with a driver-small list now PATCHES the resident
     # table too (r4: insert_many_into_graph_shards — one batched job)
     c.put_many([{"id": "bulk1", "vector": nv}, {"id": "bulk2", "vector": nv}])
-    assert c.__dict__.get("_hnsw_shards"), "small-batch put_many must patch"
+    assert resident(c, "hnsw"), "small-batch put_many must patch"
     got4 = c.hnsw_search(nv, limit=2, ef_search=10_000).collect()
     assert {got4[0]["id"], got4[1]["id"]} == {"bulk1", "bulk2"}
 
@@ -308,7 +309,7 @@ def test_collection_hnsw_incremental_put_delete(spark):
         c._df.schema,
     )
     c.put_many(staged)
-    assert c.__dict__.get("_hnsw_shards"), "DataFrame batch must patch"
+    assert resident(c, "hnsw"), "DataFrame batch must patch"
     got5 = c.hnsw_search(nv, limit=3, ef_search=10_000).collect()
     assert any(r["id"] == "dfrow" for r in got5)
 
@@ -327,10 +328,10 @@ def test_collection_hnsw_multivector_put_keeps_residency(spark):
     ]
     c = Collection.create(spark, "hnm", 4, metric="l2").put_many(rows)
     c.hnsw_search(rows[0]["vector"], limit=2, ef_search=10_000).collect()
-    assert c.__dict__.get("_hnsw_shards")
+    assert resident(c, "hnsw")
     mv = [[1.0, 2.0, 3.0, 4.0], [3.0, 4.0, 5.0, 6.0]]  # mean (2,3,4,5)
     c.put({"id": "multi", "vectors": mv})
-    assert c.__dict__.get("_hnsw_shards"), "multi-vector put must patch, not drop"
+    assert resident(c, "hnsw"), "multi-vector put must patch, not drop"
     got = c.hnsw_search([2.0, 3.0, 4.0, 5.0], limit=1, ef_search=10_000).collect()
     assert got[0]["id"] == "multi"
 
@@ -349,15 +350,15 @@ def test_snapshot_persists_hnsw_index(spark, tmp_path):
     q = [1.0, 1.0, 5.0, 0.5]
     want = [(r["id"], r["score"]) for r in
             c.hnsw_search(q, limit=5, num_partitions=2).collect()]
-    assert "_hnsw_shards" in c.__dict__ and c.__dict__["_hnsw_shards"]
+    assert resident(c, "hnsw")
 
     path = str(tmp_path / "snap")
     c.snapshot(path, include_indexes=True)
     c2 = Collection.load_snapshot(spark, path)
     # the index came back resident: the cache is pre-populated with the
     # same (metric, params, partitions) key before any search runs
-    assert c2.__dict__.get("_hnsw_shards"), "index not restored"
-    assert set(c2.__dict__["_hnsw_shards"]) == set(c.__dict__["_hnsw_shards"])
+    assert resident(c2, "hnsw"), "index not restored"
+    assert set(resident(c2, "hnsw")) == set(resident(c, "hnsw"))
     got = [(r["id"], r["score"]) for r in
            c2.hnsw_search(q, limit=5, num_partitions=2).collect()]
     assert got == want
@@ -486,13 +487,13 @@ def test_put_many_large_batch_keeps_residency_via_df_path(spark, monkeypatch):
         ]
     )
     c.hnsw_search([0.0] * 6, limit=3).collect()
-    assert "_hnsw_shards" in c.__dict__
+    assert resident(c, "hnsw")
     big = [
         {"id": f"b{i:05d}", "vector": [float(x) for x in rng.normal(size=6)]}
         for i in range(101)
     ]
     c.put_many(big)
-    assert "_hnsw_shards" in c.__dict__, "residency dropped for a big batch"
+    assert resident(c, "hnsw"), "residency dropped for a big batch"
     target = big[17]["vector"]
     hits = c.hnsw_search(target, limit=1).collect()
     assert hits[0]["id"] == "b00017"

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from vettore_spark.operators import ann as ANN
 from vettore_spark.operators import pq as PQ
+from tests.conftest import resident
 
 
 @pytest.fixture(scope="module")
@@ -317,6 +318,6 @@ def test_collection_pq_search_facade(spark):
     ]
     assert got == exact
     # second call reuses the resident index (same object)
-    assert len(c._pq_indexes) == 1
+    assert len(resident(c, "pq")) == 1
     c.pq_search(q, limit=3, candidates=64, m=2, n_codes=8).collect()
-    assert len(c._pq_indexes) == 1
+    assert len(resident(c, "pq")) == 1

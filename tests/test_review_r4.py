@@ -13,6 +13,7 @@ from vettore_spark.collection import Collection
 from vettore_spark.functions import kernels as K
 from vettore_spark.operators import dedup as D
 from vettore_spark.operators import text as TX
+from tests.conftest import resident
 
 
 def test_ivf_filtered_search_sees_incremental_put(spark):
@@ -34,11 +35,11 @@ def test_ivf_filtered_search_sees_incremental_put(spark):
     probe = rows[0]["vector"]
     # warm the resident inverted file
     c.ivf_search(probe, limit=5, n_cells=4)
-    assert c.__dict__.get("_ivf_state")
+    assert resident(c, "ivf")
 
     nv = [float(x) for x in rng.normal(size=8)]
     c.put({"id": "fresh", "vector": nv, "metadata": {"parity": "odd"}})
-    assert c.__dict__.get("_ivf_state"), "put() must keep the IVF resident"
+    assert resident(c, "ivf"), "put() must keep the IVF resident"
 
     got = c.ivf_search(
         nv, limit=5, n_cells=4, n_probe=4, where="metadata['parity'] = 'odd'"
@@ -69,8 +70,8 @@ def test_ivf_incremental_append_matches_stored_row(spark):
     c.put({"id": "fresh", "vector": nv, "metadata": {"k": "new"}})
 
     canon = c.df.filter(F.col("id") == "fresh").collect()[0]
-    (_, assigned), = c.__dict__["_ivf_state"].values()
-    appended = assigned.filter(F.col("id") == "fresh").collect()[0]
+    (ivf,) = resident(c, "ivf").values()
+    appended = ivf.assigned.filter(F.col("id") == "fresh").collect()[0]
     assert appended["value"] == canon["value"] == "fresh"
     assert appended["metadata"] == canon["metadata"] == {"k": "new"}
     assert appended["binary_vector"] == canon["binary_vector"]

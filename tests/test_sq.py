@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vettore_spark.operators import sq as SQ
+from tests.conftest import resident
 
 
 @pytest.fixture(scope="module")
@@ -91,13 +92,13 @@ def test_collection_sq_search_and_invalidation(spark):
     c = Collection.create(spark, "sqt", 6, metric="l2").put_many(rows)
     got = c.sq_search(rows[3]["vector"], limit=3, candidates=20).collect()
     assert got[0]["id"] == "v3"
-    assert c.__dict__.get("_sq_params") is not None
+    assert resident(c, "sq")
 
     # insert a new exact-match vector -> must be reachable (bounds stay
     # resident; the code table keys on the new plan and refreshes)
     target = [float(x) for x in rng.normal(size=6)]
     c.put({"id": "new", "vector": target})
-    assert c.__dict__.get("_sq_params") is not None
+    assert resident(c, "sq")
     got2 = c.sq_search(target, limit=2, candidates=20).collect()
     assert got2[0]["id"] == "new"
 

@@ -292,8 +292,10 @@ def funnel_state_recovery_run(spark, base):
     restart-recovery evidence beyond KMV' item. Shared checkpoint, one
     new file per run (stop/start cadence): run 0 delivers views for all
     40 users, run 1 clicks for users 0-19, run 2 purchases for users 0-9.
-    The engine-reported state row count must stay == 40 (one three-long
-    struct per user, NOT growing with event count), the custom GroupState
+    The engine-reported state row count must stay == the number of user
+    buckets the 40 ids hash to (state is keyed by
+    pmod(xxhash64(user_id), 256), one row of per-user arrays per bucket,
+    NOT growing with event count), the custom GroupState
     must survive both restarts (a click only advances the funnel if the
     RECOVERED view timestamp is present and earlier), and the final
     stage-per-user must equal the batch min-aggregate funnel over the
@@ -347,8 +349,15 @@ def funnel_state_recovery_run(spark, base):
         state_trajectory.append(state_rows)
         for r in emitted:
             final_stage[r["user_id"]] = r["stage"]
-    assert state_trajectory == [40, 40, 40], (
-        f"state rows {state_trajectory}: O(1)-per-user state violated"
+    # the state key of streaming_funnel_stage, over the 40 user ids
+    buckets = spark.createDataFrame(
+        [(u,) for u in range(40)], "user_id long"
+    ).select(
+        F.countDistinct(F.pmod(F.xxhash64("user_id"), F.lit(256)))
+    ).first()[0]
+    assert state_trajectory == [buckets] * 3, (
+        f"state rows {state_trajectory}, want {buckets} user buckets per "
+        "run: O(1)-per-user state violated"
     )
     # batch twin: the min-aggregate funnel with the same strict-> rule
     # over the union of all three files
@@ -395,6 +404,7 @@ def funnel_state_recovery_run(spark, base):
     assert got_hist == want_hist, f"stage histogram {got_hist}, want {want_hist}"
     return {
         "users": 40,
+        "user_buckets": buckets,
         "state_rows_per_run": state_trajectory,
         "stage_histogram": {str(k): v for k, v in sorted(got_hist.items())},
         "pre_view_clicks_ignored": 5,

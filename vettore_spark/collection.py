@@ -21,6 +21,7 @@ Validation parity:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import warnings
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vettore_spark.functions import kernels as K
-from vettore_spark.plans.checkpoint import durable_cut, resident_cut, single_jvm
+from vettore_spark.plans.checkpoint import resident_cut, single_jvm
 
 EMBEDDING_SCHEMA = T.StructType(
     [
@@ -76,10 +77,10 @@ def _empty_rows(spark: SparkSession) -> DataFrame:
 _OVERRIDABLE = {"name", "index", "index_options", "score"}
 _STRUCTURAL = {"dimensions", "metric", "normalize", "compressed"}
 
-# put_many batches up to this size patch the resident HNSW shards via a
-# broadcast task closure (one narrow map job); larger batches take the
-# cogroup DataFrame path. Module-level so tests can exercise the DF path
-# without materializing a >10k-row batch.
+# put_many list batches up to this size hand the resident indexes their
+# stored rows, so HNSW routes them in a task closure (one narrow map job);
+# larger batches take the cogroup DataFrame path. Module-level so tests
+# can exercise the DF path without materializing a >10k-row batch.
 _HNSW_CLOSURE_BATCH_CAP = 10_000
 
 
@@ -139,6 +140,8 @@ class Collection:
         # At 100 TB this turns the most common monitoring call from a
         # full scan into a driver lookup.
         self._row_count: int | None = 0 if df is None else None
+        # resident search indexes (sources.store), keyed by (kind, *params)
+        self._indexes: dict[tuple, Any] = {}
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -319,7 +322,27 @@ class Collection:
         batch stores it; later searches never re-run this staging plan.
         The cut is a reliable checkpoint when the session has a checkpoint
         dir, a local checkpoint on a local master, and a persist on a
-        cluster without one."""
+        cluster without one.
+
+        Resident indexes (README "Collections: resident indexes"): the
+        committed batch patches the HNSW shards and drops IVF, PQ and SQ,
+        which rebuild at their next search. A rejected batch leaves every
+        index as it was."""
+        committed = self._commit(rows)
+        if committed is not None:
+            out, listed = committed
+            stored = None
+            if listed is not None and len(listed) <= _HNSW_CLOSURE_BATCH_CAP:
+                stored = functools.cache(
+                    lambda: [self._stored_row(r) for r in listed]
+                )
+            self._maintain(lambda ix: ix.put_many(out, stored))
+        return self
+
+    def _commit(self, rows) -> tuple[DataFrame, list[dict] | None] | None:
+        """put_many's validate-and-commit: returns the stored batch and,
+        for a list batch, its rows; None for an empty batch (a no-op).
+        Every rejection raises before anything is committed."""
         self._check_open()
         cfg = self.config
         dims = cfg.dimensions
@@ -414,11 +437,11 @@ class Collection:
             raise ValueError("duplicate id: already exists in collection")
         if not checks["n_batch"]:
             # empty batch: a no-op — do NOT stack a union/lineage node,
-            # bump the mutation counters, invalidate resident indexes, or
+            # bump the mutation counters, touch resident indexes, or
             # set _maybe_nonempty (which would make a still-empty
             # collection refuse attach_store and pay the clash join on
             # every future put_many)
-            return self
+            return None
 
         # insert-time normalization of both vector and multi-vectors
         norm = cfg.normalize
@@ -456,9 +479,7 @@ class Collection:
         # appending it to storage would leave the new row permanently
         # hidden by the anti-filter and compact_store() would then
         # discard it — an acknowledged write silently lost. Refuse
-        # with the remediation instead. This check runs BEFORE the
-        # resident-HNSW pop below: it needs no index state, and a refusal
-        # here must not cost the caller a shard rebuild.
+        # with the remediation instead.
         if self._store is not None and self._store_deleted:
             if len(self._store_deleted) <= self._TOMBSTONE_ISIN_MAX:
                 clashing = out.filter(F.col("id").isin(self._store_deleted))
@@ -476,16 +497,6 @@ class Collection:
                     "call compact_store() first to make them "
                     "re-insertable"
                 )
-        # resident HNSW maintenance across BATCH ingest: driver-small list
-        # batches patch the shard table (one batched graph-insert job,
-        # insert_many_into_graph_shards) instead of dropping it; DataFrame
-        # batches still invalidate — routing them would need a collect,
-        # the scale failure mode. Popped only HERE, after every validation
-        # raise above: a rejected batch must leave the collection — and its
-        # resident indexes — exactly as they were (no forced rebuild on the
-        # next search just because one bad batch was refused).
-        hnsw_resident = self.__dict__.pop("_hnsw_shards", None)
-
         def _bump_count() -> None:
             # every validation that can raise has run and the batch is
             # committed: the maintained count moves by exactly the
@@ -502,8 +513,7 @@ class Collection:
             self._df = self._canonical_read()
             self.__dict__["_union_depth"] = 0
             self._maybe_nonempty = True
-            self._invalidate_derived()
-            return self._patch_resident_hnsw(hnsw_resident, out, batch_rows)
+            return out, batch_rows
         # materialize the batch at its first read (docstring). The union
         # keeps EMBEDDING_SCHEMA: it ORs nullability with the collection
         # frame's, which descends from the empty EMBEDDING_SCHEMA frame.
@@ -514,8 +524,7 @@ class Collection:
         _bump_count()
         self._cut_lineage_maybe()
         self._maybe_nonempty = True
-        self._invalidate_derived()
-        return self._patch_resident_hnsw(hnsw_resident, out, batch_rows)
+        return out, batch_rows
 
     def _cut_lineage_maybe(self) -> None:
         """Bound the in-memory plan's mutation depth: every _df rebind that
@@ -542,62 +551,6 @@ class Collection:
             self._df = resident_cut(self._df)
             depth = 0
         self.__dict__["_union_depth"] = depth
-
-    def _patch_resident_hnsw(
-        self, hnsw_resident, out: DataFrame, batch_rows: list[dict] | None
-    ) -> "Collection":
-        """Re-stash the resident HNSW shard tables patched with the batch
-        just ingested (put_many tail — runs AFTER the canonical rows are
-        committed): closure routing for driver-small list batches, the
-        cogroup DataFrame path for everything else."""
-        if hnsw_resident is not None:
-            from vettore_spark.operators import hnsw as H
-
-            if batch_rows is not None and not batch_rows:
-                # empty batch: nothing to route, keep as-is
-                self.__dict__["_hnsw_shards"] = hnsw_resident
-                return self
-            if batch_rows is not None and len(batch_rows) <= _HNSW_CLOSURE_BATCH_CAP:
-                # driver-small list batch: route in the task closure (one
-                # narrow map job, no extra DataFrame plan)
-                ins = [
-                    ((r.get("id") or r.get("value")), self._stored_vector(r))
-                    for r in batch_rows
-                ]
-                self.__dict__["_hnsw_shards"] = {
-                    k: (
-                        durable_cut(
-                            H.insert_many_into_graph_shards(
-                                sh, ins, shard_ids=sids
-                            ),
-                            eager=False,
-                        ),
-                        sids,
-                    )
-                    for k, (sh, sids) in hnsw_resident.items()
-                }
-            else:
-                # DataFrame-sized ingest (a DataFrame batch, or a list
-                # batch past the closure cap): route executor-side and
-                # patch via ONE cogroup job (insert_df_into_graph_shards)
-                # instead of dropping residency for a full O(n log n)
-                # rebuild. `out` already holds the stored (normalized,
-                # f32-rounded) vectors, so the patched graphs see exactly
-                # the values a rebuild over the unioned table would.
-                self.__dict__["_hnsw_shards"] = {
-                    k: (
-                        durable_cut(
-                            H.insert_df_into_graph_shards(
-                                sh, out, shard_ids=sids,
-                                id_col="id", vector_col="vector",
-                            ),
-                            eager=False,
-                        ),
-                        sids,
-                    )
-                    for k, (sh, sids) in hnsw_resident.items()
-                }
-        return self
 
     def get_many(self, ids: list[str]) -> DataFrame:
         """Batched point lookup: ONE broadcast semi-join job for the whole
@@ -652,91 +605,27 @@ class Collection:
         maintained INCREMENTALLY instead of being dropped for rebuild —
         the reference's insert-time index maintenance (hnsw.rs:152-245):
         HNSW via the one-shard graph patch, IVF via a one-row inverted-file
-        append (ivf_insert, codebook untouched)."""
-        resident = self.__dict__.pop("_hnsw_shards", None)
-        ivf_resident = self.__dict__.pop("_ivf_state", None)
-        pq_resident = self.__dict__.pop("_pq_indexes", None)
-        sq_resident = self.__dict__.pop("_sq_params", None)
-        try:
-            self.put_many([row])
-        except Exception:
-            # rejected row: the collection is unchanged, so the popped
-            # resident indexes are still valid — re-stash them instead of
-            # forcing a full index rebuild on the next search
-            for key, val in (
-                ("_hnsw_shards", resident),
-                ("_ivf_state", ivf_resident),
-                ("_pq_indexes", pq_resident),
-                ("_sq_params", sq_resident),
-            ):
-                if val is not None:
-                    self.__dict__[key] = val
-            raise
-        if sq_resident is not None:
-            # SQ min/max bounds stay resident across a single insert: an
-            # out-of-range value clips in the CANDIDATE stage only (the
-            # exact rerank re-orders on true vectors), the standard scalar-
-            # quantizer maintenance contract; the code table itself is
-            # plan-keyed and refreshes with the new rows automatically
-            self.__dict__["_sq_params"] = sq_resident
-        if resident or ivf_resident or pq_resident:
-            rid = row.get("id") or row.get("value")
-            vec = self._stored_vector(row)
-        if resident:
-            from vettore_spark.operators import hnsw as H
-            # durability ladder, not a raw localCheckpoint: on a cluster a
-            # lost executor must not orphan the patched resident shards
-            # with no lineage to recompute (plans/checkpoint.py)
-            self.__dict__["_hnsw_shards"] = {
-                k: (
-                    durable_cut(
-                        H.insert_into_graph_shards(sh, rid, vec, shard_ids=sids),
-                        eager=False,
-                    ),
-                    sids,
-                )
-                for k, (sh, sids) in resident.items()
-            }
-        if ivf_resident:
-            from vettore_spark.operators import ann as ANN
-
-            # IVF mirror of the HNSW patch: one driver-side nearest-cell
-            # assignment + a one-row append to the inverted file — no
-            # codebook re-train (ivf_insert); durable_cut bounds the
-            # patched table's lineage. The payload columns ride along so
-            # ivf_search(where=...) — which filters the inverted file —
-            # still sees rows inserted after index residency.
-            extras = self._stored_extras(row)
-            self.__dict__["_ivf_state"] = {
-                k: (
-                    cents,
-                    durable_cut(
-                        ANN.ivf_insert(
-                            assigned, rid, vec, centroids=cents,
-                            id_col="id", vector_col="vector",
-                            extras=extras,
-                        ),
-                        eager=False,
-                    ),
-                )
-                for k, (cents, assigned) in ivf_resident.items()
-            }
-        if pq_resident:
-            # PQ mirror: encode the one vector with the resident codebooks
-            # and append a single code row (PqIndex.insert — no re-train)
-            self.__dict__["_pq_indexes"] = {
-                k: idx.insert(rid, vec) for k, idx in pq_resident.items()
-            }
+        append (ivf_insert, codebook untouched), PQ via a one-row code
+        append (PqIndex.insert); the SQ bounds are kept. A rejected row
+        leaves every index as it was."""
+        if self._commit([row]) is not None:
+            stored = self._stored_row(row)
+            self._maintain(lambda ix: ix.put(stored))
         return self
 
-    def _stored_extras(self, row: dict) -> dict:
-        """Driver-side payload columns for a one-row incremental index
-        append, replicating exactly what put_many stores for `row`:
-        id<->value fallback, per-inner-vector normalization (f32-rounded),
+    def _stored_row(self, row: dict) -> dict:
+        """The row put_many stores for `row`, derived driver-side for the
+        incremental index patches: id<->value fallback; the primary vector
+        — the given one, or the mean of its multi-vectors when absent
+        (collection.ex:1008-1017) — collection-normalized, then f32-rounded
+        (the stored column is array<float>); each inner vector likewise;
         sign bits packed from the normalized f64 primary vector (the
-        pre-f32 value compress_sign_bits sees in the batch path), metadata
+        pre-f32 value compress_sign_bits sees in the batch path); metadata
         as given."""
         import numpy as np
+
+        def f32(v: list[float]) -> list[float]:
+            return np.asarray(v, dtype=np.float32).astype(np.float64).tolist()
 
         v = row.get("vector")
         if v is None:
@@ -745,37 +634,17 @@ class Collection:
             ).tolist()
         q = self._prepare_query(v)
         vecs = row.get("vectors")
-        if vecs is not None:
-            vecs = [
-                np.asarray(self._prepare_query(list(x)), dtype=np.float32)
-                .astype(np.float64)
-                .tolist()
-                for x in vecs
-            ]
         val = row.get("value")
-        if val is None:
-            val = row.get("id")
         return {
-            "value": val,
-            "vectors": vecs,
+            "id": row.get("id") or val,
+            "value": row.get("id") if val is None else val,
+            "vector": f32(q),
+            "vectors": None if vecs is None else [
+                f32(self._prepare_query(list(x))) for x in vecs
+            ],
             "binary_vector": K.pack_sign_bits_py(q, self.config.dimensions),
             "metadata": row.get("metadata"),
         }
-
-    def _stored_vector(self, row: dict) -> list[float]:
-        """The f64 view of the primary vector put_many stores for `row`:
-        the given vector — or the mean of its multi-vectors when absent
-        (collection.ex:1008-1017) — validated, collection-normalized, then
-        f32-rounded (the stored column is array<float>)."""
-        import numpy as np
-
-        v = row.get("vector")
-        if v is None:
-            v = np.mean(
-                np.asarray(row["vectors"], dtype=np.float64), axis=0
-            ).tolist()
-        q = self._prepare_query(v)
-        return np.asarray(q, dtype=np.float32).astype(np.float64).tolist()
 
     # -- point ops (S3-S6) --------------------------------------------------
 
@@ -788,17 +657,14 @@ class Collection:
         """Row delete; resident derived indexes are patched in place
         rather than dropped for rebuild — HNSW (tombstone + edge strip +
         entry replacement, hnsw.rs:263-289), IVF (inverted-file
-        tombstone), PQ (code-table tombstone)."""
+        tombstone), PQ (code-table tombstone); the SQ bounds are kept
+        (bounds trained on a superset stay valid for any subset)."""
         self._check_open()
         # delta unknown without a lookup (the id may be absent — filter
         # no-ops); invalidate, count() re-derives and re-caches. The
         # store path DOES run a lookup below and restores the exact count.
         prev_count = self._row_count
         self._row_count = None
-        resident = self.__dict__.pop("_hnsw_shards", None)
-        ivf_resident = self.__dict__.pop("_ivf_state", None)
-        pq_resident = self.__dict__.pop("_pq_indexes", None)
-        sq_resident = self.__dict__.pop("_sq_params", None)
         if self._store is not None:
             # only tombstone ids that EXIST (one LIMIT-1 lookup against the
             # overlay-filtered view): deleting an absent id must be the
@@ -825,56 +691,20 @@ class Collection:
             # union — same depth budget, same cut (10k deletes must not
             # build a 10k-node plan)
             self._cut_lineage_maybe()
-        self._invalidate_derived()
-        if sq_resident is not None:
-            # min/max bounds trained on a superset remain valid bounds for
-            # any subset — keep them, skip the re-train scan
-            self.__dict__["_sq_params"] = sq_resident
-        if pq_resident:
-            self.__dict__["_pq_indexes"] = {
-                k: idx.delete(id_) for k, idx in pq_resident.items()
-            }
-        if resident:
-            from vettore_spark.operators import hnsw as H
-
-            self.__dict__["_hnsw_shards"] = {
-                k: (
-                    durable_cut(
-                        H.delete_from_graph_shards(sh, id_), eager=False
-                    ),
-                    sids,
-                )
-                for k, (sh, sids) in resident.items()
-            }
-        if ivf_resident:
-            from vettore_spark.operators import ann as ANN
-
-            # durable_cut like the insert path: K deletes must not chain
-            # K filter nodes onto the resident inverted file (the same
-            # lineage creep _cut_lineage_maybe bounds for canonical rows)
-            self.__dict__["_ivf_state"] = {
-                k: (
-                    cents,
-                    durable_cut(
-                        ANN.ivf_delete(assigned, id_, id_col="id"),
-                        eager=False,
-                    ),
-                )
-                for k, (cents, assigned) in ivf_resident.items()
-            }
+        self._maintain(lambda ix: ix.delete(id_))
         return self
 
     def _invalidate_derived(self) -> None:
-        """Drop derived-index caches when self._df is rebound (put/delete):
-        a stale PQ code table would make newly inserted vectors unreachable
-        (the candidate semi-join only yields ids present in the old codes)
-        and deleted ids resurrectable. The reference maintains its indexes
-        in the insert/delete path (hnsw.rs:263-289); the Spark analog is
-        rebuild-on-next-search from the canonical rows."""
-        self.__dict__.pop("_pq_indexes", None)
-        self.__dict__.pop("_sq_params", None)
-        self.__dict__.pop("_hnsw_shards", None)
-        self.__dict__.pop("_ivf_state", None)
+        """Drop every resident index (attach_store, compact_store): each
+        rebuilds from the canonical rows at its next search."""
+        self._maintain(lambda ix: None)
+
+    def _maintain(self, patch) -> None:
+        """Apply a committed write to the derived state: `patch(ix)`
+        returns each resident index patched, or None to drop it — a stale
+        index would miss new rows and resurrect deleted ones. The
+        reference maintains its indexes in the insert/delete path
+        (hnsw.rs:263-289); a dropped one rebuilds at its next search."""
         # module-level keyed persists (IVF assignments, shingle tables,
         # kNN edge tables) built FROM this collection's rows must go too:
         # for a store-backed collection the post-mutation read is
@@ -892,6 +722,8 @@ class Collection:
             invalidate_source(self._df, leaf_overlap=self._store is not None)
         except Exception:  # noqa: BLE001 — cache cleanup must never fail a write
             pass
+        patched = ((key, patch(ix)) for key, ix in self._indexes.items())
+        self._indexes = {key: ix for key, ix in patched if ix is not None}
 
     def all(self) -> DataFrame:
         return self.df
@@ -956,6 +788,15 @@ class Collection:
             return ((a - a.mean()) / s).tolist() if s else [0.0] * len(q)
         lo, hi = float(a.min()), float(a.max())
         return ((a - lo) / (hi - lo)).tolist() if hi != lo else [0.0] * len(q)
+
+    def _resident(self, key: tuple, build):
+        """The resident index at `key` ((kind, *params)), built by
+        `build()` on first use and reused across queries, like the
+        reference's insert-time index maintenance."""
+        ix = self._indexes.get(key)
+        if ix is None:
+            ix = self._indexes[key] = build()
+        return ix
 
     def _where(self, where) -> DataFrame:
         """Candidate restriction for the search facades: None -> all rows;
@@ -1120,6 +961,7 @@ class Collection:
 
         The ADC stage of one query is a JVM top-k over the resident code
         table (operators.pq.pq_adc_topk): a request runs no Python worker."""
+        from vettore_spark.operators import search as S
         from vettore_spark.sources.store import PqIndex
 
         if self.config.metric not in ("l2", "euclidean", "cosine"):
@@ -1128,24 +970,22 @@ class Collection:
                 f"{self.config.metric!r} (the ADC stage is an L2 quantizer)"
             )
         q = self._prepare_query(query)
-        # index residency: train/encode once per (params) and reuse across
-        # queries, like the reference's insert-time index maintenance
-        key = (m, n_codes, iters)
-        cache = self.__dict__.setdefault("_pq_indexes", {})
-        idx = cache.get(key)
-        if idx is None:
-            idx = PqIndex(m=m, n_codes=n_codes, iters=iters).build(self.df)
-            cache[key] = idx
-        idx.factor = max(1, candidates // max(limit, 1))
+        idx = self._resident(
+            ("pq", m, n_codes, iters),
+            lambda: PqIndex(
+                m=m, n_codes=n_codes, iters=iters, candidates_factor=1
+            ).build(self.df),
+        )
+        factor = max(1, candidates // max(limit, 1))
         if where is not None:
-            idx.factor *= 4  # over-fetch so the post-filter can still fill k
-        pruned = idx.candidates(self.df, q, limit)
+            factor *= 4  # over-fetch so the post-filter can still fill k
+        # the fetch depth is passed in, never stored on the shared index:
+        # concurrent requests cannot read each other's depth
+        pruned = idx.candidates(self.df, q, limit * factor)
         if where is not None:
             pruned = pruned.join(
                 self._where(where).select("id"), "id", "left_semi"
             )
-        from vettore_spark.operators import search as S
-
         return S.flat_topk(
             pruned, q, metric=self.config.metric, k=limit,
             score_mode=self.config.score, pre_normalized=self._pre_normalized,
@@ -1158,12 +998,11 @@ class Collection:
         """Partition-parallel HNSW search over a RESIDENT graph-shard table
         (Q6/Q7): built once per (params) from the canonical rows, then
         maintained incrementally — `put` inserts into one shard's graph,
+        `put_many` inserts each batch row into its routed shard's graph,
         `delete` patches the owning shard (entry replacement) — matching
         the reference's insert/delete-time index maintenance
-        (hnsw.rs:152-245, :263-289). Bulk put_many patches the resident
-        shards too (`_patch_resident_hnsw`): each batch row is inserted into
-        its routed shard's graph, no rebuild. Returns (id, score, distance)
-        like `search`.
+        (hnsw.rs:152-245, :263-289); `snapshot(include_indexes=True)`
+        persists it. Returns (id, score, distance) like `search`.
 
         `where` is POST-filtered with over-fetch (the graph is traversed
         for limit*oversample, then the predicate-passing top `limit` kept)
@@ -1172,29 +1011,23 @@ class Collection:
         `search(where=)` (exact filter-first scan) when the filtered
         subset is small enough to scan."""
         from vettore_spark.operators import hnsw as H
+        from vettore_spark.sources.store import HnswShards
 
         self._check_open()
         q = self._prepare_query(query)
         p = H.HnswParams() if ef_search is None else H.HnswParams(ef_search=ef_search)
-        key = (self.config.metric, p.m, p.m0, p.ef_construction,
-               p.max_level, num_partitions)
-        cache = self.__dict__.setdefault("_hnsw_shards", {})
-        hit = cache.get(key)
-        if hit is None:
-            shards = H.build_graph_shards(
-                self._df.select("id", "vector"), metric=self.config.metric,
-                params=p, id_col="id", vector_col="vector",
+        metric = self.config.metric
+        ix = self._resident(
+            ("hnsw", metric, p.m, p.m0, p.ef_construction, p.max_level,
+             num_partitions),
+            lambda: HnswShards.build(
+                self._df, metric=metric, params=p,
                 num_partitions=num_partitions,
-            )
-            # shard-id list collected ONCE at build: put-time routing then
-            # needs no Spark job (insert_into_graph_shards shard_ids=)
-            sids = [r["shard_id"] for r in shards.select("shard_id").collect()]
-            hit = (shards, sids)
-            cache[key] = hit
-        shards, _ = hit
+            ),
+        )
         k_fetch = limit if where is None else limit * max(1, oversample)
         out = H.search_graph_shards(
-            shards, [("q", q)], metric=self.config.metric, k=k_fetch,
+            ix.shards, [("q", q)], metric=self.config.metric, k=k_fetch,
             ef_search=p.ef_search, id_col="id", id_type=T.StringType(),
         )
         if where is not None:
@@ -1214,8 +1047,9 @@ class Collection:
         assignment persisted and maintained incrementally — delete via the
         tombstone patch (ivf_delete), put via the one-row append
         (ivf_insert); the codebook is untouched by both, the reference's
-        index-maintenance contract. Bulk put_many still invalidates for
-        rebuild (a batch may warrant a new codebook). Returns (id, score,
+        index-maintenance contract. Bulk put_many drops the index for
+        rebuild (a batch may warrant a new codebook);
+        `snapshot(include_indexes=True)` persists it. Returns (id, score,
         distance, rank) for the probed cells.
 
         `where` composes on the inverted file BEFORE within-cell scoring
@@ -1226,8 +1060,8 @@ class Collection:
         Probe selection and within-cell scoring both run the JVM cosine
         kernel: a request runs no Python worker."""
         from vettore_spark.operators import ann as ANN
-        from vettore_spark.operators.mllib_lsh import kmeans_centroids
         from vettore_spark.operators.search import single_query_frame
+        from vettore_spark.sources.store import IvfFile
 
         self._check_open()
         # the IVF probe/score path is a COSINE kernel end to end
@@ -1242,21 +1076,14 @@ class Collection:
                 "pq_search (l2) for other metrics"
             )
         q = self._prepare_query(query)
-        key = (n_cells,)
-        cache = self.__dict__.setdefault("_ivf_state", {})
-        hit = cache.get(key)
-        if hit is None:
-            cents = kmeans_centroids(self._df, k=n_cells, vector_col="vector")
-            assigned = ANN.ivf_assign(
-                self._df, centroids=cents, id_col="id", vector_col="vector"
-            )
-            hit = (cents, assigned)
-            cache[key] = hit
-        cents, assigned = hit
+        ix = self._resident(
+            ("ivf", n_cells), lambda: IvfFile.build(self._df, n_cells=n_cells)
+        )
+        assigned = ix.assigned
         if where is not None:
             assigned = assigned.filter(where)
         out = ANN.ivf_topk(
-            self._df, single_query_frame(self.spark, q), centroids=cents,
+            self._df, single_query_frame(self.spark, q), centroids=ix.centroids,
             n_probe=n_probe, k=limit,
             id_col="id", vector_col="vector", assigned=assigned,
         )
@@ -1266,8 +1093,9 @@ class Collection:
                   candidates: int = 100, where=None) -> DataFrame:
         """Two-stage SQ8 scalar-quantization search (extension beyond the
         reference's binary quantization, between sign-bit and PQ on the
-        compression spectrum): per-dim min/max trained once per collection
-        state (invalidated on put/delete like the PQ index), scaled-integer
+        compression spectrum): per-dim min/max trained once and kept
+        resident (put and delete keep the bounds, put_many drops them; a
+        snapshot does not persist them), scaled-integer
         L2 candidates over uint8 codes, exact rerank with the collection
         metric. Supported for l2/cosine collections (the candidate stage is
         an L2 proxy — exact for l2, rank-preserving on unit-norm cosine).
@@ -1276,6 +1104,7 @@ class Collection:
         trained min/max bounds remain valid for any subset, so the shared
         quantizer serves every predicate)."""
         from vettore_spark.operators import sq as SQ
+        from vettore_spark.sources.store import SqBounds
 
         if self.config.metric not in ("l2", "euclidean", "cosine"):
             raise ValueError(
@@ -1283,13 +1112,9 @@ class Collection:
                 f"{self.config.metric!r} (the candidate stage is an L2 proxy)"
             )
         q = self._prepare_query(query)
-        params = self.__dict__.get("_sq_params")
-        if params is None:
-            params = SQ.sq_train(self._df, vector_col="vector")
-            self.__dict__["_sq_params"] = params
-        mins, maxs = params
+        ix = self._resident(("sq",), lambda: SqBounds.build(self._df))
         return SQ.sq_topk(
-            self._where(where), q, mins, maxs, k=limit, candidates=candidates,
+            self._where(where), q, ix.mins, ix.maxs, k=limit, candidates=candidates,
             id_col="id", vector_col="vector",
             metric=self.config.metric, score_mode=self.config.score,
             pre_normalized=self._pre_normalized,
@@ -1337,40 +1162,20 @@ class Collection:
 
     _SNAPSHOT_FORMATS = ("parquet", "json", "csv")
 
-    @staticmethod
-    def _table_fingerprint(df: DataFrame) -> tuple[int, int]:
-        """(rows, content checksum) for an index table: bit_xor of
-        xxhash64 over EVERY column (order-insensitive across partitioning
-        and row order — the same aggregate as the data-dir sidecar). A
-        hand-replaced or corrupted index with an unchanged row count
-        (edited vectors, rewired graph edges) fails this, where a
-        count-only check would install it silently. Map columns hash as
-        map_entries (Spark prohibits hashing maps directly; entry order is
-        preserved through the parquet round-trip, so the fingerprint is
-        stable between write and load)."""
-        cols = [
-            F.map_entries(c) if isinstance(df.schema[c].dataType, T.MapType)
-            else F.col(c)
-            for c in sorted(df.columns)
-        ]
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64(*cols)).alias("ck"),
-        ).collect()[0]
-        # empty table: bit_xor over zero rows is NULL — pin to 0
-        return row["n"], (0 if row["ck"] is None else row["ck"])
-
     def snapshot(self, path: str, *, format: str = "parquet",
                  include_indexes: bool = False) -> None:
         """Persist: data dir (atomic commit) + config JSON sidecar
         (store/ets.ex:27-47). By default the derived index is NOT
         persisted — it is rebuilt from canonical rows on load
         (collection.ex:426-433). With `include_indexes=True` (parquet
-        only) any RESIDENT HNSW shard tables are written alongside the
-        data and restored by load_snapshot without a rebuild — at corpus
-        scale a graph rebuild dwarfs the load itself, so a restart should
-        not pay it. Index and data are written from the same snapshot
-        call, so they are mutually consistent by construction.
+        only) the RESIDENT HNSW, IVF and PQ indexes are written alongside
+        the data (`index_{hnsw,ivf,pq}/k{i}`, each with a row count and
+        content fingerprint in config.json) and restored by load_snapshot
+        without a rebuild — at corpus scale a graph rebuild dwarfs the
+        load itself, so a restart should not pay it. SQ bounds are not
+        persisted; they retrain at the first sq_search. Index and data are
+        written from the same snapshot call, so they are mutually
+        consistent by construction.
 
         The reference has exactly one snapshot codec (:ets.tab2file);
         Spark's writer family comes free, so `format` may be parquet
@@ -1401,72 +1206,19 @@ class Collection:
         if include_indexes:
             if format != "parquet":
                 raise ValueError("include_indexes requires the parquet format")
-            manifest = []
-            resident = self.__dict__.get("_hnsw_shards") or {}
-            for i, (key, (shards, sids)) in enumerate(
-                sorted(resident.items(), key=lambda kv: str(kv[0]))
+            # one dir per resident index, numbered per kind in params order
+            seen: dict[str, int] = {}
+            for (kind, *params), ix in sorted(
+                self._indexes.items(), key=lambda kv: (kv[0][0], str(kv[0][1:]))
             ):
-                sub = os.path.join(path, "index_hnsw", f"k{i}")
-                shards.write.mode("overwrite").parquet(sub)
-                # per-index integrity: the data-dir sidecar does not cover
-                # index dirs, so a tampered/hand-replaced index would load
-                # silently and serve wrong results — record rows AND a
-                # content fingerprint at write time, verified before
-                # installing on load. Fingerprint the parquet JUST WRITTEN
-                # (not the in-memory plan): one cheap scan instead of a
-                # second full index-plan job, and the checksum matches the
-                # bytes on disk by construction — a lineage recompute
-                # between write and fingerprint can never poison the
-                # manifest into permanently rejecting its own files
-                n, ck = self._table_fingerprint(self.spark.read.parquet(sub))
-                manifest.append(
-                    {"dir": f"k{i}", "key": list(key), "shard_ids": sids,
-                     "rows": n, "checksum": ck}
+                i = seen[kind] = seen.get(kind, -1) + 1
+                ent = ix.save(
+                    self.spark, os.path.join(path, f"index_{kind}", f"k{i}")
                 )
-            if manifest:
-                cfg["_hnsw_indexes"] = manifest
-            ivf_manifest = []
-            for i, (key, (cents, assigned)) in enumerate(
-                sorted((self.__dict__.get("_ivf_state") or {}).items(),
-                       key=lambda kv: str(kv[0]))
-            ):
-                sub = os.path.join(path, "index_ivf", f"k{i}")
-                cents.write.mode("overwrite").parquet(
-                    os.path.join(sub, "centroids")
-                )
-                assigned.write.mode("overwrite").parquet(
-                    os.path.join(sub, "assigned")
-                )
-                cn, cck = self._table_fingerprint(
-                    self.spark.read.parquet(os.path.join(sub, "centroids"))
-                )
-                an, ack = self._table_fingerprint(
-                    self.spark.read.parquet(os.path.join(sub, "assigned"))
-                )
-                ivf_manifest.append(
-                    {"dir": f"k{i}", "key": list(key),
-                     "centroid_rows": cn, "centroid_checksum": cck,
-                     "assigned_rows": an, "assigned_checksum": ack}
-                )
-            if ivf_manifest:
-                cfg["_ivf_indexes"] = ivf_manifest
-            pq_manifest = []
-            for i, (key, idx) in enumerate(
-                sorted((self.__dict__.get("_pq_indexes") or {}).items(),
-                       key=lambda kv: str(kv[0]))
-            ):
-                if idx._books is None or idx._codes is None:
-                    continue
-                sub = os.path.join(path, "index_pq", f"k{i}")
-                idx._codes.write.mode("overwrite").parquet(sub)
-                n, ck = self._table_fingerprint(self.spark.read.parquet(sub))
-                pq_manifest.append(
-                    {"dir": f"k{i}", "key": list(key),
-                     "books": idx._books.tolist(),
-                     "codes_rows": n, "codes_checksum": ck}
-                )
-            if pq_manifest:
-                cfg["_pq_indexes"] = pq_manifest
+                if ent is not None:
+                    cfg.setdefault(ix.MANIFEST, []).append(
+                        {"dir": f"k{i}", "key": params, **ent}
+                    )
         # integrity sidecar, mirroring the reference's ETS extended_info
         # (object_count + md5sum, store/ets.ex:29-47): row count plus an
         # order-insensitive id checksum (XOR of xxhash64(id) survives any
@@ -1496,9 +1248,12 @@ class Collection:
         fmt = raw.pop("_snapshot_format", "parquet")
         want_count = raw.pop("_object_count", None)
         want_ck = raw.pop("_id_checksum", None)
-        idx_manifest = raw.pop("_hnsw_indexes", [])
-        ivf_manifest = raw.pop("_ivf_indexes", [])
-        pq_manifest = raw.pop("_pq_indexes", [])
+        from vettore_spark.sources.store import PERSISTED
+
+        index_entries = [
+            (kind, ent) for kind in PERSISTED
+            for ent in raw.pop(kind.MANIFEST, [])
+        ]
         raw.update(overrides)
         cfg = CollectionConfig(**raw)
         data = os.path.join(path, "data")
@@ -1557,88 +1312,23 @@ class Collection:
             # the O(1) counter so the first count() after a restart is a
             # driver lookup, not a rescan of what was verified moments ago
             out._row_count = int(want_count)
-        # restore persisted HNSW shard tables (snapshot include_indexes=True)
-        # — searches start warm, no graph rebuild on restart
-        # verify each index dir against the row counts recorded at snapshot
-        # time (the data-dir checksum above does not cover index dirs): a
-        # mismatched index is NOT installed — the entry is skipped with a
-        # warning and the index rebuilds lazily from the verified canonical
-        # rows at first search, trading a rebuild for silent wrong results
-        if idx_manifest:
-            cache = out.__dict__.setdefault("_hnsw_shards", {})
-            for ent in idx_manifest:
-                shards = spark.read.parquet(
-                    os.path.join(path, "index_hnsw", ent["dir"])
+        # restore the persisted indexes (snapshot include_indexes=True) —
+        # searches start warm, no rebuild on restart. An index whose tables
+        # fail their manifest fingerprint (the data-dir checksum above does
+        # not cover index dirs) is NOT installed: it is skipped with a
+        # warning and rebuilds lazily from the verified canonical rows at
+        # first search, trading a rebuild for silent wrong results
+        for kind, ent in index_entries:
+            ix = kind.load(
+                spark, os.path.join(path, f"index_{kind.KIND}", ent["dir"]), ent
+            )
+            if ix is None:
+                warnings.warn(
+                    f"snapshot {kind.KIND.upper()} index {ent['dir']} failed "
+                    "integrity check (rows/content fingerprint mismatch); "
+                    "skipping — the index will rebuild from canonical rows",
+                    stacklevel=2,
                 )
-                want = ent.get("rows")
-                want_ick = ent.get("checksum")
-                n, ck = cls._table_fingerprint(shards)
-                if (want is not None and n != want) or (
-                    want_ick is not None and ck != want_ick
-                ):
-                    warnings.warn(
-                        f"snapshot HNSW index {ent['dir']} failed integrity "
-                        f"check (rows/content fingerprint mismatch); "
-                        "skipping — the index will rebuild from canonical "
-                        "rows",
-                        stacklevel=2,
-                    )
-                    continue
-                cache[tuple(ent["key"])] = (shards, list(ent["shard_ids"]))
-        if ivf_manifest:
-            cache = out.__dict__.setdefault("_ivf_state", {})
-            for ent in ivf_manifest:
-                sub = os.path.join(path, "index_ivf", ent["dir"])
-                cents = spark.read.parquet(os.path.join(sub, "centroids"))
-                assigned = spark.read.parquet(os.path.join(sub, "assigned"))
-                want_c = ent.get("centroid_rows")
-                want_a = ent.get("assigned_rows")
-                want_cck = ent.get("centroid_checksum")
-                want_ack = ent.get("assigned_checksum")
-                cn, cck = cls._table_fingerprint(cents)
-                an, ack = cls._table_fingerprint(assigned)
-                if (
-                    (want_c is not None and cn != want_c)
-                    or (want_a is not None and an != want_a)
-                    or (want_cck is not None and cck != want_cck)
-                    or (want_ack is not None and ack != want_ack)
-                ):
-                    warnings.warn(
-                        f"snapshot IVF index {ent['dir']} failed integrity "
-                        "check; skipping — the index will rebuild from "
-                        "canonical rows",
-                        stacklevel=2,
-                    )
-                    continue
-                cache[tuple(ent["key"])] = (cents, assigned)
-        if pq_manifest:
-            import numpy as np
-
-            from vettore_spark.sources.store import PqIndex
-
-            cache = out.__dict__.setdefault("_pq_indexes", {})
-            for ent in pq_manifest:
-                codes = spark.read.parquet(
-                    os.path.join(path, "index_pq", ent["dir"])
-                )
-                n, ck = cls._table_fingerprint(codes)
-                if (
-                    ent.get("codes_rows") is not None
-                    and n != ent["codes_rows"]
-                ) or (
-                    ent.get("codes_checksum") is not None
-                    and ck != ent["codes_checksum"]
-                ):
-                    warnings.warn(
-                        f"snapshot PQ index {ent['dir']} failed integrity "
-                        "check; skipping — the index will rebuild from "
-                        "canonical rows",
-                        stacklevel=2,
-                    )
-                    continue
-                m, n_codes, iters = ent["key"]
-                idx = PqIndex(m=m, n_codes=n_codes, iters=iters)
-                idx._books = np.asarray(ent["books"], dtype=np.float64)
-                idx._codes = codes
-                cache[tuple(ent["key"])] = idx
+                continue
+            out._indexes[(kind.KIND, *ent["key"])] = ix
         return out

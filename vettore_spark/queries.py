@@ -2716,7 +2716,7 @@ def q_hnsw_batch_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = [(i, _qvec(spark, sf_dir, i)) for i in range(3)]
     patched = H.insert_many_into_graph_shards(shards, batch, shard_ids=sids)
     # cut between batches, exactly like the product path
-    # (Collection._patch_resident_hnsw durable_cuts each patched table):
+    # (sources.store.HnswShards durable_cuts each patched table):
     # the patch operators split touched/untouched shards so untouched
     # blobs never ride through Python, and the split's two branches must
     # not re-execute the PREVIOUS batch's patch lineage on every action.

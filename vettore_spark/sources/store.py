@@ -10,6 +10,14 @@ over DataFrames. Built-ins:
 - ParquetStore — a parquet directory per collection (atomic dir commit)
 - FlatIndex    — no index: exact scan (already parallel)
 - LshIndex     — random-hyperplane buckets as a persisted candidate table
+- PqIndex      — product-quantization codes as a persisted code table
+
+A Collection keeps its resident search indexes in one registry keyed by
+(KIND, *params): HnswShards, IvfFile, PqIndex and SqBounds. Every kind
+answers the same calls — build from the canonical rows; `put(row)`,
+`put_many(batch, rows)` and `delete(id_)` apply a committed write and
+return the patched index, or None to drop it (it rebuilds at its next
+search); `save`/`load` write and verify its snapshot tables.
 """
 
 from __future__ import annotations
@@ -22,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vettore_spark.plans.checkpoint import durable_cut
 
 
 @runtime_checkable
@@ -210,13 +220,100 @@ class LshIndex:
         return coll.join(F.broadcast(cand.select("id")), on="id", how="left_semi")
 
 
-class PqIndex:
+def _fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(rows, content checksum) for an index table: bit_xor of
+    xxhash64 over EVERY column (order-insensitive across partitioning
+    and row order — the same aggregate as the data-dir sidecar). A
+    hand-replaced or corrupted index with an unchanged row count
+    (edited vectors, rewired graph edges) fails this, where a
+    count-only check would install it silently. Map columns hash as
+    map_entries (Spark prohibits hashing maps directly; entry order is
+    preserved through the parquet round-trip, so the fingerprint is
+    stable between write and load)."""
+    cols = [
+        F.map_entries(c) if isinstance(df.schema[c].dataType, T.MapType)
+        else F.col(c)
+        for c in sorted(df.columns)
+    ]
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.bit_xor(F.xxhash64(*cols)).alias("ck"),
+    ).collect()[0]
+    # empty table: bit_xor over zero rows is NULL — pin to 0
+    return row["n"], (0 if row["ck"] is None else row["ck"])
+
+
+class _Resident:
+    """The snapshot half of the resident-index contract. A kind names its
+    registry key head and snapshot dir `index_{KIND}`; a persisted kind
+    (PERSISTED) also names its config.json manifest key (MANIFEST) and its
+    tables (TABLES: sub-dir, '' for the entry dir itself -> the manifest's
+    rows and checksum fields), and supplies `_tables`, `_manifest` and
+    `_restore`."""
+
+    KIND: str
+    MANIFEST: str
+    TABLES: dict[str, tuple[str, str]] = {}
+
+    def _tables(self) -> dict[str, DataFrame] | None:
+        return None
+
+    def _manifest(self) -> dict:
+        return {}
+
+    def save(self, spark: SparkSession, path: str) -> dict | None:
+        """Write the index tables under `path` and return the manifest
+        entry (rows + content fingerprint of each table), or None when
+        the index persists nothing."""
+        tables = self._tables()
+        if tables is None:
+            return None
+        ent = self._manifest()
+        for name, (rows_f, ck_f) in self.TABLES.items():
+            sub = os.path.join(path, name) if name else path
+            tables[name].write.mode("overwrite").parquet(sub)
+            # fingerprint the parquet JUST WRITTEN (not the in-memory
+            # plan): one cheap scan instead of a second full index-plan
+            # job, and the checksum matches the bytes on disk by
+            # construction — a lineage recompute between write and
+            # fingerprint can never poison the manifest into permanently
+            # rejecting its own files
+            ent[rows_f], ent[ck_f] = _fingerprint(spark.read.parquet(sub))
+        return ent
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str, ent: dict):
+        """Read the index tables under `path`, verifying each against the
+        manifest entry (the data-dir checksum does not cover index dirs);
+        None when any table fails, so a tampered index is never
+        installed."""
+        tables = {}
+        for name, (rows_f, ck_f) in cls.TABLES.items():
+            df = spark.read.parquet(os.path.join(path, name) if name else path)
+            n, ck = _fingerprint(df)
+            if ent.get(rows_f) not in (None, n) or ent.get(ck_f) not in (None, ck):
+                return None
+            tables[name] = df
+        return cls._restore(tables, ent)
+
+
+class PqIndex(_Resident):
     """Product-quantization index backend (Index protocol): `build` trains
     deterministic codebooks on a driver-collected sample (sorted by id —
     reproducible) and encodes the collection into a persisted code table;
     `candidates` ADC-scans the compressed domain for the top n*factor ids
     and semi-joins them back (exact rerank happens at the operator layer,
-    same two-stage contract as LshIndex)."""
+    same two-stage contract as LshIndex).
+
+    As a Collection resident index it is built with `candidates_factor=1`
+    and searched with the full fetch depth as `n`, so a search never
+    writes index state; put appends one code row, put_many drops it,
+    delete tombstones its code row, and a snapshot persists the codebooks
+    (manifest) and the code table."""
+
+    KIND = "pq"
+    MANIFEST = "_pq_indexes"
+    TABLES = {"": ("codes_rows", "codes_checksum")}
 
     def __init__(
         self,
@@ -309,8 +406,6 @@ class PqIndex:
         # cut every 8 appends via the durability-aware helper
         depth = getattr(self, "_insert_depth", 0) + 1
         if depth >= 8:
-            from vettore_spark.plans.checkpoint import durable_cut
-
             self._codes = durable_cut(self._codes, eager=False)
             depth = 0
         self._insert_depth = depth
@@ -322,6 +417,30 @@ class PqIndex:
         if self._codes is not None:
             self._codes = self._codes.filter(F.col("id") != F.lit(id_))
         return self
+
+    def put(self, row: dict) -> "PqIndex":
+        """A committed one-row put: encode its stored vector (insert)."""
+        return self.insert(row["id"], row["vector"])
+
+    def put_many(self, batch: DataFrame, rows) -> None:
+        """A committed batch drops the index (re-trained at next search)."""
+        return None
+
+    def _tables(self) -> dict[str, DataFrame] | None:
+        if self._books is None or self._codes is None:
+            return None
+        return {"": self._codes}
+
+    def _manifest(self) -> dict:
+        return {"books": self._books.tolist()}
+
+    @classmethod
+    def _restore(cls, tables: dict, ent: dict) -> "PqIndex":
+        m, n_codes, iters = ent["key"]
+        idx = cls(m=m, n_codes=n_codes, iters=iters, candidates_factor=1)
+        idx._books = np.asarray(ent["books"], dtype=np.float64)
+        idx._codes = tables[""]
+        return idx
 
     def candidates(self, coll: DataFrame, query: list[float], n: int) -> DataFrame:
         if self._books is None:
@@ -336,6 +455,169 @@ class PqIndex:
             self._codes, queries, self._books, k=n * self.factor, id_col="id"
         )
         return coll.join(F.broadcast(cand.select("id")), on="id", how="left_semi")
+
+
+class HnswShards(_Resident):
+    """Resident HNSW index: the graph-shard table (one pickled graph per
+    shard) plus its shard-id list, collected once at build so that put-time
+    routing runs no Spark job. Every write patches it — put inserts into
+    one shard's graph, put_many into each routed shard's graph, delete
+    strips the id from its shard — and each patched table takes the
+    durability ladder (plans/checkpoint.py), not a raw localCheckpoint, so
+    a lost executor cannot orphan it. A snapshot persists the table."""
+
+    KIND = "hnsw"
+    MANIFEST = "_hnsw_indexes"
+    TABLES = {"": ("rows", "checksum")}
+
+    def __init__(self, shards: DataFrame, shard_ids: list[int]):
+        self.shards, self.shard_ids = shards, shard_ids
+
+    @classmethod
+    def build(cls, rows: DataFrame, *, metric: str, params,
+              num_partitions: int) -> "HnswShards":
+        from vettore_spark.operators import hnsw as H
+
+        shards = H.build_graph_shards(
+            rows.select("id", "vector"), metric=metric, params=params,
+            id_col="id", vector_col="vector", num_partitions=num_partitions,
+        )
+        return cls(shards, [r["shard_id"] for r in shards.select("shard_id").collect()])
+
+    def _patched(self, shards: DataFrame) -> "HnswShards":
+        return HnswShards(durable_cut(shards, eager=False), self.shard_ids)
+
+    def put(self, row: dict) -> "HnswShards":
+        from vettore_spark.operators import hnsw as H
+
+        return self._patched(H.insert_into_graph_shards(
+            self.shards, row["id"], row["vector"], shard_ids=self.shard_ids
+        ))
+
+    def put_many(self, batch: DataFrame, rows) -> "HnswShards":
+        """`rows()` gives the stored rows of a driver-small list batch,
+        routed in the task closure (one narrow map job); a batch without
+        them (a DataFrame, or a list past the closure cap) is routed
+        executor-side and patched in one cogroup job. Either way the
+        graphs see the stored (normalized, f32-rounded) vectors, exactly
+        what a rebuild over the grown table would."""
+        from vettore_spark.operators import hnsw as H
+
+        if rows is not None:
+            ins = [(r["id"], r["vector"]) for r in rows()]
+            return self._patched(H.insert_many_into_graph_shards(
+                self.shards, ins, shard_ids=self.shard_ids
+            ))
+        return self._patched(H.insert_df_into_graph_shards(
+            self.shards, batch, shard_ids=self.shard_ids,
+            id_col="id", vector_col="vector",
+        ))
+
+    def delete(self, id_) -> "HnswShards":
+        from vettore_spark.operators import hnsw as H
+
+        return self._patched(H.delete_from_graph_shards(self.shards, id_))
+
+    def _tables(self) -> dict[str, DataFrame]:
+        return {"": self.shards}
+
+    def _manifest(self) -> dict:
+        return {"shard_ids": self.shard_ids}
+
+    @classmethod
+    def _restore(cls, tables: dict, ent: dict) -> "HnswShards":
+        return cls(tables[""], list(ent["shard_ids"]))
+
+
+class IvfFile(_Resident):
+    """Resident IVF index: the centroids (distributed MLlib KMeans, fixed
+    seed) and the inverted file, every row tagged with its cell and
+    carrying its payload columns (ivf_search(where=) filters them). put
+    appends one row (ann.ivf_insert) and delete tombstones one
+    (ann.ivf_delete), both with the codebook untouched and the patched
+    file lineage-cut; put_many drops the index, since a batch may warrant
+    a new codebook. A snapshot persists both tables."""
+
+    KIND = "ivf"
+    MANIFEST = "_ivf_indexes"
+    TABLES = {
+        "centroids": ("centroid_rows", "centroid_checksum"),
+        "assigned": ("assigned_rows", "assigned_checksum"),
+    }
+    _PAYLOAD = ("value", "vectors", "binary_vector", "metadata")
+
+    def __init__(self, centroids: DataFrame, assigned: DataFrame):
+        self.centroids, self.assigned = centroids, assigned
+
+    @classmethod
+    def build(cls, rows: DataFrame, *, n_cells: int) -> "IvfFile":
+        from vettore_spark.operators import ann as ANN
+        from vettore_spark.operators import mllib_lsh
+
+        cents = mllib_lsh.kmeans_centroids(rows, k=n_cells, vector_col="vector")
+        return cls(cents, ANN.ivf_assign(
+            rows, centroids=cents, id_col="id", vector_col="vector"
+        ))
+
+    def _patched(self, assigned: DataFrame) -> "IvfFile":
+        return IvfFile(self.centroids, durable_cut(assigned, eager=False))
+
+    def put(self, row: dict) -> "IvfFile":
+        from vettore_spark.operators import ann as ANN
+
+        return self._patched(ANN.ivf_insert(
+            self.assigned, row["id"], row["vector"], centroids=self.centroids,
+            id_col="id", vector_col="vector",
+            extras={k: row[k] for k in self._PAYLOAD},
+        ))
+
+    def put_many(self, batch: DataFrame, rows) -> None:
+        return None
+
+    def delete(self, id_) -> "IvfFile":
+        from vettore_spark.operators import ann as ANN
+
+        return self._patched(ANN.ivf_delete(self.assigned, id_, id_col="id"))
+
+    def _tables(self) -> dict[str, DataFrame]:
+        return {"centroids": self.centroids, "assigned": self.assigned}
+
+    @classmethod
+    def _restore(cls, tables: dict, ent: dict) -> "IvfFile":
+        return cls(tables["centroids"], tables["assigned"])
+
+
+class SqBounds(_Resident):
+    """Resident SQ8 quantizer: per-dimension (min, max) trained on the
+    canonical rows. put and delete keep it — bounds trained on a superset
+    stay valid for any subset, and a new out-of-range value clips in the
+    candidate stage only (the exact rerank re-orders on true vectors) —
+    while put_many drops it. Not persisted: it retrains at the first
+    sq_search after a load."""
+
+    KIND = "sq"
+
+    def __init__(self, mins: list[float], maxs: list[float]):
+        self.mins, self.maxs = mins, maxs
+
+    @classmethod
+    def build(cls, rows: DataFrame) -> "SqBounds":
+        from vettore_spark.operators import sq as SQ
+
+        return cls(*SQ.sq_train(rows, vector_col="vector"))
+
+    def put(self, row: dict) -> "SqBounds":
+        return self
+
+    def put_many(self, batch: DataFrame, rows) -> None:
+        return None
+
+    def delete(self, id_) -> "SqBounds":
+        return self
+
+
+# the kinds a snapshot persists (load_snapshot reads their manifests)
+PERSISTED = (HnswShards, IvfFile, PqIndex)
 
 
 class _pinned_range_sample:
