@@ -3,9 +3,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from vettore_spark.session import ENGINE_SESSION_DEFAULTS
+
+DAEMON = "spark.python.daemon.module"
+
 
 @pytest.fixture(scope="session")
 def spark():
+    # the engine's Python worker daemon only: every Python UDF in the suite
+    # runs in the workers the engine ships; the planner confs stay Spark's
     s = (
         SparkSession.builder.master("local[4]")
         .appName("vettore-spark-tests")
@@ -14,6 +20,7 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(DAEMON, ENGINE_SESSION_DEFAULTS[DAEMON])
         .getOrCreate()
     )
     yield s

@@ -199,11 +199,12 @@ def test_pq_train_rejects_bad_shapes():
         PQ.pq_train_kmeans(np.zeros((3, 8)), m=2, n_codes=8)
 
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, monkeypatch):
     import pytest
 
     from vettore_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)  # pin the loop
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
         D.connected_components(pairs, max_iter=0)

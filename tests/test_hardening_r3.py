@@ -24,10 +24,11 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_cc_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
+def test_cc_uses_reliable_checkpoint_when_dir_set(spark, tmp_path, monkeypatch):
     """With a checkpoint dir configured, connected_components must take
     reliable checkpoints (files in the dir), so a mid-loop executor loss on
     a cluster cannot lose edge blocks."""
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)  # pin the loop
     sc = spark.sparkContext
     ckdir = str(tmp_path / "ck")
     sc.setCheckpointDir(ckdir)
@@ -54,11 +55,12 @@ def test_cc_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
             pass
 
 
-def test_cc_local_checkpoint_without_dir(spark):
+def test_cc_local_checkpoint_without_dir(spark, monkeypatch):
     """Without a checkpoint dir on a local master, the ladder falls back to
     localCheckpoint and still converges."""
     if spark.sparkContext.getCheckpointDir() is not None:
         pytest.skip("checkpoint dir still set from a previous test")
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)  # pin the loop
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a: int, doc_b: int"
     )

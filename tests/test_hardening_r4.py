@@ -180,9 +180,10 @@ def test_durable_cut_eager_records_and_releases_files(spark, tmp_path):
         _clear_checkpoint_dir(sc)
 
 
-def test_cc_releases_previous_round_checkpoints(spark, tmp_path):
+def test_cc_releases_previous_round_checkpoints(spark, tmp_path, monkeypatch):
     """The loop must not leak O(rounds) checkpoint copies: at exit only the
     raw cut and the final round(s) remain, regardless of iteration count."""
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", 0)  # pin the loop
     sc = spark.sparkContext
     ckdir = str(tmp_path / "ck2")
     sc.setCheckpointDir(ckdir)

@@ -4,6 +4,9 @@ write runs, and that a search never writes index state."""
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
 from tests.conftest import resident
@@ -51,25 +54,18 @@ def _warm(c) -> None:
     c.sq_search(q, limit=3, candidates=20).collect()
 
 
-def _state(ix):
-    # a PqIndex is patched in place: its code table is what changes
-    return ix._codes if isinstance(ix, PqIndex) else ix
-
-
 def _entries(c) -> dict:
     out = {}
     for kind in KINDS:
         (entry,) = resident(c, kind).values() or [None]
-        out[kind] = None if entry is None else (entry, _state(entry))
+        out[kind] = entry
     return out
 
 
 def _outcome(before, after) -> str:
     if after is None:
         return "drop"
-    if after[0] is before[0] and after[1] is before[1]:
-        return "keep"
-    return "patch"
+    return "keep" if after is before else "patch"
 
 
 @pytest.fixture(scope="module")
@@ -187,3 +183,106 @@ def test_pq_search_writes_no_index_state(spark):
     ).collect()
     assert vars(idx).keys() == before.keys()
     assert all(vars(idx)[k] is v for k, v in before.items())
+
+
+@pytest.mark.parametrize("write", ["put", "delete"])
+def test_pq_patch_leaves_the_resident_index_unchanged(spark, write):
+    """put and delete replace the registry's PqIndex with a patched copy:
+    the index a concurrent search already holds keeps every attribute."""
+    c = C.Collection.create(spark, f"pq_copy_{write}", 8, metric="l2")
+    c.put_many([{"id": f"v{i}", "vector": _vec(i)} for i in range(40)])
+    c.pq_search(_vec(1), limit=3, m=2, n_codes=4, candidates=20).collect()
+    (idx,) = resident(c, "pq").values()
+    before = dict(vars(idx))
+    if write == "put":
+        c.put({"id": "fresh", "vector": _vec(77)})
+    else:
+        c.delete("v3")
+    (patched,) = resident(c, "pq").values()
+    assert patched is not idx
+    assert vars(idx).keys() == before.keys()
+    assert all(vars(idx)[k] is v for k, v in before.items())
+    assert idx._codes.count() == 40
+    assert patched._codes.count() == (41 if write == "put" else 39)
+
+
+def test_concurrent_first_searches_build_one_index(spark, monkeypatch):
+    """Four threads race the first pq_search of one key: exactly one
+    builds the index (the build is slowed so they overlap), and all four
+    get the same rows."""
+    c = C.Collection.create(spark, "pq_race", 8, metric="l2")
+    c.put_many([{"id": f"v{i}", "vector": _vec(i)} for i in range(40)])
+    real = PqIndex.build
+    builds = []
+
+    def counting_build(self, coll):
+        builds.append(threading.get_ident())
+        time.sleep(0.5)
+        return real(self, coll)
+
+    monkeypatch.setattr(PqIndex, "build", counting_build)
+    start = threading.Barrier(4)
+    results: list = [None] * 4
+
+    def search(i):
+        start.wait()
+        results[i] = sorted(
+            r["id"] for r in c.pq_search(
+                _vec(1), limit=3, m=2, n_codes=4, candidates=20
+            ).collect()
+        )
+
+    threads = [threading.Thread(target=search, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1
+    assert len(resident(c, "pq")) == 1
+    assert results[0] is not None and results.count(results[0]) == 4
+
+
+@pytest.mark.parametrize("write", ["put", "delete"])
+def test_write_during_first_build_is_not_lost(spark, monkeypatch, write):
+    """A put or delete that commits while the first pq_search still builds
+    over the pre-write rows: that build is not stored, so the next search
+    sees the write (the registry holds the new row count)."""
+    c = C.Collection.create(spark, f"pq_write_race_{write}", 8, metric="l2")
+    c.put_many([{"id": f"v{i}", "vector": _vec(i)} for i in range(40)])
+    real = PqIndex.build
+    building, written = threading.Event(), threading.Event()
+
+    def slow_build(self, coll):
+        building.set()
+        assert written.wait(timeout=300)
+        return real(self, coll)  # over the rows read before the write
+
+    monkeypatch.setattr(PqIndex, "build", slow_build)
+
+    def search(query):
+        return [
+            r["id"] for r in c.pq_search(
+                query, limit=3, m=2, n_codes=4, candidates=20
+            ).collect()
+        ]
+
+    first = threading.Thread(target=search, args=(_vec(1),))
+    first.start()
+    assert building.wait(timeout=300)
+    if write == "put":
+        c.put({"id": "fresh", "vector": _vec(77)})
+    else:
+        c.delete("v3")
+    written.set()
+    first.join(timeout=300)
+    assert not first.is_alive()
+    monkeypatch.setattr(PqIndex, "build", real)
+    got = search(_vec(77) if write == "put" else _vec(3))
+    (ix,) = resident(c, "pq").values()
+    if write == "put":
+        assert got[0] == "fresh"
+        assert ix._codes.count() == 41
+    else:
+        assert "v3" not in got
+        assert ix._codes.count() == 39

@@ -180,7 +180,7 @@ def test_pq_insert_cuts_lineage_every_eight(spark):
     )
     idx = PqIndex(m=2, n_codes=8).build(base)
     for i in range(9):
-        idx.insert(f"n{i}", [float(x) for x in rng.normal(size=8)])
+        idx = idx.insert(f"n{i}", [float(x) for x in rng.normal(size=8)])
     plan = idx._codes._jdf.queryExecution().logical().toString()
     # a raw 9-append chain would show 9 Union nodes; the ladder cuts at 8
     assert plan.count("Union") <= 2, plan

@@ -14,6 +14,7 @@ def test_declared_defaults_are_the_measured_set():
         "spark.sql.join.preferSortMergeJoin": "false",
         "spark.sql.codegen.hugeMethodLimit": "8000",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.python.daemon.module": "vettore_spark.worker_daemon",
     }
 
 

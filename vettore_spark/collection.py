@@ -24,6 +24,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import threading
 import warnings
 from dataclasses import dataclass, field, asdict
 from typing import Any, Iterable
@@ -84,6 +85,19 @@ _STRUCTURAL = {"dimensions", "metric", "normalize", "compressed"}
 _HNSW_CLOSURE_BATCH_CAP = 10_000
 
 
+def _write(method):
+    """A write to the rows runs whole under the collection's write lock
+    and ends by counting itself in `_maintain`; `_resident` stores a build
+    only if no write ran while it built."""
+
+    @functools.wraps(method)
+    def locked(self, *args, **kwargs):
+        with self._write_lock:
+            return method(self, *args, **kwargs)
+
+    return locked
+
+
 @dataclass
 class CollectionConfig:
     name: str
@@ -140,8 +154,13 @@ class Collection:
         # At 100 TB this turns the most common monitoring call from a
         # full scan into a driver lookup.
         self._row_count: int | None = 0 if df is None else None
-        # resident search indexes (sources.store), keyed by (kind, *params)
+        # resident search indexes (sources.store), keyed by (kind, *params),
+        # each built under its key's lock (_resident); _writes counts the
+        # committed writes, which hold _write_lock (see _write)
         self._indexes: dict[tuple, Any] = {}
+        self._build_locks: dict[tuple, threading.Lock] = {}
+        self._write_lock = threading.RLock()
+        self._writes = 0
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -157,6 +176,7 @@ class Collection:
         for batch in self.__dict__.pop("_persisted_batches", ()):
             batch.unpersist()
 
+    @_write
     def attach_store(self, store_or_path) -> "Collection":
         """Route the CANONICAL rows through a parquet-backed store
         (sources.store.ParquetStore or a path): every put/put_many appends
@@ -257,6 +277,7 @@ class Collection:
             return df.filter(~F.col("id").isin(self._store_deleted))
         return df.join(F.broadcast(self._tombstone_df()), "id", "left_anti")
 
+    @_write
     def compact_store(self) -> "Collection":
         """Fold the delete overlay into storage and clear it. Stores with
         a `replace` method (ParquetStore) get the crash-safe path: the
@@ -303,6 +324,7 @@ class Collection:
 
     # -- ingest (S2) --------------------------------------------------------
 
+    @_write
     def put_many(self, rows: Iterable[dict] | DataFrame) -> "Collection":
         """Validated batch insert (collection.ex:167-191, 920-961); the
         committed batch is materialized at its first read, and later
@@ -599,6 +621,7 @@ class Collection:
         )
         return self.put_many(staged)
 
+    @_write
     def put(self, row: dict) -> "Collection":
         """Single validated insert (collection.ex:167-172) — same pipeline
         as put_many with a one-row batch. Resident derived indexes are
@@ -653,9 +676,11 @@ class Collection:
         rows = self._df.filter(F.col("id") == id_).collect()
         return rows[0] if rows else None
 
+    @_write
     def delete(self, id_: str) -> "Collection":
-        """Row delete; resident derived indexes are patched in place
-        rather than dropped for rebuild — HNSW (tombstone + edge strip +
+        """Row delete; resident derived indexes are patched (a patched
+        copy replaces each registry entry) rather than dropped for
+        rebuild — HNSW (tombstone + edge strip +
         entry replacement, hnsw.rs:263-289), IVF (inverted-file
         tombstone), PQ (code-table tombstone); the SQ bounds are kept
         (bounds trained on a superset stay valid for any subset)."""
@@ -724,6 +749,7 @@ class Collection:
             pass
         patched = ((key, patch(ix)) for key, ix in self._indexes.items())
         self._indexes = {key: ix for key, ix in patched if ix is not None}
+        self._writes += 1
 
     def all(self) -> DataFrame:
         return self.df
@@ -792,10 +818,22 @@ class Collection:
     def _resident(self, key: tuple, build):
         """The resident index at `key` ((kind, *params)), built by
         `build()` on first use and reused across queries, like the
-        reference's insert-time index maintenance."""
+        reference's insert-time index maintenance. Concurrent first
+        searches of one key build it once: the others wait on the key's
+        lock (dict.setdefault is atomic) and reuse that build. A build
+        that a write overlapped may hold the pre-write rows, and the
+        write found no entry to patch: it serves this search only and
+        is not stored, so the next search builds over the new rows."""
         ix = self._indexes.get(key)
         if ix is None:
-            ix = self._indexes[key] = build()
+            with self._build_locks.setdefault(key, threading.Lock()):
+                ix = self._indexes.get(key)
+                if ix is None:
+                    writes = self._writes
+                    ix = build()
+                    with self._write_lock:
+                        if self._writes == writes:
+                            self._indexes[key] = ix
         return ix
 
     def _where(self, where) -> DataFrame:

@@ -879,6 +879,11 @@ def simhash_pairs(
     )
 
 
+# pair lists up to this many pairs take connected_components' driver tier
+# (pagerank's driver_max_edges default); larger ones the distributed loop
+_CC_DRIVER_MAX_EDGES = 100_000
+
+
 def connected_components(
     pairs: DataFrame,
     *,
@@ -905,13 +910,31 @@ def connected_components(
     cluster. At 100 TB the edge set after exact-hash pre-dedup is sparse
     (bounded by LSH bucket caps), so every round is a narrow shuffle on
     integral ids that AQE can rebalance.
+
+    Tiered execution (pagerank's split): one `limit(_CC_DRIVER_MAX_EDGES
+    + 1)` probe collects the cut pair list; when it holds at most
+    _CC_DRIVER_MAX_EDGES (100k) pairs, union-find runs on the driver and
+    one `createDataFrame` returns the same rows the loop would — every
+    node, a self-loop-only node as its own component, the NULL node with a
+    NULL component. On a ~90-pair graph the loop runs 28 Spark jobs, the
+    driver tier at most 3. The tier covers integral and string ids, whose
+    Python ordering is Spark's; other id types take the loop. `max_iter`
+    bounds the loop only. A pair list past the bound is generated once:
+    the probe reads the cut list that the loop then reuses.
     """
-    # cut the raw pair list once: the node set and every loop round
-    # derive from it, and without the cut each downstream action would
-    # re-run the (expensive) upstream pair-generation plan
+    # cut the raw pair list once: the probe, the node set and every loop
+    # round derive from it, and without the cut each downstream action
+    # would re-run the (expensive) upstream pair-generation plan
     raw = durable_cut(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")), eager=False
     )
+    if _driver_ordered(raw.schema):
+        # one task reads the cut's partitions in turn until it passes the
+        # bound, and the cut keeps each one it read: a small list is
+        # probed and cut in one job, with no partition left to compute
+        rows = raw.coalesce(1).limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+        if len(rows) <= _CC_DRIVER_MAX_EDGES:
+            return _cc_driver(pairs.sparkSession, rows, raw.schema, id_out)
     # node set BEFORE dropping self-loops: a node whose only pair is (x, x)
     # is still a (singleton) component and must appear in the output
     nodes = (
@@ -974,6 +997,53 @@ def connected_components(
     ).select(
         F.col(id_out),
         F.coalesce(F.col("component"), F.col(id_out)).alias("component"),
+    )
+
+
+def _driver_ordered(schema) -> bool:
+    """Both endpoint columns share one integral or (binary-collated) string
+    type: Python's `<` on those values is Spark's ordering."""
+    import pyspark.sql.types as T
+
+    u, v = schema["u"].dataType, schema["v"].dataType
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    return u == v and (isinstance(u, integral) or u == T.StringType())
+
+
+def _cc_driver(spark, rows, schema, id_out: str) -> DataFrame:
+    """Driver-tier connected components over collected (u, v) pairs:
+    union-find rooted at each component's minimum id. A pair with a NULL
+    end joins nothing (the loop's `u != v` is NULL there), but its ends
+    are nodes, so the NULL node is emitted with a NULL component."""
+    import pyspark.sql.types as T
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        if u is not None and v is not None:
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+    nullable = schema["u"].nullable or schema["v"].nullable
+    out = [(x, None if x is None else find(x)) for x in parent]
+    return spark.createDataFrame(
+        out,
+        T.StructType(
+            [
+                T.StructField(id_out, schema["u"].dataType, nullable),
+                T.StructField("component", schema["u"].dataType, nullable),
+            ]
+        ),
     )
 
 

@@ -22,6 +22,7 @@ search); `save`/`load` write and verify its snapshot tables.
 
 from __future__ import annotations
 
+import copy
 import os
 from typing import Protocol, runtime_checkable
 
@@ -307,9 +308,10 @@ class PqIndex(_Resident):
 
     As a Collection resident index it is built with `candidates_factor=1`
     and searched with the full fetch depth as `n`, so a search never
-    writes index state; put appends one code row, put_many drops it,
-    delete tombstones its code row, and a snapshot persists the codebooks
-    (manifest) and the code table."""
+    writes index state; put returns a copy with one code row appended,
+    put_many drops it, delete returns a copy with its code row
+    tombstoned, and a snapshot persists the codebooks (manifest) and the
+    code table."""
 
     KIND = "pq"
     MANIFEST = "_pq_indexes"
@@ -331,6 +333,7 @@ class PqIndex(_Resident):
         self.sample_rows = sample_rows
         self._books = None
         self._codes = None
+        self._insert_depth = 0
 
     def build(self, coll: DataFrame) -> "PqIndex":
         import numpy as np
@@ -371,13 +374,12 @@ class PqIndex(_Resident):
     def insert(self, id_, vector) -> "PqIndex":
         """Incremental index INSERT: encode the ONE new vector with the
         RESIDENT codebooks (driver-side `_encode_batch` on a 1-row matrix
-        — bit-identical to the build path's Arrow encoder) and append a
-        single row to the persisted code table. No re-train — the standard
-        PQ maintenance contract (codebook distortion grows slowly;
-        periodic re-train, immediate code append), mirroring
-        `ann.ivf_insert` and the HNSW one-shard patch. Callers patching a
-        long-lived resident index should lineage-cut `self._codes`
-        periodically (plans/checkpoint.py::durable_cut)."""
+        — bit-identical to the build path's Arrow encoder) and return a
+        copy whose code table has the row appended; this index is left as
+        it was, so a search holding it never sees a half-patched one. No
+        re-train — the standard PQ maintenance contract (codebook
+        distortion grows slowly; periodic re-train, immediate code
+        append), mirroring `ann.ivf_insert` and the HNSW one-shard patch."""
         if self._books is None or self._codes is None:
             return self  # nothing resident: next build() encodes everything
         import numpy as np
@@ -400,23 +402,28 @@ class PqIndex(_Resident):
             "id",
             F.col("_c").cast(self._codes.schema["codes"].dataType).alias("codes"),
         )
-        self._codes = self._codes.unionByName(row)
+        codes = self._codes.unionByName(row)
         # lineage ladder (put_many's pattern): N raw single-row unions
         # would build an N-deep tree that every ADC scan re-analyzes —
         # cut every 8 appends via the durability-aware helper
-        depth = getattr(self, "_insert_depth", 0) + 1
+        depth = self._insert_depth + 1
         if depth >= 8:
-            self._codes = durable_cut(self._codes, eager=False)
-            depth = 0
-        self._insert_depth = depth
-        return self
+            codes, depth = durable_cut(codes, eager=False), 0
+        return self._patched(codes, depth)
 
     def delete(self, id_) -> "PqIndex":
-        """Incremental index DELETE: tombstone the row in the code table
-        (codebooks untouched — the `ivf_delete` mirror)."""
-        if self._codes is not None:
-            self._codes = self._codes.filter(F.col("id") != F.lit(id_))
-        return self
+        """Incremental index DELETE: a copy with the row tombstoned in the
+        code table (codebooks untouched — the `ivf_delete` mirror)."""
+        if self._codes is None:
+            return self
+        return self._patched(
+            self._codes.filter(F.col("id") != F.lit(id_)), self._insert_depth
+        )
+
+    def _patched(self, codes: DataFrame, depth: int) -> "PqIndex":
+        out = copy.copy(self)
+        out._codes, out._insert_depth = codes, depth
+        return out
 
     def put(self, row: dict) -> "PqIndex":
         """A committed one-row put: encode its stored vector (insert)."""
