@@ -162,6 +162,39 @@ def test_distributed_hnsw_overlap(spark):
         assert r["score"] == pytest.approx(-r["distance"])
 
 
+@pytest.mark.parametrize("k", [3, 7])
+def test_non_finite_vector_never_ranks_ahead_of_finite(spark, k):
+    """A NaN vector in a shard used to rank FIRST: its NULL rank key led
+    the merge window, and its NaN graph distance broke the beam heap and
+    the final sort, pushing real neighbours out. Now the finite rows come
+    back in NumPy's exact order and the NaN row only after all of them."""
+    from vettore_spark.operators.hnsw import (
+        build_graph_shards,
+        search_graph_shards,
+    )
+
+    rng = np.random.default_rng(0)
+    fin = rng.normal(size=(6, 4)).round(2)
+    q = rng.normal(size=4).round(2).tolist()
+    rows = [(f"r{i:02d}", fin[i].tolist()) for i in range(6)]
+    rows.append(("nan", [float("nan"), 1.0, 1.0, 1.0]))
+    df = spark.createDataFrame(rows, "id string, vector array<double>")
+    shards = build_graph_shards(
+        df, metric="l2", id_col="id", vector_col="vector", num_partitions=1
+    )
+    got = search_graph_shards(
+        shards, [("q", q)], metric="l2", k=k, id_col="id"
+    ).orderBy("rank").collect()
+    d = np.sqrt(((fin - np.asarray(q)) ** 2).sum(axis=1))
+    want = sorted(range(6), key=lambda i: (d[i], i))
+    ids = [r["id"] for r in got]
+    assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
+    assert ids[:min(k, 6)] == [f"r{i:02d}" for i in want[:k]]
+    if k > 6:
+        assert ids[6] == "nan"
+        assert got[6]["score"] is None and got[6]["distance"] is None
+
+
 def test_graph_delete_entry_replacement():
     """Reference delete semantics (hnsw.rs:263-289): deleted node becomes
     unreachable, incoming edges are stripped, entry is replaced by the

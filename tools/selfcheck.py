@@ -21,7 +21,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the worker daemon (below) starts as `python -m vettore_spark.worker_daemon`
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -83,8 +88,13 @@ def main() -> int:
     # SELFCHECK_ENGINE_DEFAULTS=1: apply the library's session confs
     # (vettore_spark.session) so the oracle gate ALSO covers the planner
     # path every engine session actually runs. The default stays the
-    # conf-less driver-replica session — both paths must be green.
-    builder = SparkSession.builder
+    # planner-conf-less driver-replica session — both paths must be green
+    # — and takes only the engine's Python worker daemon, which changes
+    # no plan or result, only the per-task worker start-up cost.
+    from vettore_spark.session import ENGINE_SESSION_DEFAULTS
+
+    daemon = "spark.python.daemon.module"
+    builder = SparkSession.builder.config(daemon, ENGINE_SESSION_DEFAULTS[daemon])
     if os.environ.get("SELFCHECK_ENGINE_DEFAULTS"):
         from vettore_spark import with_engine_defaults
 

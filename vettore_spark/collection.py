@@ -888,6 +888,22 @@ class Collection:
             extra_cols=["value"],
         )
 
+    def _query_frame(
+        self, queries: dict[str, list[float]] | list[list[float]]
+    ) -> DataFrame:
+        """(query_id string, query_vector array<double>) frame of prepared
+        queries: {query_id: vector}, or a list with ids q0, q1, ..."""
+        self._check_open()
+        if isinstance(queries, dict):
+            items = [(k, self._prepare_query(v)) for k, v in queries.items()]
+        else:
+            items = [
+                (f"q{i}", self._prepare_query(v)) for i, v in enumerate(queries)
+            ]
+        return self.spark.createDataFrame(
+            items, "query_id string, query_vector array<double>"
+        )
+
     def search_many(
         self,
         queries: dict[str, list[float]] | list[list[float]],
@@ -904,18 +920,8 @@ class Collection:
         matters when serving thousands of queries against 100 TB."""
         from vettore_spark.operators import search as S
 
-        self._check_open()
-        if isinstance(queries, dict):
-            items = [(k, self._prepare_query(v)) for k, v in queries.items()]
-        else:
-            items = [
-                (f"q{i}", self._prepare_query(v)) for i, v in enumerate(queries)
-            ]
-        qdf = self.spark.createDataFrame(
-            items, "query_id string, query_vector array<double>"
-        )
         return S.multi_query_topk(
-            qdf,
+            self._query_frame(queries),
             self._where(where),
             metric=self.config.metric,
             k=limit,
@@ -939,18 +945,8 @@ class Collection:
         (query_id, id, score, distance), unordered."""
         from vettore_spark.operators import search as S
 
-        self._check_open()
-        if isinstance(queries, dict):
-            items = [(k, self._prepare_query(v)) for k, v in queries.items()]
-        else:
-            items = [
-                (f"q{i}", self._prepare_query(v)) for i, v in enumerate(queries)
-            ]
-        qdf = self.spark.createDataFrame(
-            items, "query_id string, query_vector array<double>"
-        )
         return S.multi_query_range(
-            qdf,
+            self._query_frame(queries),
             self._where(where),
             metric=self.config.metric,
             max_distance=max_distance,

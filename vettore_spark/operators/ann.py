@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vettore_spark.operators import search as S
+
 
 def _matrix(pdf_col: pd.Series) -> np.ndarray:
     return np.array([np.asarray(v, dtype=np.float64) for v in pdf_col])
@@ -290,13 +292,7 @@ def brute_force_topk(
             )
 
     local = coll.select(id_col, vector_col).mapInPandas(compute, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("_rank").asc(), F.col(id_col).asc())
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
-        .drop("_rank")
-    )
+    return S.rank_per_query(local, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def hamming_brute_topk(
@@ -376,12 +372,8 @@ def hamming_brute_topk(
             )
 
     local = coll.select(id_col, vector_col).mapInPandas(compute, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return S.rank_per_query(
+        local, k, query_id_col=query_id_col, id_col=id_col, key="hamming"
     )
 
 
@@ -524,7 +516,8 @@ def self_knn_topk(
 ) -> DataFrame:
     """Exact self k-NN graph (every row's top-k neighbors, itself included
     unless `exclude_self`) with NO driver collect: block-grid cogroup +
-    per-group NumPy GEMM + local top-k, merged by a (rank, id) window.
+    per-group NumPy GEMM + local top-k, merged by one per-query window
+    (`search.rank_per_query`).
     Output matches brute_force_topk with queries == collection: (query_id,
     id, score, distance, rank 1..k).
 
@@ -590,15 +583,7 @@ def self_knn_topk(
     )
     if exclude_self:
         local = local.filter(F.col("query_id") != F.col(id_col))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_rank").asc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
-        .drop("_rank")
-    )
+    return S.rank_per_query(local, k, id_col=id_col)
 
 
 def cosine_neardup_blocked(
@@ -889,11 +874,8 @@ def ivf_topk(
         centroid_vec_col=centroid_vec_col,
         assigned=assigned,
     )
-    return (
-        scored
-        .withColumn("_rn", F.row_number().over(Window.partitionBy(query_id_col).orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
+    return S.rank_per_query(
+        scored, k, query_id_col=query_id_col, id_col=id_col, key="distance"
     )
 
 
@@ -914,11 +896,11 @@ def _ivf_probe_scored(
     """Shared IVF probe stage: per-query n_probe nearest cells (JVM-side
     over the literal codebook), broadcast probe join against the persisted
     inverted file, exact cosine within probed cells by the JVM kernel.
-    Returns (query_id, id, score, distance) unranked — ivf_topk windows it,
-    ivf_range threshold-filters it. A non-finite stored vector scores NULL
-    (kernels.cosine), never a value."""
+    Returns (query_id, id, score, distance) unranked — ivf_topk ranks it
+    by distance (`search.rank_per_query`), ivf_range threshold-filters it.
+    A non-finite stored vector scores NULL (kernels.cosine), never a
+    value."""
     from vettore_spark.functions import kernels as K
-    from vettore_spark.operators.search import _staged_raw
 
     spark = coll.sparkSession
     if assigned is None:
@@ -983,7 +965,7 @@ def _ivf_probe_scored(
     # scores every row with, staged once per row: score and distance read
     # the materialized value instead of re-inlining the fold. A Python
     # stage here would cost the request a worker round per task wave.
-    staged = _staged_raw(
+    staged = S._staged_raw(
         joined,
         K.cosine(F.col(vector_col), F.col(query_vec_col)),
         [F.col(query_id_col), F.col(id_col)],
@@ -1202,7 +1184,8 @@ def blocked_knn_topk(
     n_bands=1 there is NO cross-block shuffle at all (each query's rank
     is final inside its block — no merge window); n_bands > 1 unions the
     per-band top-k edges, dedupes pairs, and re-ranks with one
-    (distance, id) window over O(n_bands * n * k) rows.
+    (distance, id) window (`search.rank_per_query`, rank cast back to
+    long) over O(n_bands * n * k) rows.
 
     This is the corpus-scale edge builder for mutual_knn_pairs(knn=...):
     a single band keeps a true neighbor with P ~ p_bit^n_bits where
@@ -1321,13 +1304,8 @@ def blocked_knn_topk(
     # bit-identical score/distance (the GEMM arithmetic depends only on
     # the two vectors), so dedupe then re-rank globally by the universal
     # rank value (distance == rank for all three metrics in _score_block)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
+    merged = S.rank_per_query(
+        local.dropDuplicates(["query_id", id_col]), k,
+        id_col=id_col, key="distance",
     )
-    return (
-        local.dropDuplicates(["query_id", id_col])
-        .withColumn("_rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("_rn") <= k)
-        .drop("rank")
-        .withColumnRenamed("_rn", "rank")
-    )
+    return merged.withColumn("rank", F.col("rank").cast("long"))

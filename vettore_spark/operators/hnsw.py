@@ -33,12 +33,13 @@ thus the graphs) stay stable.
 from __future__ import annotations
 
 import heapq
+import math
 from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -111,12 +112,17 @@ class HnswGraph:
         return float(a @ b)  # cosine (pre-normalized) and inner_product: dot
 
     def _rank(self, a: np.ndarray, b: np.ndarray) -> float:
+        """Ascending rank distance; a non-finite one compares as +inf, so
+        a malformed vector never wins a beam slot or a result slot (NaN
+        compares False both ways and would break the heaps and sorts)."""
         raw = self._raw(a, b)
         if self.metric == "cosine":
-            return 1.0 - raw
-        if self.metric == "inner_product":
-            return -raw
-        return raw
+            rank = 1.0 - raw
+        elif self.metric == "inner_product":
+            rank = -raw
+        else:
+            rank = raw
+        return rank if math.isfinite(rank) else math.inf
 
     # -- build --------------------------------------------------------------
 
@@ -679,8 +685,10 @@ def search_graph_shards(
 ) -> DataFrame:
     """Batch search over an existing graph-shard table (built by
     `build_graph_shards`, possibly patched by `delete_from_graph_shards`):
-    answer every query against each shard, merge with a global per-query
-    (rank, id) top-k window. `ef_search` overrides the build-time beam.
+    answer every query against each shard, merge with the global
+    per-query top-k window (`search.rank_per_query`: rank ascending NULLS
+    LAST, then id — a non-finite vector ranks NULL, after every finite
+    row). `ef_search` overrides the build-time beam.
     The scan runs in at most `defaultParallelism` tasks (one wave): each
     task searches every shard its partition holds.
 
@@ -695,7 +703,7 @@ def search_graph_shards(
     import pickle
 
     from vettore_spark.functions import kernels as K
-    from vettore_spark.operators.search import score_columns
+    from vettore_spark.operators import search as S
 
     m = K.canonical_metric(metric)
     stringify = id_type is None
@@ -733,7 +741,7 @@ def search_graph_shards(
     # otherwise pay a second Python task wave (coalesce never widens it)
     slots = shards.sparkSession.sparkContext.defaultParallelism
     local = shards.coalesce(slots).mapInPandas(run, out_schema)
-    rank, score, dist = score_columns(m, F.col("_raw"), score_mode)
+    rank, score, dist = S.score_columns(m, F.col("_raw"), score_mode)
     scored = local.select(
         "query_id",
         id_col,
@@ -741,13 +749,7 @@ def search_graph_shards(
         score.alias("score"),
         dist.alias("distance"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_rank").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
-        .drop("_rank")
-    )
+    return S.rank_per_query(scored, k, id_col=id_col)
 
 
 def hnsw_search(

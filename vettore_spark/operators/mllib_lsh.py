@@ -29,7 +29,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,11 +52,13 @@ def brp_lsh_topk(
     fewer tables trade recall for candidate volume.
 
     Returns (query_id, id, score, distance, rank) — score is the reference's
-    raw-mode L2 score (-distance), rank dense per query by (distance, id).
+    raw-mode L2 score (-distance), rank (long) 1..k per query by
+    (distance, id) through `search.rank_per_query`.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
+    from vettore_spark.operators.search import rank_per_query
     from vettore_spark.plans.cache import cached_persist
 
     feat = coll.select(
@@ -84,19 +86,15 @@ def brp_lsh_topk(
         ),
     )
     joined = model.approxSimilarityJoin(indexed, qf, float(threshold), distCol="_d")
-    w = Window.partitionBy(f"datasetB.{query_id_col}").orderBy(
-        F.col("_d").asc(), F.col(f"datasetA.{id_col}").asc()
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col(f"datasetB.{query_id_col}").alias(query_id_col),
-            F.col(f"datasetA.{id_col}").alias(id_col),
-            (-F.col("_d")).alias("score"),
-            F.col("_d").alias("distance"),
-            F.col("_rn").cast("long").alias("rank"),
-        )
+    return rank_per_query(
+        joined, k, query_id_col=f"datasetB.{query_id_col}",
+        id_col=f"datasetA.{id_col}", key="_d",
+    ).select(
+        F.col(f"datasetB.{query_id_col}").alias(query_id_col),
+        F.col(f"datasetA.{id_col}").alias(id_col),
+        (-F.col("_d")).alias("score"),
+        F.col("_d").alias("distance"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 

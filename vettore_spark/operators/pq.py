@@ -34,10 +34,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vettore_spark.operators import search as S
 from vettore_spark.operators.ann import _matrix
 
 
@@ -83,25 +84,19 @@ def _margin_prune(d: np.ndarray, kk: int, margin: float) -> np.ndarray:
     to the digit `margin` covers, regardless of the engine's rounding
     rule (NumPy half-to-even vs Spark decimal HALF_UP can only reorder
     keys closer than one rounded unit). O(n) via partition instead of a
-    full sort; the global `_rank_merge` applies the authoritative rounded
-    order + id tie-break to the union of these supersets."""
+    full sort; the global `search.rank_per_query` merge applies the
+    authoritative rounded order + id tie-break to the union of these
+    supersets."""
     if len(d) <= kk:
         return np.arange(len(d))
     kth = np.partition(d, kk - 1)[kk - 1]
     return np.flatnonzero(d <= kth + margin)
 
 
-def _rank_merge(local: DataFrame, *, k: int, query_id_col: str, id_col: str,
-                round_digits: int | None) -> DataFrame:
-    """Global per-query top-k merge of per-partition candidates, ranked by
-    (rounded) distance with id tie-break."""
-    rank_key = (
-        F.round(F.col("distance"), round_digits)
-        if round_digits is not None
-        else F.col("distance")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(rank_key.asc(), F.col(id_col).asc())
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+def _adc_key(round_digits: int | None):
+    """ADC rank key: the distance, rounded to `round_digits` when given."""
+    dist = F.col("distance")
+    return F.round(dist, round_digits) if round_digits is not None else dist
 
 
 def pq_train_kmeans(
@@ -228,8 +223,8 @@ def _adc_topk_one(
     """One query's ADC top-k as a JVM expression: the m x n_codes LUT is a
     flat array literal, each row sums its m lookups, and (rounded
     distance, id) ORDER BY + LIMIT plans as TakeOrderedAndProject — no
-    Python worker and no shuffle on the request path. The rank window over
-    the k survivors reads one partition."""
+    Python worker and no shuffle on the request path. The rank window
+    (`search.rank_per_query`) over the k survivors reads one partition."""
     from vettore_spark.functions import kernels as K
 
     n_codes = lut.shape[1]
@@ -246,15 +241,10 @@ def _adc_topk_one(
         F.col(id_col),
         dist.alias("distance"),
     )
-    key = (
-        F.round(F.col("distance"), round_digits)
-        if round_digits is not None
-        else F.col("distance")
-    )
-    top = scored.orderBy(key.asc(), F.col(id_col).asc()).limit(k)
-    return _rank_merge(
-        top, k=k, query_id_col=query_id_col, id_col=id_col,
-        round_digits=round_digits,
+    top = scored.orderBy(*S.rank_order(_adc_key(round_digits), id_col)).limit(k)
+    return S.rank_per_query(
+        top, k, query_id_col=query_id_col, id_col=id_col,
+        key=_adc_key(round_digits),
     )
 
 
@@ -284,7 +274,7 @@ def pq_adc_topk(
     half-to-even on binary doubles while Spark's is decimal HALF_UP, so
     pruning on the locally-rounded key could cut a row the global
     rounded ranking would keep — the margin makes the local stage
-    rounding-agnostic and the global `_rank_merge` the single authority
+    rounding-agnostic and the global merge the single authority
     on order.
 
     A query set of exactly one query is scored by a JVM expression
@@ -348,9 +338,9 @@ def pq_adc_topk(
                 yield pd.concat(out, ignore_index=True)
 
     local = codes_df.select(id_col, codes_col).mapInPandas(compute, out_schema)
-    return _rank_merge(
-        local, k=k, query_id_col=query_id_col, id_col=id_col,
-        round_digits=round_digits,
+    return S.rank_per_query(
+        local, k, query_id_col=query_id_col, id_col=id_col,
+        key=_adc_key(round_digits),
     )
 
 
@@ -523,9 +513,9 @@ def ivfpq_topk(
     local = index_df.select(id_col, "cell", "codes").mapInPandas(
         compute, out_schema
     )
-    return _rank_merge(
-        local, k=k, query_id_col=query_id_col, id_col=id_col,
-        round_digits=round_digits,
+    return S.rank_per_query(
+        local, k, query_id_col=query_id_col, id_col=id_col,
+        key=_adc_key(round_digits),
     )
 
 
@@ -545,9 +535,10 @@ def pq_search(
     """Two-stage PQ search: ADC top-`candidates` over the code table, then
     exact rerank of each query's OWN candidate set on full vectors — the
     quantized_search shape (reference collection.ex:263-295) with PQ codes
-    instead of sign bits. The candidate pair list is O(queries x
-    candidates) — broadcast against the collection, so hydration streams
-    the big side with no shuffle.
+    instead of sign bits, and the same rerank stage as
+    `search.multi_query_quantized` (`search.rerank_pairs`). The candidate
+    pair list is O(queries x candidates) — broadcast against the
+    collection, so hydration streams the big side with no shuffle.
 
     Metrics: `l2` natively; `cosine` by L2-normalizing both sides before
     encode/ADC (on unit vectors L2^2 = 2 - 2cos, so L2-ADC candidate order
@@ -555,7 +546,6 @@ def pq_search(
     distortion. Inner product has no L2-ADC equivalent and is rejected
     (use brute_force_topk or an IP-specific quantizer)."""
     from vettore_spark.functions import kernels as K
-    from vettore_spark.operators.search import score_columns
     from vettore_spark.plans.cache import cached_persist
 
     metric = K.canonical_metric(metric)
@@ -587,26 +577,8 @@ def pq_search(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
     ).select(query_id_col, id_col)
-    hydrated = (
-        F.broadcast(cand)
-        .join(coll.select(id_col, vector_col), id_col)
-        .join(F.broadcast(queries.select(query_id_col, query_vec_col)), query_id_col)
-    )
-    raw = K.raw_metric(
-        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=False
-    )
-    rank, score, dist = score_columns(metric, raw, "raw")
-    return (
-        hydrated.select(
-            query_id_col,
-            id_col,
-            score.alias("score"),
-            dist.alias("distance"),
-            F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(
-                    rank.asc_nulls_last(), F.col(id_col).asc()
-                )
-            ).alias("rank"),
-        )
-        .filter(F.col("rank") <= k)
+    return S.rerank_pairs(
+        cand, coll, queries, metric=metric, k=k,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        id_col=id_col, vector_col=vector_col, pre_normalized=False,
     )

@@ -19,6 +19,11 @@ Physical strategy notes (100 TB design):
 - Candidate joins (rerank stages) are broadcast hash joins of small candidate
   id-sets against the collection, so the second pass prunes with a semi-join
   instead of re-scanning scores.
+- Every top-k operator in the package ranks by ONE order, `rank_order`:
+  rank key ascending NULLS LAST, then id ascending. Per-partition partial
+  top-k (Arrow kernels, graph shards, ADC prunes) merge through one
+  per-query window, `rank_per_query` — the partition-local-then-global
+  shape of distributed similarity search.
 """
 
 from __future__ import annotations
@@ -42,18 +47,44 @@ def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataF
     )
 
 
-def _ordered_topk(scored: DataFrame, k: int, *, id_col: str) -> DataFrame:
-    """Deterministic (rank, id) order + LIMIT k -> TakeOrderedAndProject.
+def rank_order(key: Column | str, id_col: str) -> list[Column]:
+    """The result order of every top-k operator: rank key ascending NULLS
+    LAST, ties by id ascending — the reference's (rank, id) heap order
+    (distances.rs:113-119, flat.rs:27-46). NULLS LAST because a
+    non-finite metric value ranks NULL (K.rank_value): Collection
+    validates vectors at ingest, but a direct operator caller with a
+    malformed row would otherwise see its null-ranked garbage FIRST under
+    Spark's default asc — crowding out every real result instead of
+    none."""
+    key = F.col(key) if isinstance(key, str) else key
+    return [key.asc_nulls_last(), F.col(id_col).asc()]
 
-    Ties broken by id ascending, matching the reference heap order
-    (flat.rs:27-46). Rank keys sort NULLS LAST (here and in every merge
-    window below): Collection validates vectors at ingest, but a direct
-    operator caller with a malformed row would otherwise see its
-    null-ranked garbage FIRST under Spark's default asc — crowding out
-    every real result instead of none."""
-    return scored.orderBy(
-        F.col("_rank").asc_nulls_last(), F.col(id_col).asc()
-    ).limit(k)
+
+def rank_per_query(
+    df: DataFrame,
+    k: int,
+    *,
+    query_id_col: str = "query_id",
+    id_col: str = "id",
+    key: Column | str = "_rank",
+) -> DataFrame:
+    """Per-query top-k under `rank_order`: an int `rank` column numbered
+    1..k per query (row_number, so ties never share or skip a rank), rows
+    past k dropped, and the private `_rank` key column, when present,
+    dropped. A `rank` column already on `df` is replaced in place.
+    `rank <= k` over a row_number window plans as WindowGroupLimit: each
+    partition cuts its own top-k below the shuffle."""
+    w = Window.partitionBy(query_id_col).orderBy(*rank_order(key, id_col))
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .drop("_rank")
+    )
+
+
+def _ordered_topk(scored: DataFrame, k: int, *, id_col: str) -> DataFrame:
+    """`rank_order` + LIMIT k -> TakeOrderedAndProject (single query)."""
+    return scored.orderBy(*rank_order("_rank", id_col)).limit(k)
 
 
 def score_columns(
@@ -82,6 +113,63 @@ def _staged_raw(df: DataFrame, raw: Column, keep: list[Column]) -> DataFrame:
     )
 
 
+def _scored_rows(
+    df: DataFrame,
+    raw: Column,
+    keep: list[Column],
+    *,
+    metric: str,
+    score_mode: str = "raw",
+) -> DataFrame:
+    """(keep..., _rank, score, distance) rows: the raw metric staged once
+    per row (`_staged_raw`), then the three `score_columns` read it."""
+    staged = _staged_raw(df, raw, keep)
+    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
+    return staged.select(
+        *keep,
+        rank.alias("_rank"),
+        score.alias("score"),
+        dist.alias("distance"),
+    )
+
+
+def rerank_pairs(
+    cand: DataFrame,
+    coll: DataFrame,
+    queries: DataFrame,
+    *,
+    metric: str,
+    k: int,
+    query_id_col: str,
+    query_vec_col: str,
+    id_col: str,
+    vector_col: str,
+    score_mode: str = "raw",
+    pre_normalized: bool = True,
+) -> DataFrame:
+    """Exact rerank of per-query candidates: the small (query_id, id)
+    candidate list and the query table are broadcast against the
+    collection (hydration streams the big side, no shuffle of it), each
+    pair is scored on full vectors and `rank_per_query` keeps the best k.
+    Output: (query_id, id, score, distance, rank)."""
+    hydrated = (
+        coll.select(id_col, vector_col)
+        .join(F.broadcast(cand), on=id_col)
+        .join(
+            F.broadcast(queries.select(query_id_col, query_vec_col)),
+            on=query_id_col,
+        )
+    )
+    raw = K.raw_metric(
+        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
+    )
+    scored = _scored_rows(
+        hydrated, raw, [F.col(query_id_col), F.col(id_col)],
+        metric=metric, score_mode=score_mode,
+    )
+    return rank_per_query(scored, k, query_id_col=query_id_col, id_col=id_col)
+
+
 def flat_topk(
     coll: DataFrame,
     query: list[float],
@@ -103,14 +191,7 @@ def flat_topk(
     metric = K.canonical_metric(metric)
     raw = K.raw_metric(metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized)
     cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
-    staged = _staged_raw(coll, raw, cols)
-    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    scored = staged.select(
-        *cols,
-        rank.alias("_rank"),
-        score.alias("score"),
-        dist.alias("distance"),
-    )
+    scored = _scored_rows(coll, raw, cols, metric=metric, score_mode=score_mode)
     return _ordered_topk(scored, k, id_col=id_col).drop("_rank")
 
 
@@ -149,19 +230,12 @@ def flat_range(
         metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized
     )
     cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
-    staged = _staged_raw(coll, raw, cols)
-    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    scored = staged.select(
-        *cols,
-        rank.alias("_rank"),
-        score.alias("score"),
-        dist.alias("distance"),
-    )
+    scored = _scored_rows(coll, raw, cols, metric=metric, score_mode=score_mode)
     if max_distance is not None:
         scored = scored.filter(F.col("distance") <= F.lit(float(max_distance)))
     else:
         scored = scored.filter(F.col("score") >= F.lit(float(min_score)))
-    out = scored.orderBy(F.col("_rank").asc_nulls_last(), F.col(id_col).asc())
+    out = scored.orderBy(*rank_order("_rank", id_col))
     if limit is not None:
         out = out.limit(limit)
     return out.drop("_rank")
@@ -272,11 +346,7 @@ def quantized_search(
 def _pack_query_bits(query: list[float]) -> Column:
     """Driver-side sign-bit packing of the (small) query vector — literal
     array<long>, identical bit layout to kernels.compress_sign_bits."""
-    words = [0] * ((len(query) + 63) // 64)
-    for i, x in enumerate(query):
-        if x >= 0.0:
-            words[i // 64] |= 1 << (i % 64)
-    words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+    words = K.pack_sign_bits_py(query, len(query))
     return F.array(*[F.lit(w).cast("long") for w in words])
 
 
@@ -435,9 +505,11 @@ def multi_query_quantized(
     Q4 (the reference is one query per call; SURVEY §2.3 J3 is the batch
     idiom).
 
-    Stage 1 takes per-query sign-bit Hamming top-C; stage 2 joins the small
-    (query, id) candidate set back to full vectors for the exact rerank.
-    Shuffled data is O(queries * candidates), never O(rows).
+    Stage 1 takes per-query sign-bit Hamming top-C; stage 2
+    (`rerank_pairs`) joins the small (query, id) candidate set back to
+    full vectors for the exact rerank. Both stages rank through
+    `rank_per_query`. Shuffled data is O(queries * candidates), never
+    O(rows).
 
     Two stage-1 physical strategies with identical candidate sets:
     - `stage1="expr"`: broadcast the queries' packed sign bits and fold
@@ -450,11 +522,6 @@ def multi_query_quantized(
     metric = K.canonical_metric(metric)
     c = candidates if candidates is not None else max(k * 10, k)
 
-    qbits = queries.select(
-        F.col(query_id_col),
-        F.col(query_vec_col),
-        K.compress_sign_bits(F.col(query_vec_col).cast("array<double>"), dims).alias("_qb"),
-    )
     if stage1 == "arrow":
         from vettore_spark.operators import ann as _ann
 
@@ -464,49 +531,23 @@ def multi_query_quantized(
             query_id_col=query_id_col, query_vec_col=query_vec_col,
         ).select(query_id_col, id_col)
     else:
-        ham = coll.select(id_col, binary_col).crossJoin(
-            F.broadcast(qbits.select(query_id_col, "_qb"))
-        )
-        raw1 = K.packed_hamming(F.col(binary_col), F.col("_qb"), dims)
-        w1 = Window.partitionBy(query_id_col).orderBy(
-            raw1.asc_nulls_last(), F.col(id_col).asc()
-        )
-        cand = (
-            ham.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= c)
-            .select(query_id_col, id_col)
-        )
-
-    rejoined = (
-        coll.select(id_col, vector_col)
-        .join(F.broadcast(cand), on=id_col)
-        .join(F.broadcast(qbits.select(query_id_col, query_vec_col)), on=query_id_col)
-    )
-    raw2 = K.raw_metric(
-        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
-    )
-    # stage the raw fold like every other scoring path: rank/score/dist
-    # are three CASE exprs over it, and an unstaged interpreted HOF fold
-    # would run three times per candidate row
-    staged2 = _staged_raw(
-        rejoined, raw2, [F.col(query_id_col), F.col(id_col)]
-    )
-    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("_rank").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        staged2.select(
+        qbits = queries.select(
             F.col(query_id_col),
-            F.col(id_col),
-            rank.alias("_rank"),
-            score.alias("score"),
-            dist.alias("distance"),
+            K.compress_sign_bits(
+                F.col(query_vec_col).cast("array<double>"), dims
+            ).alias("_qb"),
         )
-        .withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
-        .drop("_rank")
+        ham = coll.select(id_col, binary_col).crossJoin(F.broadcast(qbits))
+        raw1 = K.packed_hamming(F.col(binary_col), F.col("_qb"), dims)
+        cand = rank_per_query(
+            ham, c, query_id_col=query_id_col, id_col=id_col, key=raw1
+        ).select(query_id_col, id_col)
+
+    return rerank_pairs(
+        cand, coll, queries, metric=metric, k=k,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        id_col=id_col, vector_col=vector_col,
+        score_mode=score_mode, pre_normalized=pre_normalized,
     )
 
 
@@ -528,31 +569,19 @@ def multi_query_topk(
     reference's one-query-at-a-time API (SURVEY §2.3 J3).
 
     The small query set is broadcast against the (arbitrarily large)
-    collection; per-query top-k is a window with rank<=k, which Catalyst
-    pushes down as a per-partition group-limit before the shuffle."""
+    collection; per-query top-k is `rank_per_query`, whose rank<=k
+    Catalyst pushes down as a per-partition group-limit before the
+    shuffle."""
     metric = K.canonical_metric(metric)
     joined = coll.crossJoin(F.broadcast(queries))
     raw = K.raw_metric(
         metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
     )
-    staged = _staged_raw(joined, raw, [F.col(query_id_col), F.col(id_col)])
-    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    scored = staged.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        rank.alias("_rank"),
-        score.alias("score"),
-        dist.alias("distance"),
+    scored = _scored_rows(
+        joined, raw, [F.col(query_id_col), F.col(id_col)],
+        metric=metric, score_mode=score_mode,
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_rank").asc_nulls_last(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .withColumnRenamed("_rn", "rank")
-        .drop("_rank")
-    )
+    return rank_per_query(scored, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def multi_query_range(
@@ -588,14 +617,10 @@ def multi_query_range(
     raw = K.raw_metric(
         metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
     )
-    staged = _staged_raw(joined, raw, [F.col(query_id_col), F.col(id_col)])
-    _, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    scored = staged.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        score.alias("score"),
-        dist.alias("distance"),
-    )
+    scored = _scored_rows(
+        joined, raw, [F.col(query_id_col), F.col(id_col)],
+        metric=metric, score_mode=score_mode,
+    ).drop("_rank")
     if max_distance is not None:
         return scored.filter(F.col("distance") <= F.lit(float(max_distance)))
     return scored.filter(F.col("score") >= F.lit(float(min_score)))

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vettore_spark.functions import kernels as K
-from vettore_spark.operators.search import exact_rerank
+from vettore_spark.operators.search import exact_rerank, rank_order
 from vettore_spark.plans.spread import pin
 
 
@@ -155,11 +155,10 @@ def sq_topk(
     staged = codes_df.select(F.col(id_col), d2.alias("_d2"))
     cand = (
         # a null/length-mismatched vector propagates null through the
-        # zip_with fold to _d2; Spark's default asc is NULLS FIRST, so
-        # without the filter one malformed row would outrank every real
-        # candidate and silently poison the candidate set
+        # zip_with fold to _d2; filtered, so it never takes a candidate
+        # slot even when fewer than `candidates` rows are real
         staged.filter(F.col("_d2").isNotNull())
-        .orderBy(F.col("_d2").asc(), F.col(id_col).asc())
+        .orderBy(*rank_order("_d2", id_col))
         .limit(candidates)
         .select(id_col)
     )
