@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import itertools
 import math
+import re
 import struct
 
 import numpy as np
@@ -151,7 +152,8 @@ def test_collection_ivf_search_runs_no_python_stage(spark, data):
     rows = out.collect()
     assert rows[0]["id"] == "r5" and len(rows) == 5
     plan = _executed(out)
-    assert "BroadcastHashJoin" in plan
+    # the probed cells filter the resident inverted file's cached scan
+    assert re.search(r"InMemoryTableScan \[[^\]]*\], \[_cell#\d+L IN \(", plan), plan
     assert not [n for n in PYTHON_NODES if n in plan], plan
 
 

@@ -11,6 +11,7 @@ from types import SimpleNamespace
 
 import numpy as np
 import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 from vettore_spark.collection import EMBEDDING_SCHEMA, Collection, CollectionConfig
 from vettore_spark.operators.search import single_query_frame
@@ -121,9 +122,11 @@ def test_search_reads_materialized_rows(spark):
     assert "applySchemaToPythonRDD" not in _lineage(s)
 
 
-def test_single_query_frames_hold_no_python_scan(spark):
-    """ivf_search broadcasts its query frame from a local table scan, and
-    pq_search collects its query frame on the driver, without a job."""
+def test_single_query_frames_hold_no_python_scan(spark, monkeypatch):
+    """Building a single-query request submits no Spark job and costs at
+    most 20 py4j calls (one SQL text over engine-owned views) — 50 for
+    hnsw_search, whose mapInPandas scan alone costs ~31 — and its plan
+    scans no Python-side query frame."""
     frame = single_query_frame(spark, [0.5, -1.0], "q7")
     assert "LocalTableScan" in _executed(frame)
     assert frame.collect()[0].asDict() == {
@@ -132,17 +135,38 @@ def test_single_query_frames_hold_no_python_scan(spark):
     c = Collection.create(spark, "resident_ann", DIMS)
     c.put_many(_rows(0, 80))
     q = _rows(600, 601)[0]["vector"]
-    for mode in ("ivf_search", "pq_search"):
-        getattr(c, mode)(q, limit=5).collect()  # builds the index
+    modes = {
+        "search": lambda: c.search(q, limit=5),
+        "search_where": lambda: c.search(q, limit=5, where="id LIKE 'r1%'"),
+        "quantized_search": lambda: c.quantized_search(q, limit=5),
+        "hnsw_search": lambda: c.hnsw_search(q, limit=5),
+        "ivf_search": lambda: c.ivf_search(q, limit=5),
+        "sq_search": lambda: c.sq_search(q, limit=5),
+        "pq_search": lambda: c.pq_search(q, limit=5),
+    }
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        # py4j's object-release messages are sent when Python's GC frees
+        # any proxy, often one of an earlier test's: not the build's work
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(1)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    for mode, build in modes.items():
+        build().collect()  # builds the index
         with _jobs(spark) as plan_jobs:
-            out = getattr(c, mode)(q, limit=5)
+            calls.clear()
+            out = build()
+            n_calls = len(calls)
         assert plan_jobs == [], mode
+        assert n_calls <= (50 if mode == "hnsw_search" else 20), (mode, n_calls)
         assert len(out.collect()) == 5
         plan = _executed(out)
         assert "ExistingRDD[query_id" not in plan, mode
         assert "applySchemaToPythonRDD" not in _lineage(out), mode
-        if mode == "ivf_search":
-            assert "LocalTableScan [query_id" in plan
 
 
 def test_put_many_adds_no_job(spark):

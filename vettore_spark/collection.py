@@ -22,8 +22,10 @@ Validation parity:
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
+import re
 import threading
 import warnings
 from dataclasses import dataclass, field, asdict
@@ -77,6 +79,9 @@ def _empty_rows(spark: SparkSession) -> DataFrame:
 # structural keys (dimensions, metric, normalize, compressed) are rejected.
 _OVERRIDABLE = {"name", "index", "index_options", "score"}
 _STRUCTURAL = {"dimensions", "metric", "normalize", "compressed"}
+
+# engine-owned temp views are named per collection (Collection._sql)
+_VIEW_TAGS = itertools.count()
 
 # put_many list batches up to this size hand the resident indexes their
 # stored rows, so HNSW routes them in a task closure (one narrow map job);
@@ -161,6 +166,12 @@ class Collection:
         self._build_locks: dict[tuple, threading.Lock] = {}
         self._write_lock = threading.RLock()
         self._writes = 0
+        # engine-owned temp views: name -> (registry key, or None for the
+        # rows, and the table it names), bound and dropped under
+        # _view_lock; see _sql
+        self._views: dict[str, tuple[tuple | None, DataFrame]] = {}
+        self._view_lock = threading.Lock()
+        self._view_tag = f"vettore_c{next(_VIEW_TAGS)}"
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -173,6 +184,7 @@ class Collection:
         Releases the batches put_many persisted (resident_cut on a cluster
         without a checkpoint dir)."""
         self._closed = True
+        self._drop_views(lambda key: True)
         for batch in self.__dict__.pop("_persisted_batches", ()):
             batch.unpersist()
 
@@ -403,15 +415,10 @@ class Collection:
         ).withColumn("value", F.coalesce(F.col("value"), F.col("id")))
 
         # validate multi-vectors: each inner vector must match dims
-        vectors_ok = F.when(
-            F.col("vectors").isNull(), F.lit(True)
-        ).otherwise(
-            (F.size("vectors") > 0)
-            & F.aggregate(
-                F.col("vectors"),
-                F.lit(True),
-                lambda ok, v: ok & K.is_valid_vector(v, dims),
-            )
+        vectors_ok = F.expr(
+            "CASE WHEN vectors IS NULL THEN true ELSE size(vectors) > 0 AND "
+            f"aggregate(vectors, true, (_ok, _v) -> _ok AND "
+            f"{K.is_valid_vector.sql('_v', dims)}) END"
         )
 
         # derive primary vector = mean of multi-vectors when absent (collection.ex:994-1017)
@@ -469,17 +476,11 @@ class Collection:
         norm = cfg.normalize
         staged = staged.withColumn("vector", K.normalize(norm, "vector"))
         if norm != "none":
-            staged = staged.withColumn(
-                "vectors",
-                F.when(
-                    F.col("vectors").isNull(), F.lit(None).cast("array<array<double>>")
-                ).otherwise(
-                    F.transform(
-                        F.col("vectors").cast("array<array<double>>"),
-                        lambda v: K.normalize(norm, v),
-                    )
-                ),
-            )
+            staged = staged.withColumn("vectors", F.expr(
+                "CASE WHEN vectors IS NULL THEN CAST(NULL AS ARRAY<ARRAY<DOUBLE>>) "
+                "ELSE transform(CAST(vectors AS ARRAY<ARRAY<DOUBLE>>), "
+                f"_w -> {K.normalize.sql(norm, '_w')}) END"
+            ))
 
         # derive packed sign bits of the stored (normalized) vector
         staged = staged.withColumn("binary_vector", K.compress_sign_bits("vector", dims))
@@ -749,6 +750,7 @@ class Collection:
             pass
         patched = ((key, patch(ix)) for key, ix in self._indexes.items())
         self._indexes = {key: ix for key, ix in patched if ix is not None}
+        self._drop_views(lambda key: key is not None and key not in self._indexes)
         self._writes += 1
 
     def all(self) -> DataFrame:
@@ -844,24 +846,84 @@ class Collection:
             return self.df
         return self.df.filter(where)
 
+    def _view(self, key: tuple | None, table: DataFrame, part: str = "") -> str:
+        """The engine-owned temp view naming `table` — the rows (key None)
+        or a table of the resident index at `key` — re-pointed when the
+        table changes (caller holds `_view_lock`). Views are bound here,
+        never by `spark.sql(text, df=...)`: that formatter drops its view
+        after the call, and dropping a view uncaches every persisted plan
+        equal to its own, so a resident table would be uncached by its
+        first request. Re-pointing a view leaves the old table cached."""
+        slot = "rows" if key is None else "_".join(map(str, (*key, part)))
+        name = f"{self._view_tag}_{re.sub(r'[^0-9A-Za-z]', '_', slot)}"
+        if self._views.get(name, (None, None))[1] is not table:
+            table.createOrReplaceTempView(name)
+            self._views[name] = (key, table)
+        return name
+
+    def _drop_views(self, gone) -> None:
+        """Drop the views whose key left the registry (`gone(key)`): the
+        drop uncaches their tables, which no new search reads. A request
+        still holding a dropped index binds it again; the next write's
+        sweep drops that view."""
+        with self._view_lock:
+            for name, (key, _) in list(self._views.items()):
+                if gone(key):
+                    del self._views[name]
+                    self.spark.catalog.dropTempView(name)
+
+    def _sql(self, template, where=None, **tables) -> DataFrame:
+        """One single-query request: `spark.sql(template(**relations))`,
+        each relation the engine-owned view of a table (`tables`: name ->
+        (registry key, table)). The views are bound and the statement
+        analyzed under `_view_lock`, so each request's plan holds the
+        tables it bound: a concurrent request re-points a view, and a
+        write drops one, only between two analyses.
+
+        `where` restricts the first relation. A SQL string must parse as
+        one expression (a predicate cannot close the parenthesis and
+        extend the statement) and is spliced in on its own lines (a
+        trailing `--` comment ends there). A Column binds as a
+        per-request view of the filtered table, whose plan is never
+        persisted, so dropping that view uncaches nothing."""
+        if isinstance(where, str):
+            self.spark._jsparkSession.sessionState().sqlParser().parseExpression(where)
+        with self._view_lock:
+            rel = {n: self._view(key, t, n) for n, (key, t) in tables.items()}
+            first = next(iter(tables))
+            if isinstance(where, str):
+                rel[first] = f"(SELECT * FROM {rel[first]} WHERE (\n{where}\n))"
+            elif where is not None:
+                rel[first] = f"{self._view_tag}_where"
+                tables[first][1].filter(where).createOrReplaceTempView(rel[first])
+                try:
+                    return self.spark.sql(template(**rel))
+                finally:
+                    self.spark.catalog.dropTempView(rel[first])
+            return self.spark.sql(template(**rel))
+
+    def _topk_opts(self) -> dict:
+        return dict(
+            metric=self.config.metric, score_mode=self.config.score,
+            pre_normalized=self._pre_normalized,
+        )
+
     def search(self, query: list[float], *, limit: int = 10,
                where=None) -> DataFrame:
         """Exact top-k; `where` (Column or SQL string) restricts the
         candidate rows BEFORE scoring — the reference's filter superset
         (§2.2) at the facade: the predicate sits below the kernel in the
         plan, so column pruning and pushdown apply and non-matching rows
-        are never scored."""
+        are never scored. One SQL text over the rows view
+        (`search.topk_sql`)."""
         from vettore_spark.operators import search as S
 
         q = self._prepare_query(query)
-        return S.flat_topk(
-            self._where(where),
-            q,
-            metric=self.config.metric,
-            k=limit,
-            score_mode=self.config.score,
-            pre_normalized=self._pre_normalized,
-            extra_cols=["value"],
+        return self._sql(
+            lambda rows: S.topk_sql(
+                rows, q, k=limit, extra_cols=("value",), **self._topk_opts()
+            ),
+            where, rows=(None, self.df),
         )
 
     def range_search(self, query: list[float], *,
@@ -957,13 +1019,18 @@ class Collection:
 
     def quantized_search(self, query: list[float], *, limit: int = 10,
                          candidates: int | None = None, where=None) -> DataFrame:
+        """Two-stage sign-bit search (`search.quantized_search`) as one SQL
+        text over the rows view: packed-Hamming top-`candidates`, broadcast
+        semi-join, exact rerank."""
         from vettore_spark.operators import search as S
 
         q = self._prepare_query(query)
-        return S.quantized_search(
-            self._where(where), q, dims=self.config.dimensions, metric=self.config.metric,
-            k=limit, candidates=candidates, score_mode=self.config.score,
-            pre_normalized=self._pre_normalized,
+        return self._sql(
+            lambda rows: S.quantized_search_sql(
+                rows, q, dims=self.config.dimensions, k=limit,
+                candidates=candidates, **self._topk_opts(),
+            ),
+            where, rows=(None, self.df),
         )
 
     def funnel_search(self, query: list[float], *, stages: list[int] | None = None,
@@ -994,7 +1061,8 @@ class Collection:
         may number fewer than `limit` under a selective predicate.
 
         The ADC stage of one query is a JVM top-k over the resident code
-        table (operators.pq.pq_adc_topk): a request runs no Python worker."""
+        table (PqIndex.candidates_sql) in the request's one SQL text: a
+        request runs no Python worker."""
         from vettore_spark.operators import search as S
         from vettore_spark.sources.store import PqIndex
 
@@ -1013,16 +1081,22 @@ class Collection:
         factor = max(1, candidates // max(limit, 1))
         if where is not None:
             factor *= 4  # over-fetch so the post-filter can still fill k
+        if idx._books is None:
+            idx.build(self.df)  # built over no rows: train on the rows now
+        if idx._books is None:  # still empty: exact scan
+            return self._sql(
+                lambda rows: S.topk_sql(rows, q, k=limit, **self._topk_opts()),
+                where, rows=(None, self.df),
+            )
+        key = ("pq", m, n_codes, iters)
         # the fetch depth is passed in, never stored on the shared index:
         # concurrent requests cannot read each other's depth
-        pruned = idx.candidates(self.df, q, limit * factor)
-        if where is not None:
-            pruned = pruned.join(
-                self._where(where).select("id"), "id", "left_semi"
-            )
-        return S.flat_topk(
-            pruned, q, metric=self.config.metric, k=limit,
-            score_mode=self.config.score, pre_normalized=self._pre_normalized,
+        return self._sql(
+            lambda rows, codes: S.rerank_sql(
+                rows, idx.candidates_sql(codes, q, limit * factor), q, k=limit,
+                **self._topk_opts(),
+            ),
+            where, rows=(None, self.df), codes=(key, idx._codes),
         )
 
     def hnsw_search(self, query: list[float], *, limit: int = 10,
@@ -1071,7 +1145,7 @@ class Collection:
                 .orderBy("rank")
                 .limit(limit)
             )
-        return out.select("id", "score", "distance")
+        return out.selectExpr("id", "score", "distance")
 
     def ivf_search(self, query: list[float], *, limit: int = 10,
                    n_cells: int = 8, n_probe: int = 2,
@@ -1091,10 +1165,12 @@ class Collection:
         ivf_filtered_topk): exact filtering with the index shared across
         predicates — no over-fetch needed.
 
-        Probe selection and within-cell scoring both run the JVM cosine
-        kernel: a request runs no Python worker."""
+        The probed cells are chosen on the driver from the resident
+        codebook (ann.ivf_probe_cells, the JVM probe's exact order), and
+        the request is one SQL text (ann.ivf_topk_sql): a `_cell` filter
+        on the resident table and a JVM top-k — one job, no Python
+        worker, no exchange."""
         from vettore_spark.operators import ann as ANN
-        from vettore_spark.operators.search import single_query_frame
         from vettore_spark.sources.store import IvfFile
 
         self._check_open()
@@ -1110,18 +1186,13 @@ class Collection:
                 "pq_search (l2) for other metrics"
             )
         q = self._prepare_query(query)
-        ix = self._resident(
-            ("ivf", n_cells), lambda: IvfFile.build(self._df, n_cells=n_cells)
+        key = ("ivf", n_cells)
+        ix = self._resident(key, lambda: IvfFile.build(self._df, n_cells=n_cells))
+        cells = ANN.ivf_probe_cells(q, ix.cids, ix.cmat, n_probe)
+        return self._sql(
+            lambda ivf: ANN.ivf_topk_sql(ivf, q, cells, limit),
+            where, ivf=(key, ix.assigned),
         )
-        assigned = ix.assigned
-        if where is not None:
-            assigned = assigned.filter(where)
-        out = ANN.ivf_topk(
-            self._df, single_query_frame(self.spark, q), centroids=ix.centroids,
-            n_probe=n_probe, k=limit,
-            id_col="id", vector_col="vector", assigned=assigned,
-        )
-        return out.select("id", "score", "distance", "rank")
 
     def sq_search(self, query: list[float], *, limit: int = 10,
                   candidates: int = 100, where=None) -> DataFrame:
@@ -1136,7 +1207,8 @@ class Collection:
 
         `where` restricts the CANDIDATE stage input (exact filtering: the
         trained min/max bounds remain valid for any subset, so the shared
-        quantizer serves every predicate)."""
+        quantizer serves every predicate). One SQL text over the rows and
+        the resident code table (sq.sq_topk_sql)."""
         from vettore_spark.operators import sq as SQ
         from vettore_spark.sources.store import SqBounds
 
@@ -1147,11 +1219,12 @@ class Collection:
             )
         q = self._prepare_query(query)
         ix = self._resident(("sq",), lambda: SqBounds.build(self._df))
-        return SQ.sq_topk(
-            self._where(where), q, ix.mins, ix.maxs, k=limit, candidates=candidates,
-            id_col="id", vector_col="vector",
-            metric=self.config.metric, score_mode=self.config.score,
-            pre_normalized=self._pre_normalized,
+        return self._sql(
+            lambda rows, codes: SQ.sq_topk_sql(
+                rows, codes, q, ix.mins, ix.maxs, k=limit, candidates=candidates,
+                restrict=where is not None, **self._topk_opts(),
+            ),
+            where, rows=(None, self.df), codes=(("sq",), ix.codes(self._df)),
         )
 
     def hybrid_search(self, query: list[float], *, generators: list[str] | None = None,

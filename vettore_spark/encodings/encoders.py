@@ -196,7 +196,7 @@ def rerank_with_model(
     # above every finite one; NULL sorts last under desc). The shared
     # kernels rail nulls both. The emitted model_score keeps the raw
     # non-finite value so the caller can see the failure.
-    skey = _finite_or_null(F.round("model_score", 6))
+    skey = _finite_or_null("round(model_score, 6)")
     w = Window.partitionBy(query_id_col).orderBy(F.desc(skey), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -1,9 +1,18 @@
-"""Distance / similarity / normalization kernels as PySpark Column expressions.
+"""Distance / similarity / normalization kernels as Spark SQL text.
 
-Re-expresses every scalar kernel of the reference engine
-(``/root/reference/native/vettore/src/distances.rs``) as JVM-side Spark SQL
-higher-order-function expressions — no Python UDFs in the hot path, so the
-whole pipeline stays inside Catalyst/whole-stage-codegen.
+Re-expresses every scalar kernel of the reference engine (its
+``native/vettore/src/distances.rs``) as a JVM-side Spark SQL
+higher-order-function expression — no Python UDFs in the hot path, so
+the whole pipeline stays inside Catalyst/whole-stage-codegen.
+
+SQL text is the one representation. Each kernel builds its text; calling
+it gives the Column form, ``F.expr(text)`` — ONE JVM parse call, where a
+tree of Column calls costs a py4j round trip per node (~100-540 per
+kernel). ``kernel.sql(...)`` gives the text itself, so a serving request
+can splice every kernel into one ``spark.sql`` statement. Arguments are
+SQL text (a column name is SQL text); a Column argument is spelled through
+the session's expression printer, which omits casts to complex types —
+pass such a cast as text.
 
 Semantics parity (reference file:line):
 - metric dispatch / 9 metrics ........ distances.rs:40-60
@@ -18,28 +27,24 @@ Semantics parity (reference file:line):
 
 All arithmetic is f64 (Spark default); the reference computes f32 with f64
 recovery on overflow (distances.rs:59-98), so f64 is a strict superset.
+Lambda variables are `_`-prefixed so they never shadow a column an
+argument names.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # f32::MAX — validation bound for vector elements (collection.ex:61)
 F32_MAX = 3.4028234663852886e38
 
 METRICS = (
-    "l2",
-    "l2_squared",
-    "cosine",
-    "inner_product",
-    "negative_inner_product",
-    "manhattan",
-    "chebyshev",
-    "hamming",
-    "jaccard",
+    "l2", "l2_squared", "cosine", "inner_product", "negative_inner_product",
+    "manhattan", "chebyshev", "hamming", "jaccard",
 )
 SIMILARITY_METRICS = frozenset({"cosine", "inner_product"})
 # aliases accepted by the reference API (collection.ex:1300-1304, vettore.ex:675-680)
@@ -51,6 +56,8 @@ METRIC_ALIASES = {
 }
 
 _LONG_MIN = -(2**63)
+_NULL = "CAST(NULL AS DOUBLE)"
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
 
 
 def canonical_metric(name: str) -> str:
@@ -61,30 +68,60 @@ def canonical_metric(name: str) -> str:
     return m
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def _sql(c: Column | str) -> str:
+    """SQL text of a kernel argument."""
+    if isinstance(c, str):
+        return c
+    return SparkSession.active()._jsparkSession.expression(c._jc).sql()
 
 
-def _dbl(c: Column | str) -> Column:
+def _kernel(build):
+    """Column form (`F.expr`, one JVM call) of a text builder, kept as `.sql`."""
+
+    @functools.wraps(build)
+    def column(*args, **kwargs):
+        out = build(*args, **kwargs)
+        if isinstance(out, tuple):
+            return tuple(F.expr(t) for t in out)
+        return F.expr(out)
+
+    column.sql = build
+    return column
+
+
+def _dbl(c: Column | str) -> str:
     """Promote array<float> to array<double> so every op runs in f64."""
-    return _col(c).cast("array<double>")
+    return f"CAST({_sql(c)} AS ARRAY<DOUBLE>)"
+
+
+def _double(v: float) -> str:
+    """One double literal: Python's shortest `repr` round-trips every
+    finite double (subnormals and -0.0 included) through the JVM parser;
+    NaN/±inf have no literal spelling and parse from a string."""
+    r = repr(v)
+    if r in _NON_FINITE:
+        return f"CAST('{_NON_FINITE[r]}' AS DOUBLE)"
+    return r + "D"
+
+
+def array_lit_sql(values) -> str:
+    """array<double> literal text of `values` (see `double_array_lit`)."""
+    vals = [float(x) for x in values]
+    if not vals:
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    return "array(" + ", ".join(_double(v) for v in vals) + ")"
 
 
 def double_array_lit(values) -> Column:
     """array<double> literal of `values`, built with ONE JVM parse call.
 
-    `F.array(*[F.lit(x) ...])` costs about four py4j round trips per
-    element (a 32-dim query ~130); the SQL text `array(0.1D, ...)` is one.
-    Exact: Python's shortest `repr` round-trips every finite double
-    (subnormals and -0.0 included) through the JVM's parser. NaN/±inf
-    have no SQL literal spelling, so a vector holding one falls back to
-    per-element `F.lit`."""
+    `F.array(*[F.lit(x) ...])` costs ~4 py4j round trips per element; the
+    text `array(0.1D, ...)` one. A vector holding NaN/±inf falls back to
+    per-element `F.lit`, which types the array's elements non-null."""
     vals = [float(x) for x in values]
-    if not vals:
-        return F.expr("CAST(array() AS array<double>)")
     if not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
-    return F.expr("array(" + ", ".join(repr(v) + "D" for v in vals) + ")")
+    return F.expr(array_lit_sql(vals))
 
 
 # ---------------------------------------------------------------------------
@@ -92,136 +129,102 @@ def double_array_lit(values) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def _sum(arr: str, zero: str = "0.0D") -> str:
+    return f"aggregate({arr}, {zero}, (_s, _x) -> _s + _x)"
+
+
+def _pairwise(a, b, body: str) -> str:
+    return f"zip_with({_dbl(a)}, {_dbl(b)}, (_x, _y) -> {body})"
+
+
+@_kernel
+def dot(a: Column | str, b: Column | str) -> str:
     """Inner product (distances.rs:236-270)."""
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+    return _sum(_pairwise(a, b, "_x * _y"))
 
 
-def norm_l2(a: Column | str) -> Column:
+@_kernel
+def norm_l2(a: Column | str) -> str:
     """Euclidean norm of one vector."""
-    return F.sqrt(
-        F.aggregate(_dbl(a), F.lit(0.0), lambda s, x: s + x * x)
-    )
+    return f"sqrt(aggregate({_dbl(a)}, 0.0D, (_s, _x) -> _s + _x * _x))"
 
 
-def l2_squared(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def l2_squared(a: Column | str, b: Column | str) -> str:
     """Squared L2 (distances.rs:150-152)."""
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+    return _sum(_pairwise(a, b, "(_x - _y) * (_x - _y)"))
 
 
-def l2(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def l2(a: Column | str, b: Column | str) -> str:
     """L2 distance (distances.rs:140-147)."""
-    return F.sqrt(l2_squared(a, b))
+    return f"sqrt({l2_squared.sql(a, b)})"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def cosine(a: Column | str, b: Column | str) -> str:
     """True cosine similarity: f64 dot/(|a||b|), zero vector -> 0.0,
-    clamped to [-1, 1] (distances.rs:160-177). A non-finite input
-    (NaN/±inf element) yields NULL, never a score: Spark's least/greatest
-    order NaN ABOVE every double, so the plain clamp would turn a
-    malformed vector's NaN ratio into a PERFECT 1.0 similarity — the
-    malformed-rows-win class (NANPOLICY.md). NULL loses under every
-    NULLS-LAST rank key and fails every `>= threshold` filter.
+    clamped to [-1, 1] (distances.rs:160-177). A non-finite input yields
+    NULL: least/greatest order NaN ABOVE every double, so the plain clamp
+    would score a malformed vector a PERFECT 1.0 (NANPOLICY.md).
 
     Single pass: one aggregate accumulating (dot, |a|^2, |b|^2), with the
-    ratio/clamp in the aggregate's FINISH lambda — the struct is a bound
-    lambda variable there, so the fold runs once; referencing the
-    aggregate from outside (the previous shape) re-inlined the whole
-    CodegenFallback fold per reference (~4x) after CollapseProject.
-    """
-    pairs = F.zip_with(
-        _dbl(a), _dbl(b), lambda x, y: F.struct(x.alias("x"), y.alias("y"))
-    )
-    init = F.struct(
-        F.lit(0.0).alias("d"), F.lit(0.0).alias("na"), F.lit(0.0).alias("nb")
-    )
-
-    def fin(s: Column) -> Column:
-        denom = F.sqrt(s["na"]) * F.sqrt(s["nb"])
-        r = s["d"] / denom
-        return (
-            F.when(denom == 0.0, F.lit(0.0))
-            .when(F.isnan(r), F.lit(None).cast("double"))
-            .otherwise(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), r)))
-        )
-
-    return F.aggregate(
-        pairs,
-        init,
-        lambda s, p: F.struct(
-            (s["d"] + p["x"] * p["y"]).alias("d"),
-            (s["na"] + p["x"] * p["x"]).alias("na"),
-            (s["nb"] + p["y"] * p["y"]).alias("nb"),
-        ),
-        fin,
+    ratio/clamp in its FINISH lambda, where the struct is a bound
+    variable — referenced from outside, the CodegenFallback fold would
+    be re-inlined per reference (~4x) after CollapseProject."""
+    pair = "named_struct('x', _x, 'y', _y)"
+    denom = "(sqrt(_s.na) * sqrt(_s.nb))"
+    r = f"(_s.d / {denom})"
+    return (
+        f"aggregate({_pairwise(a, b, pair)}, "
+        "named_struct('d', 0.0D, 'na', 0.0D, 'nb', 0.0D), "
+        "(_s, _p) -> named_struct('d', _s.d + _p.x * _p.y, "
+        "'na', _s.na + _p.x * _p.x, 'nb', _s.nb + _p.y * _p.y), "
+        f"_s -> CASE WHEN {denom} = 0.0D THEN 0.0D WHEN isnan({r}) THEN {_NULL} "
+        f"ELSE least(1.0D, greatest(-1.0D, {r})) END)"
     )
 
 
-def manhattan(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def manhattan(a: Column | str, b: Column | str) -> str:
     """Sum of absolute differences (distances.rs:273-308)."""
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: F.abs(x - y)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+    return _sum(_pairwise(a, b, "abs(_x - _y)"))
 
 
-def chebyshev(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def chebyshev(a: Column | str, b: Column | str) -> str:
     """Max absolute difference (distances.rs:311-316)."""
-    return F.coalesce(
-        F.array_max(F.zip_with(_dbl(a), _dbl(b), lambda x, y: F.abs(x - y))),
-        F.lit(0.0),
-    )
+    return f"coalesce(array_max({_pairwise(a, b, 'abs(_x - _y)')}), 0.0D)"
 
 
-def hamming(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def hamming(a: Column | str, b: Column | str) -> str:
     """Count of coordinates whose truthiness differs (distances.rs:318-324)."""
-    return F.aggregate(
-        F.zip_with(
-            _dbl(a),
-            _dbl(b),
-            lambda x, y: F.when((x != 0.0) != (y != 0.0), 1.0).otherwise(0.0),
-        ),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+    return _sum(_pairwise(
+        a, b, "CASE WHEN (_x != 0.0D) != (_y != 0.0D) THEN 1.0D ELSE 0.0D END"
+    ))
 
 
-def jaccard(a: Column | str, b: Column | str) -> Column:
+@_kernel
+def jaccard(a: Column | str, b: Column | str) -> str:
     """1 - |both truthy| / |either truthy|; empty union -> 0.0
     (distances.rs:327-347)."""
-    pairs = F.zip_with(
-        _dbl(a),
-        _dbl(b),
-        lambda x, y: F.struct(
-            F.when((x != 0.0) & (y != 0.0), 1.0).otherwise(0.0).alias("i"),
-            F.when((x != 0.0) | (y != 0.0), 1.0).otherwise(0.0).alias("u"),
-        ),
+    pairs = _pairwise(
+        a, b,
+        "named_struct('i', CASE WHEN (_x != 0.0D) AND (_y != 0.0D) THEN 1.0D ELSE 0.0D END, "
+        "'u', CASE WHEN (_x != 0.0D) OR (_y != 0.0D) THEN 1.0D ELSE 0.0D END)",
     )
-    init = F.struct(F.lit(0.0).alias("i"), F.lit(0.0).alias("u"))
-    acc = F.aggregate(
-        pairs,
-        init,
-        lambda s, p: F.struct(
-            (s["i"] + p["i"]).alias("i"), (s["u"] + p["u"]).alias("u")
-        ),
+    acc = (
+        f"aggregate({pairs}, named_struct('i', 0.0D, 'u', 0.0D), "
+        "(_s, _p) -> named_struct('i', _s.i + _p.i, 'u', _s.u + _p.u))"
     )
-    return F.when(acc["u"] == 0.0, F.lit(0.0)).otherwise(
-        1.0 - acc["i"] / acc["u"]
-    )
+    return f"CASE WHEN {acc}.u = 0.0D THEN 0.0D ELSE 1.0D - {acc}.i / {acc}.u END"
 
 
+@_kernel
 def raw_metric(
     metric: str, a: Column | str, b: Column | str, *, pre_normalized: bool = True
-) -> Column:
+) -> str:
     """Raw metric value per the reference dispatch (distances.rs:40-60).
 
     ``cosine`` on the collection path is a plain dot product — the collection
@@ -230,23 +233,16 @@ def raw_metric(
     distance calls and prefix top-k (search.rs:56-58).
     """
     m = canonical_metric(metric)
-    if m == "l2":
-        return l2(a, b)
-    if m == "l2_squared":
-        return l2_squared(a, b)
-    if m == "cosine":
-        return dot(a, b) if pre_normalized else cosine(a, b)
-    if m == "inner_product":
-        return dot(a, b)
+    if m == "cosine" and not pre_normalized:
+        return cosine.sql(a, b)
+    if m in ("cosine", "inner_product"):
+        return dot.sql(a, b)
     if m == "negative_inner_product":
-        return -dot(a, b)
-    if m == "manhattan":
-        return manhattan(a, b)
-    if m == "chebyshev":
-        return chebyshev(a, b)
-    if m == "hamming":
-        return hamming(a, b)
-    return jaccard(a, b)
+        return f"(-{dot.sql(a, b)})"
+    return {
+        "l2": l2, "l2_squared": l2_squared, "manhattan": manhattan,
+        "chebyshev": chebyshev, "hamming": hamming, "jaccard": jaccard,
+    }[m].sql(a, b)
 
 
 # ---------------------------------------------------------------------------
@@ -254,73 +250,71 @@ def raw_metric(
 # ---------------------------------------------------------------------------
 
 
-def _finite_or_null(raw: Column) -> Column:
+@_kernel
+def _finite_or_null(raw: Column | str) -> str:
     """NaN/±inf -> NULL rail shared by the K12-K14 value mappers
-    (NANPOLICY.md): Spark's total ordering puts NaN ABOVE every double
-    and comparisons follow it, so a NaN raw metric would WIN a desc
-    similarity sort and PASS a `>= threshold` cut, and a +inf dot
-    product would rank FIRST (rank = -raw = -inf). NULL instead: loses
-    under every NULLS-LAST rank key (asc default puts NULL first —
-    hence the explicit asc_nulls_last everywhere), sorts last under
-    desc (Spark desc default is NULLS LAST), and fails every
-    threshold comparison. Callers MUST pass a MATERIALIZED raw value —
-    a `_staged_raw` column, or (inside a higher-order function) the
-    bound element of a dedicated raw-staging `F.transform`, as MaxSim
-    does (multivector.py) — so the extra references are cheap scalar
-    reads, not re-inlined kernel folds (the ~3-4x CodegenFallback
-    re-inline class the r13 cosine rewrite fixed)."""
-    return F.when(
-        F.isnan(raw) | (F.abs(raw) == float("inf")), F.lit(None).cast("double")
-    ).otherwise(raw)
+    (NANPOLICY.md): Spark orders NaN ABOVE every double, so a NaN raw
+    metric would WIN a desc sort and PASS a `>= threshold` cut, and a
+    +inf dot product would rank FIRST. NULL loses under every NULLS-LAST
+    rank key, sorts last under desc and fails every threshold. Callers
+    MUST pass a MATERIALIZED raw value (a staged `_raw` column, or a
+    raw-staging `transform`'s bound element, as MaxSim does) so the
+    extra references are scalar reads, not re-inlined kernel folds."""
+    r = _sql(raw)
+    return (
+        f"CASE WHEN isnan({r}) OR abs({r}) = {_double(math.inf)} "
+        f"THEN {_NULL} ELSE {r} END"
+    )
 
 
-def rank_value(metric: str, raw: Column) -> Column:
+@_kernel
+def rank_value(metric: str, raw: Column | str) -> str:
     """Ascending rank order key (distances.rs:113-119). Non-finite raw
     -> NULL rank (loses under NULLS-LAST ordering)."""
     m = canonical_metric(metric)
-    raw = _finite_or_null(raw)
+    r = _finite_or_null.sql(raw)
     if m == "cosine":
-        return 1.0 - raw
+        return f"(1.0D - {r})"
     if m == "inner_product":
-        return -raw
-    return raw
+        return f"(-{r})"
+    return r
 
 
-def similarity_value(metric: str, raw: Column) -> Column:
+@_kernel
+def similarity_value(metric: str, raw: Column | str) -> str:
     """Higher-is-better similarity (distances.rs:122-128). Non-finite
     raw -> NULL similarity (fails every >= min_score cut)."""
     m = canonical_metric(metric)
-    raw = _finite_or_null(raw)
+    r = _finite_or_null.sql(raw)
     if m in ("cosine", "inner_product"):
-        return raw
+        return r
     if m == "negative_inner_product":
-        return -raw
-    return 1.0 / (1.0 + raw)
+        return f"(-{r})"
+    return f"(1.0D / (1.0D + {r}))"
 
 
-def result_values(metric: str, raw: Column, score_mode: str = "raw") -> tuple[Column, Column]:
-    """(score, distance) columns per metric x score-mode
-    (lib/vettore_distance.ex:525-547). distance may be NULL only never here —
-    every metric in the table yields a distance; MaxSim results carry NULL
-    distance at the operator layer. Non-finite raw -> NULL score AND
-    distance (the row is reportable but never ranked or thresholded in).
-    """
+@_kernel
+def result_values(metric: str, raw: Column | str, score_mode: str = "raw") -> tuple[str, str]:
+    """(score, distance) per metric x score-mode
+    (lib/vettore_distance.ex:525-547). Non-finite raw -> NULL score AND
+    distance (the row is reportable but never ranked or thresholded in);
+    MaxSim results carry NULL distance at the operator layer."""
     m = canonical_metric(metric)
     if score_mode not in ("raw", "similarity"):
         raise ValueError(f"unknown score mode: {score_mode!r}")
-    raw = _finite_or_null(raw)
+    r = _finite_or_null.sql(raw)
+    neg, plain = f"(-{r})", f"({r} + 0.0D)"
     if m == "negative_inner_product":
-        return -raw, raw + 0.0
+        return neg, plain
     if m in SIMILARITY_METRICS:
-        dist = (1.0 - raw) if m == "cosine" else (-raw)
+        dist = f"(1.0D - {r})" if m == "cosine" else neg
         if score_mode == "raw":
-            return raw + 0.0, dist
-        score = (raw + 1.0) / 2.0 if m == "cosine" else raw + 0.0
-        return score, dist
+            return plain, dist
+        return (f"(({r} + 1.0D) / 2.0D)" if m == "cosine" else plain), dist
     # distance metrics
     if score_mode == "raw":
-        return -raw, raw + 0.0
-    return 1.0 / (1.0 + raw), raw + 0.0
+        return neg, plain
+    return f"(1.0D / (1.0D + {r}))", plain
 
 
 # ---------------------------------------------------------------------------
@@ -336,27 +330,28 @@ def default_normalize(metric: str) -> str:
     return "l2" if canonical_metric(metric) == "cosine" else "none"
 
 
-def _broadcast_scalar(vv: Column, s: Column, f) -> Column:
-    """Apply f(x, s) element-wise with the per-row scalar s computed ONCE.
+def _broadcast_scalar(vv: str, s: str, var: str, body: str) -> str:
+    """Apply `body` (over `_x` and the scalar `var`) element-wise with the
+    per-row scalar s computed ONCE.
 
     A naive `transform(v, x -> f(x, s))` re-embeds the s expression tree in
     the lambda, so an aggregate-derived s is recomputed PER ELEMENT — O(d^2)
     per row. `array_repeat` evaluates its child once, so zip_with against the
     repeated scalar keeps it O(d)."""
-    return F.zip_with(vv, F.array_repeat(s, F.size(vv)), f)
+    return f"zip_with({vv}, array_repeat({s}, size({vv})), (_x, {var}) -> {body})"
 
 
-def normalize_l2(v: Column | str) -> Column:
+@_kernel
+def normalize_l2(v: Column | str) -> str:
     """Unit norm via f64; zero vector stays zero (distances.rs:350-361)."""
     vv = _dbl(v)
     return _broadcast_scalar(
-        vv,
-        norm_l2(vv),
-        lambda x, n: F.when(n == 0.0, x).otherwise(x / n),
+        vv, norm_l2.sql(vv), "_n", "CASE WHEN _n = 0.0D THEN _x ELSE _x / _n END"
     )
 
 
-def normalize_zscore(v: Column | str) -> Column:
+@_kernel
+def normalize_zscore(v: Column | str) -> str:
     """(x - mu) / sigma, population stddev; constant vector -> zeros
     (distances.rs:364-389).
 
@@ -364,48 +359,38 @@ def normalize_zscore(v: Column | str) -> Column:
     reference's two-pass formula differs only at ~1e-13 relative, absorbed by
     result rounding."""
     vv = _dbl(v)
-    init = F.struct(F.lit(0.0).alias("s"), F.lit(0.0).alias("q"))
-    acc = F.aggregate(
-        vv,
-        init,
-        lambda a, x: F.struct((a["s"] + x).alias("s"), (a["q"] + x * x).alias("q")),
+    acc = (
+        f"aggregate({vv}, named_struct('s', 0.0D, 'q', 0.0D), "
+        "(_a, _x) -> named_struct('s', _a.s + _x, 'q', _a.q + _x * _x))"
     )
-    n = F.size(vv).cast("double")
-    mu = acc["s"] / n
-    sigma = F.sqrt(F.greatest(acc["q"] / n - mu * mu, F.lit(0.0)))
-    stats = F.struct(mu.alias("mu"), sigma.alias("sg"))
+    n = f"CAST(size({vv}) AS DOUBLE)"
+    mu = f"({acc}.s / {n})"
+    sigma = f"sqrt(greatest({acc}.q / {n} - {mu} * {mu}, 0.0D))"
     return _broadcast_scalar(
-        vv,
-        stats,
-        lambda x, st: F.when(st["sg"] == 0.0, F.lit(0.0)).otherwise(
-            (x - st["mu"]) / st["sg"]
-        ),
+        vv, f"named_struct('mu', {mu}, 'sg', {sigma})", "_st",
+        "CASE WHEN _st.sg = 0.0D THEN 0.0D ELSE (_x - _st.mu) / _st.sg END",
     )
 
 
-def normalize_minmax(v: Column | str) -> Column:
+@_kernel
+def normalize_minmax(v: Column | str) -> str:
     """(x - min) / (max - min) -> [0,1]; constant vector -> zeros
     (distances.rs:392-410)."""
     vv = _dbl(v)
-    stats = F.struct(F.array_min(vv).alias("lo"), F.array_max(vv).alias("hi"))
     return _broadcast_scalar(
-        vv,
-        stats,
-        lambda x, st: F.when(st["hi"] == st["lo"], F.lit(0.0)).otherwise(
-            (x - st["lo"]) / (st["hi"] - st["lo"])
-        ),
+        vv, f"named_struct('lo', array_min({vv}), 'hi', array_max({vv}))", "_st",
+        "CASE WHEN _st.hi = _st.lo THEN 0.0D "
+        "ELSE (_x - _st.lo) / (_st.hi - _st.lo) END",
     )
 
 
-def normalize(mode: str, v: Column | str) -> Column:
+@_kernel
+def normalize(mode: str, v: Column | str) -> str:
     if mode == "none":
         return _dbl(v)
-    if mode == "l2":
-        return normalize_l2(v)
-    if mode == "zscore":
-        return normalize_zscore(v)
-    if mode == "minmax":
-        return normalize_minmax(v)
+    if mode in ("l2", "zscore", "minmax"):
+        return {"l2": normalize_l2, "zscore": normalize_zscore,
+                "minmax": normalize_minmax}[mode].sql(v)
     raise ValueError(f"unknown normalize mode: {mode!r}")
 
 
@@ -414,7 +399,7 @@ def normalize(mode: str, v: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _word(v: Column, word_idx: int, nbits: int) -> Column:
+def _word(v: str, word_idx: int, nbits: int) -> str:
     """One packed 64-bit word (little-endian bit order, distances.rs:413-423).
 
     ANSI-safe: assembled as lo(32 bits) + hi(31 bits)*2^32 + sign-bit
@@ -423,44 +408,44 @@ def _word(v: Column, word_idx: int, nbits: int) -> Column:
     """
     base = word_idx * 64
 
-    def bit(i: Column) -> Column:
+    def bit(i: str) -> str:
         # compare the raw element (no array-wide cast: a cast embedded here
         # would re-run O(d) work per bit extraction)
-        return F.when(
-            F.element_at(v, (i + base + 1).cast("int")) >= 0.0, F.lit(1).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
+        return (
+            f"CASE WHEN element_at({v}, CAST({i} + {base} + 1 AS INT)) >= 0.0D "
+            "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        )
 
-    def pack(lo_bit: int, hi_bit: int) -> Column:
+    def pack(lo_bit: int, hi_bit: int) -> str:
         # sum of bit(i) * 2^(i-lo_bit), accumulated msb-first: acc*2 + bit
-        return F.aggregate(
-            F.sequence(F.lit(hi_bit), F.lit(lo_bit), F.lit(-1)),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc * 2 + bit(i),
+        return (
+            f"aggregate(sequence({hi_bit}, {lo_bit}, -1), CAST(0 AS BIGINT), "
+            f"(_acc, _i) -> _acc * 2 + {bit('_i')})"
         )
 
     lo = pack(0, min(31, nbits - 1))
     if nbits <= 32:
         return lo
-    hi = pack(32, min(62, nbits - 1))
-    word = lo + hi * F.lit(4294967296).cast("long")
+    word = f"({lo} + {pack(32, min(62, nbits - 1))} * CAST(4294967296 AS BIGINT))"
     if nbits == 64:
-        word = word + F.when(bit(F.lit(63)) == 1, F.lit(_LONG_MIN)).otherwise(
-            F.lit(0).cast("long")
+        word = (
+            f"({word} + CASE WHEN {bit('63')} = 1 THEN {_LONG_MIN}L "
+            "ELSE CAST(0 AS BIGINT) END)"
         )
     return word
 
 
-def compress_sign_bits(v: Column | str, dims: int) -> Column:
+@_kernel
+def compress_sign_bits(v: Column | str, dims: int) -> str:
     """Pack x >= 0 sign bits little-endian into ceil(dims/64) long words
     (distances.rs:413-423). Padding bits are zero by construction."""
     if dims <= 0:
         raise ValueError("dimensions must be positive")
-    vv = _col(v)  # no array<double> cast: sign test works on any numeric
+    vv = _sql(v)  # no array<double> cast: sign test works on any numeric
     nwords = (dims + 63) // 64
-    words = [
-        _word(vv, w, min(64, dims - w * 64)).alias(f"w{w}") for w in range(nwords)
-    ]
-    return F.array(*words)
+    return "array(" + ", ".join(
+        _word(vv, w, min(64, dims - w * 64)) for w in range(nwords)
+    ) + ")"
 
 
 def pack_sign_bits_py(vec, dims: int) -> list[int]:
@@ -484,53 +469,42 @@ def pack_sign_bits_py(vec, dims: int) -> list[int]:
     return out
 
 
-def _masked(arr: Column, dims: int) -> Column:
+def _masked(arr: str, dims: int) -> str:
     """Mask padding bits of the final word (distances.rs:471-481)."""
     rem = dims % 64
     if rem == 0:
         return arr
-    nwords = (dims + 63) // 64
-    mask = (1 << rem) - 1
-    return F.transform(
-        arr,
-        lambda x, i: F.when(i == nwords - 1, x.bitwiseAND(F.lit(mask))).otherwise(x),
-    )
+    last = (dims + 63) // 64 - 1
+    return f"transform({arr}, (_x, _i) -> CASE WHEN _i = {last} THEN _x & {(1 << rem) - 1} ELSE _x END)"
 
 
-def packed_hamming(a: Column | str, b: Column | str, dims: int) -> Column:
+def _packed(a, b, dims: int, body: str) -> str:
+    return f"zip_with({_masked(_sql(a), dims)}, {_masked(_sql(b), dims)}, (_x, _y) -> {body})"
+
+
+@_kernel
+def packed_hamming(a: Column | str, b: Column | str, dims: int) -> str:
     """XOR + popcount over packed words, padding masked (distances.rs:426-437)."""
-    aa, bb = _masked(_col(a), dims), _masked(_col(b), dims)
-    return F.aggregate(
-        F.zip_with(aa, bb, lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long")),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    ).cast("double")
+    pop = _packed(a, b, dims, "CAST(bit_count(_x ^ _y) AS BIGINT)")
+    return f"CAST({_sum(pop, 'CAST(0 AS BIGINT)')} AS DOUBLE)"
 
 
-def packed_jaccard(a: Column | str, b: Column | str, dims: int) -> Column:
+@_kernel
+def packed_jaccard(a: Column | str, b: Column | str, dims: int) -> str:
     """popcount(AND)/popcount(OR) over packed words; empty union -> 0.0
     (distances.rs:440-457)."""
-    aa, bb = _masked(_col(a), dims), _masked(_col(b), dims)
-    pairs = F.zip_with(
-        aa,
-        bb,
-        lambda x, y: F.struct(
-            F.bit_count(x.bitwiseAND(y)).cast("long").alias("i"),
-            F.bit_count(x.bitwiseOR(y)).cast("long").alias("u"),
-        ),
+    pairs = _packed(
+        a, b, dims,
+        "named_struct('i', CAST(bit_count(_x & _y) AS BIGINT), "
+        "'u', CAST(bit_count(_x | _y) AS BIGINT))",
     )
-    init = F.struct(
-        F.lit(0).cast("long").alias("i"), F.lit(0).cast("long").alias("u")
+    acc = (
+        f"aggregate({pairs}, named_struct('i', CAST(0 AS BIGINT), 'u', CAST(0 AS BIGINT)), "
+        "(_s, _p) -> named_struct('i', _s.i + _p.i, 'u', _s.u + _p.u))"
     )
-    acc = F.aggregate(
-        pairs,
-        init,
-        lambda s, p: F.struct(
-            (s["i"] + p["i"]).alias("i"), (s["u"] + p["u"]).alias("u")
-        ),
-    )
-    return F.when(acc["u"] == 0, F.lit(0.0)).otherwise(
-        1.0 - acc["i"].cast("double") / acc["u"].cast("double")
+    return (
+        f"CASE WHEN {acc}.u = 0 THEN 0.0D "
+        f"ELSE 1.0D - CAST({acc}.i AS DOUBLE) / CAST({acc}.u AS DOUBLE) END"
     )
 
 
@@ -539,32 +513,30 @@ def packed_jaccard(a: Column | str, b: Column | str, dims: int) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def is_valid_vector(v: Column | str, dims: int) -> Column:
+@_kernel
+def is_valid_vector(v: Column | str, dims: int) -> str:
     """True when v is non-null, has exactly `dims` finite elements within
-    +/- f32::MAX (collection.ex:1085-1095, 1264-1270).
-
-    Implemented with builtin array_min/array_max instead of a per-element
-    boolean fold — ~2x faster on the ingest validation scan (measured
-    0.5s vs 1.0s over 128k x 64 doubles) with identical verdicts: NaN is
-    greatest in Spark's ordering, so array_max(v) <= f32max rejects any
-    NaN or +inf, array_min(v) >= -f32max rejects -inf/-overflow, and the
-    exists() guard rejects NULL elements (which min/max would skip)."""
+    +/- f32::MAX (collection.ex:1085-1095, 1264-1270). Builtin
+    array_min/array_max instead of a per-element fold (~2x faster at
+    ingest): NaN is greatest in Spark's ordering, so array_max <= f32max
+    rejects NaN and +inf, array_min >= -f32max rejects -inf, and exists()
+    rejects NULL elements (which min/max would skip)."""
     vv = _dbl(v)
-    no_null_elem = ~F.exists(vv, lambda x: x.isNull())
     return (
-        vv.isNotNull()
-        & (F.size(vv) == dims)
-        & no_null_elem
-        & (F.array_max(vv) <= F.lit(F32_MAX))
-        & (F.array_min(vv) >= F.lit(-F32_MAX))
+        f"(((({vv} IS NOT NULL AND size({vv}) = {dims}) "
+        f"AND (NOT exists({vv}, _x -> _x IS NULL))) "
+        f"AND array_max({vv}) <= {_double(F32_MAX)}) "
+        f"AND array_min({vv}) >= {_double(-F32_MAX)})"
     )
 
 
-def mean_vector(vectors: Column | str, dims: int) -> Column:
+@_kernel
+def mean_vector(vectors: Column | str, dims: int) -> str:
     """Element-wise arithmetic mean of a multi-vector set -> representative
     vector (collection.ex:1008-1017). Returns array<double>."""
-    vs = _col(vectors).cast("array<array<double>>")
-    zeros = F.array_repeat(F.lit(0.0), dims)
-    total = F.aggregate(vs, zeros, lambda acc, v: F.zip_with(acc, v, lambda s, x: s + x))
-    n = F.size(vs).cast("double")
-    return F.transform(total, lambda s: s / n)
+    vs = f"CAST({_sql(vectors)} AS ARRAY<ARRAY<DOUBLE>>)"
+    total = (
+        f"aggregate({vs}, array_repeat(0.0D, {dims}), "
+        "(_acc, _v) -> zip_with(_acc, _v, (_s, _x) -> _s + _x))"
+    )
+    return f"transform({total}, _s -> _s / CAST(size({vs}) AS DOUBLE))"

@@ -32,7 +32,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vettore_spark.functions import kernels as K
 from vettore_spark.operators import search as S
+from vettore_spark.plans.spread import pin_sql
 
 
 def _matrix(pdf_col: pd.Series) -> np.ndarray:
@@ -900,8 +902,6 @@ def _ivf_probe_scored(
     by distance (`search.rank_per_query`), ivf_range threshold-filters it.
     A non-finite stored vector scores NULL (kernels.cosine), never a
     value."""
-    from vettore_spark.functions import kernels as K
-
     spark = coll.sparkSession
     if assigned is None:
         assigned, cids, cmat = _ivf_assign_cached(
@@ -917,12 +917,35 @@ def _ivf_probe_scored(
 
     # Probe selection stays JVM-side: query count is small relative to the
     # collection, so a literal-array cross of queries x codebook + windowed
-    # top-n_probe avoids spinning a Python worker on the query path. The
-    # codebook enters the plan as a literal (it is already driver-resident).
-    # Fail fast past ~256k literal components (the max_broadcast_queries
-    # discipline): every component is a Catalyst expression node, and a
-    # 1024-cell x 768-dim codebook would hand the analyzer ~800k nodes —
-    # minutes of planning or a driver OOM dressed as a query.
+    # top-n_probe avoids spinning a Python worker on the query path.
+    probes = queries.selectExpr(
+        query_id_col,
+        query_vec_col,
+        f"explode({_ivf_probe_sql(query_vec_col, cids, cmat, n_probe)}) AS _cell",
+    )
+    joined = assigned.join(F.broadcast(probes), on="_cell")
+
+    # Within-cell scoring runs in the JVM, the same kernel flat search
+    # scores every row with, staged once per row: score and distance read
+    # the materialized value instead of re-inlining the fold. A Python
+    # stage here would cost the request a worker round per task wave.
+    return joined.selectExpr(
+        query_id_col, id_col,
+        f"{K.cosine.sql(vector_col, query_vec_col)} AS _raw",
+        pin_sql(),
+    ).selectExpr(query_id_col, id_col, "_raw AS score", "1.0D - _raw AS distance")
+
+
+def _ivf_probe_sql(query_vec: str, cids: np.ndarray, cmat: np.ndarray, n_probe: int) -> str:
+    """The n_probe nearest cells of `query_vec` as an array<bigint> SQL
+    expression over the literal codebook (cell ids, row-major flat
+    matrix; cell i's centroid is a slice of it). Structs sort by
+    (distance, cid): ascending cid breaks ties, matching the stable
+    argsort over id-sorted codebook columns. Fails fast past ~256k
+    literal components (the max_broadcast_queries discipline): every
+    component is a Catalyst expression node, and a 1024-cell x 768-dim
+    codebook would hand the analyzer ~800k nodes — minutes of planning
+    or a driver OOM dressed as a query."""
     n_lit = int(cmat.shape[0]) * int(cmat.shape[1]) if cmat.size else 0
     if n_lit > 262_144:
         raise ValueError(
@@ -932,49 +955,56 @@ def _ivf_probe_scored(
             "an Arrow-batched kernel (the pq.py pattern) for codebooks "
             "this size"
         )
-    # the codebook is two literals (ids, row-major flat matrix), each one
-    # parse call; cell i's centroid is a slice of the flat matrix
     dims = int(cmat.shape[-1])
-    cid_lit = K.double_array_lit(cids).cast("array<bigint>")
-    flat_lit = K.double_array_lit(cmat.ravel())
-    scored = F.transform(
-        cid_lit,
-        lambda cid, i: F.struct(
-            (
-                1.0
-                - K.cosine(
-                    F.col(query_vec_col), F.slice(flat_lit, i * dims + 1, dims)
-                )
-            ).alias("d"),
-            cid.alias("cid"),
-        ),
+    cell = f"slice({K.array_lit_sql(cmat.ravel())}, _ci * {dims} + 1, {dims})"
+    scored = (
+        f"transform(CAST({K.array_lit_sql(cids)} AS ARRAY<BIGINT>), (_cid, _ci) -> "
+        f"named_struct('d', 1.0D - {K.cosine.sql(query_vec, cell)}, 'cid', _cid))"
     )
-    # struct sort orders by (distance, cid) — ascending cid breaks ties,
-    # matching the stable argsort over id-sorted codebook columns
-    probe_arr = F.transform(
-        F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cid"]
-    )
-    probes = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(probe_arr).alias("_cell"),
-    )
-    joined = assigned.join(F.broadcast(probes), on="_cell")
+    return f"transform(slice(array_sort({scored}), 1, {n_probe}), _pr -> _pr.cid)"
 
-    # Within-cell scoring runs in the JVM, the same kernel flat search
-    # scores every row with, staged once per row: score and distance read
-    # the materialized value instead of re-inlining the fold. A Python
-    # stage here would cost the request a worker round per task wave.
-    staged = S._staged_raw(
-        joined,
-        K.cosine(F.col(vector_col), F.col(query_vec_col)),
-        [F.col(query_id_col), F.col(id_col)],
+
+def ivf_probe_cells(
+    query: list[float], cids: np.ndarray, cmat: np.ndarray, n_probe: int
+) -> list[int]:
+    """`_ivf_probe_sql` on the driver for one query, in the JVM kernel's
+    exact f64 order: dot, |q|^2 and |c|^2 accumulated left to right
+    (`np.add.accumulate` is a sequential fold), sqrt*sqrt, clamp to
+    [-1, 1], zero norm -> 0.0, NaN -> NULL (sorts first, as a NULL
+    struct field does); ties broken by ascending cell id."""
+    q = np.asarray(query, dtype=np.float64)
+    if not len(cids):
+        return []
+    d = np.add.accumulate(cmat * q, axis=1)[:, -1]
+    nq = np.add.accumulate(q * q)[-1]
+    nc = np.add.accumulate(cmat * cmat, axis=1)[:, -1]
+    keys = []
+    for cid, dot, na in zip(cids.tolist(), d.tolist(), nc.tolist()):
+        denom = float(np.sqrt(nq)) * float(np.sqrt(na))
+        r = dot / denom if denom != 0.0 else 0.0
+        keys.append((0, 0.0, cid) if r != r else (1, 1.0 - min(1.0, max(-1.0, r)), cid))
+    return [cid for *_, cid in sorted(keys)[:n_probe]]
+
+
+def ivf_topk_sql(
+    rel: str, query: list[float], cells: list[int], k: int, *,
+    id_col: str = "id", vector_col: str = "vector",
+) -> str:
+    """One query's `ivf_topk` as one SQL text over the inverted file
+    `rel`, its probed cells chosen on the driver (`ivf_probe_cells`): a
+    `_cell IN (...)` filter on the resident table, the staged cosine, and
+    `rank_order` + LIMIT k (TakeOrderedAndProject). The rank window reads
+    the k survivors in their one partition. (id, score, distance, rank)."""
+    cos = K.cosine.sql(vector_col, K.array_lit_sql(query))
+    scored = (
+        f"SELECT {id_col}, _raw AS score, 1.0D - _raw AS distance FROM "
+        f"(SELECT {id_col}, {cos} AS _raw, {pin_sql()} "
+        f"FROM {rel} WHERE _cell IN ({', '.join(map(str, cells)) or 'NULL'}))"
     )
-    return staged.select(
-        query_id_col,
-        id_col,
-        F.col("_raw").alias("score"),
-        (1.0 - F.col("_raw")).alias("distance"),
+    return S.rank_per_query_sql(
+        f"({scored} ORDER BY {S.rank_order_sql('distance', id_col)} LIMIT {k})", k,
+        cols=[id_col, "score", "distance"], query_id_col=None, id_col=id_col,
+        key="distance",
     )
 
 

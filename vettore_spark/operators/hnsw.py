@@ -688,7 +688,8 @@ def search_graph_shards(
     answer every query against each shard, merge with the global
     per-query top-k window (`search.rank_per_query`: rank ascending NULLS
     LAST, then id — a non-finite vector ranks NULL, after every finite
-    row). `ef_search` overrides the build-time beam.
+    row); one query merges by `search.rank_order` + LIMIT k, with no
+    exchange. `ef_search` overrides the build-time beam.
     The scan runs in at most `defaultParallelism` tasks (one wave): each
     task searches every shard its partition holds.
 
@@ -741,15 +742,18 @@ def search_graph_shards(
     # otherwise pay a second Python task wave (coalesce never widens it)
     slots = shards.sparkSession.sparkContext.defaultParallelism
     local = shards.coalesce(slots).mapInPandas(run, out_schema)
-    rank, score, dist = S.score_columns(m, F.col("_raw"), score_mode)
-    scored = local.select(
-        "query_id",
-        id_col,
-        rank.alias("_rank"),
-        score.alias("score"),
-        dist.alias("distance"),
-    )
-    return S.rank_per_query(scored, k, id_col=id_col)
+    items = S._score_exprs("_raw", ["query_id", id_col], metric=m, score_mode=score_mode)[1]
+    scored = f"SELECT {', '.join(items)} FROM {{scan}}"
+    if len(qlist) == 1:
+        # one query: `rank_order` + LIMIT k plans as TakeOrderedAndProject,
+        # and the rank window reads the k survivors in one partition
+        scored += f" ORDER BY {S.rank_order_sql('_rank', id_col)} LIMIT {k}"
+    # the merge is SQL text over the scan: its DataFrame forms cost ~110
+    # py4j calls to build, this ~10. The scan's plan is never persisted,
+    # so the kwarg binding's view drop uncaches nothing
+    return local.sparkSession.sql(S.rank_per_query_sql(
+        f"({scored})", k, cols=["query_id", id_col, "score", "distance"], id_col=id_col,
+    ), scan=local)
 
 
 def hnsw_search(

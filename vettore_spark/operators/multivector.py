@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 from vettore_spark.functions import kernels as K
 
 
-def _pair_raw(metric: str, a: Column, b: Column) -> Column:
+def _pair_raw(metric: str, a: str, b: str) -> str:
     """Raw value per MaxSim semantics: cosine uses the TRUE cosine kernel,
     every other metric the standard dispatch (multi_vector.rs:73-79)."""
     m = K.canonical_metric(metric)
     if m == "cosine":
-        return K.cosine(a, b)
-    return K.raw_metric(m, a, b, pre_normalized=True)
+        return K.cosine.sql(a, b)
+    return K.raw_metric.sql(m, a, b, pre_normalized=True)
 
 
 def maxsim_score(
@@ -38,12 +38,11 @@ def maxsim_score(
 ) -> Column:
     """MaxSim: for each query vector take the max similarity_value over the
     doc vectors, sum the maxima; empty doc side -> 0.0
-    (multi_vector.rs:40-87)."""
+    (multi_vector.rs:40-87). `doc_vectors` is SQL text or a Column."""
     m = K.canonical_metric(metric)
-    dv = F.col(doc_vectors) if isinstance(doc_vectors, str) else doc_vectors
-    total = F.lit(0.0)
+    dv = K._sql(doc_vectors)
+    total = "0.0D"
     for q in query_vectors:
-        qlit = K.double_array_lit(q)
         # Stage the per-pair kernel fold in its OWN transform so the
         # K13 value mapper's multiple references to `raw`
         # (_finite_or_null reads it 3x, distance metrics a 4th time)
@@ -51,14 +50,12 @@ def maxsim_score(
         # whole CodegenFallback fold per reference — the same re-inline
         # class the r13 cosine finish-lambda rewrite fixed (~4x). Plan
         # shape pinned in tests/test_hardening_r14.py.
-        raws = F.transform(dv, lambda d: _pair_raw(m, d, qlit))
-        best = F.array_max(
-            F.transform(raws, lambda r: K.similarity_value(m, r))
-        )
-        total = total + best
-    return F.when(
-        dv.isNull() | (F.size(dv) == 0), F.lit(0.0)
-    ).otherwise(total)
+        raws = f"transform({dv}, _d -> {_pair_raw(m, '_d', K.array_lit_sql(q))})"
+        best = f"array_max(transform({raws}, _r -> {K.similarity_value.sql(m, '_r')}))"
+        total = f"({total} + {best})"
+    return F.expr(
+        f"CASE WHEN {dv} IS NULL OR size({dv}) = 0 THEN 0.0D ELSE {total} END"
+    )
 
 
 def maxsim_topk(
@@ -77,14 +74,14 @@ def maxsim_topk(
     LIMIT k (multi_vector.rs:122-131). Result `distance` is NULL
     (collection.ex:807-817)."""
     if vector_col is not None and vectors_col in coll.columns:
-        dv = F.coalesce(
-            F.col(vectors_col), F.array(F.col(vector_col))
-        )
+        dv = f"coalesce({vectors_col}, array({vector_col}))"
     elif vectors_col in coll.columns:
-        dv = F.col(vectors_col)
+        dv = vectors_col
     else:
-        dv = F.array(F.col(vector_col))
-    score = maxsim_score(dv.cast("array<array<double>>"), query_vectors, metric=metric)
+        dv = f"array({vector_col})"
+    score = maxsim_score(
+        f"CAST({dv} AS ARRAY<ARRAY<DOUBLE>>)", query_vectors, metric=metric
+    )
     cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
     scored = coll.select(*cols, score.alias("score"))
     return (

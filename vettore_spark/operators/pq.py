@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vettore_spark.functions import kernels as K
 from vettore_spark.operators import search as S
 from vettore_spark.operators.ann import _matrix
 
@@ -93,10 +94,10 @@ def _margin_prune(d: np.ndarray, kk: int, margin: float) -> np.ndarray:
     return np.flatnonzero(d <= kth + margin)
 
 
-def _adc_key(round_digits: int | None):
-    """ADC rank key: the distance, rounded to `round_digits` when given."""
-    dist = F.col("distance")
-    return F.round(dist, round_digits) if round_digits is not None else dist
+def _adc_key(round_digits: int | None) -> str:
+    """ADC rank key (SQL text): the distance, rounded to `round_digits`
+    when given."""
+    return "distance" if round_digits is None else f"round(distance, {round_digits})"
 
 
 def pq_train_kmeans(
@@ -225,26 +226,40 @@ def _adc_topk_one(
     distance, id) ORDER BY + LIMIT plans as TakeOrderedAndProject — no
     Python worker and no shuffle on the request path. The rank window
     (`search.rank_per_query`) over the k survivors reads one partition."""
-    from vettore_spark.functions import kernels as K
-
-    n_codes = lut.shape[1]
-    flat = K.double_array_lit(lut.ravel())
-    d2 = F.transform(
-        F.col(codes_col),
-        lambda c, s: F.element_at(flat, s * n_codes + c + 1),
-    )
-    dist = F.aggregate(
-        d2, F.lit(0.0), lambda acc, x: acc + x, lambda acc: F.sqrt(acc)
-    )
+    dist = F.expr(_adc_distance_sql(lut, codes_col))
     scored = codes_df.select(
         F.lit(qid).cast(qid_type).alias(query_id_col),
         F.col(id_col),
         dist.alias("distance"),
     )
-    top = scored.orderBy(*S.rank_order(_adc_key(round_digits), id_col)).limit(k)
+    top = scored.orderBy(*S.rank_order(F.expr(_adc_key(round_digits)), id_col)).limit(k)
     return S.rank_per_query(
         top, k, query_id_col=query_id_col, id_col=id_col,
         key=_adc_key(round_digits),
+    )
+
+
+def _adc_distance_sql(lut: np.ndarray, codes_col: str) -> str:
+    """Approximate L2 of a code row: its m lookups in the flat m x n_codes
+    LUT literal, summed, then sqrt."""
+    flat = K.array_lit_sql(lut.ravel())
+    return (
+        f"aggregate(transform({codes_col}, (_c, _i) -> element_at({flat}, "
+        f"_i * {lut.shape[1]} + _c + 1)), 0.0D, (_acc, _x) -> _acc + _x, "
+        "_acc -> sqrt(_acc))"
+    )
+
+
+def adc_topk_sql(
+    rel: str, lut: np.ndarray, k: int, *, round_digits: int | None = 5,
+    id_col: str = "id", codes_col: str = "codes",
+) -> str:
+    """The ids of one query's ADC top-k over the code table `rel`, as SQL
+    text (`_adc_topk_one`'s order: rounded distance, then id)."""
+    return (
+        f"SELECT {id_col} FROM (SELECT {id_col}, {_adc_distance_sql(lut, codes_col)} "
+        f"AS distance FROM {rel}) ORDER BY "
+        f"{S.rank_order_sql(_adc_key(round_digits), id_col)} LIMIT {k}"
     )
 
 
@@ -545,7 +560,6 @@ def pq_search(
     is cosine order) — train the codebooks on a NORMALIZED sample for best
     distortion. Inner product has no L2-ADC equivalent and is rejected
     (use brute_force_topk or an IP-specific quantizer)."""
-    from vettore_spark.functions import kernels as K
     from vettore_spark.plans.cache import cached_persist
 
     metric = K.canonical_metric(metric)

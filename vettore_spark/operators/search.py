@@ -16,23 +16,22 @@ Physical strategy notes (100 TB design):
 - Multi-query top-k broadcasts the (small) query set against the (huge)
   collection and takes per-query partial top-k via window group-limit pushdown
   (rank <= k is pushed below the shuffle since Spark 3.x).
-- Candidate joins (rerank stages) are broadcast hash joins of small candidate
-  id-sets against the collection, so the second pass prunes with a semi-join
-  instead of re-scanning scores.
-- Every top-k operator in the package ranks by ONE order, `rank_order`:
-  rank key ascending NULLS LAST, then id ascending. Per-partition partial
-  top-k (Arrow kernels, graph shards, ADC prunes) merge through one
-  per-query window, `rank_per_query` — the partition-local-then-global
-  shape of distributed similarity search.
+- Candidate joins (rerank stages) are broadcast semi-joins of small
+  candidate id-sets against the collection.
+- Every top-k operator ranks by ONE order, `rank_order` (rank key asc NULLS
+  LAST, then id); partial top-k per partition merge through one per-query
+  window, `rank_per_query` — the partition-local-then-global shape.
+- A Collection serves one query from ONE SQL text (`*_sql` twins of the
+  operators, spliced from `kernels` text): no per-Column py4j round trips.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vettore_spark.functions import kernels as K
-from vettore_spark.plans.spread import pin
+from vettore_spark.plans.spread import pin_sql
 
 
 def single_query_frame(spark, query: list[float], query_id: str = "q0") -> DataFrame:
@@ -51,13 +50,16 @@ def rank_order(key: Column | str, id_col: str) -> list[Column]:
     """The result order of every top-k operator: rank key ascending NULLS
     LAST, ties by id ascending — the reference's (rank, id) heap order
     (distances.rs:113-119, flat.rs:27-46). NULLS LAST because a
-    non-finite metric value ranks NULL (K.rank_value): Collection
-    validates vectors at ingest, but a direct operator caller with a
-    malformed row would otherwise see its null-ranked garbage FIRST under
-    Spark's default asc — crowding out every real result instead of
-    none."""
+    non-finite metric value ranks NULL (K.rank_value), and Spark's
+    default asc would put such garbage FIRST. `rank_order_sql` is its
+    ORDER BY text."""
     key = F.col(key) if isinstance(key, str) else key
     return [key.asc_nulls_last(), F.col(id_col).asc()]
+
+
+def rank_order_sql(key: str, id_col: str) -> str:
+    """`rank_order` as ORDER BY text."""
+    return f"{key} ASC NULLS LAST, {id_col} ASC"
 
 
 def rank_per_query(
@@ -66,19 +68,37 @@ def rank_per_query(
     *,
     query_id_col: str = "query_id",
     id_col: str = "id",
-    key: Column | str = "_rank",
+    key: str = "_rank",
 ) -> DataFrame:
     """Per-query top-k under `rank_order`: an int `rank` column numbered
     1..k per query (row_number, so ties never share or skip a rank), rows
     past k dropped, and the private `_rank` key column, when present,
-    dropped. A `rank` column already on `df` is replaced in place.
+    dropped. A `rank` column already on `df` is replaced in place. `key`
+    is SQL text (a column or an expression over `df`).
     `rank <= k` over a row_number window plans as WindowGroupLimit: each
     partition cuts its own top-k below the shuffle."""
-    w = Window.partitionBy(query_id_col).orderBy(*rank_order(key, id_col))
     return (
-        df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        df.withColumn("rank", F.expr(_rank_sql(key, id_col, query_id_col)))
+        .filter(f"rank <= {k}")
         .drop("_rank")
+    )
+
+
+def _rank_sql(key: str, id_col: str, query_id_col: str | None) -> str:
+    """The `rank` window of `rank_per_query` as SQL text."""
+    part = f"PARTITION BY {query_id_col} " if query_id_col else ""
+    return f"row_number() OVER ({part}ORDER BY {rank_order_sql(key, id_col)})"
+
+
+def rank_per_query_sql(
+    rel: str, k: int, *, cols: list[str], query_id_col: str | None = "query_id",
+    id_col: str = "id", key: str = "_rank",
+) -> str:
+    """`rank_per_query` as SQL text over the relation `rel`: (cols...,
+    rank); `query_id_col=None` ranks the rows of one query."""
+    return (
+        f"SELECT {', '.join(cols)}, rank FROM (SELECT *, "
+        f"{_rank_sql(key, id_col, query_id_col)} AS rank FROM {rel}) WHERE rank <= {k}"
     )
 
 
@@ -87,50 +107,75 @@ def _ordered_topk(scored: DataFrame, k: int, *, id_col: str) -> DataFrame:
     return scored.orderBy(*rank_order("_rank", id_col)).limit(k)
 
 
-def score_columns(
-    metric: str, raw: Column, score_mode: str = "raw"
-) -> tuple[Column, Column, Column]:
-    """(rank, score, distance) columns from a raw metric value."""
-    rank = K.rank_value(metric, raw)
-    score, dist = K.result_values(metric, raw, score_mode)
-    return rank, score, dist
-
-
-def _staged_raw(df: DataFrame, raw: Column, keep: list[Column]) -> DataFrame:
-    """Materialize the raw metric value ONCE per row in a pinned projection.
-
-    rank/score/distance are all CASE exprs over the raw value; after
-    CollapseProject inlines the kernel into each consumer, cosine's
-    struct-accumulator fold appears ~12x in the final Project — and
-    higher-order functions are CodegenFallback (interpreted, no codegen
-    subexpression elimination), so every copy runs. The non-deterministic
-    `_pin` column keeps this projection from collapsing into the consumer:
-    the fold runs once and consumers read the materialized double."""
-    return df.select(
-        *keep,
-        raw.alias("_raw"),
-        pin(df),
+def _score_exprs(
+    raw: str, keep: list[str], *, metric: str, score_mode: str = "raw",
+    streaming: bool = False,
+) -> tuple[list[str], list[str]]:
+    """The two projections of a scored row set, as SQL select items: the
+    raw metric materialized ONCE per row, then (keep..., _rank, score,
+    distance) reading it. rank/score/distance are CASE exprs over the raw
+    value; inlined by CollapseProject, the interpreted (CodegenFallback)
+    kernel fold would run ~12x per row. The non-deterministic `_pin`
+    keeps the first projection from collapsing (`plans.spread.pin`)."""
+    score, dist = K.result_values.sql(metric, "_raw", score_mode)
+    return (
+        [*keep, f"{raw} AS _raw", pin_sql(streaming)],
+        [*keep, f"{K.rank_value.sql(metric, '_raw')} AS _rank",
+         f"{score} AS score", f"{dist} AS distance"],
     )
 
 
 def _scored_rows(
-    df: DataFrame,
-    raw: Column,
-    keep: list[Column],
-    *,
-    metric: str,
-    score_mode: str = "raw",
+    df: DataFrame, raw: str, keep: list[str], *, metric: str, score_mode: str = "raw",
 ) -> DataFrame:
-    """(keep..., _rank, score, distance) rows: the raw metric staged once
-    per row (`_staged_raw`), then the three `score_columns` read it."""
-    staged = _staged_raw(df, raw, keep)
-    rank, score, dist = score_columns(metric, F.col("_raw"), score_mode)
-    return staged.select(
-        *keep,
-        rank.alias("_rank"),
-        score.alias("score"),
-        dist.alias("distance"),
+    """`_score_exprs` rows of `df`."""
+    stage, scored = _score_exprs(
+        raw, keep, metric=metric, score_mode=score_mode, streaming=df.isStreaming
     )
+    return df.selectExpr(*stage).selectExpr(*scored)
+
+
+def topk_sql(
+    rel: str, query: list[float], *, metric: str, k: int, score_mode: str = "raw",
+    pre_normalized: bool = True, extra_cols: tuple[str, ...] = (),
+) -> str:
+    """`flat_topk` as one SQL text over the relation `rel` (id, vector,
+    extra_cols...): (id, *extra_cols, score, distance), best k first."""
+    metric = K.canonical_metric(metric)
+    raw = K.raw_metric.sql(
+        metric, "vector", K.array_lit_sql(query), pre_normalized=pre_normalized
+    )
+    keep = ["id", *extra_cols]
+    stage, scored = _score_exprs(raw, keep, metric=metric, score_mode=score_mode)
+    return (
+        f"SELECT {', '.join(keep)}, score, distance FROM (SELECT {', '.join(scored)} "
+        f"FROM (SELECT {', '.join(stage)} FROM {rel}) "
+        f"ORDER BY {rank_order_sql('_rank', 'id')} LIMIT {k})"
+    )
+
+
+def rerank_sql(rel: str, cand: str, query: list[float], **topk) -> str:
+    """`exact_rerank` as one SQL text: the rows of `rel` whose id the
+    candidate query `cand` returns (broadcast semi-join), by `topk_sql`."""
+    pruned = (
+        f"(SELECT /*+ BROADCAST(c) */ r.* FROM {rel} r "
+        f"LEFT SEMI JOIN (SELECT DISTINCT id FROM ({cand})) c ON r.id = c.id)"
+    )
+    return topk_sql(pruned, query, **topk)
+
+
+def quantized_search_sql(
+    rel: str, query: list[float], *, dims: int, k: int,
+    candidates: int | None = None, **rerank,
+) -> str:
+    """`quantized_search` as one SQL text over the relation `rel`."""
+    c = candidates if candidates is not None else max(k * 10, k)
+    ham = K.packed_hamming.sql("binary_vector", _query_bits_sql(query), dims)
+    cand = (
+        f"SELECT id FROM (SELECT id, {ham} AS _rank FROM {rel} "
+        f"ORDER BY {rank_order_sql('_rank', 'id')} LIMIT {c})"
+    )
+    return rerank_sql(rel, cand, query, k=k, **rerank)
 
 
 def rerank_pairs(
@@ -160,12 +205,11 @@ def rerank_pairs(
             on=query_id_col,
         )
     )
-    raw = K.raw_metric(
-        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
+    raw = K.raw_metric.sql(
+        metric, vector_col, query_vec_col, pre_normalized=pre_normalized
     )
     scored = _scored_rows(
-        hydrated, raw, [F.col(query_id_col), F.col(id_col)],
-        metric=metric, score_mode=score_mode,
+        hydrated, raw, [query_id_col, id_col], metric=metric, score_mode=score_mode,
     )
     return rank_per_query(scored, k, query_id_col=query_id_col, id_col=id_col)
 
@@ -189,8 +233,10 @@ def flat_topk(
     true-cosine kernel on raw vectors.
     """
     metric = K.canonical_metric(metric)
-    raw = K.raw_metric(metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized)
-    cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
+    raw = K.raw_metric.sql(
+        metric, vector_col, K.array_lit_sql(query), pre_normalized=pre_normalized
+    )
+    cols = [id_col, *(extra_cols or [])]
     scored = _scored_rows(coll, raw, cols, metric=metric, score_mode=score_mode)
     return _ordered_topk(scored, k, id_col=id_col).drop("_rank")
 
@@ -210,26 +256,22 @@ def flat_range(
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Range search: ALL rows within a distance/score threshold, best
-    first — the radius companion to `flat_topk` (every vector store pairs
-    its top-k with a within-radius query; the reference's surface is
-    top-k-only, so this is part of the Spark superset, like `where=`).
+    first — the radius companion to `flat_topk` (a Spark superset of the
+    reference's top-k-only surface, like `where=`).
 
-    Exactly one of `max_distance` / `min_score` must be given; the
-    threshold is applied to the SAME score_columns the top-k path
-    returns, so `range + limit k` == `flat_topk` restricted to the
-    radius. The threshold filter sits directly above the scoring
-    projection — a plain codegen predicate; with `limit` the plan is
-    still TakeOrderedAndProject, without it the best-first order is a
-    range exchange over just the MATCHING rows (the result is unbounded
-    by construction — it scales with how many rows match, the point of a
-    radius query — so pass a cap when feeding driver-side consumers)."""
+    Exactly one of `max_distance` / `min_score`; the threshold filters
+    the SAME scored columns the top-k path returns, so `range + limit k`
+    == `flat_topk` restricted to the radius. With `limit` the plan is
+    TakeOrderedAndProject; without it the best-first order is a range
+    exchange over just the MATCHING rows (unbounded by construction, so
+    pass a cap when feeding driver-side consumers)."""
     if (max_distance is None) == (min_score is None):
         raise ValueError("give exactly one of max_distance / min_score")
     metric = K.canonical_metric(metric)
-    raw = K.raw_metric(
-        metric, F.col(vector_col), K.double_array_lit(query), pre_normalized=pre_normalized
+    raw = K.raw_metric.sql(
+        metric, vector_col, K.array_lit_sql(query), pre_normalized=pre_normalized
     )
-    cols = [F.col(id_col)] + [F.col(c) for c in (extra_cols or [])]
+    cols = [id_col, *(extra_cols or [])]
     scored = _scored_rows(coll, raw, cols, metric=metric, score_mode=score_mode)
     if max_distance is not None:
         scored = scored.filter(F.col("distance") <= F.lit(float(max_distance)))
@@ -255,16 +297,17 @@ def prefix_topk(
     `dims` coordinates; cosine uses the TRUE cosine kernel on the prefix
     (search.rs:56-58). Returns (id, _rank) candidates ordered by (rank, id)."""
     metric = K.canonical_metric(metric)
-    pv = F.slice(F.col(vector_col), 1, dims)
-    pq = F.slice(K.double_array_lit(query), 1, dims)
-    raw = K.raw_metric(metric, pv, pq, pre_normalized=False)
-    scored = coll.select(F.col(id_col), K.rank_value(metric, raw).alias("_rank"))
+    raw = K.raw_metric.sql(
+        metric, f"slice({vector_col}, 1, {dims})",
+        f"slice({K.array_lit_sql(query)}, 1, {dims})", pre_normalized=False,
+    )
+    scored = coll.selectExpr(id_col, f"{K.rank_value.sql(metric, raw)} AS _rank")
     return _ordered_topk(scored, k, id_col=id_col)
 
 
 def binary_topk(
     coll: DataFrame,
-    query_bits: Column,
+    query_bits: Column | str,
     *,
     dims: int,
     k: int,
@@ -272,8 +315,8 @@ def binary_topk(
     binary_col: str = "binary_vector",
 ) -> DataFrame:
     """Packed-Hamming candidate top-k (Q3, search.rs:76-92)."""
-    raw = K.packed_hamming(F.col(binary_col), query_bits, dims)
-    scored = coll.select(F.col(id_col), raw.alias("_rank"))
+    raw = K.packed_hamming.sql(binary_col, query_bits, dims)
+    scored = coll.selectExpr(id_col, f"{raw} AS _rank")
     return _ordered_topk(scored, k, id_col=id_col)
 
 
@@ -326,28 +369,24 @@ def quantized_search(
     sign-compress the query, packed-Hamming top-`candidates`, then exact
     rerank to `k` with full vectors."""
     c = candidates if candidates is not None else max(k * 10, k)
-    qb = _pack_query_bits(query)
     cand = binary_topk(
-        coll, qb, dims=dims, k=c, id_col=id_col, binary_col=binary_col
+        coll, _query_bits_sql(query), dims=dims, k=c, id_col=id_col, binary_col=binary_col
     )
     return exact_rerank(
-        coll,
-        cand,
-        query,
-        metric=metric,
-        k=k,
-        id_col=id_col,
-        vector_col=vector_col,
-        score_mode=score_mode,
-        pre_normalized=pre_normalized,
+        coll, cand, query, metric=metric, k=k, id_col=id_col, vector_col=vector_col,
+        score_mode=score_mode, pre_normalized=pre_normalized,
     )
 
 
-def _pack_query_bits(query: list[float]) -> Column:
+def _query_bits_sql(query: list[float]) -> str:
     """Driver-side sign-bit packing of the (small) query vector — literal
     array<long>, identical bit layout to kernels.compress_sign_bits."""
     words = K.pack_sign_bits_py(query, len(query))
-    return F.array(*[F.lit(w).cast("long") for w in words])
+    return "array(" + ", ".join(f"CAST({w} AS BIGINT)" for w in words) + ")"
+
+
+def _pack_query_bits(query: list[float]) -> Column:
+    return F.expr(_query_bits_sql(query))
 
 
 def funnel_search(
@@ -397,14 +436,10 @@ def funnel_search(
 
 
 def union_candidates(cands: list[DataFrame], *, id_col: str = "id") -> DataFrame:
-    """Deduplicated union of candidate id sets from generators.
-
-    The reference's union keeps the FIRST occurrence's row
-    (collection.ex:617-629) because its generators carry scores; here
-    every hybrid path exact-reranks the candidate SET afterwards
-    (hybrid_search whitelists rerank in {exact, multi_vector}), so
-    generator order never survives into results and the union is a plain
-    distinct — no tag column, no min aggregate."""
+    """Deduplicated union of candidate id sets from generators. The
+    reference keeps the FIRST occurrence's row (collection.ex:617-629)
+    because its generators carry scores; every hybrid path here reranks
+    the candidate SET afterwards, so the union is a plain distinct."""
     out = cands[0].select(id_col)
     for c in cands[1:]:
         out = out.unionByName(c.select(id_col))
@@ -448,7 +483,7 @@ def hybrid_search(
                 )
             )
         elif g == "quantized":
-            qb = _pack_query_bits(query)
+            qb = _query_bits_sql(query)
             branches.append(
                 binary_topk(coll, qb, dims=dims, k=c, id_col=id_col, binary_col=binary_col)
             )
@@ -501,15 +536,11 @@ def multi_query_quantized(
     pre_normalized: bool = True,
     stage1: str = "expr",
 ) -> DataFrame:
-    """Batched two-stage quantized search: the multi-query generalization of
-    Q4 (the reference is one query per call; SURVEY §2.3 J3 is the batch
-    idiom).
-
-    Stage 1 takes per-query sign-bit Hamming top-C; stage 2
-    (`rerank_pairs`) joins the small (query, id) candidate set back to
-    full vectors for the exact rerank. Both stages rank through
-    `rank_per_query`. Shuffled data is O(queries * candidates), never
-    O(rows).
+    """Batched two-stage quantized search, the multi-query generalization
+    of Q4 (SURVEY §2.3 J3): stage 1 takes per-query sign-bit Hamming
+    top-C, stage 2 (`rerank_pairs`) reranks the small (query, id)
+    candidate set on full vectors; both rank through `rank_per_query`.
+    Shuffled data is O(queries * candidates), never O(rows).
 
     Two stage-1 physical strategies with identical candidate sets:
     - `stage1="expr"`: broadcast the queries' packed sign bits and fold
@@ -531,16 +562,14 @@ def multi_query_quantized(
             query_id_col=query_id_col, query_vec_col=query_vec_col,
         ).select(query_id_col, id_col)
     else:
-        qbits = queries.select(
-            F.col(query_id_col),
-            K.compress_sign_bits(
-                F.col(query_vec_col).cast("array<double>"), dims
-            ).alias("_qb"),
+        qbits = queries.selectExpr(
+            query_id_col,
+            f"{K.compress_sign_bits.sql(f'CAST({query_vec_col} AS ARRAY<DOUBLE>)', dims)} AS _qb",
         )
         ham = coll.select(id_col, binary_col).crossJoin(F.broadcast(qbits))
-        raw1 = K.packed_hamming(F.col(binary_col), F.col("_qb"), dims)
         cand = rank_per_query(
-            ham, c, query_id_col=query_id_col, id_col=id_col, key=raw1
+            ham, c, query_id_col=query_id_col, id_col=id_col,
+            key=K.packed_hamming.sql(binary_col, "_qb", dims),
         ).select(query_id_col, id_col)
 
     return rerank_pairs(
@@ -574,12 +603,11 @@ def multi_query_topk(
     shuffle."""
     metric = K.canonical_metric(metric)
     joined = coll.crossJoin(F.broadcast(queries))
-    raw = K.raw_metric(
-        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
+    raw = K.raw_metric.sql(
+        metric, vector_col, query_vec_col, pre_normalized=pre_normalized
     )
     scored = _scored_rows(
-        joined, raw, [F.col(query_id_col), F.col(id_col)],
-        metric=metric, score_mode=score_mode,
+        joined, raw, [query_id_col, id_col], metric=metric, score_mode=score_mode,
     )
     return rank_per_query(scored, k, query_id_col=query_id_col, id_col=id_col)
 
@@ -599,27 +627,21 @@ def multi_query_range(
     pre_normalized: bool = True,
 ) -> DataFrame:
     """Batched radius search: every query's within-threshold matches in
-    ONE pass over the collection — `multi_query_topk`'s radius twin, and
-    the serving shape for thousands of simultaneous radius queries
-    against 100 TB (one broadcast + one scan, instead of a Spark job per
-    query).
-
-    Unlike the top-k batch there is no per-query window at all: the
-    threshold is a plain codegen filter over the scored broadcast join,
-    so the plan is scan → filter — NO shuffle of the collection, and the
-    output size scales with total matches. Rows come back unordered
-    (global order would range-exchange the matches; order per query at
-    the consumer if needed). Output: (query_id, id, score, distance)."""
+    ONE pass over the collection — `multi_query_topk`'s radius twin (one
+    broadcast + one scan, instead of a Spark job per query). No
+    per-query window: the threshold is a plain codegen filter over the
+    scored broadcast join, so the plan is scan → filter with NO shuffle
+    of the collection. Rows come back unordered.
+    Output: (query_id, id, score, distance)."""
     if (max_distance is None) == (min_score is None):
         raise ValueError("give exactly one of max_distance / min_score")
     metric = K.canonical_metric(metric)
     joined = coll.crossJoin(F.broadcast(queries))
-    raw = K.raw_metric(
-        metric, F.col(vector_col), F.col(query_vec_col), pre_normalized=pre_normalized
+    raw = K.raw_metric.sql(
+        metric, vector_col, query_vec_col, pre_normalized=pre_normalized
     )
     scored = _scored_rows(
-        joined, raw, [F.col(query_id_col), F.col(id_col)],
-        metric=metric, score_mode=score_mode,
+        joined, raw, [query_id_col, id_col], metric=metric, score_mode=score_mode,
     ).drop("_rank")
     if max_distance is not None:
         return scored.filter(F.col("distance") <= F.lit(float(max_distance)))

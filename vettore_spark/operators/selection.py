@@ -259,7 +259,7 @@ def semdedup_prune(
         F.col(cluster_col),
         F.col(vector_col).alias("_v"),
         F.round(
-            K.cosine(F.col(vector_col).cast("array<double>"), F.col(centroid_col)), 5
+            K.cosine(f"CAST({vector_col} AS ARRAY<DOUBLE>)", centroid_col), 5
         ).alias("cos_centroid"),
     )
     w = Window.partitionBy(cluster_col).orderBy(
@@ -281,10 +281,7 @@ def semdedup_prune(
         a.join(b, on="_cl")
         .filter(F.col("_rka") < F.col("_rkb"))
         .filter(
-            K.cosine(
-                F.col("_va").cast("array<double>"),
-                F.col("_vb").cast("array<double>"),
-            )
+            K.cosine("CAST(_va AS ARRAY<DOUBLE>)", "CAST(_vb AS ARRAY<DOUBLE>)")
             >= threshold
         )
         .select(F.col("_idb").alias(id_col))

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vettore_spark.functions import kernels as K
+from vettore_spark.operators import search as S
 from vettore_spark.operators.search import exact_rerank, rank_order
 from vettore_spark.plans.spread import pin
 
@@ -134,24 +135,10 @@ def sq_topk(
     Searches re-scan the persisted codes and pay only the distance fold;
     mutation owners invalidate through plans.cache like every derived
     index."""
-    from vettore_spark.plans.cache import cached_persist
-
     scales = sq_params(mins, maxs)
     qc = sq_encode_query(query, mins, maxs)
-    codes_df = cached_persist(
-        coll,
-        ("sq_codes", id_col, vector_col, tuple(mins), tuple(maxs)),
-        lambda s: s.select(
-            F.col(id_col),
-            sq_encode(F.col(vector_col), mins, maxs).alias("_codes"),
-            pin(s),
-        ),
-    )
-    qc_lit = K.double_array_lit(qc)
-    sc_lit = K.double_array_lit(scales)
-    diff = F.zip_with(F.col("_codes"), qc_lit, lambda a, b: a - b)
-    terms = F.zip_with(diff, sc_lit, lambda d, s: (d * s) * (d * s))
-    d2 = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
+    codes_df = sq_codes(coll, mins, maxs, id_col=id_col, vector_col=vector_col)
+    d2 = F.expr(_d2_sql(qc, scales))
     staged = codes_df.select(F.col(id_col), d2.alias("_d2"))
     cand = (
         # a null/length-mismatched vector propagates null through the
@@ -173,3 +160,45 @@ def sq_topk(
         score_mode=score_mode,
         pre_normalized=pre_normalized,
     )
+
+
+def sq_codes(
+    coll: DataFrame, mins: list[float], maxs: list[float], *,
+    id_col: str = "id", vector_col: str = "vector",
+) -> DataFrame:
+    """(id, _codes) code table of `coll`, persisted once per (collection,
+    mins, maxs) through the plans/cache registry."""
+    from vettore_spark.plans.cache import cached_persist
+
+    return cached_persist(
+        coll,
+        ("sq_codes", id_col, vector_col, tuple(mins), tuple(maxs)),
+        lambda s: s.select(
+            F.col(id_col),
+            sq_encode(F.col(vector_col), mins, maxs).alias("_codes"),
+            pin(s),
+        ),
+    )
+
+
+def _d2_sql(qc: list[float], scales: list[float]) -> str:
+    """Σ ((code − qcode)·scale)² over `_codes`, folded left to right."""
+    diff = f"zip_with(_codes, {K.array_lit_sql(qc)}, (_a, _b) -> _a - _b)"
+    terms = f"zip_with({diff}, {K.array_lit_sql(scales)}, (_d, _c) -> (_d * _c) * (_d * _c))"
+    return f"aggregate({terms}, 0.0D, (_acc, _x) -> _acc + _x)"
+
+
+def sq_topk_sql(
+    rel: str, codes: str, query: list[float], mins: list[float], maxs: list[float],
+    *, k: int, candidates: int, restrict: bool = False, **rerank,
+) -> str:
+    """One query's `sq_topk` as one SQL text over the rows `rel` and the
+    code table `codes` of every row (`restrict`: `rel` is a filtered
+    subset, whose ids the candidate stage keeps)."""
+    d2 = _d2_sql(sq_encode_query(query, mins, maxs), sq_params(mins, maxs))
+    src = f"{codes} c LEFT SEMI JOIN {rel} r ON c.id = r.id" if restrict else codes
+    cand = (
+        f"SELECT id FROM (SELECT id, {d2} AS _d2 FROM {src}) WHERE _d2 IS NOT NULL "
+        f"ORDER BY {S.rank_order_sql('_d2', 'id')} LIMIT {candidates}"
+    )
+    return S.rerank_sql(rel, cand, query, k=k, **rerank)

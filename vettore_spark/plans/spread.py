@@ -40,6 +40,9 @@ def pin(df: DataFrame) -> Column:
     Streaming plans reject non-deterministic expressions, so streams get a
     literal instead — per-micro-batch recompute is bounded by the batch
     size, and plan validity wins."""
-    return (
-        F.lit(0) if df.isStreaming else F.monotonically_increasing_id()
-    ).alias("_pin")
+    return F.expr(pin_sql(df.isStreaming))
+
+
+def pin_sql(streaming: bool = False) -> str:
+    """`pin` as a SQL select item."""
+    return f"{'0' if streaming else 'monotonically_increasing_id()'} AS _pin"

@@ -689,8 +689,8 @@ def q_packed_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "binary_vector", K.compress_sign_bits("embedding", DIMS)
     )
-    qb = S._pack_query_bits(_qvec(spark, sf_dir))
-    raw = K.packed_jaccard(F.col("binary_vector"), qb, DIMS)
+    qb = S._query_bits_sql(_qvec(spark, sf_dir))
+    raw = K.packed_jaccard("binary_vector", qb, DIMS)
     out = (
         emb.select("vec_id", raw.alias("_rank"))
         .orderBy(F.col("_rank").asc(), F.col("vec_id").asc())
@@ -2237,7 +2237,7 @@ def q_label_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     cents = _label_mean_vectors(emb)
     j = emb.join(F.broadcast(cents), "label")
-    d = 1.0 - K.cosine(F.col("embedding").cast("array<double>"), F.col("mean"))
+    d = 1.0 - K.cosine("CAST(embedding AS ARRAY<DOUBLE>)", "mean")
     return (
         j.select("label", d.alias("_d"))
         .groupBy("label")
@@ -3150,10 +3150,9 @@ def _streaming_table_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
         digest = hashlib.md5(
             (f"stream:{table}:" + sf_dir).encode()
         ).hexdigest()[:12]
-        path = os.path.join(
+        path = _claim_free_scratch_dir(os.path.join(
             tempfile.gettempdir(), f"vettore_stream_{table}_{digest}"
-        )
-        _claim_scratch_dir(path)
+        ))
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
         src = os.path.join(sf_dir, f"{table}.parquet")
@@ -3211,10 +3210,9 @@ def _streaming_table_dir_multi(
         digest = hashlib.md5(
             f"streammulti:{table}:{key_col}:{n_files}:{sf_dir}".encode()
         ).hexdigest()[:12]
-        path = os.path.join(
+        path = _claim_free_scratch_dir(os.path.join(
             tempfile.gettempdir(), f"vettore_streamN_{table}_{digest}"
-        )
-        _claim_scratch_dir(path)
+        ))
         shutil.rmtree(path, ignore_errors=True)
         build = path + "_build"
         shutil.rmtree(build, ignore_errors=True)
@@ -4501,7 +4499,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     label_dispersion's cohesion rollup (mislabeled / drifting vectors)."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = _label_mean_vectors(emb)
-    d = 1.0 - K.cosine(F.col("embedding").cast("array<double>"), F.col("mean"))
+    d = 1.0 - K.cosine("CAST(embedding AS ARRAY<DOUBLE>)", "mean")
     dist = emb.join(F.broadcast(cents), "label").select(
         "vec_id", "label", d.alias("_d")
     )
@@ -7397,6 +7395,23 @@ def _claim_scratch_dir(path: str) -> None:
         except OSError:
             pass
         _OWNED_SCRATCH_FDS[lock] = fd  # fd stays open: close drops the flock
+
+
+def _claim_free_scratch_dir(path: str) -> str:
+    """`path` claimed (`_claim_scratch_dir`), or else the first of 16
+    siblings `path_<i>` whose claim succeeds: a live owner of the shared
+    name (a second checkout running the same gate on this host) sends the
+    claim on instead of failing it. Every candidate goes through the same
+    flock protocol, so a dead owner's dir is still reclaimed in place."""
+    cands = [path] + [f"{path}_{i}" for i in range(1, 17)]
+    for cand in cands[:-1]:
+        try:
+            _claim_scratch_dir(cand)
+            return cand
+        except RuntimeError:
+            pass
+    _claim_scratch_dir(cands[-1])  # the last refusal is raised
+    return cands[-1]
 
 
 _ZORDER_Q6_CACHE: dict = {}

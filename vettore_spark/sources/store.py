@@ -214,9 +214,9 @@ class LshIndex:
         return self
 
     def candidates(self, coll: DataFrame, query: list[float], n: int) -> DataFrame:
-        from vettore_spark.operators.search import _pack_query_bits, binary_topk
+        from vettore_spark.operators.search import _query_bits_sql, binary_topk
 
-        qb = _pack_query_bits(query)
+        qb = _query_bits_sql(query)
         cand = binary_topk(coll, qb, dims=self.dims, k=n * self.factor)
         return coll.join(F.broadcast(cand.select("id")), on="id", how="left_semi")
 
@@ -449,6 +449,14 @@ class PqIndex(_Resident):
         idx._codes = tables[""]
         return idx
 
+    def candidates_sql(self, codes: str, query: list[float], n: int) -> str:
+        """`candidates`' ADC stage as SQL text over the code table view
+        `codes`: the ids of the top n*factor."""
+        from vettore_spark.operators import pq as PQ
+
+        lut = PQ._adc_luts(np.asarray([query], dtype=np.float64), self._books)[0]
+        return PQ.adc_topk_sql(codes, lut, n * self.factor)
+
     def candidates(self, coll: DataFrame, query: list[float], n: int) -> DataFrame:
         if self._books is None:
             self.build(coll)
@@ -553,8 +561,15 @@ class IvfFile(_Resident):
     }
     _PAYLOAD = ("value", "vectors", "binary_vector", "metadata")
 
-    def __init__(self, centroids: DataFrame, assigned: DataFrame):
+    def __init__(self, centroids: DataFrame, assigned: DataFrame, codebook=None):
+        from vettore_spark.operators import ann as ANN
+
         self.centroids, self.assigned = centroids, assigned
+        # the driver-side codebook (sorted cell ids, L2-normalized matrix)
+        # a single-query search picks its cells from (ann.ivf_probe_cells)
+        self.cids, self.cmat = codebook or ANN._ivf_centroids_cached(
+            centroids.sparkSession, centroids, "centroid_id", "centroid"
+        )[:2]
 
     @classmethod
     def build(cls, rows: DataFrame, *, n_cells: int) -> "IvfFile":
@@ -567,7 +582,9 @@ class IvfFile(_Resident):
         ))
 
     def _patched(self, assigned: DataFrame) -> "IvfFile":
-        return IvfFile(self.centroids, durable_cut(assigned, eager=False))
+        return IvfFile(
+            self.centroids, durable_cut(assigned, eager=False), (self.cids, self.cmat)
+        )
 
     def put(self, row: dict) -> "IvfFile":
         from vettore_spark.operators import ann as ANN
@@ -596,7 +613,8 @@ class IvfFile(_Resident):
 
 class SqBounds(_Resident):
     """Resident SQ8 quantizer: per-dimension (min, max) trained on the
-    canonical rows. put and delete keep it — bounds trained on a superset
+    canonical rows. put and delete keep it (its code table re-derives
+    over the new rows) — bounds trained on a superset
     stay valid for any subset, and a new out-of-range value clips in the
     candidate stage only (the exact rerank re-orders on true vectors) —
     while put_many drops it. Not persisted: it retrains at the first
@@ -606,12 +624,22 @@ class SqBounds(_Resident):
 
     def __init__(self, mins: list[float], maxs: list[float]):
         self.mins, self.maxs = mins, maxs
+        self._codes = (None, None)  # (rows, their code table)
 
     @classmethod
     def build(cls, rows: DataFrame) -> "SqBounds":
         from vettore_spark.operators import sq as SQ
 
         return cls(*SQ.sq_train(rows, vector_col="vector"))
+
+    def codes(self, rows: DataFrame) -> DataFrame:
+        """The code table of `rows` (sq.sq_codes), derived at the first
+        search over each version of the rows (every write rebinds them)."""
+        from vettore_spark.operators import sq as SQ
+
+        if self._codes[0] is not rows:
+            self._codes = (rows, SQ.sq_codes(rows, self.mins, self.maxs))
+        return self._codes[1]
 
     def put(self, row: dict) -> "SqBounds":
         return self
