@@ -198,3 +198,54 @@ def test_zca_whitens_planted_correlations(spark, tmp_path):
     off_diag = cy - np.diag(np.diag(cy))
     assert np.abs(off_diag).max() < 0.05
     assert np.abs(y.mean(axis=0)).max() < 1e-4
+
+
+def test_streaming_moment_stats_drops_non_finite_rows_like_batch(spark, tmp_path):
+    """NaN stance shared by both moment twins: a row whose vector is NULL,
+    or holds a NaN or NULL element, is not counted. A two-file stream
+    with such rows ends on the batch twin's row, which equals a NumPy
+    fixed-point reference over the finite rows only."""
+    import math
+
+    from vettore_spark.streaming.stateful import streaming_moment_stats
+
+    schema = "label int, embedding array<double>"
+    f1 = [(1, [0.5, 0.25]), (1, [float("nan"), 1.0])]
+    f2 = [(1, [0.75, -0.5]), (1, None), (1, [0.125, None])]
+    src = tmp_path / "mom_nan"
+    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(str(src / "b1"))
+    spark.createDataFrame(f2, schema).coalesce(1).write.parquet(str(src / "b2"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/*")
+    )
+    q = (
+        streaming_moment_stats(stream, dim=2)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("mom_nan_stream")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    rows = spark.sql("select * from mom_nan_stream").collect()
+    assert len(rows) == 2  # one running row per micro-batch
+    final = max(rows, key=lambda r: r["n"])
+    got = (final["n"], final["mean_norm"], final["var_trace"])
+
+    (b,) = M.moment_stats_fixed(
+        spark.createDataFrame(f1 + f2, schema), dim=2
+    ).collect()
+    assert got == (b["n"], b["mean_norm"], b["var_trace"])
+
+    x = np.array([[0.5, 0.25], [0.75, -0.5]])
+    s = float(1 << 24)
+    sfx = np.floor(x * s + 0.5).astype(np.int64).sum(axis=0)
+    qfx = np.floor(x * x * s + 0.5).astype(np.int64).sum(axis=0)
+    acc_m = acc_v = 0.0
+    for i in range(2):
+        m_i = float(sfx[i]) / 2.0 / s
+        acc_m = acc_m + m_i * m_i
+        acc_v = acc_v + (float(qfx[i]) / 2.0 / s - m_i * m_i)
+    assert got == (2, math.sqrt(acc_m), acc_v)

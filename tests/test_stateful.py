@@ -3,6 +3,7 @@ micro-batches, and streaming results agree with their batch twins."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vettore_spark.streaming.stateful import (
@@ -530,46 +531,148 @@ def test_streaming_horizon_dedup_rejects_batch_input(spark):
         streaming_horizon_dedup(df, horizon="1 hour")
 
 
-def test_groupstate_survives_query_restart(spark, tmp_path):
-    """RESTART RECOVERY of applyInPandasWithState state (r10): the 100 TB
-    posture claims these operators run unbounded — which requires the
-    Arrow-serialized GroupState to survive a query restart via the state
-    store, not just live across micro-batches of one run. Two separate
-    writeStream RUNS share one checkpoint + file sink: a duplicate whose
-    keeper was recorded by run 1 must be suppressed by run 2 (state
-    restored), while a new document still emits (the restarted query is
-    live, not replaying old output)."""
+def _gate(name, *args, **kw):
+    """A stateful gate called through its module, bound to its arguments."""
+    from vettore_spark.streaming import stateful as S
+
+    return lambda stream: getattr(S, name)(stream, *args, **kw)
+
+
+# gate -> (input schema, file 1 rows, file 2 rows, gate, output mode).
+# File 2 leans on file 1's state: a duplicate, a later arrival for the
+# same key or bucket, a funnel step that needs the recovered stage-1 time.
+RESTART_GATES = {
+    "topk_per_key": (
+        "event_id long, user_id long, value double",
+        [(1, 1, 10.0), (2, 1, 5.0), (3, 2, 1.0)],
+        [(4, 1, 9.0), (5, 2, float("inf")), (6, 3, 2.0)],
+        _gate("streaming_topk_per_key", k=2),
+        "update",
+    ),
+    "exact_dedup": (
+        "doc_id long, text string",
+        [(1, "alpha"), (3, "beta")],
+        [(2, "alpha"), (4, "gamma")],
+        _gate("streaming_exact_dedup"),
+        "append",
+    ),
+    "unit_dedup": (
+        "doc_id long, text string",
+        [(1, "a b c d e f"), (2, "g h i j k l")],
+        [(3, "a b c x y z"), (4, "g h i d e f")],
+        _gate("streaming_unit_dedup", window=3),
+        "append",
+    ),
+    "simhash": (
+        "doc_id long, text string",
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "pack my box with five dozen liquor jugs")],
+        [(3, "the quick brown fox jumps over the lazy dog"),
+         (4, "pack my box with five dozen liquor jugs")],
+        _gate("streaming_simhash_candidates"),
+        "append",
+    ),
+    "zscore": (
+        "event_type string, event_id long, ts long, value double",
+        [("a", i, i, v) for i, v in enumerate([1.0, 2.0, 1.0, 2.0, 1.5])],
+        [("a", 5, 5, 1.5), ("a", 6, 6, 9.0), ("b", 7, 7, 1.0)],
+        _gate("streaming_zscore_anomaly", threshold=2.0, min_history=3),
+        "append",
+    ),
+    "funnel": (
+        "user_id long, ts long, event_type string",
+        [(1, 10, "view"), (2, 10, "view"), (3, 10, "click")],
+        [(1, 20, "click"), (1, 30, "purchase"), (2, 5, "click"), (3, 40, "view")],
+        _gate("streaming_funnel_stage"),
+        "append",
+    ),
+    "kmv": (
+        "event_type string, user_id long",
+        [("click", u) for u in range(6)] + [("view", 1)],
+        [("click", u) for u in range(3, 9)] + [("view", 2)],
+        _gate("streaming_kmv_distinct", k=4),
+        "update",
+    ),
+    "histogram": (
+        "event_type string, value double",
+        [("click", 0.5), ("click", 1.5), ("view", 2.5)],
+        [("click", 3.5), ("view", 0.5), ("view", float("nan"))],
+        _gate("streaming_histogram_quantiles", quantiles=[0.5, 0.9],
+              bucket_width=1.0),
+        "update",
+    ),
+    "moment": (
+        "label int, embedding array<double>",
+        [(1, [0.5, 0.25]), (2, [1.0, -1.0])],
+        [(1, [0.75, -0.5]), (2, [0.125, 0.0])],
+        _gate("streaming_moment_stats", dim=2),
+        "update",
+    ),
+}
+
+
+def _write_file(spark, path, rows, schema, mtime):
+    """Write `rows` as ONE parquet file at `path` with modification time
+    `mtime`: a file stream with maxFilesPerTrigger=1 reads files oldest
+    first, one micro-batch each."""
     import os
+    import shutil
 
-    from vettore_spark.streaming.stateful import streaming_exact_dedup
+    tmp = str(path) + ".tmp"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.replace(os.path.join(tmp, part), str(path))
+    shutil.rmtree(tmp)
+    os.utime(str(path), (mtime, mtime))
 
-    src = tmp_path / "docs"
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-    schema = "doc_id long, text string"
 
-    def run(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / name)
+@pytest.mark.parametrize("gate", list(RESTART_GATES))
+def test_groupstate_survives_query_restart(spark, tmp_path, gate):
+    """RESTART RECOVERY of every applyInPandasWithState gate: the 100 TB
+    posture claims these operators run unbounded, which needs the
+    Arrow-serialized state to survive a query restart through the state
+    store, not just live across micro-batches of one run. Two writeStream
+    RUNS share one checkpoint, one file each; their sink must equal one
+    uninterrupted run over both files (the same two micro-batches), and
+    the second run's rows must differ from file 2 run on a fresh
+    checkpoint (the restored state was used)."""
+    schema, rows1, rows2, build, mode = RESTART_GATES[gate]
+    files = {"f1": (rows1, 1_700_000_000), "f2": (rows2, 1_700_000_100)}
+
+    def put(src, name):
+        (tmp_path / src).mkdir(exist_ok=True)
+        rows, mtime = files[name]
+        _write_file(spark, tmp_path / src / f"{name}.parquet", rows, schema, mtime)
+
+    def run(src):
+        sink: list = []
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / src))
         )
-        stream = spark.readStream.schema(schema).parquet(str(src) + "/*")
         q = (
-            streaming_exact_dedup(stream, id_col="doc_id", text_col="text")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
+            build(stream)
+            .writeStream.outputMode(mode)
+            .foreachBatch(lambda df, _epoch: sink.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{src}"))
             .trigger(availableNow=True)
             .start()
         )
         assert q.awaitTermination(120)
+        return sorted(repr(tuple(r)) for r in sink)
 
-    run("b1", [(1, "alpha"), (3, "beta")])
-    # restart: doc 2 duplicates run 1's digest (suppress — proves the
-    # state store restored run 1's GroupState), doc 4 is new (emit)
-    run("b2", [(2, "alpha"), (4, "gamma")])
-    kept = {r["doc_id"] for r in spark.read.parquet(sink).collect()}
-    assert kept == {1, 3, 4}, kept
+    put("once", "f1")
+    put("once", "f2")
+    once = run("once")
+    put("split", "f1")
+    first = run("split")
+    put("split", "f2")
+    second = run("split")
+    put("fresh", "f2")
+    assert once and second, gate
+    assert sorted(first + second) == once, gate
+    assert second != run("fresh"), gate
 
 
 def test_engine_dedup_state_survives_query_restart(spark, tmp_path):

@@ -49,6 +49,18 @@ def _write_batch(spark, path, mtime, rows, schema):
     os.utime(path, (mtime, mtime))
 
 
+def _state_progress(q) -> tuple:
+    """(state rows last reported, rows dropped by the watermark in total)
+    over a finished query's progress, from the engine's own
+    stateOperators counters."""
+    state_rows, dropped = None, 0
+    for p in q.recentProgress:
+        for op in p.get("stateOperators", []):
+            dropped += op.get("numRowsDroppedByWatermark", 0)
+            state_rows = op.get("numRowsTotal", state_rows)
+    return state_rows, dropped
+
+
 def windowed_append_run(spark, base):
     """windowed_event_counts in APPEND mode over 3 sequenced files with
     deliberately late rows in files 1 and 2."""
@@ -104,12 +116,7 @@ def windowed_append_run(spark, base):
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("windowed append run did not finish in 300s")
-    dropped = 0
-    state_rows = None
-    for p in q.recentProgress:
-        for op in p.get("stateOperators", []):
-            dropped += op.get("numRowsDroppedByWatermark", 0)
-            state_rows = op.get("numRowsTotal", state_rows)
+    state_rows, dropped = _state_progress(q)
     out = spark.table(name).collect()
     from datetime import datetime, timezone
 
@@ -191,10 +198,7 @@ def stateful_dedup_run(spark, base):
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("stateful dedup run did not finish in 300s")
-    state_rows = None
-    for p in q.recentProgress:
-        for op in p.get("stateOperators", []):
-            state_rows = op.get("numRowsTotal", state_rows)
+    state_rows = _state_progress(q)[0]
     out = spark.table(name).collect()
     keepers = {r["doc_id"] for r in out}
     want = {f"d{i:02d}" for i in range(10)} | {f"d{15 + i:02d}" for i in range(3)}
@@ -252,11 +256,7 @@ def sketch_state_bounded_run(spark, base):
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("kmv run did not finish in 300s")
-        state_rows = None
-        for p in q.recentProgress:
-            for op in p.get("stateOperators", []):
-                state_rows = op.get("numRowsTotal", state_rows)
-        state_trajectory.append(state_rows)
+        state_trajectory.append(_state_progress(q)[0])
         final_rows = {
             r["event_type"]: (r["n_sketch"], r["est_distinct"])
             for r in emitted
@@ -342,11 +342,7 @@ def funnel_state_recovery_run(spark, base):
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("funnel run did not finish in 300s")
-        state_rows = None
-        for p in q.recentProgress:
-            for op in p.get("stateOperators", []):
-                state_rows = op.get("numRowsTotal", state_rows)
-        state_trajectory.append(state_rows)
+        state_trajectory.append(_state_progress(q)[0])
         for r in emitted:
             final_stage[r["user_id"]] = r["stage"]
     # the state key of streaming_funnel_stage, over the 40 user ids
@@ -464,11 +460,7 @@ def histogram_state_recovery_run(spark, base):
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("histogram run did not finish in 300s")
-        state_rows = None
-        for p in q.recentProgress:
-            for op in p.get("stateOperators", []):
-                state_rows = op.get("numRowsTotal", state_rows)
-        state_trajectory.append(state_rows)
+        state_trajectory.append(_state_progress(q)[0])
         for r in emitted:
             final_rows[(r["event_type"], r["q"])] = r["est"]
     assert state_trajectory == [2, 2, 2], (

@@ -206,11 +206,19 @@ def moment_stats_fixed(
     final float formula is one defined left-fold over ascending dims,
     mirrored verbatim in the streaming emitter. Quantization error is
     2^-b per element — noise for a drift monitor. Shuffle carries only
-    n_groups×d partial longs, never vectors."""
+    n_groups×d partial longs, never vectors.
+
+    NaN stance (NANPOLICY.md), shared with the streaming twin: a row whose
+    vector is NULL or holds a non-finite (or NULL) element is not counted
+    (floor(NaN) would otherwise add 0 to the sums and 1 to n)."""
     s = float(1 << scale_bits)
-    u = df.select(
+    v = F.col(vector_col).cast("array<double>")
+    finite = F.forall(
+        v, lambda x: x.isNotNull() & ~F.isnan(x) & (F.abs(x) != float("inf"))
+    )
+    u = df.where(v.isNotNull() & finite).select(
         F.col(group_col),
-        F.posexplode(F.col(vector_col).cast("array<double>")).alias("i", "x"),
+        F.posexplode(v).alias("i", "x"),
     )
     fx = F.floor(F.col("x") * F.lit(s) + F.lit(0.5))
     per_dim = u.groupBy(group_col, "i").agg(

@@ -3857,7 +3857,9 @@ def q_streaming_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     increasing across a group's emissions (a group is only invoked for
     batches containing its rows, each adding >= 1). The oracle — the
     full-stream fixed-point sums — is unchanged: integer addition is
-    order-free, so the final state is split-invariant."""
+    order-free, so the final state is split-invariant. A row whose vector
+    is NULL or holds a non-finite element is dropped by the operator and
+    the oracle alike (NANPOLICY.md)."""
     from vettore_spark.streaming.stateful import streaming_moment_stats
 
     path = _streaming_table_dir_multi(spark, sf_dir, "embeddings", "vec_id")
@@ -3885,7 +3887,9 @@ def q_streaming_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_STREAMING_MOMENT_STATS = """
 WITH u AS (
   SELECT label, i - 1 AS i, embedding[i]::DOUBLE AS x
-  FROM embeddings, range(1, 65) t(i)),
+  FROM embeddings, range(1, 65) t(i)
+  -- both twins drop a row with a NULL vector or a non-finite element
+  WHERE list_bool_and(list_transform(embedding, v -> v IS NOT NULL AND isfinite(v)))),
 fx AS (
   SELECT label, i,
          CAST(sum(CAST(floor(x * 16777216.0 + 0.5) AS BIGINT)) AS BIGINT) AS sfx,

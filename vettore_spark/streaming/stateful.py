@@ -1,37 +1,106 @@
-"""Custom stateful Structured Streaming operators (applyInPandasWithState)
-plus the built-in session_window aggregation, for continuous training-data
-pipelines.
-
-The reference has no streaming surface (SURVEY §2.12); these are the
-Spark-native extension. Two shapes:
-
-- `streaming_topk_per_key`: a per-key running top-k (keep the k
-  highest-value events ever seen per key, across micro-batches). No built-in
-  operator maintains a bounded per-key heap over an unbounded stream — this
-  is exactly the applyInPandasWithState use case. State per key is O(k)
-  (id, value) pairs, so total state is bounded by keys x k regardless of
-  stream length.
-- `streaming_session_counts`: gap-based session aggregation using the
-  built-in `session_window` + watermark — state is bounded by the watermark
-  horizon; identical session semantics to operators/temporal.sessionize for
-  strictly-greater-than-gap splits (session_window merges windows that
-  overlap, i.e. starts a new session when the gap is >= the timeout, so the
-  batch twin uses `>=`; see test).
-
-Both run identically under `trigger(availableNow=True)` for batch-like
+"""Stateful Structured Streaming gates for continuous training-data
+pipelines. The reference has no streaming surface (SURVEY §2.12); these
+are the Spark-native extension: nine custom Python folds behind one
+runner (top-k, two exact dedups, SimHash candidates, z-score, funnel,
+KMV, histogram, moments) plus two gates on the engine's
+own state (`streaming_session_counts`, `streaming_horizon_dedup`). All
+run identically under `trigger(availableNow=True)` for batch-like
 verification and under continuous micro-batches in production.
+
+**One state path.** Every custom gate is a pure fold run by `_fold_state`:
+
+    fold(state, rows) -> (new_state, out)
+
+`state` is the group's stored tuple (the gate's `state_schema` fields in
+order), or None before the group's first write. `rows` is the group's
+micro-batch, already concatenated; the runner skips empty batches and
+never calls a fold without rows. A None `new_state` leaves the stored
+state unwritten, a None `out` emits nothing. No gate touches the state
+handle itself.
+
+**Shard keys.** A gate whose natural key takes many values per batch
+(users, leaderboard keys, content digests, SimHash buckets) groups by one
+of `_SHARDS` shards of it, not by the key: one Python call plus one state
+round-trip per group per batch was most of each `addBatch` (r14 replay
+profile: ~5,000 digest groups cost 1.8 s, ~40k unit digests ~3 s). The
+shard is `pmod(xxhash64(key), _SHARDS)` (topk_per_key, funnel_stage,
+simhash) or the digest's leading hex chars (both dedups; md5 prefixes
+are uniform). A shard's state holds its keys as parallel arrays and the
+fold applies the per-key rule in one vectorized pass, so the emitted rows
+are the per-key form's and state volume is unchanged, only sharded
+coarser. Shard keys derive from data, never from executors: output is
+partition- and core-count-invariant. Gates with few groups (zscore, kmv,
+histogram, moments) group by their group column.
+
+**Checkpoint compatibility.** A checkpoint stores state rows under the
+gate's grouping key and `state_schema` and replays them into its fold
+under its output mode. Each gate's key expression, `state_schema`,
+`out_schema` and mode are therefore its checkpoint format: keep them
+byte-identical, or a restarted query fails schema validation or misreads
+its state (tests/test_stateful.py restarts every gate on one checkpoint).
+
+**Why moment_stats stays in Python.** Its state is order-free integer
+sums, so an engine-state form (a native streaming aggregation) emits
+bit-identical rows; measured, it is slower per micro-batch. Medians of 4
+alternating replays per side, local[4], engine defaults: 2 files x 400
+rows at dim 16, 675 ms native vs 638 ms Python; 4 files x 2,000 rows at
+dim 64, 926 ms vs 485 ms.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+_SHARDS = 256
+
+
+def _hash_shard(*cols: str) -> Column:
+    """The shard of a key: pmod(xxhash64(cols), _SHARDS)."""
+    return F.pmod(F.xxhash64(*cols), F.lit(_SHARDS))
+
+
+def _fold_state(
+    df: DataFrame,
+    key: str,
+    fold: Callable,
+    *,
+    out_schema,
+    state_schema,
+    mode: str,
+) -> DataFrame:
+    """Run `fold` over each group of `df` by column `key` with
+    applyInPandasWithState (NoTimeout), under the contract in the module
+    docstring."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def update(
+        _key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        frames = [p for p in pdfs if len(p)]
+        if not frames:
+            return
+        new, out = fold(
+            state.get if state.exists else None,
+            pd.concat(frames, ignore_index=True),
+        )
+        if new is not None:
+            state.update(new)
+        if out is not None:
+            yield out
+
+    return df.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_topk_per_key(
@@ -46,8 +115,8 @@ def streaming_topk_per_key(
 
     Emits, per micro-batch and key, the current top-k (id, value) pairs in
     descending value order (ties by id ascending — the same deterministic
-    tie-break as the batch top-k operators). State: the top-k pairs only,
-    sharded over key-hash buckets (see the bucket comment below).
+    tie-break as the batch top-k operators). State: the top-k pairs only
+    (a hot key still holds k entries), sharded by key hash.
 
     NaN stance (NANPOLICY.md): non-finite values (NaN/±inf/NULL) are
     DROPPED on arrival, never stored — a NaN key in the Python sort is
@@ -57,87 +126,58 @@ def streaming_topk_per_key(
     crown the malformed row. A leaderboard slot is a keeper slot;
     malformed rows lose.
     """
-    import numpy as np
-
     out_schema = (
         f"{key_col} long, rank integer, {id_col} long, {value_col} double"
     )
-    # Key-HASH-bucket state, not per-key state (the unit-dedup treatment,
-    # r14 replay profile): per-key grouping paid one Python update call +
-    # one state round-trip per touched KEY per batch (~1,500 at sf0.1 —
-    # ~2 s of each addBatch). A bucket holds its keys' leaderboards as
-    # parallel arrays; per batch, one vectorized pandas pass re-sorts the
-    # union and re-truncates per key, and each key TOUCHED by the batch
-    # re-emits its current top-k — emission rows identical to the
-    # per-key form (a touched key with no finite rows and no state still
-    # emits nothing). State per bucket is O(k x keys/bucket); size
-    # `n_buckets` so that stays small (deterministic xxhash64 spread —
-    # a hot KEY still only ever holds k entries).
     state_schema = "keys array<long>, ids array<long>, vals array<double>"
-    n_buckets = 256
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ks, ids, vals = state.get
-            frames = [
+    def fold(state, rows):
+        # a key is "touched" (and re-emits) when the batch carries ANY of
+        # its rows, before the finiteness drop; a touched key with no
+        # finite rows and no state emits nothing
+        touched = set(rows[key_col].tolist())
+        vv = rows[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
+        ok = np.isfinite(vv)
+        frames = [
+            pd.DataFrame(
+                {
+                    key_col: rows[key_col].to_numpy()[ok],
+                    id_col: rows[id_col].to_numpy()[ok],
+                    value_col: vv[ok],
+                }
+            )
+        ]
+        if state is not None:
+            ks, ids, vals = state
+            frames.insert(
+                0,
                 pd.DataFrame(
                     {
                         key_col: np.asarray(ks, dtype=np.int64),
                         id_col: np.asarray(ids, dtype=np.int64),
                         value_col: np.asarray(vals, dtype=np.float64),
                     }
-                )
-            ]
-        else:
-            frames = []
-        touched: set = set()
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            # a key is "touched" (and re-emits) when the batch carries
-            # ANY of its rows — the per-key form invoked update on raw
-            # input, before the finiteness drop
-            touched.update(pdf[key_col].tolist())
-            vv = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = np.isfinite(vv)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        key_col: pdf[key_col].to_numpy()[ok],
-                        id_col: pdf[id_col].to_numpy()[ok],
-                        value_col: vv[ok],
-                    }
-                )
+                ),
             )
-        if not frames:
-            return
-        allp = pd.concat(frames, ignore_index=True)
         # per key: descending value, ascending id, bounded to k
-        allp = allp.sort_values(
-            [key_col, value_col, id_col], ascending=[True, False, True]
-        )
-        top = allp.groupby(key_col, sort=False).head(k)
-        state.update(
-            (
-                top[key_col].tolist(),
-                top[id_col].tolist(),
-                top[value_col].tolist(),
-            )
+        top = (
+            pd.concat(frames, ignore_index=True)
+            .sort_values([key_col, value_col, id_col], ascending=[True, False, True])
+            .groupby(key_col, sort=False)
+            .head(k)
         )
         emit = top[top[key_col].isin(touched)].copy()
         emit["rank"] = emit.groupby(key_col, sort=False).cumcount() + 1
-        yield emit[[key_col, "rank", id_col, value_col]]
+        new = (top[key_col].tolist(), top[id_col].tolist(), top[value_col].tolist())
+        return new, emit[[key_col, "rank", id_col, value_col]]
 
-    return events.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    ).groupBy("_bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        events.withColumn("_bkt", _hash_shard(key_col)),
+        "_bkt",
+        fold,
+        out_schema=out_schema,
+        state_schema=state_schema,
+        mode="update",
     )
 
 
@@ -151,6 +191,9 @@ def streaming_session_counts(
 ) -> DataFrame:
     """Gap-based session aggregation with the built-in session_window.
     Works on both streaming (with watermark-bounded state) and batch frames.
+    A session ends where the gap to the next event is >= `gap`
+    (session_window merges only overlapping windows), so its batch twin
+    operators/temporal.sessionize is compared with a `>=` split (see test).
 
     sum_value accumulates in DECIMAL(18,6) (the approx_rollup pattern):
     decimal addition is order-free, so the per-session sum is bit-exact
@@ -178,71 +221,60 @@ def streaming_session_counts(
     )
 
 
+def _first_ever(
+    keyed: DataFrame, digest: str, order: list[str], out_schema
+) -> DataFrame:
+    """Emit each `digest` value's first-ever row across all micro-batches:
+    within a batch the row lowest in `order` wins (stable sort, first
+    occurrence); state is the shard's seen-digest list, written only when
+    the batch holds a fresh digest. The one fold of both exact dedups."""
+    emit = out_schema.fieldNames()
+
+    def fold(state, rows):
+        seen = list(state[0]) if state is not None else []
+        rows = rows.sort_values(order, kind="mergesort").drop_duplicates(
+            digest, keep="first"
+        )
+        fresh = rows[~rows[digest].isin(set(seen))]
+        if len(fresh) == 0:
+            return None, None
+        return (seen + fresh[digest].tolist(),), fresh[emit]
+
+    # the shard: the digest's leading hex chars, 2 for 256 shards
+    shard = F.substring(digest, 1, len(f"{_SHARDS - 1:x}"))
+    return _fold_state(
+        keyed.withColumn("_bkt", shard),
+        "_bkt",
+        fold,
+        out_schema=out_schema,
+        state_schema="seen array<string>",
+        mode="append",
+    )
+
+
 def streaming_exact_dedup(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bucket_chars: int = 2,
 ) -> DataFrame:
     """Streaming exact dedup: emit only the FIRST document ever seen with
     each content digest, across all micro-batches (first-wins, matching the
     batch exact_dedup's keep-lowest semantics within a batch: intra-batch
-    ties resolve to the lowest id).
-
-    State is keyed by the digest's `bucket_chars`-hex-char PREFIX and
-    holds the bucket's seen-digest list: the per-digest keying this
-    replaces paid one Python `update` call + one state round-trip per
-    DISTINCT DIGEST per batch — the r14 replay profile measured that
-    per-group overhead as ~the whole addBatch time (5,000 calls -> 1.8 s
-    at sf0.1). 16^bucket_chars buckets cap the per-batch call count while
-    every decision inside a bucket is one vectorized pandas pass; the
-    emitted rows are identical (first-ever bucket arrival emits the
-    batch's lowest id per digest). Total state volume is unchanged —
-    the same distinct digests, sharded coarser. Size `bucket_chars` so a
-    bucket's digest list stays cheap to re-serialize per touched batch:
-    ~distinct_digests / 16^chars entries x 32 bytes (2 -> 256 buckets;
-    a 100 TB ingest with ~1e11 distinct units wants 6-7 chars). The md5
-    prefix shuffles uniformly, so buckets cannot skew."""
+    ties resolve to the lowest id). State is the distinct digests seen,
+    sharded by digest prefix; it grows with distinct content, not stream
+    length (pair with `streaming_horizon_dedup` when the duplicate
+    horizon is known)."""
     from pyspark.sql import types as T
 
-    id_type = docs.schema[id_col].dataType
     out_schema = T.StructType(
-        [T.StructField(id_col, id_type), T.StructField("digest", T.StringType())]
+        [
+            T.StructField(id_col, docs.schema[id_col].dataType),
+            T.StructField("digest", T.StringType()),
+        ]
     )
-    state_schema = T.StructType(
-        [T.StructField("seen", T.ArrayType(T.StringType()))]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = list(state.get[0]) if state.exists else []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows) == 0:
-            return
-        # intra-batch keep rule: lowest id per digest (stable sort, then
-        # first occurrence wins) — the batch exact_dedup tie rule
-        rows = rows.sort_values([id_col], kind="mergesort").drop_duplicates(
-            "digest", keep="first"
-        )
-        fresh = rows[~rows["digest"].isin(set(seen))]
-        if len(fresh) == 0:
-            return
-        seen.extend(fresh["digest"].tolist())
-        state.update((seen,))
-        yield fresh[[id_col, "digest"]]
-
-    hashed = docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("digest")
-    ).withColumn("_bkt", F.substring("digest", 1, bucket_chars))
-    return hashed.groupBy("_bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    hashed = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
+    return _first_ever(hashed, "digest", [id_col], out_schema)
 
 
 def streaming_horizon_dedup(
@@ -263,11 +295,9 @@ def streaming_horizon_dedup(
     distinct digests forever): when the duplicate horizon is KNOWN —
     crawl re-fetches, retry storms, at-least-once upstream delivery —
     this bounds state by TIME instead of key cardinality, the right
-    posture for an unbounded 100 TB ingest stream (the
-    streaming_exact_dedup docstring's "pair with an upstream time-window
-    digest filter" is THIS operator). Built-in engine operator: no Python
-    in the hot path, state lives in the regular state store with
-    watermark eviction.
+    posture for an unbounded 100 TB ingest stream. Built-in engine
+    operator: no Python in the hot path, state lives in the regular state
+    store with watermark eviction.
 
     Returns the surviving (id, ts, digest) rows in append mode."""
     if not docs.isStreaming:
@@ -297,7 +327,6 @@ def streaming_unit_dedup(
     text_col: str = "text",
     delimiter: str | None = None,
     window: int = 20,
-    bucket_chars: int = 2,
 ) -> DataFrame:
     """Streaming paragraph/unit-level dedup — the continuous analog of the
     batch `operators.dedup.paragraph_dedup` (Lee et al. 2021 unit dedup):
@@ -311,70 +340,26 @@ def streaming_unit_dedup(
     Emits surviving units as (id, unit_idx, unit); reassemble documents in
     the sink with a per-batch groupBy(id) ordered concat (a stream cannot
     re-group globally — a doc whose units were all seen before simply emits
-    nothing). State is the seen-digest set, bounded by distinct-unit
-    count, not stream length, sharded over 16^bucket_chars digest-prefix
-    buckets (see the bucket comment below); the md5 key-space shuffles
-    uniformly across executors."""
+    nothing). State is the seen unit-digest set, bounded by distinct-unit
+    count, not stream length, sharded by digest prefix."""
     from pyspark.sql import types as T
 
     from vettore_spark.operators.dedup import unit_chunks
 
-    id_type = docs.schema[id_col].dataType
     out_schema = T.StructType(
         [
-            T.StructField(id_col, id_type),
+            T.StructField(id_col, docs.schema[id_col].dataType),
             T.StructField("unit_idx", T.IntegerType()),
             T.StructField("unit", T.StringType()),
         ]
     )
-    state_schema = T.StructType(
-        [T.StructField("seen", T.ArrayType(T.StringType()))]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = list(state.get[0]) if state.exists else []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows) == 0:
-            return
-        # intra-batch keep rule: lexicographically-lowest (id, unit_idx)
-        # per distinct unit digest — the batch paragraph_dedup rule
-        rows = rows.sort_values(
-            [id_col, "unit_idx"], kind="mergesort"
-        ).drop_duplicates("_digest", keep="first")
-        fresh = rows[~rows["_digest"].isin(set(seen))]
-        if len(fresh) == 0:
-            return
-        seen.extend(fresh["_digest"].tolist())
-        state.update((seen,))
-        yield fresh[[id_col, "unit_idx", "unit"]]
-
     units = docs.select(
         F.col(id_col),
         F.posexplode(
             unit_chunks(text_col, delimiter=delimiter, window=window)
         ).alias("unit_idx", "unit"),
     ).withColumn("_digest", F.md5("unit"))
-    # Digest-PREFIX bucket state, not per-digest state: the r14 replay
-    # profile attributed this gate's cost to the applyInPandasWithState
-    # per-group overhead itself (~40k distinct digests per micro-batch ->
-    # ~40k Python update calls + state round-trips per batch, ~3 s of a
-    # 3.5 s addBatch). 16^bucket_chars buckets bound the call count;
-    # inside a bucket the first-ever-wins decision is one vectorized
-    # pandas pass over the bucket's rows against its seen-digest list,
-    # emitting IDENTICAL rows. State volume is the same set of digests,
-    # sharded coarser — size bucket_chars so per-bucket lists stay small
-    # (see streaming_exact_dedup; ~1e11 distinct units wants 6-7 chars).
-    return units.withColumn(
-        "_bkt", F.substring("_digest", 1, bucket_chars)
-    ).groupBy("_bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _first_ever(units, "_digest", [id_col, "unit_idx"], out_schema)
 
 
 def streaming_simhash_candidates(
@@ -387,7 +372,6 @@ def streaming_simhash_candidates(
     max_bucket: int = 64,
     hash_fn=None,
     emit_once: bool = False,
-    state_groups: int = 256,
 ) -> DataFrame:
     """Streaming NEAR-dup candidate pairs across micro-batches: the
     streaming twin of dedup.simhash_pairs. Each document is posted to its
@@ -448,17 +432,11 @@ def streaming_simhash_candidates(
     grid work now runs in whole-stage codegen inside the same narrow
     stage that feeds the sink.
 
-    State is sharded into `state_groups` hash groups of BUCKETS (the
-    r14 unit_dedup pattern): per-(block, slice) GroupState paid one
-    state round-trip + Python call per bucket per batch — ~17k buckets
-    at sf0.1 made that fixed cost, not the grid, the replay floor
-    (measured: 16.3 s old / 11.9 s post-JVM-grid addBatch on the same
-    boot). Each group's state holds its buckets' flattened member
-    arrays tagged (blk, bval); the per-bucket residency/cap/sort rules
-    are applied inside the group exactly as before, so the emitted pair
-    multiset is unchanged (pinned by the sequential-reference test).
-    Size `state_groups` to state volume in deployments — groups are a
-    parallelism/fixed-cost knob, never a semantics knob.
+    State is sharded by (block, slice) hash: each shard's state holds its
+    buckets' flattened member arrays tagged (blk, bval), and the
+    per-bucket residency/cap/sort rules apply inside the shard, so the
+    emitted pair multiset is the per-bucket form's (pinned by the
+    sequential-reference test).
     """
     from pyspark.sql import types as T
 
@@ -471,12 +449,8 @@ def streaming_simhash_candidates(
     # One source scan, one SimHash fold per document: the signature AND
     # its 64/block_bits slice keys come out of a single expression
     # (simhash64_blocks binds the word in the fold's finish lambda), and
-    # explode posts each doc to its block buckets. The previous shape —
-    # a per-block union of re-projections — re-scanned the stream source
-    # and recomputed the full simhash64 fold once PER BLOCK (4x compute
-    # at the default 16-bit slices; r14 replay profile: this query was
-    # the streaming_replay_sec outlier with "real LSH compute" as the
-    # attributed cost).
+    # explode posts each doc to its block buckets (a per-block union of
+    # re-projections re-scanned the source and re-ran the fold per block).
     keyed = docs.select(
         F.col(id_col),
         F.explode(
@@ -489,12 +463,7 @@ def streaming_simhash_candidates(
         F.col("_b._sig").alias("_sig"),
         F.col("_b._blk").alias("_blk"),
         F.col("_b._bval").alias("_bval"),
-        # bucket-group shard key: data-keyed (never executor-keyed), so
-        # results are partition- and core-count-invariant
-        F.pmod(
-            F.xxhash64(F.col("_b._blk"), F.col("_b._bval")),
-            F.lit(state_groups),
-        ).alias("_g"),
+        _hash_shard("_b._blk", "_b._bval").alias("_g"),
     )
 
     # One compact row per (bucket, batch) crosses the Python boundary;
@@ -518,13 +487,10 @@ def streaming_simhash_candidates(
         ]
     )
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_blk, s_bval, s_ids, s_sigs = (list(x) for x in state.get)
-        else:
-            s_blk, s_bval, s_ids, s_sigs = [], [], [], []
+    def fold(state, rows):
+        s_blk, s_bval, s_ids, s_sigs = (
+            (list(x) for x in state) if state is not None else ([], [], [], [])
+        )
         # residents per bucket, in state (= join) order
         res: dict = {}
         for b, v, i, s in zip(s_blk, s_bval, s_ids, s_sigs):
@@ -532,24 +498,18 @@ def streaming_simhash_candidates(
             bucket[0].append(i)
             bucket[1].append(s)
         arr: dict = {}
-        for pdf in pdfs:
-            for b, v, i, s in zip(
-                pdf["_blk"].tolist(),
-                pdf["_bval"].tolist(),
-                pdf[id_col].tolist(),
-                pdf["_sig"].tolist(),
-            ):
-                arr.setdefault((int(b), int(v)), []).append((i, int(s)))
-        o_blk: list = []
-        o_res_ids: list = []
-        o_res_sigs: list = []
-        o_arr_ids: list = []
-        o_arr_sigs: list = []
-        o_addn: list = []
-        for (b, v), rows in arr.items():
-            rows.sort()
+        for b, v, i, s in zip(
+            rows["_blk"].tolist(),
+            rows["_bval"].tolist(),
+            rows[id_col].tolist(),
+            rows["_sig"].tolist(),
+        ):
+            arr.setdefault((int(b), int(v)), []).append((i, int(s)))
+        out: list = []
+        for (b, v), members in arr.items():
+            members.sort()
             r_ids, r_sigs = res.get((b, v), ([], []))
-            if emit_once and len(r_ids) + len(rows) > max_bucket:
+            if emit_once and len(r_ids) + len(members) > max_bucket:
                 # emit_once's exactly-once guarantee stands only while
                 # every shared block's bucket holds both pair members — a
                 # binding cap would make the suppression DROP pairs
@@ -561,45 +521,33 @@ def streaming_simhash_candidates(
                 raise ValueError(
                     f"emit_once: bucket (block={b}, key={v}) would "
                     f"exceed max_bucket={max_bucket} "
-                    f"({len(r_ids)} resident + {len(rows)} arriving); "
+                    f"({len(r_ids)} resident + {len(members)} arriving); "
                     "exactly-once emission is only exact below the cap"
                 )
-            a_ids = [r[0] for r in rows]
-            a_sigs = [r[1] for r in rows]
+            a_ids = [m[0] for m in members]
+            a_sigs = [m[1] for m in members]
             # the sequential cap rule in closed form (r12, pinned in
             # tests/test_hardening_r12.py): only the first add_n sorted
             # arrivals join the residents; every arrival still verifies
-            add_n = max(0, min(len(rows), max_bucket - len(r_ids)))
+            add_n = max(0, min(len(members), max_bucket - len(r_ids)))
             if (r_ids and a_ids) or len(a_ids) > 1:
-                o_blk.append(b)
-                o_res_ids.append(list(r_ids))
-                o_res_sigs.append(list(r_sigs))
-                o_arr_ids.append(a_ids)
-                o_arr_sigs.append(a_sigs)
-                o_addn.append(add_n)
+                out.append((b, list(r_ids), list(r_sigs), a_ids, a_sigs, add_n))
             s_blk.extend([b] * add_n)
             s_bval.extend([v] * add_n)
             s_ids.extend(a_ids[:add_n])
             s_sigs.extend(a_sigs[:add_n])
-        state.update((s_blk, s_bval, s_ids, s_sigs))
-        if o_blk:
-            yield pd.DataFrame(
-                {
-                    "_blk": o_blk,
-                    "res_ids": o_res_ids,
-                    "res_sigs": o_res_sigs,
-                    "arr_ids": o_arr_ids,
-                    "arr_sigs": o_arr_sigs,
-                    "add_n": o_addn,
-                }
-            )
+        emitted = (
+            pd.DataFrame(out, columns=bucket_schema.fieldNames()) if out else None
+        )
+        return (s_blk, s_bval, s_ids, s_sigs), emitted
 
-    st = keyed.groupBy("_g").applyInPandasWithState(
-        update,
-        outputStructType=bucket_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    st = _fold_state(
+        keyed,
+        "_g",
+        fold,
+        out_schema=bucket_schema,
+        state_schema=state_schema,
+        mode="append",
     )
 
     # JVM pair expansion: members as (id, sig, pos) structs — residents
@@ -705,13 +653,10 @@ def streaming_zscore_anomaly(
         f"{key_col} string, {id_col} long, {value_col} double, "
         "z double, is_anomaly boolean"
     )
-    state_schema = "n long, mean double, m2 double"
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        rows = pd.concat(list(pdfs), ignore_index=True)
+    def fold(state, rows):
+        n, mean, m2 = state if state is not None else (0, 0.0, 0.0)
+        key = rows[key_col].iloc[0]
         rows = rows.sort_values([ts_col, id_col], kind="mergesort")
         ids, vals, zs, flags = [], [], [], []
         # plain-list iteration, NOT iterrows: the fold is inherently
@@ -748,10 +693,9 @@ def streaming_zscore_anomaly(
             d = v - mean
             mean += d / n
             m2 += d * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
+        return (n, mean, m2), pd.DataFrame(
             {
-                key_col: [key[0]] * len(ids),
+                key_col: [key] * len(ids),
                 id_col: ids,
                 value_col: vals,
                 "z": zs,
@@ -759,12 +703,13 @@ def streaming_zscore_anomaly(
             }
         )
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        events,
+        key_col,
+        fold,
+        out_schema=out_schema,
+        state_schema="n long, mean double, m2 double",
+        mode="append",
     )
 
 
@@ -780,7 +725,7 @@ def streaming_funnel_stage(
     the batch `event_funnel` query): per user, state is the minimum
     achieved timestamp of each funnel stage — stage N counts only when its
     event STRICTLY follows the user's stage-(N-1) time. O(1) state per
-    user (three longs), no event history retained.
+    user (three longs), no event history retained; sharded by user hash.
 
     Rows inside one micro-batch are processed in (ts) order; the stream
     equals the batch funnel whenever micro-batches arrive time-ordered
@@ -791,42 +736,30 @@ def streaming_funnel_stage(
     pattern in tests takes the final row per user).
 
     Exactly three stages: the fixed-width state schema is the price of
-    applyInPandasWithState's static state struct.
+    a static state struct.
     """
     if len(stages) != 3:
         raise ValueError("streaming_funnel_stage supports exactly 3 stages")
     # mirror the input's user-id type: hardcoding `long` would make string
     # user keys (the Collection id convention) fail at the first micro-batch
     user_t = events.schema[user_col].dataType.simpleString()
-    out_schema = f"{user_col} {user_t}, stage int"
-    # User-HASH-bucket state (the r14 per-group-overhead treatment, see
-    # streaming_topk_per_key): per-user grouping paid one Python update
-    # call + one state round-trip per touched user per batch. A bucket
-    # holds its users' (t1, t2, t3) triples as parallel arrays; missing
-    # times are encoded as the _SENT sentinel (a ts far above any ns
-    # epoch), which makes every min/strictly-after comparison work
-    # unchanged. Emission rows are identical to the per-user form.
+    # a shard holds its users' (t1, t2, t3) triples as parallel arrays;
+    # missing times are the _SENT sentinel (a ts far above any ns epoch),
+    # which makes every min/strictly-after comparison work unchanged
     state_schema = (
         f"keys array<{user_t}>, t1 array<long>, t2 array<long>, "
         "t3 array<long>"
     )
-    n_buckets = 256
     _SENT = 1 << 62
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ks, a1, a2, a3 = state.get
-            st = {
-                u: (x1, x2, x3)
-                for u, x1, x2, x3 in zip(ks, a1, a2, a3)
-            }
-        else:
-            st = {}
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if len(rows) == 0:
-            return
+    def _gate(prev: int, arr: "np.ndarray") -> int:
+        acc = arr[arr > prev]
+        return _SENT if len(acc) == 0 else int(acc.min())
+
+    def fold(state, rows):
+        st = {} if state is None else {
+            u: (x1, x2, x3) for u, x1, x2, x3 in zip(*state)
+        }
         # Vectorized closed form of the ts-ascending sequential fold (the
         # r14 iterrows removal). Equivalence: processing ts-ascending, a
         # stage-N event at time t is accepted iff the stage-(N-1) time
@@ -848,11 +781,6 @@ def streaming_funnel_stage(
         usr, tsv, typ = usr[order], tsv[order], typ[order]
         bounds = np.flatnonzero(usr[1:] != usr[:-1]) + 1
         out_users, out_stages = [], []
-
-        def _gate(prev: int, arr: "np.ndarray") -> int:
-            acc = arr[arr > prev]
-            return _SENT if len(acc) == 0 else int(acc.min())
-
         for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(usr)]):
             u = usr[s].item() if hasattr(usr[s], "item") else usr[s]
             t1, t2, t3 = st.get(u, (_SENT, _SENT, _SENT))
@@ -871,24 +799,16 @@ def streaming_funnel_stage(
                     1 if t1 < _SENT else 0
                 )
             )
-        state.update(
-            (
-                list(st.keys()),
-                [v[0] for v in st.values()],
-                [v[1] for v in st.values()],
-                [v[2] for v in st.values()],
-            )
-        )
-        yield pd.DataFrame({user_col: out_users, "stage": out_stages})
+        new = (list(st.keys()), *([v[j] for v in st.values()] for j in range(3)))
+        return new, pd.DataFrame({user_col: out_users, "stage": out_stages})
 
-    return events.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col(user_col)), F.lit(n_buckets))
-    ).groupBy("_bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        events.withColumn("_bkt", _hash_shard(user_col)),
+        "_bkt",
+        fold,
+        out_schema=f"{user_col} {user_t}, stage int",
+        state_schema=state_schema,
+        mode="append",
     )
 
 
@@ -921,37 +841,32 @@ def streaming_kmv_distinct(
     if k < 2:
         raise ValueError("kmv needs k >= 2")
     grp_t = events.schema[group_col].dataType.simpleString()
-    out_schema = f"{group_col} {grp_t}, n_sketch int, est_distinct double"
-    state_schema = "hs array<long>"
     domain = float(16 ** 15)
 
     def _h60(v) -> int:
         return int(hashlib.md5(str(v).encode("utf-8")).hexdigest()[:15], 16)
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        hs = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            hs.update(_h60(v) for v in pdf[key_col])
+    def fold(state, rows):
+        hs = set(state[0]) if state is not None else set()
+        hs.update(_h60(v) for v in rows[key_col])
         bottom = sorted(hs)[:k]
-        state.update((bottom,))
         n = len(bottom)
         est = float(n) if n < k else (k - 1) * domain / float(bottom[-1])
-        yield pd.DataFrame(
+        return (bottom,), pd.DataFrame(
             {
-                group_col: [key[0]],
+                group_col: [rows[group_col].iloc[0]],
                 "n_sketch": [n],
                 "est_distinct": [round(est, 3)],
             }
         )
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        events,
+        group_col,
+        fold,
+        out_schema=f"{group_col} {grp_t}, n_sketch int, est_distinct double",
+        state_schema="hs array<long>",
+        mode="update",
     )
 
 
@@ -983,7 +898,6 @@ def streaming_histogram_quantiles(
     Output per micro-batch and group: (group, q, est) — one row per
     requested quantile.
     """
-    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     if not quantiles:
@@ -995,31 +909,22 @@ def streaming_histogram_quantiles(
     w = float(bucket_width)
     qs = sorted(float(q) for q in quantiles)
     grp_t = events.schema[group_col].dataType.simpleString()
-    out_schema = f"{group_col} {grp_t}, q double, est double"
-    state_schema = "bs array<long>, cs array<long>"
     q4 = Decimal("0.0001")
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bs, cs = state.get
-            hist = dict(zip(bs, cs))
-        else:
-            hist = {}
-        for pdf in pdfs:
-            vc = pdf[value_col].astype("float64")
-            # finite values only (r12, batch parity): a NULL arrives as
-            # NaN here and math.floor(nan) raises — one poisoned row
-            # would kill the whole streaming query; inf overflows the
-            # bucket index. The batch twin filters the same rows.
-            vc = vc[np.isfinite(vc)]
-            for b, c in vc.map(lambda v: math.floor(v / w)).value_counts().items():
-                hist[int(b)] = hist.get(int(b), 0) + int(c)
+    def fold(state, rows):
+        hist = dict(zip(*state)) if state is not None else {}
+        vc = rows[value_col].astype("float64")
+        # finite values only (r12, batch parity): a NULL arrives as NaN
+        # here and math.floor(nan) raises — one poisoned row would kill
+        # the whole streaming query; inf overflows the bucket index. The
+        # batch twin filters the same rows.
+        vc = vc[np.isfinite(vc)]
+        for b, c in vc.map(lambda v: math.floor(v / w)).value_counts().items():
+            hist[int(b)] = hist.get(int(b), 0) + int(c)
         items = sorted(hist.items())
-        state.update(([b for b, _ in items], [c for _, c in items]))
+        new = ([b for b, _ in items], [c for _, c in items])
         if not items:  # a batch of only non-finite values: nothing to
-            return     # estimate yet — emit no row, keep (empty) state
+            return new, None  # estimate yet — emit no row, keep (empty) state
         n = float(sum(hist.values()))
         ests = []
         for q in qs:
@@ -1034,16 +939,17 @@ def streaming_histogram_quantiles(
                         float(Decimal(est).quantize(q4, rounding=ROUND_HALF_UP))
                     )
                     break
-        yield pd.DataFrame(
-            {group_col: [key[0]] * len(qs), "q": qs, "est": ests}
+        return new, pd.DataFrame(
+            {group_col: [rows[group_col].iloc[0]] * len(qs), "q": qs, "est": ests}
         )
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        events,
+        group_col,
+        fold,
+        out_schema=f"{group_col} {grp_t}, q double, est double",
+        state_schema="bs array<long>, cs array<long>",
+        mode="update",
     )
 
 
@@ -1070,39 +976,36 @@ def streaming_moment_stats(
     the final emission per group equals moment_stats_fixed over the same
     rows bit-for-bit (pinned in tests/test_moments.py). The float
     emission formula is the same defined left-fold over ascending dims.
+
+    NaN stance (NANPOLICY.md), shared with the batch twin: a row whose
+    vector is NULL or holds a non-finite (or NULL) element is dropped on
+    arrival, never counted — NaN would cast to INT64_MIN in the sums and
+    poison the group's state for good. A batch with no finite row for a
+    group emits nothing and leaves its state as it was.
     """
-    import math
-
-    import numpy as np
-
     s = float(1 << scale_bits)
     grp_t = vectors.schema[group_col].dataType.simpleString()
     out_schema = (
         f"{group_col} {grp_t}, n long, mean_norm double, var_trace double"
     )
-    state_schema = "n long, sfx array<long>, qfx array<long>"
 
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, sfx, qfx = state.get
-            sfx = np.array(sfx, dtype=np.int64)
-            qfx = np.array(qfx, dtype=np.int64)
-        else:
-            n = 0
-            sfx = np.zeros(dim, dtype=np.int64)
-            qfx = np.zeros(dim, dtype=np.int64)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            x = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
-            )
-            n += x.shape[0]
-            sfx += np.floor(x * s + 0.5).astype(np.int64).sum(axis=0)
-            qfx += np.floor(x * x * s + 0.5).astype(np.int64).sum(axis=0)
-        state.update((int(n), sfx.tolist(), qfx.tolist()))
+    def fx(a: np.ndarray) -> np.ndarray:
+        return np.floor(a * s + 0.5).astype(np.int64).sum(axis=0)
+
+    def fold(state, rows):
+        vs = [
+            np.asarray(v, dtype=np.float64)
+            for v in rows[vector_col]
+            if v is not None
+        ]
+        x = np.array(vs) if vs else np.empty((0, dim))
+        x = x[np.isfinite(x).all(axis=1)]
+        if len(x) == 0:
+            return None, None
+        n, sfx, qfx = state if state is not None else (0, [0] * dim, [0] * dim)
+        n += len(x)
+        sfx = np.asarray(sfx, dtype=np.int64) + fx(x)
+        qfx = np.asarray(qfx, dtype=np.int64) + fx(x * x)
         # the SAME left-fold over ascending dims as the batch twin
         acc_m = 0.0
         acc_v = 0.0
@@ -1111,19 +1014,20 @@ def streaming_moment_stats(
             q_i = float(qfx[i]) / float(n) / s
             acc_m = acc_m + m_i * m_i
             acc_v = acc_v + (q_i - m_i * m_i)
-        yield pd.DataFrame(
+        return (int(n), sfx.tolist(), qfx.tolist()), pd.DataFrame(
             {
-                group_col: [key[0]],
+                group_col: [rows[group_col].iloc[0]],
                 "n": [n],
                 "mean_norm": [math.sqrt(acc_m)],
                 "var_trace": [acc_v],
             }
         )
 
-    return vectors.groupBy(group_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_state(
+        vectors,
+        group_col,
+        fold,
+        out_schema=out_schema,
+        state_schema="n long, sfx array<long>, qfx array<long>",
+        mode="update",
     )
