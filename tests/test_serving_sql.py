@@ -188,7 +188,7 @@ def test_views_hold_from_bind_to_analysis(spark, monkeypatch, race):
 
     def older_request():
         c._sql(
-            lambda rows, codes: f"SELECT id FROM {rows} LEFT SEMI JOIN {codes} USING (id)",
+            lambda where, rows, codes: f"SELECT id FROM {rows} LEFT SEMI JOIN {codes} USING (id)",
             rows=(None, old_rows), codes=(key, old_codes),
         ).collect()
 

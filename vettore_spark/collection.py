@@ -817,20 +817,25 @@ class Collection:
         lo, hi = float(a.min()), float(a.max())
         return ((a - lo) / (hi - lo)).tolist() if hi != lo else [0.0] * len(q)
 
-    def _resident(self, key: tuple, build):
+    def _resident(self, key: tuple, build, stale=None):
         """The resident index at `key` ((kind, *params)), built by
         `build()` on first use and reused across queries, like the
         reference's insert-time index maintenance. Concurrent first
         searches of one key build it once: the others wait on the key's
-        lock (dict.setdefault is atomic) and reuse that build. A build
-        that a write overlapped may hold the pre-write rows, and the
+        lock (dict.setdefault is atomic) and reuse that build. An entry
+        that `stale(ix)` rejects is rebuilt the same way and replaced
+        whole, so a reader holds either index, never one half-built. A
+        build that a write overlapped may hold the pre-write rows, and the
         write found no entry to patch: it serves this search only and
         is not stored, so the next search builds over the new rows."""
+        def usable(ix):
+            return ix is not None and not (stale and stale(ix))
+
         ix = self._indexes.get(key)
-        if ix is None:
+        if not usable(ix):
             with self._build_locks.setdefault(key, threading.Lock()):
                 ix = self._indexes.get(key)
-                if ix is None:
+                if not usable(ix):
                     writes = self._writes
                     ix = build()
                     with self._write_lock:
@@ -873,34 +878,47 @@ class Collection:
                     self.spark.catalog.dropTempView(name)
 
     def _sql(self, template, where=None, **tables) -> DataFrame:
-        """One single-query request: `spark.sql(template(**relations))`,
-        each relation the engine-owned view of a table (`tables`: name ->
-        (registry key, table)). The views are bound and the statement
-        analyzed under `_view_lock`, so each request's plan holds the
-        tables it bound: a concurrent request re-points a view, and a
-        write drops one, only between two analyses.
+        """One single-query request: `spark.sql(template(restrict,
+        **relations))`, each relation the engine-owned view of a table
+        (`tables`: name -> (registry key, table)). The views are bound and
+        the statement analyzed under `_view_lock`, so each request's plan
+        holds the tables it bound: a concurrent request re-points a view,
+        and a write drops one, only between two analyses.
 
-        `where` restricts the first relation. A SQL string must parse as
-        one expression (a predicate cannot close the parenthesis and
-        extend the statement) and is spliced in on its own lines (a
-        trailing `--` comment ends there). A Column binds as a
-        per-request view of the filtered table, whose plan is never
-        persisted, so dropping that view uncaches nothing."""
+        `restrict(relation)` names the rows of `relation` (a view or a
+        parenthesized query) that pass `where`, and the template places
+        it: on a table, below every scoring stage, or on a candidate cut
+        (pq_search's post-filter). A SQL string must parse as one
+        expression (a predicate cannot close the parenthesis and extend
+        the statement) and is spliced in on its own lines (a trailing `--`
+        comment ends there). A Column binds as a per-request view of the
+        filtered relation, whose plan is never persisted, so dropping that
+        view uncaches nothing."""
         if isinstance(where, str):
             self.spark._jsparkSession.sessionState().sqlParser().parseExpression(where)
+        filtered: list[str] = []
+
+        def restrict(relation: str) -> str:
+            if where is None:
+                return relation
+            if isinstance(where, str):
+                return f"(SELECT * FROM {relation} WHERE (\n{where}\n))"
+            frame = bound.get(relation)
+            if frame is None:
+                frame = self.spark.sql(f"SELECT * FROM {relation}")
+            name = f"{self._view_tag}_where"
+            frame.filter(where).createOrReplaceTempView(name)
+            filtered.append(name)
+            return name
+
         with self._view_lock:
             rel = {n: self._view(key, t, n) for n, (key, t) in tables.items()}
-            first = next(iter(tables))
-            if isinstance(where, str):
-                rel[first] = f"(SELECT * FROM {rel[first]} WHERE (\n{where}\n))"
-            elif where is not None:
-                rel[first] = f"{self._view_tag}_where"
-                tables[first][1].filter(where).createOrReplaceTempView(rel[first])
-                try:
-                    return self.spark.sql(template(**rel))
-                finally:
-                    self.spark.catalog.dropTempView(rel[first])
-            return self.spark.sql(template(**rel))
+            bound = {rel[n]: t for n, (_, t) in tables.items()}
+            try:
+                return self.spark.sql(template(restrict, **rel))
+            finally:
+                for name in filtered:
+                    self.spark.catalog.dropTempView(name)
 
     def _topk_opts(self) -> dict:
         return dict(
@@ -920,8 +938,8 @@ class Collection:
 
         q = self._prepare_query(query)
         return self._sql(
-            lambda rows: S.topk_sql(
-                rows, q, k=limit, extra_cols=("value",), **self._topk_opts()
+            lambda where, rows: S.topk_sql(
+                where(rows), q, k=limit, extra_cols=("value",), **self._topk_opts()
             ),
             where, rows=(None, self.df),
         )
@@ -1020,14 +1038,16 @@ class Collection:
     def quantized_search(self, query: list[float], *, limit: int = 10,
                          candidates: int | None = None, where=None) -> DataFrame:
         """Two-stage sign-bit search (`search.quantized_search`) as one SQL
-        text over the rows view: packed-Hamming top-`candidates`, broadcast
-        semi-join, exact rerank."""
+        text over the rows view (`search.two_stage_sql`): one scan takes
+        the packed-Hamming top-`candidates` with their vectors, and the
+        exact kernel reranks only them. `where` restricts the rows below
+        both stages."""
         from vettore_spark.operators import search as S
 
         q = self._prepare_query(query)
         return self._sql(
-            lambda rows: S.quantized_search_sql(
-                rows, q, dims=self.config.dimensions, k=limit,
+            lambda where, rows: S.quantized_search_sql(
+                where(rows), q, dims=self.config.dimensions, k=limit,
                 candidates=candidates, **self._topk_opts(),
             ),
             where, rows=(None, self.df),
@@ -1051,7 +1071,7 @@ class Collection:
                   iters: int = 5, where=None) -> DataFrame:
         """Two-stage product-quantization search (extension beyond the
         reference's binary quantization): deterministic codebooks trained
-        on an id-sorted sample, ADC candidate generation over the persisted
+        on an id-sorted sample, ADC candidate generation over the resident
         code table, exact rerank with the collection metric. Supported for
         l2/cosine collections (the ADC stage is an L2 quantizer).
 
@@ -1060,9 +1080,12 @@ class Collection:
         when a predicate is present — like hnsw_search(where=), results
         may number fewer than `limit` under a selective predicate.
 
-        The ADC stage of one query is a JVM top-k over the resident code
-        table (PqIndex.candidates_sql) in the request's one SQL text: a
-        request runs no Python worker."""
+        The code table carries each row's columns beside its codes, so a
+        request is one SQL text and one scan (`search.two_stage_sql`): the
+        ADC top candidates, the filter on them, and the exact rerank of
+        the survivors run in one Spark job with no Python worker. An index
+        built over no rows is rebuilt, and replaced whole, at the first
+        search that finds rows."""
         from vettore_spark.operators import search as S
         from vettore_spark.sources.store import PqIndex
 
@@ -1072,31 +1095,32 @@ class Collection:
                 f"{self.config.metric!r} (the ADC stage is an L2 quantizer)"
             )
         q = self._prepare_query(query)
+        key = ("pq", m, n_codes, iters)
         idx = self._resident(
-            ("pq", m, n_codes, iters),
+            key,
             lambda: PqIndex(
                 m=m, n_codes=n_codes, iters=iters, candidates_factor=1
             ).build(self.df),
+            stale=lambda ix: ix._books is None,
         )
+        if idx._books is None:  # still no rows: exact scan
+            return self._sql(
+                lambda where, rows: S.topk_sql(
+                    where(rows), q, k=limit, **self._topk_opts()
+                ),
+                where, rows=(None, self.df),
+            )
         factor = max(1, candidates // max(limit, 1))
         if where is not None:
             factor *= 4  # over-fetch so the post-filter can still fill k
-        if idx._books is None:
-            idx.build(self.df)  # built over no rows: train on the rows now
-        if idx._books is None:  # still empty: exact scan
-            return self._sql(
-                lambda rows: S.topk_sql(rows, q, k=limit, **self._topk_opts()),
-                where, rows=(None, self.df),
-            )
-        key = ("pq", m, n_codes, iters)
         # the fetch depth is passed in, never stored on the shared index:
         # concurrent requests cannot read each other's depth
         return self._sql(
-            lambda rows, codes: S.rerank_sql(
-                rows, idx.candidates_sql(codes, q, limit * factor), q, k=limit,
-                **self._topk_opts(),
+            lambda where, codes: S.two_stage_sql(
+                codes, idx.proxy_sql(q), q, candidates=limit * factor, k=limit,
+                survivors=where, **self._topk_opts(),
             ),
-            where, rows=(None, self.df), codes=(key, idx._codes),
+            where, codes=(key, idx._codes),
         )
 
     def hnsw_search(self, query: list[float], *, limit: int = 10,
@@ -1190,7 +1214,7 @@ class Collection:
         ix = self._resident(key, lambda: IvfFile.build(self._df, n_cells=n_cells))
         cells = ANN.ivf_probe_cells(q, ix.cids, ix.cmat, n_probe)
         return self._sql(
-            lambda ivf: ANN.ivf_topk_sql(ivf, q, cells, limit),
+            lambda where, ivf: ANN.ivf_topk_sql(where(ivf), q, cells, limit),
             where, ivf=(key, ix.assigned),
         )
 
@@ -1201,14 +1225,15 @@ class Collection:
         compression spectrum): per-dim min/max trained once and kept
         resident (put and delete keep the bounds, put_many drops them; a
         snapshot does not persist them), scaled-integer
-        L2 candidates over uint8 codes, exact rerank with the collection
+        L2 candidates over the 0..255 codes, exact rerank with the collection
         metric. Supported for l2/cosine collections (the candidate stage is
         an L2 proxy — exact for l2, rank-preserving on unit-norm cosine).
 
         `where` restricts the CANDIDATE stage input (exact filtering: the
         trained min/max bounds remain valid for any subset, so the shared
-        quantizer serves every predicate). One SQL text over the rows and
-        the resident code table (sq.sq_topk_sql)."""
+        quantizer serves every predicate). One SQL text and one scan over
+        the resident code table, which carries each row's columns beside
+        its codes (sq.sq_topk_sql)."""
         from vettore_spark.operators import sq as SQ
         from vettore_spark.sources.store import SqBounds
 
@@ -1220,11 +1245,11 @@ class Collection:
         q = self._prepare_query(query)
         ix = self._resident(("sq",), lambda: SqBounds.build(self._df))
         return self._sql(
-            lambda rows, codes: SQ.sq_topk_sql(
-                rows, codes, q, ix.mins, ix.maxs, k=limit, candidates=candidates,
-                restrict=where is not None, **self._topk_opts(),
+            lambda where, codes: SQ.sq_topk_sql(
+                where(codes), q, ix.mins, ix.maxs, k=limit, candidates=candidates,
+                **self._topk_opts(),
             ),
-            where, rows=(None, self.df), codes=(("sq",), ix.codes(self._df)),
+            where, codes=(("sq",), ix.codes(self._df)),
         )
 
     def hybrid_search(self, query: list[float], *, generators: list[str] | None = None,
@@ -1427,7 +1452,8 @@ class Collection:
         # first search, trading a rebuild for silent wrong results
         for kind, ent in index_entries:
             ix = kind.load(
-                spark, os.path.join(path, f"index_{kind.KIND}", ent["dir"]), ent
+                spark, os.path.join(path, f"index_{kind.KIND}", ent["dir"]), ent,
+                out.df,
             )
             if ix is None:
                 warnings.warn(

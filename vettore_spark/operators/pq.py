@@ -13,15 +13,18 @@ Spark shape (100 TB):
 - Encoding is one Arrow-batched pass over the collection (a GEMM per
   subspace against the broadcast codebook); the code table is the
   persisted index (plans/cache.py residency model) at ~m bytes/row.
-- ADC search never touches full vectors: per query a [m x n_codes] LUT of
-  squared sub-distances, and each row's distance is m table lookups — the
-  scan is bandwidth-bound on the code table, not the vectors. A query
-  batch builds its LUTs inside each Arrow task, and a local per-partition
-  top-k bounds the shuffle at O(queries x k x partitions); a single query
-  ships its LUT as a literal and runs as one JVM top-k.
-- Exact rerank of the top candidates re-joins the full vectors by id
-  (broadcast hash join on the small candidate set), the same two-stage
-  shape as `quantized_search` (reference collection.ex:263-295).
+- ADC scoring never touches full vectors: per query a [m x n_codes] LUT
+  of squared sub-distances, and each row's distance is m table lookups.
+  A query batch builds its LUTs inside each Arrow task, and a local
+  per-partition top-k bounds the shuffle at O(queries x k x partitions);
+  a single query ships its LUT as a literal and runs as one JVM top-k.
+- Exact rerank of the top candidates: `pq_search` re-joins the full
+  vectors by id (broadcast hash join on the small candidate set), the
+  same two-stage shape as `quantized_search` (reference
+  collection.ex:263-295). A Collection's resident code table carries each
+  row's columns beside its codes instead, so one query's candidates bring
+  their vectors into the rerank within one scan (`adc_key_sql`,
+  search.two_stage_sql).
 
 Training is deterministic: fixed seed, ties to the lowest code index, so
 rebuilds on any cluster produce byte-identical code tables (the
@@ -94,10 +97,10 @@ def _margin_prune(d: np.ndarray, kk: int, margin: float) -> np.ndarray:
     return np.flatnonzero(d <= kth + margin)
 
 
-def _adc_key(round_digits: int | None) -> str:
-    """ADC rank key (SQL text): the distance, rounded to `round_digits`
+def _adc_key(round_digits: int | None, distance: str = "distance") -> str:
+    """ADC rank key (SQL text): the `distance`, rounded to `round_digits`
     when given."""
-    return "distance" if round_digits is None else f"round(distance, {round_digits})"
+    return distance if round_digits is None else f"round({distance}, {round_digits})"
 
 
 def pq_train_kmeans(
@@ -167,9 +170,11 @@ def pq_encode(
     *,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
+    cols: list[str] | None = None,
 ) -> DataFrame:
     """Encode every row to its (id, codes array<int>) PQ representation —
-    the persisted compressed index. One Arrow pass, no shuffle.
+    the persisted compressed index. One Arrow pass, no shuffle. `cols`
+    lists the columns of `coll` kept before `codes` (default: the id).
 
     The codebooks ride the task closure (m*n_codes*dsub floats, ~131 KB
     at the defaults) rather than an explicit SparkContext broadcast: a
@@ -184,7 +189,7 @@ def pq_encode(
         codes = _encode_batch(mat, codebooks)
         return pd.Series(list(codes))
 
-    return coll.select(id_col, codes_of(F.col(vector_col)).alias("codes"))
+    return coll.select(*(cols or [id_col]), codes_of(F.col(vector_col)).alias("codes"))
 
 
 def _adc_luts(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
@@ -250,17 +255,12 @@ def _adc_distance_sql(lut: np.ndarray, codes_col: str) -> str:
     )
 
 
-def adc_topk_sql(
-    rel: str, lut: np.ndarray, k: int, *, round_digits: int | None = 5,
-    id_col: str = "id", codes_col: str = "codes",
+def adc_key_sql(
+    lut: np.ndarray, *, round_digits: int | None = 5, codes_col: str = "codes"
 ) -> str:
-    """The ids of one query's ADC top-k over the code table `rel`, as SQL
-    text (`_adc_topk_one`'s order: rounded distance, then id)."""
-    return (
-        f"SELECT {id_col} FROM (SELECT {id_col}, {_adc_distance_sql(lut, codes_col)} "
-        f"AS distance FROM {rel}) ORDER BY "
-        f"{S.rank_order_sql(_adc_key(round_digits), id_col)} LIMIT {k}"
-    )
+    """One query's ADC rank key of a code row as SQL text: its
+    approximate L2, rounded as `_adc_topk_one` ranks it."""
+    return _adc_key(round_digits, _adc_distance_sql(lut, codes_col))
 
 
 def pq_adc_topk(

@@ -17,7 +17,9 @@ Physical strategy notes (100 TB design):
   collection and takes per-query partial top-k via window group-limit pushdown
   (rank <= k is pushed below the shuffle since Spark 3.x).
 - Candidate joins (rerank stages) are broadcast semi-joins of small
-  candidate id-sets against the collection.
+  candidate id-sets against the collection; a Collection's single-query
+  two-stage request carries the candidates' vectors instead, one scan
+  and one job (`two_stage_sql`).
 - Every top-k operator ranks by ONE order, `rank_order` (rank key asc NULLS
   LAST, then id); partial top-k per partition merge through one per-query
   window, `rank_per_query` — the partition-local-then-global shape.
@@ -137,45 +139,63 @@ def _scored_rows(
 
 def topk_sql(
     rel: str, query: list[float], *, metric: str, k: int, score_mode: str = "raw",
-    pre_normalized: bool = True, extra_cols: tuple[str, ...] = (),
+    pre_normalized: bool = True, extra_cols: tuple[str, ...] = (), pinned: bool = False,
 ) -> str:
     """`flat_topk` as one SQL text over the relation `rel` (id, vector,
-    extra_cols...): (id, *extra_cols, score, distance), best k first."""
+    extra_cols...): (id, *extra_cols, score, distance), best k first.
+    `pinned` carries the scoring projection's `_pin` into the ORDER BY,
+    after the unique id (the order is unchanged), so the projection stays
+    where it is when `rel` ends in a LIMIT (`two_stage_sql`)."""
     metric = K.canonical_metric(metric)
     raw = K.raw_metric.sql(
         metric, "vector", K.array_lit_sql(query), pre_normalized=pre_normalized
     )
     keep = ["id", *extra_cols]
     stage, scored = _score_exprs(raw, keep, metric=metric, score_mode=score_mode)
+    pin = ", _pin" if pinned else ""
     return (
-        f"SELECT {', '.join(keep)}, score, distance FROM (SELECT {', '.join(scored)} "
-        f"FROM (SELECT {', '.join(stage)} FROM {rel}) "
-        f"ORDER BY {rank_order_sql('_rank', 'id')} LIMIT {k})"
+        f"SELECT {', '.join(keep)}, score, distance FROM (SELECT {', '.join(scored)}"
+        f"{pin} FROM (SELECT {', '.join(stage)} FROM {rel}) "
+        f"ORDER BY {rank_order_sql('_rank', 'id')}{pin} LIMIT {k})"
     )
 
 
-def rerank_sql(rel: str, cand: str, query: list[float], **topk) -> str:
-    """`exact_rerank` as one SQL text: the rows of `rel` whose id the
-    candidate query `cand` returns (broadcast semi-join), by `topk_sql`."""
-    pruned = (
-        f"(SELECT /*+ BROADCAST(c) */ r.* FROM {rel} r "
-        f"LEFT SEMI JOIN (SELECT DISTINCT id FROM ({cand})) c ON r.id = c.id)"
+def two_stage_sql(
+    rel: str, proxy: str, query: list[float], *, candidates: int, k: int,
+    survivors=None, **topk,
+) -> str:
+    """One query's two-stage search as one SQL text over the relation
+    `rel` (id, vector, ...): the `candidates` rows first by the
+    approximate key `proxy` (SQL text over rel's columns, `rank_order`),
+    `survivors(relation)` of them when given (a filter over the
+    candidates, which carry rel's columns and `_proxy`), then the exact
+    top k of those by `topk_sql`: (id, score, distance).
+
+    One scan and one Spark job: the candidate cut plans as a non-root
+    TakeOrderedAndProject, whose single-partition exchange runs inside
+    the job, and the exact kernel is a projection above it, so only the
+    candidates are scored. That projection is `pinned`: Catalyst pushes a
+    deterministic projection below a LIMIT (PushProjectionThroughLimit),
+    which would score every row, and the pin survives ColumnPruning only
+    while the final ORDER BY reads it."""
+    cand = (
+        f"(SELECT * FROM (SELECT *, {proxy} AS _proxy FROM {rel}) "
+        f"ORDER BY {rank_order_sql('_proxy', 'id')} LIMIT {candidates})"
     )
-    return topk_sql(pruned, query, **topk)
+    if survivors is not None:
+        cand = survivors(cand)
+    return topk_sql(cand, query, k=k, pinned=True, **topk)
 
 
 def quantized_search_sql(
     rel: str, query: list[float], *, dims: int, k: int,
-    candidates: int | None = None, **rerank,
+    candidates: int | None = None, **topk,
 ) -> str:
-    """`quantized_search` as one SQL text over the relation `rel`."""
+    """`quantized_search` as one SQL text over the relation `rel`: packed
+    Hamming to the query's sign bits is the `two_stage_sql` proxy."""
     c = candidates if candidates is not None else max(k * 10, k)
     ham = K.packed_hamming.sql("binary_vector", _query_bits_sql(query), dims)
-    cand = (
-        f"SELECT id FROM (SELECT id, {ham} AS _rank FROM {rel} "
-        f"ORDER BY {rank_order_sql('_rank', 'id')} LIMIT {c})"
-    )
-    return rerank_sql(rel, cand, query, k=k, **rerank)
+    return two_stage_sql(rel, ham, query, candidates=c, k=k, **topk)
 
 
 def rerank_pairs(

@@ -3,21 +3,27 @@ uint8 encoding, compressed-domain L2 candidate generation, exact rerank.
 
 The third compression point on the reference's quantization spectrum —
 between sign-bit binary (kernels.compress_sign_bits, vettore's
-compress_sign_bits path) and product quantization (operators/pq.py): 4×
-smaller than f32 with far less distortion than 1-bit codes, the standard
-"SQ8" mode of vector stores.
+compress_sign_bits path) and product quantization (operators/pq.py): 256
+levels per dimension, far less distortion than 1-bit codes, the standard
+"SQ8" mode of vector stores. The codes here are not stored compressed:
+they are `array<double>` (8 B per dimension, twice an f32 vector), since
+the distance fold consumes doubles directly; a writer would cast them to
+tinyint (1 B per dimension).
 
 Scale design (100 TB):
 - Training is one map-side-combinable aggregate: posexplode to (dim, x) and
   min/max per dim — 64 groups regardless of corpus size; the (dim, lo, hi)
   table is driver-resident by construction (dims rows).
 - Encoding is a per-row array expression over broadcast literal params — a
-  narrow map; codes persist alongside the collection like the sign-bit
-  column (ingest-time derivation, SURVEY §2 S2).
-- Search scans codes only (4× less I/O than f32), computes the scaled
-  integer L2 in fixed dim order, and TakeOrderedAndProject keeps the
-  exchange at candidates×partitions rows; the exact rerank hydrates full
-  vectors for the candidate ids via broadcast semi-join (search.exact_rerank).
+  narrow map; the code table (the rows plus `_codes`) persists beside the
+  collection like the sign-bit column (ingest-time derivation, SURVEY §2
+  S2).
+- Search computes the scaled integer L2 in fixed dim order, and
+  TakeOrderedAndProject keeps the exchange at candidates×partitions rows.
+  A Collection request reads the code table once: the candidates carry
+  their vectors into the exact rerank (`sq_topk_sql`,
+  search.two_stage_sql); the DataFrame operator `sq_topk` hydrates them
+  from the rows by broadcast semi-join (search.exact_rerank).
 
 Determinism contract (mirrors the DuckDB oracle bit-for-bit): code_i =
 clamp(floor((x_i − lo_i)/scale_i + 0.5), 0, 255) computed in f64 with
@@ -131,10 +137,10 @@ def sq_topk(
     resident via the plans/cache registry (the pq_search pattern): the
     per-dim zip_with encode chain is the expensive part of the scan, and
     re-evaluating it from full vectors on every search made each call
-    cost MORE than an exact scan — the opposite of the module's contract.
-    Searches re-scan the persisted codes and pay only the distance fold;
-    mutation owners invalidate through plans.cache like every derived
-    index."""
+    cost MORE than an exact scan. Searches re-scan the persisted table and
+    pay only the distance fold; the codes are array<double>, so that scan
+    reads more bytes than the f32 vectors, not fewer. Mutation owners
+    invalidate through plans.cache like every derived index."""
     scales = sq_params(mins, maxs)
     qc = sq_encode_query(query, mins, maxs)
     codes_df = sq_codes(coll, mins, maxs, id_col=id_col, vector_col=vector_col)
@@ -166,15 +172,15 @@ def sq_codes(
     coll: DataFrame, mins: list[float], maxs: list[float], *,
     id_col: str = "id", vector_col: str = "vector",
 ) -> DataFrame:
-    """(id, _codes) code table of `coll`, persisted once per (collection,
-    mins, maxs) through the plans/cache registry."""
+    """The code table of `coll`: its rows with their `_codes`, persisted
+    once per (collection, mins, maxs) through the plans/cache registry."""
     from vettore_spark.plans.cache import cached_persist
 
     return cached_persist(
         coll,
         ("sq_codes", id_col, vector_col, tuple(mins), tuple(maxs)),
         lambda s: s.select(
-            F.col(id_col),
+            "*",
             sq_encode(F.col(vector_col), mins, maxs).alias("_codes"),
             pin(s),
         ),
@@ -189,16 +195,17 @@ def _d2_sql(qc: list[float], scales: list[float]) -> str:
 
 
 def sq_topk_sql(
-    rel: str, codes: str, query: list[float], mins: list[float], maxs: list[float],
-    *, k: int, candidates: int, restrict: bool = False, **rerank,
+    codes: str, query: list[float], mins: list[float], maxs: list[float],
+    *, k: int, candidates: int, **topk,
 ) -> str:
-    """One query's `sq_topk` as one SQL text over the rows `rel` and the
-    code table `codes` of every row (`restrict`: `rel` is a filtered
-    subset, whose ids the candidate stage keeps)."""
+    """One query's `sq_topk` as one SQL text over the code table `codes`
+    (rows with their `_codes`, `sq_codes`): `search.two_stage_sql` with
+    the scaled-integer L2 as its proxy. A row whose codes are NULL never
+    survives: it ranks last, so it only fills slots no coded row takes,
+    and dropping it after the cut equals `sq_topk`'s drop before it."""
     d2 = _d2_sql(sq_encode_query(query, mins, maxs), sq_params(mins, maxs))
-    src = f"{codes} c LEFT SEMI JOIN {rel} r ON c.id = r.id" if restrict else codes
-    cand = (
-        f"SELECT id FROM (SELECT id, {d2} AS _d2 FROM {src}) WHERE _d2 IS NOT NULL "
-        f"ORDER BY {S.rank_order_sql('_d2', 'id')} LIMIT {candidates}"
+    return S.two_stage_sql(
+        codes, d2, query, candidates=candidates, k=k,
+        survivors=lambda cand: f"(SELECT * FROM {cand} WHERE _proxy IS NOT NULL)",
+        **topk,
     )
-    return S.rerank_sql(rel, cand, query, k=k, **rerank)

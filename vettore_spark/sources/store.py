@@ -283,11 +283,11 @@ class _Resident:
         return ent
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str, ent: dict):
+    def load(cls, spark: SparkSession, path: str, ent: dict, rows: DataFrame):
         """Read the index tables under `path`, verifying each against the
         manifest entry (the data-dir checksum does not cover index dirs);
         None when any table fails, so a tampered index is never
-        installed."""
+        installed. `rows` are the collection's loaded rows."""
         tables = {}
         for name, (rows_f, ck_f) in cls.TABLES.items():
             df = spark.read.parquet(os.path.join(path, name) if name else path)
@@ -295,23 +295,26 @@ class _Resident:
             if ent.get(rows_f) not in (None, n) or ent.get(ck_f) not in (None, ck):
                 return None
             tables[name] = df
-        return cls._restore(tables, ent)
+        return cls._restore(tables, ent, rows)
 
 
 class PqIndex(_Resident):
     """Product-quantization index backend (Index protocol): `build` trains
     deterministic codebooks on a driver-collected sample (sorted by id —
-    reproducible) and encodes the collection into a persisted code table;
-    `candidates` ADC-scans the compressed domain for the top n*factor ids
-    and semi-joins them back (exact rerank happens at the operator layer,
+    reproducible) and encodes the collection into a persisted code table,
+    which carries each row's columns beside its `codes`; `candidates`
+    ADC-scans the compressed domain for the top n*factor ids and
+    semi-joins them back (exact rerank happens at the operator layer,
     same two-stage contract as LshIndex).
 
     As a Collection resident index it is built with `candidates_factor=1`
-    and searched with the full fetch depth as `n`, so a search never
-    writes index state; put returns a copy with one code row appended,
-    put_many drops it, delete returns a copy with its code row
-    tombstoned, and a snapshot persists the codebooks (manifest) and the
-    code table."""
+    and searched with the full fetch depth, so a search never writes
+    index state: one request is one scan of the code table, whose
+    candidates bring their vectors and `where` columns into the exact
+    rerank (`proxy_sql`, search.two_stage_sql). put returns a copy with
+    the stored row appended, put_many drops it, delete returns a copy
+    with the row tombstoned, and a snapshot persists the codebooks
+    (manifest) and the (id, codes) table; a load re-attaches the rows."""
 
     KIND = "pq"
     MANIFEST = "_pq_indexes"
@@ -361,22 +364,24 @@ class PqIndex(_Resident):
         self._books = PQ.pq_train_kmeans(
             sample, m=self.m, n_codes=n_codes, iters=self.iters
         )
-        # registry-managed persist (LRU + explicit unpersist), keyed the same
-        # way as pq_search's code table so the two share one materialization
+        # registry-managed persist (LRU + explicit unpersist)
         books = self._books
         self._codes = cached_persist(
             coll,
-            ("pq_codes", "id", "vector", "l2", hash(books.tobytes())),
-            lambda s: PQ.pq_encode(s, books, id_col="id", vector_col="vector"),
+            ("pq_rows", "id", "vector", hash(books.tobytes())),
+            lambda s: PQ.pq_encode(
+                s, books, id_col="id", vector_col="vector", cols=s.columns
+            ),
         )
         return self
 
-    def insert(self, id_, vector) -> "PqIndex":
+    def insert(self, id_, vector, extras: dict | None = None) -> "PqIndex":
         """Incremental index INSERT: encode the ONE new vector with the
         RESIDENT codebooks (driver-side `_encode_batch` on a 1-row matrix
         — bit-identical to the build path's Arrow encoder) and return a
-        copy whose code table has the row appended; this index is left as
-        it was, so a search holding it never sees a half-patched one. No
+        copy whose code table has the row appended, its other columns
+        from `extras` (NULL when absent); this index is left as it was,
+        so a search holding it never sees a half-patched one. No
         re-train — the standard PQ maintenance contract (codebook
         distortion grows slowly; periodic re-train, immediate code
         append), mirroring `ann.ivf_insert` and the HNSW one-shard patch."""
@@ -390,18 +395,18 @@ class PqIndex(_Resident):
         code = _encode_batch(
             np.asarray([list(vector)], dtype=np.float64), self._books
         )[0]
+        vals = {
+            **(extras or {}), "id": id_,
+            "vector": [float(x) for x in vector], "codes": [int(c) for c in code],
+        }
+        given = [f for f in self._codes.schema if f.name in vals]
         row = spark.createDataFrame(
-            [(id_, [int(c) for c in code])],
-            T.StructType(
-                [
-                    T.StructField("id", self._codes.schema["id"].dataType),
-                    T.StructField("_c", T.ArrayType(T.IntegerType())),
-                ]
-            ),
-        ).select(
-            "id",
-            F.col("_c").cast(self._codes.schema["codes"].dataType).alias("codes"),
-        )
+            [tuple(vals[f.name] for f in given)],
+            T.StructType([T.StructField(f.name, f.dataType) for f in given]),
+        ).select(*(
+            f.name if f.name in vals else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in self._codes.schema
+        ))
         codes = self._codes.unionByName(row)
         # lineage ladder (put_many's pattern): N raw single-row unions
         # would build an N-deep tree that every ADC scan re-analyzes —
@@ -426,8 +431,8 @@ class PqIndex(_Resident):
         return out
 
     def put(self, row: dict) -> "PqIndex":
-        """A committed one-row put: encode its stored vector (insert)."""
-        return self.insert(row["id"], row["vector"])
+        """A committed one-row put: append the stored row (insert)."""
+        return self.insert(row["id"], row["vector"], row)
 
     def put_many(self, batch: DataFrame, rows) -> None:
         """A committed batch drops the index (re-trained at next search)."""
@@ -436,26 +441,29 @@ class PqIndex(_Resident):
     def _tables(self) -> dict[str, DataFrame] | None:
         if self._books is None or self._codes is None:
             return None
-        return {"": self._codes}
+        return {"": self._codes.select("id", "codes")}
 
     def _manifest(self) -> dict:
         return {"books": self._books.tolist()}
 
     @classmethod
-    def _restore(cls, tables: dict, ent: dict) -> "PqIndex":
+    def _restore(cls, tables: dict, ent: dict, rows: DataFrame) -> "PqIndex":
+        """The snapshot holds (id, codes): the loaded rows' columns are
+        joined back on by id, and the table is cut at its first read."""
         m, n_codes, iters = ent["key"]
         idx = cls(m=m, n_codes=n_codes, iters=iters, candidates_factor=1)
         idx._books = np.asarray(ent["books"], dtype=np.float64)
-        idx._codes = tables[""]
+        idx._codes = durable_cut(rows.join(tables[""], "id"), eager=False)
         return idx
 
-    def candidates_sql(self, codes: str, query: list[float], n: int) -> str:
-        """`candidates`' ADC stage as SQL text over the code table view
-        `codes`: the ids of the top n*factor."""
+    def proxy_sql(self, query: list[float]) -> str:
+        """The ADC rank key of `query` as SQL text over the code table's
+        `codes` (the `two_stage_sql` proxy of a Collection request)."""
         from vettore_spark.operators import pq as PQ
 
-        lut = PQ._adc_luts(np.asarray([query], dtype=np.float64), self._books)[0]
-        return PQ.adc_topk_sql(codes, lut, n * self.factor)
+        return PQ.adc_key_sql(
+            PQ._adc_luts(np.asarray([query], dtype=np.float64), self._books)[0]
+        )
 
     def candidates(self, coll: DataFrame, query: list[float], n: int) -> DataFrame:
         if self._books is None:
@@ -540,7 +548,7 @@ class HnswShards(_Resident):
         return {"shard_ids": self.shard_ids}
 
     @classmethod
-    def _restore(cls, tables: dict, ent: dict) -> "HnswShards":
+    def _restore(cls, tables: dict, ent: dict, rows: DataFrame) -> "HnswShards":
         return cls(tables[""], list(ent["shard_ids"]))
 
 
@@ -607,7 +615,7 @@ class IvfFile(_Resident):
         return {"centroids": self.centroids, "assigned": self.assigned}
 
     @classmethod
-    def _restore(cls, tables: dict, ent: dict) -> "IvfFile":
+    def _restore(cls, tables: dict, ent: dict, rows: DataFrame) -> "IvfFile":
         return cls(tables["centroids"], tables["assigned"])
 
 
@@ -633,8 +641,9 @@ class SqBounds(_Resident):
         return cls(*SQ.sq_train(rows, vector_col="vector"))
 
     def codes(self, rows: DataFrame) -> DataFrame:
-        """The code table of `rows` (sq.sq_codes), derived at the first
-        search over each version of the rows (every write rebinds them)."""
+        """The code table of `rows` (sq.sq_codes: the rows with their
+        `_codes`), derived at the first search over each version of the
+        rows (every write rebinds them)."""
         from vettore_spark.operators import sq as SQ
 
         if self._codes[0] is not rows:
