@@ -213,45 +213,6 @@ def test_hnsw_search_default_id_type_stringifies_long_ids(spark):
     PC.clear()
 
 
-def test_hnsw_insert_verify_target_raises_on_stale_list(spark):
-    """r11 review: the lazy single-row insert silently LOSES the vector
-    when a caller-supplied shard_ids list routes to a shard absent from
-    the table; verify_target=True opts into the siblings' presence check."""
-    import pytest as _pytest
-
-    from vettore_spark.operators.hnsw import (
-        HnswParams, build_graph_shards, fnv1a64, insert_into_graph_shards,
-    )
-    from vettore_spark.plans import cache as PC
-
-    PC.clear()
-    df = spark.createDataFrame(
-        [(str(i), [float(i), 0.0]) for i in range(10)],
-        "id string, vector array<double>",
-    )
-    shards = build_graph_shards(df, metric="l2", params=HnswParams())
-    real = sorted(r["shard_id"] for r in shards.select("shard_id").collect())
-    # a fake list routing our id to a shard id NOT in the table
-    fake = [max(real) + 1 + i for i in range(4)]
-    assert fnv1a64(b"new") % len(fake) is not None  # routing is defined
-    with _pytest.raises(ValueError, match="stale"):
-        insert_into_graph_shards(
-            shards, "new", [1.0, 1.0], shard_ids=fake, verify_target=True
-        )
-    # valid list + verify_target passes and the insert lands
-    patched = insert_into_graph_shards(
-        shards, "new", [99.0, 0.0], shard_ids=real, verify_target=True
-    )
-    import pickle
-
-    found = any(
-        "new" in pickle.loads(bytes(r["shard"])).ext_ids
-        for r in patched.collect()
-    )
-    assert found, "insert lost despite valid shard_ids"
-    PC.clear()
-
-
 def test_pq_margin_prune_superset_under_either_rounding():
     """r11 review: the local PQ prune used np.round (half-to-even) keys
     while the global merge ranks with Spark's decimal HALF_UP — the two

@@ -262,31 +262,6 @@ def test_blocked_knn_rejects_bands_past_vector_end(spark):
         blocked_knn_topk(df, k=1, n_bits=3, n_bands=2)
 
 
-def test_hnsw_batched_insert_raises_on_stale_shard_ids(spark):
-    """A routed target absent from the shard table must raise, not
-    silently drop the insert (build_graph_shards emits no row for an
-    empty partition, so range(num_partitions) is not a valid id list)."""
-    from vettore_spark.operators import hnsw as H
-
-    rows = [(str(i), [float(i), 0.0]) for i in range(8)]
-    df = spark.createDataFrame(rows, "id string, vector array<double>")
-    shards = H.build_graph_shards(
-        df, metric="l2", id_col="id", vector_col="vector", num_partitions=2
-    )
-    real = sorted(r["shard_id"] for r in shards.select("shard_id").collect())
-    # poison the list with ids that cannot be in the table
-    stale = real + [max(real) + 7, max(real) + 9]
-    batch = [(f"new{i}", [9.0 + i, 1.0]) for i in range(8)]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="stale"):
-        # with enough rows some route to the phantom shards
-        H.insert_many_into_graph_shards(shards, batch, shard_ids=stale)
-    # the honest list still works
-    out = H.insert_many_into_graph_shards(shards, batch, shard_ids=real)
-    assert out.count() == len(real)
-
-
 def test_minhash_bands_validation(spark):
     """bands > num_perm (empty slices -> one global bucket) and
     non-divisible configs (silently ignored permutations) must raise."""

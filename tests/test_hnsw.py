@@ -259,15 +259,17 @@ def test_shard_delete_without_rebuild(spark):
     assert len(blobs_a & blobs_b) >= len(blobs_a) - 1
 
 
-def test_insert_into_graph_shards_patches_one_shard(spark):
-    """Incremental insert: the new id becomes searchable without any shard
-    rebuild; exactly one shard blob changes; other shards byte-identical."""
+def test_one_row_batch_patches_one_shard(spark):
+    """Incremental insert of a one-row batch: the new id becomes
+    searchable without any shard rebuild; exactly one shard blob changes,
+    the others pass through byte-identical, and the patched table keeps
+    the table's partition count."""
     import numpy as np
 
     from vettore_spark.operators.hnsw import (
         HnswParams,
         build_graph_shards,
-        insert_into_graph_shards,
+        insert_many_into_graph_shards,
         search_graph_shards,
     )
     from pyspark.sql import types as T
@@ -284,7 +286,10 @@ def test_insert_into_graph_shards_patches_one_shard(spark):
     )
     before = {r["shard_id"]: bytes(r["shard"]) for r in shards.collect()}
 
-    patched = insert_into_graph_shards(shards, 7, [float(x) for x in vecs[7]])
+    patched = insert_many_into_graph_shards(
+        shards, [(7, [float(x) for x in vecs[7]])]
+    )
+    assert patched.rdd.getNumPartitions() == shards.rdd.getNumPartitions()
     after = {r["shard_id"]: bytes(r["shard"]) for r in patched.collect()}
     assert set(before) == set(after)
     changed = [sid for sid in before if before[sid] != after[sid]]
@@ -295,6 +300,50 @@ def test_insert_into_graph_shards_patches_one_shard(spark):
         ef_search=10_000, id_col="vec_id", id_type=T.LongType(),
     ).collect()
     assert hits[0]["vec_id"] == 7  # the inserted vector is its own top hit
+
+
+@pytest.mark.parametrize("path", ["one_row", "list", "frame"])
+def test_stale_shard_ids_raise(spark, path):
+    """A caller-supplied shard_ids list that routes a row to a shard
+    absent from the table raises instead of losing the row
+    (build_graph_shards emits no row for an empty partition, so
+    range(num_partitions) is not a valid list); the table's own list
+    patches. The list path raises ValueError before any patch is built;
+    the DataFrame path, which never collects the batch, fails the
+    patch's job."""
+    import pickle
+
+    from vettore_spark.operators import hnsw as H
+
+    df = spark.createDataFrame(
+        [(str(i), [float(i), 0.0]) for i in range(10)],
+        "id string, vector array<double>",
+    )
+    shards = H.build_graph_shards(df, metric="l2", num_partitions=2)
+    real = sorted(r["shard_id"] for r in shards.select("shard_id").collect())
+    n = 1 if path == "one_row" else 8
+    batch = [(f"new{i}", [99.0 + i, 1.0]) for i in range(n)]
+    # one row: a list naming only absent shards routes it to one of them;
+    # a batch: real ids plus two phantoms route some rows to a phantom
+    phantoms = [max(real) + 7, max(real) + 9]
+    stale = phantoms if path == "one_row" else real + phantoms
+
+    def insert(sids):
+        if path == "frame":
+            rows = spark.createDataFrame(batch, "id string, vector array<double>")
+            return H.insert_df_into_graph_shards(shards, rows, shard_ids=sids)
+        return H.insert_many_into_graph_shards(shards, batch, shard_ids=sids)
+
+    if path == "frame":
+        with pytest.raises(Exception, match="stale"):
+            insert(stale).collect()
+    else:
+        with pytest.raises(ValueError, match="stale"):
+            insert(stale)
+    patched = insert(real).collect()
+    assert len(patched) == len(real)
+    inserted = set().union(*(pickle.loads(bytes(r["shard"])).ext_ids for r in patched))
+    assert {rid for rid, _ in batch} <= inserted
 
 
 def test_collection_hnsw_incremental_put_delete(spark):

@@ -20,12 +20,13 @@ KINDS = ("hnsw", "ivf", "pq", "sq")
 # write -> (Spark jobs with all four indexes resident, outcome per kind,
 # index-maintenance calls made). "patch": the entry was replaced or its
 # table rewritten; "keep": the same object, untouched; "drop": gone. A put
-# runs as many jobs as a rejected put: its index patches run none.
+# and a list put_many run as many jobs as a rejected put: their index
+# patches run none.
 POLICY = {
     "put": (5, dict(hnsw="patch", ivf="patch", pq="patch", sq="keep"),
-            {"insert_into_graph_shards", "ivf_insert", "PqIndex.insert"}),
-    "put_many_list": (7, dict(hnsw="patch", ivf="drop", pq="drop", sq="drop"),
-                      {"insert_many_into_graph_shards"}),
+            {"_insert_rows", "ivf_insert", "PqIndex.insert"}),
+    "put_many_list": (5, dict(hnsw="patch", ivf="drop", pq="drop", sq="drop"),
+                      {"_insert_rows"}),
     "put_many_long_list": (9, dict(hnsw="patch", ivf="drop", pq="drop", sq="drop"),
                            {"insert_df_into_graph_shards"}),
     "put_many_frame": (9, dict(hnsw="patch", ivf="drop", pq="drop", sq="drop"),
@@ -85,7 +86,7 @@ def write_log(spark, tmp_path_factory):
 
         mp.setattr(owner, name, wrapped)
 
-    for name in ("insert_into_graph_shards", "insert_many_into_graph_shards",
+    for name in ("_insert_rows", "insert_many_into_graph_shards",
                  "insert_df_into_graph_shards", "delete_from_graph_shards"):
         spy(H, name, name)
     for name in ("ivf_insert", "ivf_delete"):

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from vettore_spark.functions import kernels as K
 from vettore_spark.plans.checkpoint import resident_cut, single_jvm
+from vettore_spark.plans.spread import local_frame
 
 EMBEDDING_SCHEMA = T.StructType(
     [
@@ -405,7 +406,7 @@ class Collection:
                         r.get("metadata"),
                     )
                 )
-            incoming = self.spark.createDataFrame(data, _INGEST_SCHEMA)
+            incoming = local_frame(self.spark, data, _INGEST_SCHEMA)
 
         # id <-> value fallback (collection.ex:1069-1075). A row with
         # neither gets id '' — rejected below as an empty id — so the

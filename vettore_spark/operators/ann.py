@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from vettore_spark.functions import kernels as K
 from vettore_spark.operators import search as S
-from vettore_spark.plans.spread import pin_sql
+from vettore_spark.plans.spread import pin_sql, row_like
 
 
 def _matrix(pdf_col: pd.Series) -> np.ndarray:
@@ -763,7 +763,7 @@ def ivf_insert(
     first minimum over the codebook's id order) and append a single row
     to the persisted inverted file. No re-train, no re-assignment of any
     existing row — the `ivf_delete` mirror and the inverted-file analog
-    of HNSW's one-shard insert patch (insert_into_graph_shards; reference
+    of HNSW's insert patch (insert_many_into_graph_shards; reference
     insert-time maintenance, native/vettore/src/hnsw.rs:152-245).
 
     `extras` supplies driver-side values for additional columns of the
@@ -784,28 +784,11 @@ def ivf_insert(
         raise ValueError("ivf_insert: vector contains non-finite values")
     n = _l2norm_rows(v.reshape(1, -1))[0]
     cell = int(cids[int(np.argmin(1.0 - n @ cmat.T))])
-    fields = [
-        T.StructField(id_col, assigned.schema[id_col].dataType),
-        T.StructField("_v", T.ArrayType(T.DoubleType())),
-        T.StructField("_cell", assigned.schema["_cell"].dataType),
-    ]
-    vals: list = [external_id, [float(x) for x in v], cell]
-    extra_names = []
-    for c, val in (extras or {}).items():
-        if c in (id_col, vector_col, "_cell"):
-            continue
-        fields.append(T.StructField(c, assigned.schema[c].dataType))
-        vals.append(val)
-        extra_names.append(c)
-    row = spark.createDataFrame(
-        [tuple(vals)], T.StructType(fields)
-    ).select(
-        id_col,
-        F.col("_v").cast(assigned.schema[vector_col].dataType).alias(vector_col),
-        "_cell",
-        *extra_names,
-    )
-    return assigned.unionByName(row, allowMissingColumns=True)
+    row = row_like(assigned, {
+        **(extras or {}), id_col: external_id,
+        vector_col: [float(x) for x in v], "_cell": cell,
+    })
+    return assigned.unionByName(row)
 
 
 def ivf_delete(

@@ -331,7 +331,7 @@ def build_graph_shards(
             for i in order:
                 g.insert(rows_id[i], rows_vec[i])
             # shard_id = physical partition id: the stable routing key for
-            # incremental maintenance (insert_into_graph_shards)
+            # incremental maintenance (insert_many_into_graph_shards)
             pid = TaskContext.get().partitionId()
             yield pd.DataFrame({"shard_id": [pid], "shard": [pickle.dumps(g)]})
 
@@ -369,73 +369,57 @@ def delete_from_graph_shards(shards: DataFrame, external_id) -> DataFrame:
     return shards.mapInPandas(run, "shard_id long, shard binary")
 
 
-def insert_into_graph_shards(
-    shards: DataFrame, external_id, vector, *,
-    shard_ids: list[int] | None = None, verify_target: bool = False,
-) -> DataFrame:
-    """Incremental index maintenance for put: insert the new vector into
-    exactly ONE shard's graph (HnswGraph.insert — the reference's
-    insert-time graph maintenance, hnsw.rs:152-245) and pass every other
-    shard through untouched. The target shard is chosen deterministically
-    by FNV-1a(external_id) over the existing shard ids, so repeated
-    maintenance streams spread inserts uniformly without a global view.
-
-    Search correctness does not depend on the routing (search scans every
-    shard and merges by (rank, id)); routing only balances growth. Caller
-    contract: `external_id` must not already exist in the index (Collection
-    rejects duplicate ids at put time).
-
-    Pass `shard_ids` (the known shard-id list, e.g. collected once at
-    build time) to avoid the routing collect — without it every insert
-    launches a Spark job, which on a lazily-checkpointed patch chain
-    forces materialization before the put returns; with shard_ids omitted
-    the list comes from the CURRENT table, so the routed target is
-    present by construction. When you DO pass it, it MUST be the current
-    table's exact shard-id set: the lazy patch cannot verify membership
-    without the job this parameter exists to avoid, so an id routed to a
-    shard absent from the table is silently LOST (note build_graph_shards
-    emits no row for an empty partition — range(num_partitions) is NOT a
-    valid list; the batched insert_many_into_graph_shards and the
-    DataFrame variant both verify and raise on stale lists). Callers who
-    hold a long-lived list and prefer safety over laziness pass
-    `verify_target=True` to run the siblings' amortized presence check —
-    one tiny filtered distinct-collect — before the lazy patch is built."""
+def _insert_members(blob, members) -> bytes:
+    """One shard's patch, shared by both insert paths: the pickled graph
+    with `members` ((id, vector) pairs, ids new to it) inserted in
+    sorted-id order — the build path's determinism rule, so a patched
+    table is a pure function of (previous table, batch)."""
     import pickle
 
-    sids = (
-        sorted(shard_ids)
-        if shard_ids is not None
-        else sorted(r["shard_id"] for r in shards.select("shard_id").collect())
-    )
+    g: HnswGraph = pickle.loads(bytes(blob))
+    for rid, vec in sorted(members, key=lambda m: str(m[0])):
+        g.insert(rid, np.asarray(vec, dtype=np.float64))
+    return pickle.dumps(g)
+
+
+def _route_rows(
+    rows: list[tuple[object, list[float]]], shard_ids: list[int]
+) -> dict[int, list[tuple[object, np.ndarray]]]:
+    """Each row's target shard: FNV-1a(str(id)) over the sorted shard ids
+    (the rule `insert_df_into_graph_shards` computes executor-side)."""
+    sids = sorted(shard_ids)
     if not sids:
         raise ValueError("cannot insert into an empty shard table")
-    target = sids[fnv1a64(str(external_id).encode()) % len(sids)]
-    if verify_target and shard_ids is not None:
-        present = (
-            shards.filter(F.col("shard_id") == int(target))
-            .select("shard_id")
-            .limit(1)
-            .collect()
-        )
-        if not present:
-            raise ValueError(
-                f"shard_ids is stale: routed target shard {target} is not "
-                "in the shard table — collect the id list from the CURRENT "
-                "table (build_graph_shards emits no row for an empty "
-                "partition, so range(num_partitions) is NOT a valid list)"
-            )
-    vec = np.asarray(vector, dtype=np.float64)
+    routed: dict[int, list[tuple[object, np.ndarray]]] = {}
+    for rid, vec in rows:
+        t = sids[fnv1a64(str(rid).encode()) % len(sids)]
+        routed.setdefault(t, []).append((rid, np.asarray(vec, dtype=np.float64)))
+    return routed
 
+
+def _insert_rows(
+    shards: DataFrame,
+    rows: list[tuple[object, list[float]]],
+    shard_ids: list[int],
+) -> DataFrame:
+    """`insert_many_into_graph_shards` without its stale-list guard, for a
+    caller whose `shard_ids` is the table's exact id list: one narrow
+    mapInPandas over the whole shard table that runs no job and keeps its
+    partitions."""
+    routed = _route_rows(rows, shard_ids)
+    if not routed:
+        return shards
+
+    # the routed rows ride in the task closure, NOT a SparkContext
+    # broadcast: a broadcast per ingest batch is never destroyed and
+    # accumulates dead blocks for the application lifetime, while the
+    # closure is bounded by the caller's batch cap and GC'd with the plan
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = []
-            for sid, blob in zip(pdf["shard_id"], pdf["shard"]):
-                if int(sid) == target:
-                    g: HnswGraph = pickle.loads(bytes(blob))
-                    g.insert(external_id, vec)
-                    out.append(pickle.dumps(g))
-                else:
-                    out.append(blob)
+            out = [
+                _insert_members(blob, routed[int(sid)]) if int(sid) in routed else blob
+                for sid, blob in zip(pdf["shard_id"], pdf["shard"])
+            ]
             yield pd.DataFrame({"shard_id": pdf["shard_id"], "shard": out})
 
     return shards.mapInPandas(run, "shard_id long, shard binary")
@@ -447,79 +431,25 @@ def insert_many_into_graph_shards(
     *,
     shard_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Batched incremental insert: route every (id, vector) to its
-    deterministic target shard (same FNV-1a rule as the single-row
-    `insert_into_graph_shards`) and patch ALL touched shards in ONE
-    mapInPandas pass — a B-row ingest batch costs one job, not B. Rows
-    are inserted per shard in sorted-id order (the build path's
-    determinism rule), so the patched table is a pure function of
-    (previous table, batch). Caller contract as the single-row path: ids
-    must be new. Bounded-batch maintenance: the caller caps B
-    (Collection.put_many patches only driver-small batches; a corpus-
-    sized DataFrame ingest rebuilds instead — routing it would mean a
-    driver collect, the scale failure mode)."""
-    import pickle
+    """Incremental insert of a driver-small batch (one row is a one-row
+    batch): route every (id, vector) to its deterministic FNV-1a target
+    shard and insert each shard's rows into its graph (HnswGraph.insert —
+    the reference's insert-time graph maintenance, hnsw.rs:152-245) in
+    ONE narrow mapInPandas over the table, whose untouched blobs pass
+    through. The result keeps the table's partitions. Caller contract:
+    ids must be new to the index (Collection rejects duplicate ids at
+    put time).
 
-    sids = (
-        sorted(shard_ids)
-        if shard_ids is not None
-        else sorted(r["shard_id"] for r in shards.select("shard_id").collect())
-    )
-    if not sids:
-        raise ValueError("cannot insert into an empty shard table")
-    by_shard: dict[int, list[tuple[object, np.ndarray]]] = {}
-    for rid, vec in rows:
-        t = sids[fnv1a64(str(rid).encode()) % len(sids)]
-        by_shard.setdefault(t, []).append(
-            (rid, np.asarray(vec, dtype=np.float64))
-        )
-    for members in by_shard.values():
-        members.sort(key=lambda m: str(m[0]))
-    # routed batch rides in the task closure (like the single-row path's
-    # captured vector), NOT a SparkContext.broadcast: a broadcast per
-    # ingest batch is never destroyed and accumulates dead blocks on the
-    # driver and every executor for the application lifetime — the closure
-    # is bounded by the caller's batch cap and is GC'd with the plan
-    routed = by_shard
-    if not routed:
-        return shards
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for sid, blob in zip(pdf["shard_id"], pdf["shard"]):
-                members = routed.get(int(sid))
-                if members:
-                    g: HnswGraph = pickle.loads(bytes(blob))
-                    for rid, vec in members:
-                        g.insert(rid, vec)
-                    out.append(pickle.dumps(g))
-                else:
-                    out.append(blob)
-            yield pd.DataFrame({"shard_id": pdf["shard_id"], "shard": out})
-
-    # only the TOUCHED shards make the JVM->Python->JVM round trip; the
-    # rest pass through as a plain JVM-side filter. A typical ingest batch
-    # touches a handful of a large shard table's rows, and shard blobs are
-    # the big payload — shipping untouched ones through Arrow per batch is
-    # pure waste (and was ~40% of the r6 hnsw_batch_insert_search cost).
-    # Routing targets are known driver-side here (by_shard keys), so the
-    # split is two isin filters over the persisted table, no extra job.
-    touched = sorted(routed)
-    # stale-shard_ids guard (the DF variant raises on this; the list path
-    # must too): a routed target absent from the TABLE — e.g. a caller
-    # passing range(num_partitions) while the build emitted no row for an
-    # empty partition — would otherwise patch nothing and silently LOSE
-    # the insert. One tiny distinct-collect over <= len(touched) rows of
-    # the persisted table, amortized across the whole batch.
-    present = {
-        r["shard_id"]
-        for r in shards.filter(F.col("shard_id").isin(touched))
-        .select("shard_id")
-        .distinct()
-        .collect()
-    }
-    missing = [t for t in touched if t not in present]
+    Search correctness does not depend on the routing (search scans every
+    shard and merges by (rank, id)); routing only balances growth.
+    `shard_ids` overrides the routing list (default: the table's own).
+    Either way one small collect reads the table's shard ids, and a row
+    routed to a shard absent from the table raises ValueError instead of
+    being lost (build_graph_shards emits no row for an empty partition,
+    so range(num_partitions) is NOT a valid list)."""
+    present = {r["shard_id"] for r in shards.select("shard_id").collect()}
+    sids = sorted(present) if shard_ids is None else shard_ids
+    missing = sorted(set(_route_rows(rows, sids)) - present)
     if missing:
         raise ValueError(
             f"shard_ids is stale: routed target shards {missing[:5]} are "
@@ -527,11 +457,7 @@ def insert_many_into_graph_shards(
             "CURRENT table (build_graph_shards emits no row for an empty "
             "partition, so range(num_partitions) is NOT a valid list)"
         )
-    patched = shards.filter(F.col("shard_id").isin(touched)).mapInPandas(
-        run, "shard_id long, shard binary"
-    )
-    untouched = shards.filter(~F.col("shard_id").isin(touched))
-    return patched.unionByName(untouched)
+    return _insert_rows(shards, rows, sids)
 
 
 def insert_df_into_graph_shards(
@@ -542,22 +468,20 @@ def insert_df_into_graph_shards(
     id_col: str = "id",
     vector_col: str = "vector",
 ) -> DataFrame:
-    """DataFrame-sized incremental insert with NO driver collect: tag each
-    new row with its deterministic FNV-1a target shard (the same routing
-    rule as the list-batch paths, computed executor-side in an Arrow
-    batch), cogroup (shards x routed rows) on shard_id, and insert each
-    shard's members in sorted-id order (the build path's determinism
-    rule). One cogroup job patches every touched shard and passes the
-    rest through untouched — a corpus-sized ingest batch no longer forces
-    a full O(n log n) shard rebuild, and the batch never rides the task
-    closure or the driver.
+    """DataFrame-sized incremental insert with NO driver collect of the
+    batch: tag each new row with its deterministic FNV-1a target shard
+    (the list path's routing rule, computed executor-side in an Arrow
+    batch), cogroup the touched shards with their routed rows on
+    shard_id, and insert each shard's members with the list path's
+    per-shard body. Untouched shards pass through, and the result keeps
+    the table's partition count. A corpus-sized ingest batch never rides
+    the task closure or the driver.
 
     `shard_ids` is required (driver-small, known at build time): routing
     must see the COMPLETE shard-id list, and deriving it from `shards`
-    here would mean the collect this function exists to avoid. Caller
-    contract as the list paths: ids must be new to the index."""
-    import pickle
-
+    here would mean a collect. Rows routed to a shard absent from the
+    table fail the patch's job (the shard_ids list is stale). Caller
+    contract as the list path: ids must be new to the index."""
     sids = sorted(shard_ids)
     if not sids:
         raise ValueError("cannot insert into an empty shard table")
@@ -626,37 +550,24 @@ def insert_df_into_graph_shards(
 
     def patch(key, shard_pdf: pd.DataFrame, rows_pdf: pd.DataFrame) -> pd.DataFrame:
         if shard_pdf.empty:
-            # routing only targets existing shard ids, so a rows-only key
+            # routing only targets listed shard ids, so a rows-only key
             # means the caller passed a stale/incomplete shard_ids list
             raise ValueError(
                 f"rows routed to unknown shard {key[0]}: shard_ids is stale"
             )
-        if rows_pdf.empty:
-            return shard_pdf
-        out = []
-        members = sorted(
-            zip(rows_pdf["_nid"], rows_pdf["_nvec"]), key=lambda m: str(m[0])
-        )
-        for blob in shard_pdf["shard"]:
-            g: HnswGraph = pickle.loads(bytes(blob))
-            for rid, vec in members:
-                g.insert(rid, np.asarray(vec, dtype=np.float64))
-            out.append(pickle.dumps(g))
-        return pd.DataFrame({"shard_id": shard_pdf["shard_id"], "shard": out})
+        members = list(zip(rows_pdf["_nid"], rows_pdf["_nvec"]))
+        return pd.DataFrame({
+            "shard_id": shard_pdf["shard_id"],
+            "shard": [_insert_members(b, members) for b in shard_pdf["shard"]],
+        })
 
-    # only TOUCHED shards enter the cogroup: the cogroup shuffles its
-    # inputs and round-trips every blob through Arrow/Python, so feeding
-    # it shards with no incoming rows ships the big payload for nothing
-    # (at scale a batch touches a sliver of the shard table). The target
-    # set is computed ONCE per call with a distinct+collect — bounded by
-    # the shard count (same scale as the shard_ids argument, NOT the
-    # batch; the no-batch-collect contract stands), one extra map+agg
-    # pass over the batch per ingest call, zero extra work per downstream
-    # action. A broadcast-join split was measured instead and rejected:
+    # only TOUCHED shards enter the cogroup: it shuffles its inputs and
+    # round-trips every blob through Arrow/Python, so feeding it shards
+    # with no incoming rows ships the big payload for nothing. The target
+    # set is one distinct+collect bounded by the shard count (not the
+    # batch). A broadcast-join split was measured instead and rejected:
     # its two join subqueries re-execute the Python routing stage on
-    # every action (3 Python round trips/action vs 1 here). Rows routed
-    # to a shard id absent from `shards` still surface as a rows-only
-    # cogroup key and raise (the stale-shard_ids guard above).
+    # every action (3 Python round trips/action vs 1 here).
     targets = sorted(
         r["shard_id"] for r in routed.select("shard_id").distinct().collect()
     )
@@ -669,7 +580,10 @@ def insert_df_into_graph_shards(
         .cogroup(routed.groupby("shard_id"))
         .applyInPandas(patch, "shard_id long, shard binary")
     )
-    return patched.unionByName(untouched)
+    # the union holds the table's partitions plus the cogroup's; a narrow
+    # coalesce merges them back, so a run of batches never widens the
+    # table (and every later scan's task count with it)
+    return patched.unionByName(untouched).coalesce(shards.rdd.getNumPartitions())
 
 
 def search_graph_shards(

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from vettore_spark.functions import kernels as K
 from vettore_spark.operators import search as S
 from vettore_spark.operators.search import exact_rerank, rank_order
+from vettore_spark.plans.cache import cached_persist
 from vettore_spark.plans.spread import pin
 
 
@@ -143,7 +144,11 @@ def sq_topk(
     invalidate through plans.cache like every derived index."""
     scales = sq_params(mins, maxs)
     qc = sq_encode_query(query, mins, maxs)
-    codes_df = sq_codes(coll, mins, maxs, id_col=id_col, vector_col=vector_col)
+    codes_df = cached_persist(
+        coll,
+        ("sq_codes", id_col, vector_col, tuple(mins), tuple(maxs)),
+        lambda s: sq_codes(s, mins, maxs, id_col=id_col, vector_col=vector_col),
+    )
     d2 = F.expr(_d2_sql(qc, scales))
     staged = codes_df.select(F.col(id_col), d2.alias("_d2"))
     cand = (
@@ -172,18 +177,12 @@ def sq_codes(
     coll: DataFrame, mins: list[float], maxs: list[float], *,
     id_col: str = "id", vector_col: str = "vector",
 ) -> DataFrame:
-    """The code table of `coll`: its rows with their `_codes`, persisted
-    once per (collection, mins, maxs) through the plans/cache registry."""
-    from vettore_spark.plans.cache import cached_persist
-
-    return cached_persist(
-        coll,
-        ("sq_codes", id_col, vector_col, tuple(mins), tuple(maxs)),
-        lambda s: s.select(
-            "*",
-            sq_encode(F.col(vector_col), mins, maxs).alias("_codes"),
-            pin(s),
-        ),
+    """The code table of `coll`: its rows with their `_codes`. Not
+    persisted: the caller owns its residency (`sq_topk` keeps it in the
+    plans/cache registry, a Collection's SqBounds holds one per rows
+    version)."""
+    return coll.select(
+        "*", sq_encode(F.col(vector_col), mins, maxs).alias("_codes"), pin(coll),
     )
 
 

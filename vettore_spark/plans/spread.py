@@ -18,8 +18,35 @@ Two caveats carried from hard-won bugs (see also dedup._shingle_base):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """`spark.createDataFrame(rows, schema)` in at most one partition per
+    row. A plain createDataFrame slices a list into `defaultParallelism`
+    partitions: one row is one full partition and three empty ones on
+    local[4], and every union with it widens the table by all four."""
+    sc = spark.sparkContext
+    slices = max(1, min(len(rows), sc.defaultParallelism))
+    return spark.createDataFrame(sc.parallelize(rows, slices), schema)
+
+
+def row_like(table: DataFrame, vals: dict) -> DataFrame:
+    """One row with `table`'s columns, in one partition, to union onto
+    it: each column named in `vals` holds that value, typed from
+    `table`'s schema, and every other column is a typed NULL."""
+    given = [f for f in table.schema if f.name in vals]
+    row = local_frame(
+        table.sparkSession,
+        [tuple(vals[f.name] for f in given)],
+        T.StructType([T.StructField(f.name, f.dataType) for f in given]),
+    )
+    return row.select(*(
+        f.name if f.name in vals else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in table.schema
+    ))
 
 
 def spread_narrow(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -2670,9 +2670,10 @@ FROM d QUALIFY rank <= 5
 
 def q_hnsw_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index INSERT under the exact oracle: build the
-    graph-shard table WITHOUT vec 0, insert it via the one-shard patch path
-    (insert_into_graph_shards — the reference's insert-time graph
-    maintenance, hnsw.rs:152-245; no rebuild), then search at full beam.
+    graph-shard table WITHOUT vec 0, insert it as a one-row batch of the
+    list path (insert_many_into_graph_shards — the reference's
+    insert-time graph maintenance, hnsw.rs:152-245; no rebuild), then
+    search at full beam.
     The patched graph must return exactly the flat scan over the FULL
     corpus — the newly inserted vector is query 0's self-match at rank 1."""
     from vettore_spark.operators import hnsw as H
@@ -2683,7 +2684,9 @@ def q_hnsw_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         params=H.HnswParams(ef_search=1_000_000),
         id_col="vec_id", vector_col="embedding", num_partitions=8,
     )
-    patched = H.insert_into_graph_shards(shards, 0, _qvec(spark, sf_dir, 0))
+    patched = H.insert_many_into_graph_shards(
+        shards, [(0, _qvec(spark, sf_dir, 0))]
+    )
     out = H.search_graph_shards(
         patched, [("q0", _qvec(spark, sf_dir))], metric="l2", k=10,
         ef_search=1_000_000, id_col="vec_id", id_type=T.LongType(),
@@ -2716,10 +2719,10 @@ def q_hnsw_batch_insert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = [(i, _qvec(spark, sf_dir, i)) for i in range(3)]
     patched = H.insert_many_into_graph_shards(shards, batch, shard_ids=sids)
     # cut between batches, exactly like the product path
-    # (sources.store.HnswShards durable_cuts each patched table):
-    # the patch operators split touched/untouched shards so untouched
-    # blobs never ride through Python, and the split's two branches must
-    # not re-execute the PREVIOUS batch's patch lineage on every action.
+    # (sources.store.HnswShards durable_cuts each patched table): the
+    # DataFrame path splits touched/untouched shards so untouched blobs
+    # never ride through Python, and the split's two branches must not
+    # re-execute the list batch's patch on every action.
     from vettore_spark.plans.checkpoint import durable_cut
 
     patched = durable_cut(patched, eager=False)

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import copy
 import os
+import threading
 from typing import Protocol, runtime_checkable
 
 import numpy as np
@@ -390,24 +391,15 @@ class PqIndex(_Resident):
         import numpy as np
 
         from vettore_spark.operators.pq import _encode_batch
+        from vettore_spark.plans.spread import row_like
 
-        spark = self._codes.sparkSession
         code = _encode_batch(
             np.asarray([list(vector)], dtype=np.float64), self._books
         )[0]
-        vals = {
+        codes = self._codes.unionByName(row_like(self._codes, {
             **(extras or {}), "id": id_,
             "vector": [float(x) for x in vector], "codes": [int(c) for c in code],
-        }
-        given = [f for f in self._codes.schema if f.name in vals]
-        row = spark.createDataFrame(
-            [tuple(vals[f.name] for f in given)],
-            T.StructType([T.StructField(f.name, f.dataType) for f in given]),
-        ).select(*(
-            f.name if f.name in vals else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in self._codes.schema
-        ))
-        codes = self._codes.unionByName(row)
+        }))
         # lineage ladder (put_many's pattern): N raw single-row unions
         # would build an N-deep tree that every ADC scan re-analyzes —
         # cut every 8 appends via the durability-aware helper
@@ -482,12 +474,13 @@ class PqIndex(_Resident):
 
 class HnswShards(_Resident):
     """Resident HNSW index: the graph-shard table (one pickled graph per
-    shard) plus its shard-id list, collected once at build so that put-time
-    routing runs no Spark job. Every write patches it — put inserts into
-    one shard's graph, put_many into each routed shard's graph, delete
-    strips the id from its shard — and each patched table takes the
-    durability ladder (plans/checkpoint.py), not a raw localCheckpoint, so
-    a lost executor cannot orphan it. A snapshot persists the table."""
+    shard) plus its shard-id list, collected once at build so that
+    put-time routing runs no Spark job. Every write patches it — put and
+    put_many insert each row into its routed shard's graph, delete strips
+    the id from its shard — in one pass that keeps the table's partition
+    count, and each patched table takes the durability ladder
+    (plans/checkpoint.py), not a raw localCheckpoint, so a lost executor
+    cannot orphan it. A snapshot persists the table."""
 
     KIND = "hnsw"
     MANIFEST = "_hnsw_indexes"
@@ -510,27 +503,30 @@ class HnswShards(_Resident):
     def _patched(self, shards: DataFrame) -> "HnswShards":
         return HnswShards(durable_cut(shards, eager=False), self.shard_ids)
 
-    def put(self, row: dict) -> "HnswShards":
+    def _insert(self, rows: list[dict]) -> "HnswShards":
+        """Insert stored rows, routed in the task closure (one narrow map,
+        no job). `shard_ids` is the table's exact list — collected at
+        build or saved with the snapshot, and every patch keeps the shard
+        rows — so the public function's stale-list check is skipped."""
         from vettore_spark.operators import hnsw as H
 
-        return self._patched(H.insert_into_graph_shards(
-            self.shards, row["id"], row["vector"], shard_ids=self.shard_ids
+        return self._patched(H._insert_rows(
+            self.shards, [(r["id"], r["vector"]) for r in rows], self.shard_ids
         ))
 
+    def put(self, row: dict) -> "HnswShards":
+        return self._insert([row])
+
     def put_many(self, batch: DataFrame, rows) -> "HnswShards":
-        """`rows()` gives the stored rows of a driver-small list batch,
-        routed in the task closure (one narrow map job); a batch without
-        them (a DataFrame, or a list past the closure cap) is routed
-        executor-side and patched in one cogroup job. Either way the
-        graphs see the stored (normalized, f32-rounded) vectors, exactly
-        what a rebuild over the grown table would."""
+        """`rows()` gives the stored rows of a driver-small list batch; a
+        batch without them (a DataFrame, or a list past the closure cap)
+        is routed executor-side and patched in one cogroup job. Either
+        way the graphs see the stored (normalized, f32-rounded) vectors,
+        exactly what a rebuild over the grown table would."""
         from vettore_spark.operators import hnsw as H
 
         if rows is not None:
-            ins = [(r["id"], r["vector"]) for r in rows()]
-            return self._patched(H.insert_many_into_graph_shards(
-                self.shards, ins, shard_ids=self.shard_ids
-            ))
+            return self._insert(rows())
         return self._patched(H.insert_df_into_graph_shards(
             self.shards, batch, shard_ids=self.shard_ids,
             id_col="id", vector_col="vector",
@@ -621,8 +617,9 @@ class IvfFile(_Resident):
 
 class SqBounds(_Resident):
     """Resident SQ8 quantizer: per-dimension (min, max) trained on the
-    canonical rows. put and delete keep it (its code table re-derives
-    over the new rows) — bounds trained on a superset
+    canonical rows, and the persisted code table of the rows it last
+    served. put and delete keep it (its code table re-derives over the
+    new rows) — bounds trained on a superset
     stay valid for any subset, and a new out-of-range value clips in the
     candidate stage only (the exact rerank re-orders on true vectors) —
     while put_many drops it. Not persisted: it retrains at the first
@@ -633,6 +630,7 @@ class SqBounds(_Resident):
     def __init__(self, mins: list[float], maxs: list[float]):
         self.mins, self.maxs = mins, maxs
         self._codes = (None, None)  # (rows, their code table)
+        self._lock = threading.Lock()
 
     @classmethod
     def build(cls, rows: DataFrame) -> "SqBounds":
@@ -642,13 +640,19 @@ class SqBounds(_Resident):
 
     def codes(self, rows: DataFrame) -> DataFrame:
         """The code table of `rows` (sq.sq_codes: the rows with their
-        `_codes`), derived at the first search over each version of the
-        rows (every write rebinds them)."""
+        `_codes`), persisted at the first search over each version of the
+        rows (every write rebinds them). The table it replaces is
+        unpersisted, so one stays cached per index; a request still
+        holding the old one recomputes it, with the same rows."""
         from vettore_spark.operators import sq as SQ
 
-        if self._codes[0] is not rows:
-            self._codes = (rows, SQ.sq_codes(rows, self.mins, self.maxs))
-        return self._codes[1]
+        with self._lock:
+            held, table = self._codes
+            if held is not rows:
+                self._codes = (rows, SQ.sq_codes(rows, self.mins, self.maxs).persist())
+                if table is not None:
+                    table.unpersist()
+            return self._codes[1]
 
     def put(self, row: dict) -> "SqBounds":
         return self
