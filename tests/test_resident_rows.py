@@ -124,8 +124,8 @@ def test_search_reads_materialized_rows(spark):
 
 def test_single_query_frames_hold_no_python_scan(spark, monkeypatch):
     """Building a single-query request submits no Spark job and costs at
-    most 20 py4j calls (one SQL text over engine-owned views) — 50 for
-    hnsw_search, whose mapInPandas scan alone costs ~31 — and its plan
+    most 20 py4j calls (one SQL text over engine-owned views, or over the
+    VALUES relation of hnsw_search's driver-held graphs), and its plan
     scans no Python-side query frame."""
     frame = single_query_frame(spark, [0.5, -1.0], "q7")
     assert "LocalTableScan" in _executed(frame)
@@ -162,7 +162,7 @@ def test_single_query_frames_hold_no_python_scan(spark, monkeypatch):
             out = build()
             n_calls = len(calls)
         assert plan_jobs == [], mode
-        assert n_calls <= (50 if mode == "hnsw_search" else 20), (mode, n_calls)
+        assert n_calls <= 20, (mode, n_calls)
         assert len(out.collect()) == 5
         plan = _executed(out)
         assert "ExistingRDD[query_id" not in plan, mode

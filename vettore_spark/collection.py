@@ -1128,14 +1128,26 @@ class Collection:
                     ef_search: int | None = None,
                     num_partitions: int = 8,
                     where=None, oversample: int = 4) -> DataFrame:
-        """Partition-parallel HNSW search over a RESIDENT graph-shard table
-        (Q6/Q7): built once per (params) from the canonical rows, then
-        maintained incrementally — `put` inserts into one shard's graph,
-        `put_many` inserts each batch row into its routed shard's graph,
-        `delete` patches the owning shard (entry replacement) — matching
-        the reference's insert/delete-time index maintenance
+        """HNSW search over a RESIDENT graph-shard table (Q6/Q7): built
+        once per (params) from the canonical rows, then maintained
+        incrementally — `put` inserts into one shard's graph, `put_many`
+        inserts each batch row into its routed shard's graph, `delete`
+        patches the owning shard (entry replacement) — matching the
+        reference's insert/delete-time index maintenance
         (hnsw.rs:152-245, :263-289); `snapshot(include_indexes=True)`
-        persists it. Returns (id, score, distance) like `search`.
+        persists it. Returns (id, score, distance) like `search`, scored
+        under the collection's score mode.
+
+        Two tiers, the same rows in the same order. While the shard blobs
+        stay within `hnsw._HNSW_DRIVER_MAX_BYTES`, the graphs are held
+        unpickled on the driver (`HnswShards.graphs`, one collect at the
+        first read after a build or a write) and a request walks them
+        there, as the reference walks its in-memory graph
+        (hnsw.rs:125-133): a VALUES relation of the ranked hits, no Spark
+        job, no Python worker. Past the bound each request runs one
+        `mapInPandas` wave that searches every shard on the executors
+        (`hnsw.search_graph_shards`). `ef_search` is the request's beam
+        width; it never changes the shared graphs.
 
         `where` is POST-filtered with over-fetch (the graph is traversed
         for limit*oversample, then the predicate-passing top `limit` kept)
@@ -1159,10 +1171,15 @@ class Collection:
             ),
         )
         k_fetch = limit if where is None else limit * max(1, oversample)
-        out = H.search_graph_shards(
-            ix.shards, [("q", q)], metric=self.config.metric, k=k_fetch,
-            ef_search=p.ef_search, id_col="id", id_type=T.StringType(),
-        )
+        opts = dict(metric=metric, k=k_fetch, ef_search=p.ef_search,
+                    score_mode=self.config.score)
+        graphs = ix.graphs()
+        if graphs is not None:
+            out = self.spark.sql(H.driver_search_sql(graphs, q, **opts))
+        else:
+            out = H.search_graph_shards(
+                ix.shards, [("q", q)], id_col="id", id_type=T.StringType(), **opts
+            )
         if where is not None:
             allowed = self._where(where).select("id")
             out = (

@@ -28,6 +28,12 @@ parallel; queries are broadcast once per batch, so the shuffle is only
 O(num_queries * k). For repeated query batches against a static collection,
 persist the partitioned collection DataFrame so partition membership (and
 thus the graphs) stay stable.
+
+Single-query serving has a driver tier: while a shard table's blobs total
+at most `_HNSW_DRIVER_MAX_BYTES`, a Collection holds its graphs unpickled
+on the driver (`collect_graph_shards`) and answers one query there
+(`driver_search_sql`) with no Spark job, as the reference walks its
+in-memory graph (hnsw.rs:125-133); past the bound, `search_graph_shards`.
 """
 
 from __future__ import annotations
@@ -44,6 +50,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _HNSW_METRICS = ("l2", "cosine", "inner_product")
+
+# Blob bytes up to which a resident shard table is also held unpickled on
+# the driver, where a single query is answered with no Spark job
+# (sources.store.HnswShards, `driver_search_sql`); past it every request
+# runs `search_graph_shards` on the executors. Tests set it to 0 to force
+# the executor tier.
+_HNSW_DRIVER_MAX_BYTES = 64 << 20
 
 
 @dataclass(frozen=True)
@@ -88,6 +101,21 @@ def level_for(external_id: str, max_level: int) -> int:
     return level
 
 
+def rank_distance(metric: str, raw: float) -> float:
+    """Ascending rank distance of a raw metric value; a non-finite one
+    compares as +inf, so a malformed vector never wins a beam slot or a
+    result slot (NaN compares False both ways and would break the heaps
+    and sorts). Under (rank, id) this is `search.rank_order`'s order:
+    SQL ranks a non-finite value NULL, NULLS LAST."""
+    if metric == "cosine":
+        rank = 1.0 - raw
+    elif metric == "inner_product":
+        rank = -raw
+    else:
+        rank = raw
+    return rank if math.isfinite(rank) else math.inf
+
+
 class HnswGraph:
     """Single-machine HNSW graph (one Spark partition's shard)."""
 
@@ -112,17 +140,7 @@ class HnswGraph:
         return float(a @ b)  # cosine (pre-normalized) and inner_product: dot
 
     def _rank(self, a: np.ndarray, b: np.ndarray) -> float:
-        """Ascending rank distance; a non-finite one compares as +inf, so
-        a malformed vector never wins a beam slot or a result slot (NaN
-        compares False both ways and would break the heaps and sorts)."""
-        raw = self._raw(a, b)
-        if self.metric == "cosine":
-            rank = 1.0 - raw
-        elif self.metric == "inner_product":
-            rank = -raw
-        else:
-            rank = raw
-        return rank if math.isfinite(rank) else math.inf
+        return rank_distance(self.metric, self._raw(a, b))
 
     # -- build --------------------------------------------------------------
 
@@ -254,9 +272,13 @@ class HnswGraph:
 
     # -- query --------------------------------------------------------------
 
-    def search(self, query, limit: int) -> list[tuple[object, float]]:
+    def search(
+        self, query, limit: int, ef: int | None = None
+    ) -> list[tuple[object, float]]:
         """Returns [(external_id, raw_metric)] ordered by (rank, external_id)
-        (hnsw.rs:292-333)."""
+        (hnsw.rs:292-333). `ef` is this call's beam width (default the
+        build's `params.ef_search`); the graph itself is only read, so
+        concurrent searches may share it."""
         if limit == 0 or self.entry is None:
             return []
         q = np.asarray(query, dtype=np.float64)
@@ -264,7 +286,7 @@ class HnswGraph:
         for layer in range(self.levels[entry], 0, -1):
             entry = self._greedy_closest(entry, q, layer)
         best = self._search_layer(
-            entry, q, 0, max(self.params.ef_search, limit)
+            entry, q, 0, max(self.params.ef_search if ef is None else ef, limit)
         )
         # tie-break by the NATIVE id, matching the global shard-merge
         # window's ordering (search_graph_shards sorts by the id column's
@@ -603,9 +625,14 @@ def search_graph_shards(
     per-query top-k window (`search.rank_per_query`: rank ascending NULLS
     LAST, then id — a non-finite vector ranks NULL, after every finite
     row); one query merges by `search.rank_order` + LIMIT k, with no
-    exchange. `ef_search` overrides the build-time beam.
+    exchange. `ef_search` overrides the build-time beam for this call.
     The scan runs in at most `defaultParallelism` tasks (one wave): each
-    task searches every shard its partition holds.
+    task unpickles and searches every shard its partition holds.
+
+    This is the executor tier. A Collection serves one query from graphs
+    held on the driver instead (`collect_graph_shards`,
+    `driver_search_sql`) while the table's blobs stay within
+    `_HNSW_DRIVER_MAX_BYTES`, with the same rows in the same order.
 
     `id_type` declares the emitted id column's Spark type and should match
     the collection's native id type (Collection passes its own schema
@@ -631,20 +658,16 @@ def search_graph_shards(
     )
     qlist = [(str(qid), np.asarray(qv, dtype=np.float64)) for qid, qv in queries]
     ef = ef_search
+    if ef is not None:
+        HnswParams(ef_search=ef)  # the beam width's bounds
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for blob in pdf["shard"]:
                 g: HnswGraph = pickle.loads(bytes(blob))
-                if ef is not None:
-                    g.params = HnswParams(
-                        m=g.params.m, m0=g.params.m0,
-                        ef_construction=g.params.ef_construction,
-                        ef_search=ef, max_level=g.params.max_level,
-                    )
                 out_q, out_i, out_r = [], [], []
                 for qid, qv in qlist:
-                    for eid, raw in g.search(qv, k):
+                    for eid, raw in g.search(qv, k, ef):
                         out_q.append(qid)
                         out_i.append(str(eid) if stringify else eid)
                         out_r.append(raw)
@@ -668,6 +691,75 @@ def search_graph_shards(
     return local.sparkSession.sql(S.rank_per_query_sql(
         f"({scored})", k, cols=["query_id", id_col, "score", "distance"], id_col=id_col,
     ), scan=local)
+
+
+def collect_graph_shards(
+    shards: DataFrame, cap: int
+) -> tuple[int, list[HnswGraph] | None]:
+    """One collect of a graph-shard table for the driver tier: its total
+    blob bytes, and its graphs unpickled in shard-id order when every blob
+    holds at most `cap` bytes (else None). No blob past `cap` leaves the
+    executors, so a caller bounds the bytes it collects by `cap` times the
+    shard count without knowing the table's size."""
+    import pickle
+
+    rows = shards.selectExpr(
+        "shard_id", "octet_length(shard) AS n",
+        f"IF(octet_length(shard) <= {int(cap)}, shard, NULL) AS shard",
+    ).collect()
+    nbytes = sum(r["n"] for r in rows)
+    if any(r["shard"] is None for r in rows):
+        return nbytes, None
+    return nbytes, [
+        pickle.loads(r["shard"]) for r in sorted(rows, key=lambda r: r["shard_id"])
+    ]
+
+
+def _string_sql(s: str) -> str:
+    """A string literal of `s` that reads back exactly, whatever its
+    characters and the session's escape setting: its UTF-8 bytes in hex."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def driver_search_sql(
+    graphs: list[HnswGraph],
+    query: list[float],
+    *,
+    metric: str,
+    k: int,
+    ef_search: int | None = None,
+    score_mode: str = "raw",
+) -> str:
+    """One query against graphs held on the driver (`collect_graph_shards`)
+    as one SQL text: (id, score, distance, rank), the rows and order
+    `search_graph_shards` gives for the query. Each graph's top k
+    (`HnswGraph.search`, beam `ef_search`) merge under the graphs' own
+    rank rule (`rank_distance`, ties by id), and the best k become a
+    VALUES relation of (id, _raw, rank) that `search._score_exprs`
+    scores. Spark folds the projection into a local relation, so
+    collecting the result runs no job and starts no Python worker.
+
+    Each `_raw` is a literal that reads back bit for bit, NaN and ±inf
+    included. A typed NULL row after the last hit, cut by the LIMIT,
+    makes id and `_raw` nullable as the executor scan's columns are, and
+    keeps an empty result valid SQL."""
+    from vettore_spark.functions import kernels as K
+    from vettore_spark.operators import search as S
+
+    m = K.canonical_metric(metric)
+    q = np.asarray(query, dtype=np.float64)
+    hits = [hit for g in graphs for hit in g.search(q, k, ef_search)]
+    hits.sort(key=lambda h: (rank_distance(m, h[1]), h[0]))
+    rows = [
+        f"({_string_sql(eid)}, {K._double(raw)}, {n})"
+        for n, (eid, raw) in enumerate(hits[:k], 1)
+    ]
+    rows.append("(CAST(NULL AS STRING), CAST(NULL AS DOUBLE), 0)")
+    items = S._score_exprs("_raw", ["id", "rank"], metric=m, score_mode=score_mode)[1]
+    return (
+        f"SELECT id, score, distance, rank FROM (SELECT {', '.join(items)} "
+        f"FROM VALUES {', '.join(rows)} AS t(id, _raw, rank)) LIMIT {len(rows) - 1}"
+    )
 
 
 def hnsw_search(

@@ -474,20 +474,33 @@ class PqIndex(_Resident):
 
 class HnswShards(_Resident):
     """Resident HNSW index: the graph-shard table (one pickled graph per
-    shard) plus its shard-id list, collected once at build so that
-    put-time routing runs no Spark job. Every write patches it — put and
-    put_many insert each row into its routed shard's graph, delete strips
-    the id from its shard — in one pass that keeps the table's partition
-    count, and each patched table takes the durability ladder
-    (plans/checkpoint.py), not a raw localCheckpoint, so a lost executor
-    cannot orphan it. A snapshot persists the table."""
+    shard) plus its shard-id list and blob bytes, collected once at build
+    so that put-time routing runs no Spark job. Every write patches it —
+    put and put_many insert each row into its routed shard's graph,
+    delete strips the id from its shard — in one pass that keeps the
+    table's partition count, and each patched table takes the durability
+    ladder (plans/checkpoint.py), not a raw localCheckpoint, so a lost
+    executor cannot orphan it. A snapshot persists the table.
+
+    Two serving tiers. While the blobs stay within
+    `hnsw._HNSW_DRIVER_MAX_BYTES`, `graphs()` also holds the graphs
+    unpickled on the driver, from one collect at this instance's first
+    read, and a single query is answered there. Past the bound it returns
+    None and every request runs on the executors. A write replaces the
+    instance, so driver graphs are never patched: the table stays the one
+    write path and snapshot format, and the next read collects again."""
 
     KIND = "hnsw"
     MANIFEST = "_hnsw_indexes"
     TABLES = {"": ("rows", "checksum")}
 
-    def __init__(self, shards: DataFrame, shard_ids: list[int]):
-        self.shards, self.shard_ids = shards, shard_ids
+    def __init__(self, shards: DataFrame, shard_ids: list[int],
+                 nbytes: int | None = None):
+        # nbytes: the blobs' total when a collect has read it, else None
+        self.shards, self.shard_ids, self.nbytes = shards, shard_ids, nbytes
+        self._graphs_lock = threading.Lock()
+        self._graphs: list | None = None
+        self._loaded = False
 
     @classmethod
     def build(cls, rows: DataFrame, *, metric: str, params,
@@ -498,10 +511,36 @@ class HnswShards(_Resident):
             rows.select("id", "vector"), metric=metric, params=params,
             id_col="id", vector_col="vector", num_partitions=num_partitions,
         )
-        return cls(shards, [r["shard_id"] for r in shards.select("shard_id").collect()])
+        sizes = shards.selectExpr("shard_id", "octet_length(shard) AS n").collect()
+        return cls(shards, [r["shard_id"] for r in sizes], sum(r["n"] for r in sizes))
+
+    def graphs(self) -> list | None:
+        """The shard graphs held on the driver, or None past the bound.
+        The first call collects them unless the table is known past the
+        bound. No blob past the bound's per-shard share leaves the
+        executors, so the collect never exceeds the bound, even for a
+        table of unknown size (patched or loaded)."""
+        from vettore_spark.operators import hnsw as H
+
+        with self._graphs_lock:
+            bound = H._HNSW_DRIVER_MAX_BYTES
+            if not self._loaded and (self.nbytes or 0) <= bound:
+                self.nbytes, self._graphs = H.collect_graph_shards(
+                    self.shards, bound // max(1, len(self.shard_ids))
+                )
+            self._loaded = True
+            return self._graphs
 
     def _patched(self, shards: DataFrame) -> "HnswShards":
-        return HnswShards(durable_cut(shards, eager=False), self.shard_ids)
+        from vettore_spark.operators import hnsw as H
+
+        # a write keeps or grows every blob (a delete keeps the node's
+        # vector), so a table known past the bound stays past it
+        over = self.nbytes is not None and self.nbytes > H._HNSW_DRIVER_MAX_BYTES
+        return HnswShards(
+            durable_cut(shards, eager=False), self.shard_ids,
+            self.nbytes if over else None,
+        )
 
     def _insert(self, rows: list[dict]) -> "HnswShards":
         """Insert stored rows, routed in the task closure (one narrow map,
